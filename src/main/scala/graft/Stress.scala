@@ -6,6 +6,8 @@ import java.lang.management.ManagementFactory
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.util.Dirs.rmrf
+
 /** One-off 10× scale probe (the "sf1" datapoint in ARCHITECTURE.md).
   *
   * The driver ships corpora up to sf0.1 only, so this main synthesizes a
@@ -24,9 +26,14 @@ import org.apache.spark.sql.functions._
   *    copy-specific epsilon (distinct vectors, same geometry).
   *  - lineitem/orders: 10 copies with key offsets (disjoint key ranges).
   *
-  * Usage: runMain graft.Stress [copies] — writes /tmp/graft-sf1, runs
-  * each probe query twice (first = includes any one-time KV ingest /
-  * compaction; min = steady state), prints one JSON line.
+  * Usage: runMain graft.Stress [copies] [heavy|<section>] — builds
+  * the replica under /tmp/graft-stress-x<copies> (SPARK_GRAFT_STRESS_DIR
+  * overrides), then runs the default campaign, the reduced `heavy`
+  * campaign, or exactly one standalone section of `sections` below,
+  * and prints one JSON line. Campaign probe queries run twice or more
+  * (first = includes any one-time KV ingest / compaction; min = steady
+  * state). `tools/merge_stress.py` merges campaign passes into a tier
+  * artifact, and `--section <name>` folds a section's passes into one.
   */
 object Stress {
 
@@ -62,61 +69,79 @@ object Stress {
   private val replicaTables =
     Seq("documents", "embeddings", "lineitem", "orders", "events")
 
+  /** One named part of a pass: the top-level JSON keys its fragment
+    * writes, the metric tag of the line it prints when run alone
+    * (`Stress <copies> <name>`; None: it runs only inside a campaign),
+    * and whether the default (`full`) and the reduced 100× (`heavy`)
+    * campaigns include it. A section added after a tier campaign froze
+    * runs alone, so its passes never invalidate the committed
+    * same-revision campaign passes. */
+  private final case class Section(name: String, keys: Seq[String],
+                                   metric: Option[String], full: Boolean,
+                                   heavy: Boolean, run: Pass => String)
+
+  /** Every section, in the order a campaign runs them. The heavy
+    * campaign is the heavy-family timings (one steady repeat each: the
+    * probes run minutes at 100×), q45's per-round frontier collapse and
+    * the recall-checked index sections — everything the 100 TB
+    * extrapolation rests on, none of the A/B sections. */
+  private val sections: Seq[Section] = Seq(
+    Section("queries", Seq("queries", "q45_frontier_sizes", "q45_escalated"),
+      None, full = true, heavy = true, _.probeQueries()),
+    Section("semantic_dedup", Seq("semantic_dedup", "semantic_dedup_hier"),
+      None, full = true, heavy = true, _.semanticDedup()),
+    Section("ivf_split", Seq("ivf_split"),
+      None, full = true, heavy = true, _.ivfSplit()),
+    Section("ivf_persist", Seq("ivf_persist"),
+      None, full = true, heavy = true, _.ivfPersist()),
+    Section("ivf_incremental", Seq("ivf_incremental"),
+      None, full = true, heavy = true, _.ivfIncremental()),
+    Section("dml", Seq("ivf_dml_patch"),
+      Some("stress_dml"), full = true, heavy = true, _.ivfDmlPatch()),
+    Section("cdc_catchup", Seq("cdc_catchup"),
+      None, full = true, heavy = true, _.cdcCatchup()),
+    Section("ss_join", Seq("ss_join"),
+      None, full = true, heavy = true, _.ssJoin()),
+    Section("near_dup_pairs", Seq("near_dup_pairs"),
+      None, full = true, heavy = false, _.nearDupPairs()),
+    Section("packing_ab", Seq("packing_ab"),
+      None, full = true, heavy = false, _.packingAb()),
+    Section("kv_columnar_ab", Seq("kv_columnar_ab"),
+      None, full = true, heavy = false, _.columnarAb()),
+    Section("spj_ab", Seq("spj_ab", "point_lookup_ab"),
+      None, full = true, heavy = false, _.spjAb()),
+    Section("pq", Seq("ivf_pq"),
+      Some("stress_pq"), full = false, heavy = false, _.ivfPq()),
+    Section("store", Seq("bm25_store", "lsh_store"),
+      Some("stress_store"), full = false, heavy = false, _.stores()),
+    Section("q111", Seq("q111_substring_dedup"),
+      Some("stress_q111"), full = false, heavy = false, _.q111()),
+    Section("stream", Seq("bm25_stream", "ivf_stream"),
+      Some("stress_stream"), full = false, heavy = false, _.streaming()),
+    Section("compact", Seq("batches", "docs", "prod", "control", "match"),
+      Some("stress_compact"), full = false, heavy = false, _.compaction()),
+    Section("probe", Seq("ivf_probe_all", "bm25_probe_all", "lsh_probe_batch", "ivf_cell_skew",
+      "bm25_probe_after_append", "bm25_token_skew"),
+      Some("stress_probe"), full = false, heavy = false, _.batchedProbes()),
+    Section("champ", Seq("bm25_probe_after_append"),
+      Some("stress_champ"), full = false, heavy = false, _.champ()))
+
   def main(args: Array[String]): Unit = {
     // the artifact JSON is built with f"...%.2f" interpolation — pin the
     // locale so a comma-decimal default can't emit invalid JSON
     java.util.Locale.setDefault(java.util.Locale.ROOT)
     val copies = args.headOption.map(_.toInt).getOrElse(10)
-    // `runMain graft.Stress 100 heavy`: reduced heavy-family tier —
-    // one steady repeat (the probes run minutes each; min-of-two would
-    // double a ~20-minute tier to shave noise that is irrelevant at
-    // this magnitude) and none of the A/B sections
-    val heavy = args.drop(1).headOption.contains("heavy")
-    // `runMain graft.Stress <copies> dmlonly`: run ONLY the
-    // ivf_dml_patch section and emit a {"metric":"stress_dml"} line —
-    // the section was added after the r15 tier campaign froze, so it
-    // gets its own per-tier artifact instead of invalidating the
-    // committed same-revision passes
-    val dmlOnly = args.drop(1).headOption.contains("dmlonly")
-    // `runMain graft.Stress <copies> pqonly`: run ONLY the ivf_pq
-    // section and emit a {"metric":"stress_pq"} line — same
-    // post-campaign convention as dmlonly (the section was added in
-    // r16 after the committed multi-pass tiers froze)
-    val pqOnly = args.drop(1).headOption.contains("pqonly")
-    // `runMain graft.Stress <copies> storeonly`: run ONLY the persisted
-    // retrieval/dedup store section (bm25_store + lsh_store, r16) and
-    // emit a {"metric":"stress_store"} line — same post-campaign
-    // convention as dmlonly/pqonly
-    val storeOnly = args.drop(1).headOption.contains("storeonly")
-    // `runMain graft.Stress <copies> q111only`: re-measure ONLY
-    // q111_substring_dedup — r17 salted its hot-gram join (the r16
-    // committed 100x row swung 7.2-21.8 s across same-revision passes),
-    // so the row needs fresh passes at the salted revision; same
-    // post-campaign convention as the other section modes
-    val q111Only = args.drop(1).headOption.contains("q111only")
-    // `runMain graft.Stress <copies> streamonly`: run ONLY the
-    // streaming index-maintenance section (q132's composition at tier
-    // scale) and emit a {"metric":"stress_stream"} line
-    val streamOnly = args.drop(1).headOption.contains("streamonly")
-    // `runMain graft.Stress <copies> compactonly`: run ONLY the
-    // long-run index-store self-compaction section (q135's claim at
-    // tier scale: 120 maintenance batches under the PRODUCTION
-    // threshold keep the live shard count bounded and probe latency
-    // flat, vs a never-compacting control) — {"metric":"stress_compact"}
-    val compactOnly = args.drop(1).headOption.contains("compactonly")
-    // `runMain graft.Stress <copies> probeonly`: run ONLY the
-    // batched-probe scaling section (q137/q138/q139's probeAll shapes
-    // at 100/1k/10k queries against the tier's persisted stores) and
-    // emit a {"metric":"stress_probe"} line
-    val probeOnly = args.drop(1).headOption.contains("probeonly")
-    // `runMain graft.Stress <copies> champonly`: run ONLY the BM25
-    // champion-sidecar lifecycle section (r22 — sidecar full-build vs
-    // append-time incremental merge) and emit a
-    // {"metric":"stress_champ"} line; cheap enough to run at several
-    // tiers so build-grows / merge-stays-flat is two committed points
-    val champOnly = args.drop(1).headOption.contains("champonly")
-    val sectionOnly = dmlOnly || pqOnly || storeOnly || q111Only ||
-      streamOnly || compactOnly || probeOnly || champOnly
+    val mode = args.drop(1).headOption
+    val heavy = mode.contains("heavy")
+    val chosen = mode match {
+      case None => sections.filter(_.full)
+      case Some("heavy") => sections.filter(_.heavy)
+      case Some(name) => sections.filter(s => s.name == name && s.metric.isDefined)
+    }
+    require(chosen.nonEmpty, "usage: graft.Stress <copies> [heavy|" +
+      sections.filter(_.metric.isDefined).map(_.name).mkString("|") + "]")
+    // a campaign prints one "stress" line; a lone section its own tag
+    val metric = if (mode.isEmpty || heavy) "stress" else chosen.head.metric.get
     val base = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // the copies count is part of the replica path: a rerun with a
     // different scale can never silently reuse the old replica, and the
@@ -152,6 +177,34 @@ object Stress {
       generate(spark, base, out, copies)
     }
 
+    // Code revision per pass: tools/merge_stress.py refuses to merge
+    // passes from different code versions (the r12 artifact mixed
+    // pre- and post-pairs-cache passes and its per-field min silently
+    // compared different engines).
+    val revision =
+      try scala.sys.process.Process(Seq("git", "rev-parse", "--short", "HEAD"),
+        new File(".")).!!.trim
+      catch { case _: Exception => "unknown" }
+
+    val pass = new Pass(spark, out, base, copies, heavy, shuffleParts)
+    val bodies = chosen.map { s =>
+      val body = s.run(pass)
+      require(s.keys.forall(k => body.contains(s""""$k":""")),
+        s"section ${s.name} must write ${s.keys.mkString(", ")}")
+      body
+    }
+    val modeJson = if (heavy) ""","mode":"heavy"""" else ""
+    println(s"""{"metric":"$metric"$modeJson,"copies":$copies,"base":"$base","revision":"$revision","shuffle_partitions":$shuffleParts,${bodies.mkString(",")},"peak_heap_mb":${pass.peakHeapMb},"host":${pass.hostJson()}}""")
+    spark.stop()
+  }
+
+  /** What every section of one pass shares: the session, the replica,
+    * the heap high-water mark, the host snapshot and the IVF sections'
+    * query set with its exact ground truth. */
+  private final class Pass(val spark: SparkSession, val out: String,
+                           val base: String, val copies: Int,
+                           val heavy: Boolean, val shuffleParts: String) {
+
     // sampled max of actual heap occupancy (per-pool peak SUMS overstate:
     // eden and old-gen peak at different times, so their sum can exceed
     // any heap state that ever existed)
@@ -181,35 +234,68 @@ object Stress {
       val used = ManagementFactory.getMemoryMXBean.getHeapMemoryUsage.getUsed / (1 << 20)
       if (used > peakHeapMb) peakHeapMb = used
     }
-    var q45Frontiers: Seq[Long] = Nil
-    var q45Escalated = false
-    val results = (if (sectionOnly) Nil else if (heavy) heavyProbes else probes).map { name =>
-      val fn = SparkEntry.queries(name)
-      def once(): Double = {
-        val t0 = System.nanoTime()
-        fn(spark, out).queryExecution.toRdd.count()
-        sampleHeap()
-        (System.nanoTime() - t0) / 1e9
-      }
-      val first = once() // includes one-time KV ingest / compact / persist
-      val steady = if (heavy) once() else math.min(once(), once())
-      System.err.println(f"[stress] $name first=$first%.1fs steady=$steady%.1fs")
-      if (name == "q45_dedup_clusters") {
-        // the STEADY run's rounds — lastFrontierSizes holds the most
-        // recent propagation loop (q45 rides labelAuto: if it ever
-        // ESCALATED to star contraction, the log is the truncated
-        // pre-escalation frontier, so the artifact must say so)
-        q45Frontiers = operators.ConnectedComponents.lastFrontierSizes
-        q45Escalated = operators.ConnectedComponents.lastEscalated
-        System.err.println(s"[stress] q45 frontier sizes per round: ${q45Frontiers.mkString(", ")}")
-        // the shingle relation serves only the dedup probes — release it
-        // before the ANN/KV probes so their timings and the heap metric
-        // don't carry dedup cache pressure
-        queries.Dedup.releaseShingles()
-      }
-      name -> (first, steady)
+    lazy val qEmbIvf = Tables.embeddings(spark, out).filter(col("vec_id") < 20)
+      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
+    // recall vs EXACT ground truth at this tier: the query set is
+    // bounded (20 vectors), so brute force is one linear broadcast
+    // scan — affordable even at 100×. This pins the adaptive index's
+    // quality at scale, not just at the 500-vector gate; epsilon-twin
+    // replicas make the true top-5 dominated by near-identical twins,
+    // which a sound cell assignment must co-locate with the query.
+    def top5Ivf(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] = df
+      .select(col("q_id"), col("n_id")).collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSet
+    lazy val exactTop5: Set[(Long, Long)] = {
+      import org.apache.spark.sql.expressions.Window
+      val wx = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("n_id"))
+      top5Ivf(Tables.embeddings(spark, out)
+        .join(broadcast(qEmbIvf), col("vec_id") =!= col("q_id"))
+        .select(col("q_id"), col("vec_id").as("n_id"),
+          expr("cosine_sim(q_emb, embedding)").as("cos"))
+        .withColumn("rk", row_number().over(wx)).filter(col("rk") <= 5))
     }
-    queries.Dedup.releaseShingles()
+    def recallOf(got: Set[(Long, Long)]): Double =
+      if (exactTop5.isEmpty) 1.0
+      else got.intersect(exactTop5).size.toDouble / exactTop5.size
+
+    // the campaign's probe queries, each timed first (one-time costs
+    // included) and steady (min of two; one repeat in the heavy campaign)
+    def probeQueries(): String = {
+      var q45Frontiers: Seq[Long] = Nil
+      var q45Escalated = false
+      val results = (if (heavy) heavyProbes else probes).map { name =>
+        val fn = SparkEntry.queries(name)
+        def once(): Double = {
+          val t0 = System.nanoTime()
+          fn(spark, out).queryExecution.toRdd.count()
+          sampleHeap()
+          (System.nanoTime() - t0) / 1e9
+        }
+        val first = once() // includes one-time KV ingest / compact / persist
+        val steady = if (heavy) once() else math.min(once(), once())
+        System.err.println(f"[stress] $name first=$first%.1fs steady=$steady%.1fs")
+        if (name == "q45_dedup_clusters") {
+          // the STEADY run's rounds — lastFrontierSizes holds the most
+          // recent propagation loop (q45 rides labelAuto: if it ever
+          // ESCALATED to star contraction, the log is the truncated
+          // pre-escalation frontier, so the artifact must say so)
+          q45Frontiers = operators.ConnectedComponents.lastFrontierSizes
+          q45Escalated = operators.ConnectedComponents.lastEscalated
+          System.err.println(s"[stress] q45 frontier sizes per round: ${q45Frontiers.mkString(", ")}")
+          // the shingle relation serves only the dedup probes — release it
+          // before the ANN/KV probes so their timings and the heap metric
+          // don't carry dedup cache pressure
+          queries.Dedup.releaseShingles()
+        }
+        name -> (first, steady)
+      }
+      queries.Dedup.releaseShingles()
+      val qs = results.map { case (k, (fst, std)) =>
+        f""""$k":{"first_sec":$fst%.2f,"steady_sec":$std%.2f}"""
+      }.mkString("{", ",", "}")
+      val frontier = q45Frontiers.mkString("[", ",", "]")
+      s""""queries":$qs,"q45_frontier_sizes":$frontier,"q45_escalated":$q45Escalated"""
+    }
 
     // SemDeDup at scale — BOTH formulations, recall-checked against the
     // replica's ground truth: q103 (flat quantizer, k ≈ √n balancing
@@ -262,18 +348,9 @@ object Stress {
       f""""$key":{"first_sec":$semFirst%.2f,"steady_sec":$semSteady%.2f,"rows":$semRows$semJson$anchorJson}"""
       } finally if (anchor) spark.conf.unset("graft.allowExactAnchors")
     }
-    val semOut = if (sectionOnly) "" else
+    def semanticDedup(): String =
       semSection("semantic_dedup", "q103_semantic_dedup", 0.9, anchor = true) + "," +
       semSection("semantic_dedup_hier", "q114_semantic_dedup_hier", 0.85)
-
-    // Code revision per pass: merge_stress.py refuses to min-merge
-    // passes from different code versions (the r12 artifact mixed
-    // pre- and post-pairs-cache passes and its per-field min silently
-    // compared different engines).
-    val revision =
-      try scala.sys.process.Process(Seq("git", "rev-parse", "--short", "HEAD"),
-        new File(".")).!!.trim
-      catch { case _: Exception => "unknown" }
 
     // IVF build/probe split — the claim the adaptive quantizer makes is
     // ASYMMETRIC: index build grows Θ(n^1.25) (coarse routing), while a
@@ -281,30 +358,7 @@ object Stress {
     // size. The q53 row above times the fused pipeline (build + probe);
     // this section persists the index once and times probes alone, so
     // the tiers show probe_sec flat while build_sec grows.
-    val qEmbIvf = Tables.embeddings(spark, out).filter(col("vec_id") < 20)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-    // recall vs EXACT ground truth at this tier: the query set is
-    // bounded (20 vectors), so brute force is one linear broadcast
-    // scan — affordable even at 100×. This pins the adaptive index's
-    // quality at scale, not just at the 500-vector gate; epsilon-twin
-    // replicas make the true top-5 dominated by near-identical twins,
-    // which a sound cell assignment must co-locate with the query.
-    def top5Ivf(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] = df
-      .select(col("q_id"), col("n_id")).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    lazy val exactTop5: Set[(Long, Long)] = {
-      import org.apache.spark.sql.expressions.Window
-      val wx = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("n_id"))
-      top5Ivf(Tables.embeddings(spark, out)
-        .join(broadcast(qEmbIvf), col("vec_id") =!= col("q_id"))
-        .select(col("q_id"), col("vec_id").as("n_id"),
-          expr("cosine_sim(q_emb, embedding)").as("cos"))
-        .withColumn("rk", row_number().over(wx)).filter(col("rk") <= 5))
-    }
-    def recallOf(got: Set[(Long, Long)]): Double =
-      if (exactTop5.isEmpty) 1.0
-      else got.intersect(exactTop5).size.toDouble / exactTop5.size
-    val ivfJson = if (sectionOnly) "" else {
+    def ivfSplit(): String = {
       val t0 = System.nanoTime()
       val idx0 = queries.Similarity.ivfIndex(spark, out)
       val idx = idx0.copy(centRouted = idx0.centRouted.persist(),
@@ -351,7 +405,7 @@ object Stress {
     // session actually runs: IvfStore.load (meta + fingerprint stat +
     // two KV scans, no corpus scan) plus the probe. The 100 TB claim is
     // cold_probe ≈ steady probe — the index outlives its builder.
-    val ivfPersistJson = if (sectionOnly) "" else {
+    def ivfPersist(): String = {
       // the REAL index path, not a re-derivation of IvfStore's keying —
       // a cache-key change there must break loudly here, not silently
       // corrupt built-detection
@@ -394,15 +448,11 @@ object Stress {
     // classifies + frozen-assigns + append-commits it. The updated
     // index covers the FULL replica corpus, so the same exact ground
     // truth asserts recall.
-    val ivfIncJson = if (sectionOnly) "" else {
+    def ivfIncremental(): String = {
       val root = s"$out/_kv_ivfinc"
       val corpus = s"$root/corpus"
-      def rmrfI(f: File): Unit = {
-        if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.foreach(rmrfI)
-        f.delete(): Unit
-      }
-      rmrfI(new File(root))
-      rmrfI(new File(graft.queries.IvfStore.indexRoot(corpus)))
+      rmrf(new File(root))
+      rmrf(new File(graft.queries.IvfStore.indexRoot(corpus)))
       val emb = Tables.embeddings(spark, out)
       val n = emb.count()
       // fixed absolute delta (1 024 rows) at every tier that can carry
@@ -460,16 +510,11 @@ object Stress {
     // (cosine is scale-invariant, so the exact ground truth still
     // asserts recall; the handful of deleted truth rows are disclosed
     // by region_rows/vectors).
-    val ivfDmlJson = if (pqOnly || storeOnly || q111Only || streamOnly ||
-        probeOnly || compactOnly) "" else {
+    def ivfDmlPatch(): String = {
       val root = s"$out/_kv_ivfdml"
       val corpus = s"$root/corpus"
-      def rmrfD(f: File): Unit = {
-        if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.foreach(rmrfD)
-        f.delete(): Unit
-      }
-      rmrfD(new File(root))
-      rmrfD(new File(graft.queries.IvfKvStore.indexRoot(corpus)))
+      rmrf(new File(root))
+      rmrf(new File(graft.queries.IvfKvStore.indexRoot(corpus)))
       val emb = Tables.embeddings(spark, out)
         .select(col("vec_id"), col("embedding"))
       val n = emb.count()
@@ -535,7 +580,7 @@ object Stress {
       f""""ivf_dml_patch":{"vectors":$n,"region_rows":$regionRows,"changed_rows":$changed,"nlist":${idxD.nlist},"build_sec":$dmlBuildSec%.2f,"patch_sec":$patchSec%.2f,"probe_first_sec":$pFirstD%.2f,"probe_sec":$pSteadyD%.2f,"recall_at5":$recallD%.4f}"""
     }
 
-    // IVF-PQ at scale (r16, pqonly mode) — what the q122 composition
+    // IVF-PQ at scale (r16, the `pq` section) — what the q122 composition
     // must prove at tier scale: (a) the PQ encode (codebook sample +
     // per-subspace argmin + reconstruction) grows ~linearly with the
     // corpus like the IVF build it sits beside — both are build-time
@@ -546,7 +591,7 @@ object Stress {
     // holds at every tier — the ε-twin replicas quantize to the SAME
     // codewords as their source (the ±0.001·i dim-0 nudge is far
     // inside a cell), so a sound encode must keep them findable.
-    val ivfPqJson = if (!pqOnly) "" else {
+    def ivfPq(): String = {
       val raw = Tables.embeddings(spark, out)
       val dblPq = raw.select(col("vec_id"),
         transform(col("embedding"), _.cast("double")).as("emb"))
@@ -595,24 +640,16 @@ object Stress {
       f""""ivf_pq":{"vectors":$nVecs,"nlist":$nlist,"n_probe":$nP,"ivf_build_sec":$ivfBuildSec%.2f,"encode_sec":$encodeSec%.2f,"probe_first_sec":$pFirst%.2f,"probe_sec":$pSteady%.2f,"recall_at5":$recall%.4f}"""
     }
 
-    if (pqOnly) {
-      println(s"""{"metric":"stress_pq","copies":$copies,"base":"$base","revision":"$revision","shuffle_partitions":$shuffleParts,$ivfPqJson,"peak_heap_mb":$peakHeapMb,"host":${hostJson()}}""")
-      spark.stop()
-      return
-    }
-
-    if (champOnly) {
+    // the champion-sidecar lifecycle over the tier's full BM25 store
+    def champ(): String = {
       val docs = Tables.documents(spark, out)
       val (pDir, lDir) =
         queries.Bm25Store.buildIfAbsent(spark, out, "full", docs)
-      val row = championSection(spark, out, docs, pDir, lDir, copies,
+      championSection(spark, out, docs, pDir, lDir, copies,
         () => sampleHeap())
-      println(s"""{"metric":"stress_champ","copies":$copies,"base":"$base","revision":"$revision","shuffle_partitions":$shuffleParts,$row,"peak_heap_mb":$peakHeapMb,"host":${hostJson()}}""")
-      spark.stop()
-      return
     }
 
-    // Persisted retrieval/dedup stores at scale (r16, storeonly mode) —
+    // Persisted retrieval/dedup stores at scale (r16, the `store` section) —
     // what q127/q128 (BM25 inverted index) and q130/q131 (LSH sketch)
     // must prove at tier scale: (a) the BUILD grows with the corpus —
     // it is the tokenize/sketch cost the store exists to amortize;
@@ -623,11 +660,7 @@ object Stress {
     // of base docs — constant rows at every tier) stays flat while the
     // build it avoids grows. Each pass rebuilds everything from
     // scratch, so all fields are independent measurements.
-    val storeJson = if (!storeOnly) "" else {
-      def rmrfS(f: File): Unit = {
-        if (f.isDirectory) f.listFiles().foreach(rmrfS)
-        f.delete(): Unit
-      }
+    def stores(): String = {
       val docs = Tables.documents(spark, out)
       val nDocs = docs.count()
       val baseDocs = docs.filter(col("doc_id") < 1000000L).count()
@@ -639,7 +672,7 @@ object Stress {
       // ---- BM25 inverted index ----
       val pDir = s"$out/_bm25_postings"
       val lDir = s"$out/_bm25_dl"
-      Seq(pDir, lDir).foreach(p => rmrfS(new File(p)))
+      Seq(pDir, lDir).foreach(p => rmrf(new File(p)))
       val tB = System.nanoTime()
       val (post, dlRows) = queries.Bm25Store.indexRows(docs)
       queries.Bm25Store.writePostings(spark, post, pDir, "overwrite", 8)
@@ -662,7 +695,7 @@ object Stress {
         "persisted BM25 diverged from the direct pipeline at scale:\n" +
           s"  probe : ${bmRows.mkString(" ")}\n  direct: ${bmDirect.mkString(" ")}")
       // fixed-delta frontier update on a fresh seed index
-      Seq(pDir, lDir).foreach(p => rmrfS(new File(p)))
+      Seq(pDir, lDir).foreach(p => rmrf(new File(p)))
       val seed = docs.filter(col("doc_id") < seedCut)
       val nSeed = seed.count()
       val (post0, dl0) = queries.Bm25Store.indexRows(seed)
@@ -684,7 +717,7 @@ object Stress {
       // ---- LSH sketch store ----
       val bDir = s"$out/_lsh_bands"
       val sDir = s"$out/_lsh_shingles"
-      Seq(bDir, sDir).foreach(p => rmrfS(new File(p)))
+      Seq(bDir, sDir).foreach(p => rmrf(new File(p)))
       val tL = System.nanoTime()
       queries.LshStore.writeIndex(spark, docs, bDir, sDir, "overwrite")
       val lshBuildSec = (System.nanoTime() - tL) / 1e9
@@ -696,7 +729,7 @@ object Stress {
       }
       val lshFirst = pairsOnce()
       val lshSteady = math.min(lshFirst, pairsOnce())
-      // direct pipeline, cold (fresh session cache in storeonly mode):
+      // direct pipeline, cold (fresh session cache in a lone `store` pass):
       // tokenize + shingle + 32 md5 minima + band join + verify
       val tLD = System.nanoTime()
       val lshDirect = queries.Dedup.q46MinhashMd5.fn(spark, out).collect()
@@ -704,7 +737,7 @@ object Stress {
       val lshRows = queries.LshStore.pairs(spark, bDir, sDir).collect()
       require(lshRows.map(_.toString).toSeq == lshDirect.map(_.toString).toSeq,
         "persisted LSH pairs diverged from the direct sketch at scale")
-      Seq(bDir, sDir).foreach(p => rmrfS(new File(p)))
+      Seq(bDir, sDir).foreach(p => rmrf(new File(p)))
       queries.LshStore.writeIndex(spark, seed, bDir, sDir, "overwrite")
       val tLU = System.nanoTime()
       val lshUpdated = queries.LshStore.ensureIndexed(spark, out, bDir, sDir)
@@ -725,17 +758,11 @@ object Stress {
       f""""bm25_store":{"docs":$nDocs,"build_sec":$bmBuildSec%.2f,"probe_first_sec":$bmFirst%.2f,"probe_sec":$bmSteady%.2f,"direct_sec":$bmDirectSec%.2f,"update_docs":$bmUpdated,"update_sec":$bmUpdateSec%.2f,"match":true},"lsh_store":{"docs":$nDocs,"build_sec":$lshBuildSec%.2f,"pairs_first_sec":$lshFirst%.2f,"pairs_sec":$lshSteady%.2f,"pairs":${lshRows.length},"direct_sec":$lshDirectSec%.2f,"update_docs":$lshUpdated,"update_sec":$lshUpdateSec%.2f,"match":true}"""
     }
 
-    if (storeOnly) {
-      println(s"""{"metric":"stress_store","copies":$copies,"base":"$base","revision":"$revision","shuffle_partitions":$shuffleParts,$storeJson,"peak_heap_mb":$peakHeapMb,"host":${hostJson()}}""")
-      spark.stop()
-      return
-    }
-
     // q111 re-measurement (r17: the salted hot-gram join) — first AND
     // steady per pass; the committed 100x row predates the salt, so
     // this section's passes replace it with the salted revision
-    // disclosed (tools/merge_q111.py).
-    if (q111Only) {
+    // disclosed (tools/merge_stress.py --section q111).
+    def q111(): String = {
       val fn = SparkEntry.queries("q111_substring_dedup")
       def once(): Double = {
         val t0 = System.nanoTime()
@@ -770,12 +797,10 @@ object Stress {
         s"(repeats ${steadies.map(s => f"$s%.1f").mkString("/")})")
       val reps = steadies.map(s => f"$s%.2f").mkString("[", ",", "]")
       val sysArr = passSys.map(s => f"$s%.3f").mkString("[", ",", "]")
-      println(f"""{"metric":"stress_q111","copies":$copies,"base":"$base","revision":"$revision","shuffle_partitions":$shuffleParts,"q111_substring_dedup":{"first_sec":$first%.2f,"steady_sec":$steady%.2f,"steady_repeats":$reps,"pass_sys_pct":$sysArr,"storm_discarded":$stormDiscarded},"peak_heap_mb":$peakHeapMb,"host":${hostJson()}}""")
-      spark.stop()
-      return
+      f""""q111_substring_dedup":{"first_sec":$first%.2f,"steady_sec":$steady%.2f,"steady_repeats":$reps,"pass_sys_pct":$sysArr,"storm_discarded":$stormDiscarded}"""
     }
 
-    // Batched-probe scaling at tier scale (r19, probeonly mode): the
+    // Batched-probe scaling at tier scale (r19, the `probe` section): the
     // q137/q138/q139 shapes measured in the NUMBER OF QUERIES against
     // the tier's persisted stores — ivfProbeAll (dense), Bm25Store.
     // probeAll (sparse), LshStore.probeBatch (near-dup) at 100 / 1 000
@@ -784,7 +809,7 @@ object Stress {
     // |Q| × per-probe latency — 10 000 × ~1 s ≈ hours; one plan keeps
     // 10k queries in the seconds range). Query staging (sort + limit +
     // persist) is untimed; min-of-2 per point with per-pass sys%.
-    if (probeOnly) {
+    def batchedProbes(): String = {
       val docs = Tables.documents(spark, out)
       val vecs = Tables.load(spark, out, "embeddings")
         .select(col("vec_id"), col("embedding").cast("array<float>").as("embedding"))
@@ -959,13 +984,11 @@ object Stress {
         f"""{"n_queries":10000,"n_probe":4,"cells":${cands.length},"cell_max":$cMax,"cell_median":$cMed,"cell_ratio":${if (cMed > 0) cMax.toDouble / cMed else -1.0}%.2f,"partition_max":$pMax,"partition_median":$pMed,"partition_ratio":${if (pMed > 0) pMax.toDouble / pMed else -1.0}%.2f,"salted":{"salt_factor":$saltF,"keys":${sCands.length},"key_max":$sMax,"key_median":$sMed,"key_ratio":${if (sMed > 0) sMax.toDouble / sMed else -1.0}%.2f,"partition_max":$spMax,"partition_median":$spMed,"partition_ratio":${if (spMed > 0) spMax.toDouble / spMed else -1.0}%.2f}}"""
       }
       System.err.println(s"[stress] ivf_cell_skew $skewJson")
-      println(s"""{"metric":"stress_probe","copies":$copies,"base":"$base","revision":"$revision","shuffle_partitions":$shuffleParts,"ivf_probe_all":${secsJson(ivfRows)},"bm25_probe_all":${secsJson(bmRows)},"lsh_probe_batch":${secsJson(lshRows)},"ivf_cell_skew":$skewJson,$afterAppendJson,$tokSkewJson,"peak_heap_mb":$peakHeapMb,"host":${hostJson()}}""")
-      spark.stop()
-      return
+      s""""ivf_probe_all":${secsJson(ivfRows)},"bm25_probe_all":${secsJson(bmRows)},"lsh_probe_batch":${secsJson(lshRows)},"ivf_cell_skew":$skewJson,$afterAppendJson,$tokSkewJson"""
     }
 
     // Long-run index-store self-compaction at tier scale (r19,
-    // compactonly mode): q135 proves probe bit-identity under a FORCED
+    // the `compact` section): q135 proves probe bit-identity under a FORCED
     // every-batch cycle at gate scale; this section measures the claim
     // that matters at 100 TB — a BM25 index maintained across 120
     // micro-batches under the PRODUCTION threshold
@@ -975,11 +998,7 @@ object Stress {
     // Probes sample every 10 batches (with per-probe sys% so storm-
     // inflated samples are adjudicable); the two stores must end
     // probe-bit-identical — compaction merges files, never rows.
-    if (compactOnly) {
-      def rmrfC(f: File): Unit = {
-        if (f.isDirectory) f.listFiles().foreach(rmrfC)
-        f.delete(): Unit
-      }
+    def compaction(): String = {
       val feedCat =
         """{"table":{"name":"docs_feed_c"},"rowkey":"doc_id",
           | "columns":{"doc_id":{"cf":"rowkey","col":"doc_id","type":"long"},
@@ -997,7 +1016,7 @@ object Stress {
       val phases = 3
       val perPhase = batches / phases
       val feedDir = s"$out/_compact_feed"
-      rmrfC(new File(feedDir))
+      rmrf(new File(feedDir))
       // ascending doc_id slices (ntile over the global order): a fixed
       // batch COUNT at every tier, so trajectories compare across
       // 1x/10x/100x; the single-partition window runs once, at staging
@@ -1019,7 +1038,7 @@ object Stress {
         val pDir = s"$out/_compact_$tag-postings"
         val lDir = s"$out/_compact_$tag-dl"
         private val ckpt = s"$out/_compact_$tag-ckpt"
-        Seq(pDir, lDir, ckpt).foreach(p => rmrfC(new File(p)))
+        Seq(pDir, lDir, ckpt).foreach(p => rmrf(new File(p)))
         val batchSecs = scala.collection.mutable.ListBuffer[Double]()
         val probeSecs = scala.collection.mutable.ListBuffer[Double]()
         val liveShards = scala.collection.mutable.ListBuffer[Int]()
@@ -1097,9 +1116,7 @@ object Stress {
       def arrI(xs: Seq[Int]) = xs.mkString("[", ",", "]")
       System.err.println(s"[stress] compact prod live=${pL.mkString("/")} probes=${arrD(pP)}")
       System.err.println(s"[stress] compact ctrl live=${cL.mkString("/")} probes=${arrD(cP)}")
-      println(s"""{"metric":"stress_compact","copies":$copies,"base":"$base","revision":"$revision","shuffle_partitions":$shuffleParts,"batches":$batches,"docs":$nDocs,"prod":{"threshold":64,"batch_secs":${arrD(pB)},"probe_secs":${arrD(pP)},"probe_sys_pct":${arrD(pS)},"live_shards":${arrI(pL)}},"control":{"threshold":"inf","batch_secs":${arrD(cB)},"probe_secs":${arrD(cP)},"probe_sys_pct":${arrD(cS)},"live_shards":${arrI(cL)}},"match":true,"peak_heap_mb":$peakHeapMb,"host":${hostJson()}}""")
-      spark.stop()
-      return
+      s""""batches":$batches,"docs":$nDocs,"prod":{"threshold":64,"batch_secs":${arrD(pB)},"probe_secs":${arrD(pP)},"probe_sys_pct":${arrD(pS)},"live_shards":${arrI(pL)}},"control":{"threshold":"inf","batch_secs":${arrD(cB)},"probe_secs":${arrD(cP)},"probe_sys_pct":${arrD(cS)},"live_shards":${arrI(cL)}},"match":true"""
     }
 
     // Streaming index maintenance at scale (r17, q132's composition):
@@ -1113,11 +1130,7 @@ object Stress {
     // flat across tiers while the seed index it maintains grows 100x.
     // Equality is asserted against the direct full-corpus pipeline
     // (the q128 equation) every pass.
-    if (streamOnly) {
-      def rmrfS2(f: File): Unit = {
-        if (f.isDirectory) f.listFiles().foreach(rmrfS2)
-        f.delete(): Unit
-      }
+    def streaming(): String = {
       val feedCat =
         """{"table":{"name":"docs_feed"},"rowkey":"doc_id",
           | "columns":{"doc_id":{"cf":"rowkey","col":"doc_id","type":"long"},
@@ -1132,7 +1145,7 @@ object Stress {
       val pDir = s"$out/_stream_postings"
       val lDir = s"$out/_stream_dl"
       val ckpt = s"$out/_stream_ckpt"
-      Seq(feedDir, pDir, lDir, ckpt).foreach(p => rmrfS2(new File(p)))
+      Seq(feedDir, pDir, lDir, ckpt).foreach(p => rmrf(new File(p)))
       def commitFeed(df: org.apache.spark.sql.DataFrame): Unit =
         df.repartitionByRange(4, col("doc_id"))
           .write.format("graft-kv")
@@ -1203,8 +1216,8 @@ object Stress {
       val tailN = nVecs2 - vecs.filter(col("vec_id") < seedCutV).count()
       def stageIvf(tag: String): String = {
         val corpusDir = s"$out/_ivfstream_$tag"
-        rmrfS2(new File(corpusDir))
-        rmrfS2(new File(queries.IvfStore.indexRoot(corpusDir)))
+        rmrf(new File(corpusDir))
+        rmrf(new File(queries.IvfStore.indexRoot(corpusDir)))
         vecs.filter(col("vec_id") < seedCutV).coalesce(4)
           .write.mode("overwrite").parquet(s"$corpusDir/embeddings.parquet")
         val t = System.nanoTime()
@@ -1219,7 +1232,7 @@ object Stress {
       // feed: v1 = seed snapshot, v2-v4 = the fixed tail in 3 slices
       val vFeed = s"$out/_ivfstream_feed"
       val vCkpt = s"$out/_ivfstream_ckpt"
-      Seq(vFeed, vCkpt).foreach(p => rmrfS2(new File(p)))
+      Seq(vFeed, vCkpt).foreach(p => rmrf(new File(p)))
       val vCuts = Seq(seedCutV + (baseVecs - (baseVecs * 9) / 10) / 3,
         seedCutV + 2 * (baseVecs - (baseVecs * 9) / 10) / 3)
       def commitVFeed(df: org.apache.spark.sql.DataFrame): Unit =
@@ -1278,9 +1291,7 @@ object Stress {
       val vVecsArr = vBatchVecs.mkString("[", ",", "]")
       val vSysArr = vBatchSys.map(s => f"$s%.3f").mkString("[", ",", "]")
 
-      println(f"""{"metric":"stress_stream","copies":$copies,"base":"$base","revision":"$revision","shuffle_partitions":$shuffleParts,"bm25_stream":{"docs":$nDocs,"seed_build_sec":$seedBuildSec%.2f,"batch_secs":$batchArr,"batch_docs":$docsArr,"batch_sys_pct":$bSysArr,"drain_sec":$drainSec%.2f,"direct_sec":$directSec%.2f,"match":true},"ivf_stream":{"vectors":$nVecs2,"seed_build_sec":$ivfSeedSec%.2f,"batch_secs":$vBatchArr,"batch_vecs":$vVecsArr,"batch_sys_pct":$vSysArr,"drain_sec":$vDrainSec%.2f,"onebatch_sec":$oneBatchSec%.2f,"match":true},"peak_heap_mb":$peakHeapMb,"host":${hostJson()}}""")
-      spark.stop()
-      return
+      f""""bm25_stream":{"docs":$nDocs,"seed_build_sec":$seedBuildSec%.2f,"batch_secs":$batchArr,"batch_docs":$docsArr,"batch_sys_pct":$bSysArr,"drain_sec":$drainSec%.2f,"direct_sec":$directSec%.2f,"match":true},"ivf_stream":{"vectors":$nVecs2,"seed_build_sec":$ivfSeedSec%.2f,"batch_secs":$vBatchArr,"batch_vecs":$vVecsArr,"batch_sys_pct":$vSysArr,"drain_sec":$vDrainSec%.2f,"onebatch_sec":$oneBatchSec%.2f,"match":true}"""
     }
 
     // CDC catch-up at scale — the q113 composition measured: a KV table
@@ -1293,7 +1304,7 @@ object Stress {
     // build is cached across passes (build_sec = 0 on reuse); the drain
     // re-runs every pass from a fresh checkpoint. Exactly-once is
     // asserted at scale: drained rows must equal the tail's row count.
-    val cdcJson = if (sectionOnly) "" else {
+    def cdcCatchup(): String = {
       val cdcDir = s"$out/_kv_cdc_catchup2" // v2: byte-sized tail versions
       val cdcCat =
         """{"table":{"name":"cdc_catchup"},"rowkey":"lk",
@@ -1346,10 +1357,6 @@ object Stress {
         .filter(_.firstVersion >= 2)
         .map(sh => new File(s"$cdcDir/${sh.file}").length()).sum
       val ckpt = s"$cdcDir-ckpt"
-      def rmrf(f: File): Unit = {
-        if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.foreach(rmrf)
-        f.delete(): Unit
-      }
       rmrf(new File(ckpt))
       val t1 = System.nanoTime()
       val q = spark.readStream.format("graft-kv")
@@ -1403,7 +1410,7 @@ object Stress {
     //  - BOUNDED STATE: watermark eviction must hold peak join state
     //    well under the total ingested rows, or a long catch-up
     //    accumulates both streams in memory.
-    val ssJoinJson = if (sectionOnly) "" else {
+    def ssJoin(): String = {
       val lDir = s"$out/_kv_ssj_left"
       val rDir = s"$out/_kv_ssj_right"
       val lCat =
@@ -1445,11 +1452,7 @@ object Stress {
           expr("lu = ru AND rt BETWEEN lt AND lt + 3600000"))
         .count()
       val ckpt = s"$lDir-ckpt"
-      def rmrf2(f: File): Unit = {
-        if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.foreach(rmrf2)
-        f.delete(): Unit
-      }
-      rmrf2(new File(ckpt))
+      rmrf(new File(ckpt))
       def stream(cat: String, dir: String, p: String) =
         spark.readStream.format("graft-kv")
           .option("catalog", cat).option("path", dir)
@@ -1494,7 +1497,7 @@ object Stress {
       val maxState = progresses.flatMap(_.stateOperators.map(_.numRowsTotal))
         .foldLeft(0L)(math.max)
       val nB = progresses.count(_.numInputRows > 0)
-      rmrf2(new File(ckpt))
+      rmrf(new File(ckpt))
       if (progresses.length < 100) {
         require(outRows == truth,
           s"stream-stream join drained $outRows rows, batch truth is $truth")
@@ -1519,29 +1522,6 @@ object Stress {
       f""""ss_join":{"built":$ssBuilt,"build_sec":$ssBuildSec%.2f,"drain_sec":$ssDrainSec%.2f,"joined_rows":$outRows,"truth_rows":$truth,"micro_batches":$nB,"max_state_rows":$maxState,"input_rows":$inRows,"state_partitions":$ssStateParts,$profJson}"""
     }
 
-    if (dmlOnly) {
-      // the DML-patch tier artifact: the ivf_dml_patch section was
-      // added after the r15 tier campaign froze, so it ships as its
-      // own {"metric":"stress_dml"} line per tier instead of
-      // invalidating the committed same-revision multi-pass artifacts
-      println(s"""{"metric":"stress_dml","copies":$copies,"base":"$base","revision":"$revision","shuffle_partitions":$shuffleParts,$ivfDmlJson,"peak_heap_mb":$peakHeapMb,"host":${hostJson()}}""")
-      spark.stop()
-      return
-    }
-
-    if (heavy) {
-      // the reduced tier's artifact: heavy-family timings, q45's
-      // per-round frontier collapse, and the recall-checked SemDeDup —
-      // everything the 100 TB extrapolation rests on, nothing else
-      val qs = results.map { case (k, (fst, std)) =>
-        f""""$k":{"first_sec":$fst%.2f,"steady_sec":$std%.2f}"""
-      }.mkString("{", ",", "}")
-      val frontier = q45Frontiers.mkString("[", ",", "]")
-      println(s"""{"metric":"stress","mode":"heavy","copies":$copies,"base":"$base","revision":"$revision","shuffle_partitions":$shuffleParts,"queries":$qs,"q45_frontier_sizes":$frontier,"q45_escalated":$q45Escalated,$semOut,$ivfJson,$ivfPersistJson,$ivfIncJson,$ivfDmlJson,$cdcJson,$ssJoinJson,"peak_heap_mb":$peakHeapMb,"host":${hostJson()}}""")
-      spark.stop()
-      return
-    }
-
     // near-dup PAIR enumeration at scale (q55's documented scale knob):
     // bucket width grows with the corpus. A STATIC plane count is the
     // trap round 7 measured — at 30× the 8-plane/256-bucket grid stayed
@@ -1554,47 +1534,50 @@ object Stress {
     // stays hard-asserted at ≥ 0.95 below. The 10×/30× replicas have
     // real ground truth: every base vector has `copies` epsilon-
     // perturbed cross-copy twins → base_n · C(copies, 2) true pairs.
-    val emb = spark.read.parquet(s"$out/embeddings.parquet")
-    val nVec = emb.count()
-    val planes = math.max(4,
-      math.ceil(math.log(nVec / 64.0) / math.log(2.0)).toInt)
-    def pairsOnce(): (Double, DataFrame) = {
-      val t0 = System.nanoTime()
-      val df = queries.Similarity.lshNearDupPairs(emb, threshold = 0.9,
-        tables = 4, planesPerTable = planes)
-      df.queryExecution.toRdd.count()
-      sampleHeap()
-      ((System.nanoTime() - t0) / 1e9, df)
+    def nearDupPairs(): String = {
+      val emb = spark.read.parquet(s"$out/embeddings.parquet")
+      val nVec = emb.count()
+      val planes = math.max(4,
+        math.ceil(math.log(nVec / 64.0) / math.log(2.0)).toInt)
+      def pairsOnce(): (Double, DataFrame) = {
+        val t0 = System.nanoTime()
+        val df = queries.Similarity.lshNearDupPairs(emb, threshold = 0.9,
+          tables = 4, planesPerTable = planes)
+        df.queryExecution.toRdd.count()
+        sampleHeap()
+        ((System.nanoTime() - t0) / 1e9, df)
+      }
+      val (pFirst, _) = pairsOnce()
+      val (pSteady, pairsDf0) = pairsOnce()
+      // one more materialization serves BOTH the pair count and the recall
+      // filter (uncached counts would re-run the whole LSH pipeline each)
+      val pairsDf = pairsDf0.persist()
+      val nPairs = pairsDf.count()
+      // Recall against the replica's GROUND TRUTH, not just a pair count:
+      // copy i of base vector v differs from copy j only in the first
+      // component (±0.001·|i−j|), so the epsilon-twin pairs — every
+      // cross-copy (i,j) pair per base id, base_n · C(copies,2) total —
+      // are all true near-dups at cosine ≥ 0.9. A found pair is "true"
+      // iff both sides share vec_id % 1000000 (the base id). The base
+      // corpus itself has no ≥0.9 pairs (q55 at 1× returns 0 rows), so
+      // at copies == 1 there is no ground truth and recall is skipped.
+      val recallJson = if (copies > 1) {
+        val baseN = spark.read.parquet(s"$base/embeddings.parquet").count()
+        val truePairs = baseN * copies.toLong * (copies - 1) / 2
+        val foundTrue = pairsDf
+          .filter(col("id_a") % 1000000L === col("id_b") % 1000000L).count()
+        val recall = foundTrue.toDouble / truePairs
+        System.err.println(f"[stress] near_dup recall=$recall%.4f ($foundTrue of $truePairs true twin pairs)")
+        // near-identical vectors agree with every hyperplane w.h.p.; with
+        // 4 independent tables a recall under 0.95 means the bucketing is
+        // broken, not unlucky — fail the probe loudly
+        require(recall >= 0.95, f"LSH near-dup recall $recall%.4f < 0.95 against replica ground truth")
+        f""","recall":$recall%.4f,"true_pairs":$truePairs,"found_true":$foundTrue"""
+      } else ""
+      pairsDf.unpersist(blocking = true)
+      System.err.println(f"[stress] near_dup_pairs planes=$planes first=$pFirst%.1fs steady=$pSteady%.1fs pairs=$nPairs")
+      f""""near_dup_pairs":{"planes":$planes,"first_sec":$pFirst%.2f,"steady_sec":$pSteady%.2f,"pairs":$nPairs$recallJson}"""
     }
-    val (pFirst, _) = pairsOnce()
-    val (pSteady, pairsDf0) = pairsOnce()
-    // one more materialization serves BOTH the pair count and the recall
-    // filter (uncached counts would re-run the whole LSH pipeline each)
-    val pairsDf = pairsDf0.persist()
-    val nPairs = pairsDf.count()
-    // Recall against the replica's GROUND TRUTH, not just a pair count:
-    // copy i of base vector v differs from copy j only in the first
-    // component (±0.001·|i−j|), so the epsilon-twin pairs — every
-    // cross-copy (i,j) pair per base id, base_n · C(copies,2) total —
-    // are all true near-dups at cosine ≥ 0.9. A found pair is "true"
-    // iff both sides share vec_id % 1000000 (the base id). The base
-    // corpus itself has no ≥0.9 pairs (q55 at 1× returns 0 rows), so
-    // at copies == 1 there is no ground truth and recall is skipped.
-    val recallJson = if (copies > 1) {
-      val baseN = spark.read.parquet(s"$base/embeddings.parquet").count()
-      val truePairs = baseN * copies.toLong * (copies - 1) / 2
-      val foundTrue = pairsDf
-        .filter(col("id_a") % 1000000L === col("id_b") % 1000000L).count()
-      val recall = foundTrue.toDouble / truePairs
-      System.err.println(f"[stress] near_dup recall=$recall%.4f ($foundTrue of $truePairs true twin pairs)")
-      // near-identical vectors agree with every hyperplane w.h.p.; with
-      // 4 independent tables a recall under 0.95 means the bucketing is
-      // broken, not unlucky — fail the probe loudly
-      require(recall >= 0.95, f"LSH near-dup recall $recall%.4f < 0.95 against replica ground truth")
-      f""","recall":$recall%.4f,"true_pairs":$truePairs,"found_true":$foundTrue"""
-    } else ""
-    pairsDf.unpersist(blocking = true)
-    System.err.println(f"[stress] near_dup_pairs planes=$planes first=$pFirst%.1fs steady=$pSteady%.1fs pairs=$nPairs")
 
     // Sequence-packing A/B (q105): the distributed prefix sum
     // (bucket subtotals → broadcast offsets → parallel local cumsums)
@@ -1603,75 +1586,81 @@ object Stress {
     // mix, so the naive shape runs the whole cumsum on #languages
     // tasks while the distributed shape runs on #languages × buckets —
     // the two must agree row-for-row (asserted via symmetric EXCEPT).
-    def timePack(mk: () => DataFrame): (Double, DataFrame) = {
-      def once(): (Double, DataFrame) = {
-        val t0 = System.nanoTime()
-        val df = mk()
-        df.queryExecution.toRdd.count()
-        sampleHeap()
-        ((System.nanoTime() - t0) / 1e9, df)
+    def packingAb(): String = {
+      def timePack(mk: () => DataFrame): (Double, DataFrame) = {
+        def once(): (Double, DataFrame) = {
+          val t0 = System.nanoTime()
+          val df = mk()
+          df.queryExecution.toRdd.count()
+          sampleHeap()
+          ((System.nanoTime() - t0) / 1e9, df)
+        }
+        val (a, _) = once(); val (b, df) = once()
+        (math.min(a, b), df)
       }
-      val (a, _) = once(); val (b, df) = once()
-      (math.min(a, b), df)
+      val (packDistSec, packDistDf) =
+        timePack(() => SparkEntry.queries("q105_sequence_packing")(spark, out))
+      val (packLangSec, packLangDf) = timePack { () =>
+        import org.apache.spark.sql.expressions.Window
+        val w = Window.partitionBy(col("lang")).orderBy(col("doc_id"))
+          .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+        Tables.documents(spark, out)
+          .select(col("doc_id"), col("lang"),
+            size(graft.functions.Text.tokens(col("text"))).cast("long").as("n_toks"))
+          .withColumn("cum", sum(col("n_toks")).over(w))
+          .select(col("doc_id"), col("lang"), col("n_toks"),
+            expr("(cum - n_toks) DIV 2048").as("first_seq"),
+            expr("CASE WHEN n_toks = 0 THEN (cum - n_toks) DIV 2048 " +
+                 "ELSE (cum - 1) DIV 2048 END").as("last_seq"))
+      }
+      val packDiff = packDistDf.except(packLangDf).count() +
+        packLangDf.except(packDistDf).count()
+      require(packDiff == 0,
+        s"distributed packing disagrees with per-language window on $packDiff rows")
+      System.err.println(f"[stress] packing distributed=$packDistSec%.2fs per_lang_window=$packLangSec%.2fs (x${packLangSec / packDistSec}%.2f)")
+      f""""packing_ab":{"distributed_sec":$packDistSec%.2f,"per_lang_window_sec":$packLangSec%.2f,"speedup":${packLangSec / packDistSec}%.2f}"""
     }
-    val (packDistSec, packDistDf) =
-      timePack(() => SparkEntry.queries("q105_sequence_packing")(spark, out))
-    val (packLangSec, packLangDf) = timePack { () =>
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy(col("lang")).orderBy(col("doc_id"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      Tables.documents(spark, out)
-        .select(col("doc_id"), col("lang"),
-          size(graft.functions.Text.tokens(col("text"))).cast("long").as("n_toks"))
-        .withColumn("cum", sum(col("n_toks")).over(w))
-        .select(col("doc_id"), col("lang"), col("n_toks"),
-          expr("(cum - n_toks) DIV 2048").as("first_seq"),
-          expr("CASE WHEN n_toks = 0 THEN (cum - n_toks) DIV 2048 " +
-               "ELSE (cum - 1) DIV 2048 END").as("last_seq"))
-    }
-    val packDiff = packDistDf.except(packLangDf).count() +
-      packLangDf.except(packDistDf).count()
-    require(packDiff == 0,
-      s"distributed packing disagrees with per-language window on $packDiff rows")
-    System.err.println(f"[stress] packing distributed=$packDistSec%.2fs per_lang_window=$packLangSec%.2fs (x${packLangSec / packDistSec}%.2f)")
 
     // Columnar vs row full-scan A/B on a KV table built from the
     // replica's lineitem (the vectorized path's target workload: wide
     // flat schema, no pruning — every record decoded; big enough that
     // the scan is decode-bound, not task-scheduling-bound). Same table,
     // same scan, only the reader changes.
-    val abDir = s"$out/_kv_columnar_ab_li"
-    val abCat =
-      """{"table":{"name":"lineitem_ab"},"rowkey":"lk",
-        | "columns":{"lk":{"cf":"rowkey","col":"lk","type":"long"},
-        |            "l_partkey":{"cf":"m","col":"pk","type":"long"},
-        |            "l_quantity":{"cf":"m","col":"qt","type":"double"},
-        |            "l_extendedprice":{"cf":"m","col":"ep","type":"double"},
-        |            "l_discount":{"cf":"m","col":"di","type":"double"},
-        |            "l_returnflag":{"cf":"m","col":"rf","type":"string"},
-        |            "l_linestatus":{"cf":"m","col":"ls","type":"string"}}}""".stripMargin
-    if (!new File(s"$abDir/_kvmeta.json").exists()) {
-      spark.read.parquet(s"$out/lineitem.parquet")
-        .select(
-          (col("l_orderkey") * 100 + col("l_linenumber")).as("lk"),
-          col("l_partkey"), col("l_quantity"), col("l_extendedprice"),
-          col("l_discount"), col("l_returnflag"), col("l_linestatus"))
-        .repartitionByRange(32, col("lk"))
-        .write.format("graft-kv").option("catalog", abCat).option("path", abDir)
-        .mode("overwrite").save()
+    def columnarAb(): String = {
+      val abDir = s"$out/_kv_columnar_ab_li"
+      val abCat =
+        """{"table":{"name":"lineitem_ab"},"rowkey":"lk",
+          | "columns":{"lk":{"cf":"rowkey","col":"lk","type":"long"},
+          |            "l_partkey":{"cf":"m","col":"pk","type":"long"},
+          |            "l_quantity":{"cf":"m","col":"qt","type":"double"},
+          |            "l_extendedprice":{"cf":"m","col":"ep","type":"double"},
+          |            "l_discount":{"cf":"m","col":"di","type":"double"},
+          |            "l_returnflag":{"cf":"m","col":"rf","type":"string"},
+          |            "l_linestatus":{"cf":"m","col":"ls","type":"string"}}}""".stripMargin
+      if (!new File(s"$abDir/_kvmeta.json").exists()) {
+        spark.read.parquet(s"$out/lineitem.parquet")
+          .select(
+            (col("l_orderkey") * 100 + col("l_linenumber")).as("lk"),
+            col("l_partkey"), col("l_quantity"), col("l_extendedprice"),
+            col("l_discount"), col("l_returnflag"), col("l_linestatus"))
+          .repartitionByRange(32, col("lk"))
+          .write.format("graft-kv").option("catalog", abCat).option("path", abDir)
+          .mode("overwrite").save()
+      }
+      def scanAb(columnar: Boolean): Double = {
+        val t0 = System.nanoTime()
+        spark.read.format("graft-kv").option("catalog", abCat).option("path", abDir)
+          .option("columnar", columnar.toString).load()
+          .queryExecution.toRdd.count()
+        sampleHeap()
+        (System.nanoTime() - t0) / 1e9
+      }
+      scanAb(columnar = true) // warm the page cache once before timing either
+      val colSec = math.min(scanAb(columnar = true), scanAb(columnar = true))
+      val rowSec = math.min(scanAb(columnar = false), scanAb(columnar = false))
+      System.err.println(f"[stress] kv full-scan columnar=$colSec%.2fs row=$rowSec%.2fs (x${rowSec / colSec}%.2f)")
+      f""""kv_columnar_ab":{"columnar_sec":$colSec%.2f,"row_sec":$rowSec%.2f,"speedup":${rowSec / colSec}%.2f}"""
     }
-    def scanAb(columnar: Boolean): Double = {
-      val t0 = System.nanoTime()
-      spark.read.format("graft-kv").option("catalog", abCat).option("path", abDir)
-        .option("columnar", columnar.toString).load()
-        .queryExecution.toRdd.count()
-      sampleHeap()
-      (System.nanoTime() - t0) / 1e9
-    }
-    scanAb(columnar = true) // warm the page cache once before timing either
-    val colSec = math.min(scanAb(columnar = true), scanAb(columnar = true))
-    val rowSec = math.min(scanAb(columnar = false), scanAb(columnar = false))
-    System.err.println(f"[stress] kv full-scan columnar=$colSec%.2fs row=$rowSec%.2fs (x${rowSec / colSec}%.2f)")
 
     // Storage-partitioned join A/B: the SAME co-bucketed fact-fact join
     // (per-order lineitem aggregates ⋈ orders, both bucketed 32 ways on
@@ -1683,112 +1672,100 @@ object Stress {
     // which is the dominant exchange of a 100 TB star-schema pipeline.
     // Results must agree row-for-row; plan shapes are asserted so a
     // regression can't silently turn A into B.
-    val spjWh = s"$out/_spj_wh"
-    spark.conf.set("spark.sql.catalog.stress_spj", "graft.sources.KvSqlCatalog")
-    spark.conf.set("spark.sql.catalog.stress_spj.warehouse", spjWh)
-    spark.conf.set("spark.sql.sources.v2.bucketing.pushPartValues.enabled", "true")
-    if (!new File(s"$spjWh/default/order_lines/_kvmeta.json").exists()) {
-      spark.read.parquet(s"$out/orders.parquet").createOrReplaceTempView("spj_orders_src")
-      spark.read.parquet(s"$out/lineitem.parquet").createOrReplaceTempView("spj_lineitem_src")
-      spark.sql("DROP TABLE IF EXISTS stress_spj.default.order_facts")
-      spark.sql("""CREATE TABLE stress_spj.default.order_facts
-                   TBLPROPERTIES ('rowkey'='ok', 'buckets'='32') AS
-                   SELECT o_orderkey AS ok, o_orderstatus,
-                          CAST(round(o_totalprice * 100.0, 0) AS BIGINT) AS total_c
-                   FROM spj_orders_src""")
-      spark.sql("DROP TABLE IF EXISTS stress_spj.default.order_lines")
-      spark.sql("""CREATE TABLE stress_spj.default.order_lines
-                   TBLPROPERTIES ('rowkey'='ok', 'buckets'='32') AS
-                   SELECT l_orderkey AS ok, count(*) AS n_lines,
-                          sum(CAST(round(l_quantity, 0) AS BIGINT)) AS qty
-                   FROM spj_lineitem_src GROUP BY l_orderkey""")
-    }
-    def spjQuery(): DataFrame = spark.sql(
-      """SELECT /*+ MERGE(l) */ f.o_orderstatus, count(*) AS n,
-                sum(l.qty) AS qty, sum(f.total_c) AS total_c
-         FROM stress_spj.default.order_facts f
-         JOIN stress_spj.default.order_lines l ON f.ok = l.ok
-         GROUP BY f.o_orderstatus ORDER BY f.o_orderstatus""")
-    def timeSpj(bucketing: Boolean): (Double, Array[org.apache.spark.sql.Row], Int) = {
-      spark.conf.set("spark.sql.sources.v2.bucketing.enabled", bucketing.toString)
-      def once(): (Double, Array[org.apache.spark.sql.Row], Int) = {
-        val t0 = System.nanoTime()
-        val df = spjQuery()
-        val rows = df.collect()
-        sampleHeap()
-        // count only JOIN exchanges (partitioned on the join key `ok`):
-        // the aggregation's status-keyed exchange is always there, and
-        // the AQE plan string repeats Initial + Final sections
-        val joinExchanges = df.queryExecution.executedPlan.toString().linesIterator
-          .count(l => l.contains("Exchange hashpartitioning(ok"))
-        ((System.nanoTime() - t0) / 1e9, rows, joinExchanges)
+    def spjAb(): String = {
+      val spjWh = s"$out/_spj_wh"
+      spark.conf.set("spark.sql.catalog.stress_spj", "graft.sources.KvSqlCatalog")
+      spark.conf.set("spark.sql.catalog.stress_spj.warehouse", spjWh)
+      spark.conf.set("spark.sql.sources.v2.bucketing.pushPartValues.enabled", "true")
+      if (!new File(s"$spjWh/default/order_lines/_kvmeta.json").exists()) {
+        spark.read.parquet(s"$out/orders.parquet").createOrReplaceTempView("spj_orders_src")
+        spark.read.parquet(s"$out/lineitem.parquet").createOrReplaceTempView("spj_lineitem_src")
+        spark.sql("DROP TABLE IF EXISTS stress_spj.default.order_facts")
+        spark.sql("""CREATE TABLE stress_spj.default.order_facts
+                     TBLPROPERTIES ('rowkey'='ok', 'buckets'='32') AS
+                     SELECT o_orderkey AS ok, o_orderstatus,
+                            CAST(round(o_totalprice * 100.0, 0) AS BIGINT) AS total_c
+                     FROM spj_orders_src""")
+        spark.sql("DROP TABLE IF EXISTS stress_spj.default.order_lines")
+        spark.sql("""CREATE TABLE stress_spj.default.order_lines
+                     TBLPROPERTIES ('rowkey'='ok', 'buckets'='32') AS
+                     SELECT l_orderkey AS ok, count(*) AS n_lines,
+                            sum(CAST(round(l_quantity, 0) AS BIGINT)) AS qty
+                     FROM spj_lineitem_src GROUP BY l_orderkey""")
       }
-      val (a, _, _) = once(); val (b, rows, ex) = once()
-      (math.min(a, b), rows, ex)
-    }
-    val (spjSec, spjRows, spjEx) = timeSpj(bucketing = true)
-    val (shufSec, shufRows, shufEx) = timeSpj(bucketing = false)
-    spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
-    require(spjEx == 0, s"SPJ plan regressed: $spjEx join exchanges (expected 0)")
-    require(shufEx >= 2, s"shuffle baseline lost its exchanges ($shufEx) — A/B is not measuring the join")
-    require(spjRows.sameElements(shufRows),
-      "storage-partitioned join disagrees with the shuffled join")
-    System.err.println(f"[stress] spj_join spj=$spjSec%.2fs shuffled=$shufSec%.2fs (x${shufSec / spjSec}%.2f)")
-
-    // Point-lookup bucket-pruning A/B on the same 32-bucket fact table:
-    // an IN over a handful of order keys (the canonical "fetch these
-    // records" access) planned (A) with bucket pruning — only shards
-    // tagged with the keys' buckets — vs (B) with the
-    // `bucketPointPrune=false` escape hatch, which falls back to range
-    // pruning alone (near-useless on a hash layout: every bucket's
-    // shards span the keyspace). Same rows both ways, by construction;
-    // the metric delta is the shards a 100 TB point read skips.
-    def pointKeysSample(): Seq[Long] =
-      spark.read.table("stress_spj.default.order_lines")
-        .select("ok").limit(500).collect().map(_.getLong(0)).toSeq
-        .grouped(37).map(_.head).take(12).toSeq
-    val pk = pointKeysSample()
-    def timePoint(prune: Boolean): (Double, Set[Long], Long, Long) = {
-      def once(): (Double, Set[Long], Long, Long) = {
-        val t0 = System.nanoTime()
-        val df = spark.read.option("bucketPointPrune", prune.toString)
-          .table("stress_spj.default.order_lines")
-          .filter(col("ok").isin(pk: _*))
-        val rows = df.collect().map(_.getLong(0)).toSet
-        val m = df.queryExecution.executedPlan.collectLeaves().head.metrics
-        ((System.nanoTime() - t0) / 1e9, rows,
-          m.get("kvShardsPrunedBucket").map(_.value).getOrElse(0L),
-          m.get("kvShardsTotal").map(_.value).getOrElse(0L))
+      def spjQuery(): DataFrame = spark.sql(
+        """SELECT /*+ MERGE(l) */ f.o_orderstatus, count(*) AS n,
+                  sum(l.qty) AS qty, sum(f.total_c) AS total_c
+           FROM stress_spj.default.order_facts f
+           JOIN stress_spj.default.order_lines l ON f.ok = l.ok
+           GROUP BY f.o_orderstatus ORDER BY f.o_orderstatus""")
+      def timeSpj(bucketing: Boolean): (Double, Array[org.apache.spark.sql.Row], Int) = {
+        spark.conf.set("spark.sql.sources.v2.bucketing.enabled", bucketing.toString)
+        def once(): (Double, Array[org.apache.spark.sql.Row], Int) = {
+          val t0 = System.nanoTime()
+          val df = spjQuery()
+          val rows = df.collect()
+          sampleHeap()
+          // count only JOIN exchanges (partitioned on the join key `ok`):
+          // the aggregation's status-keyed exchange is always there, and
+          // the AQE plan string repeats Initial + Final sections
+          val joinExchanges = df.queryExecution.executedPlan.toString().linesIterator
+            .count(l => l.contains("Exchange hashpartitioning(ok"))
+          ((System.nanoTime() - t0) / 1e9, rows, joinExchanges)
+        }
+        val (a, _, _) = once(); val (b, rows, ex) = once()
+        (math.min(a, b), rows, ex)
       }
-      val (a, _, _, _) = once(); val (b, rows, pruned, total) = once()
-      (math.min(a, b), rows, pruned, total)
-    }
-    val (ptPruneSec, ptRowsA, ptPruned, ptTotal) = timePoint(prune = true)
-    val (ptBaseSec, ptRowsB, ptPrunedOff, _) = timePoint(prune = false)
-    require(ptRowsA == ptRowsB && ptRowsA.nonEmpty,
-      s"bucket-pruned point lookup disagrees (${ptRowsA.size} vs ${ptRowsB.size})")
-    require(ptPruned > 0, "bucket pruning planned nothing out — probe is vacuous")
-    require(ptPrunedOff == 0L, "escape hatch did not disable bucket pruning")
-    System.err.println(f"[stress] point_lookup bucketPruned=$ptPruneSec%.2fs " +
-      f"unpruned=$ptBaseSec%.2fs (x${ptBaseSec / ptPruneSec}%.2f, " +
-      f"skipped $ptPruned of $ptTotal shards)")
+      val (spjSec, spjRows, spjEx) = timeSpj(bucketing = true)
+      val (shufSec, shufRows, shufEx) = timeSpj(bucketing = false)
+      spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
+      require(spjEx == 0, s"SPJ plan regressed: $spjEx join exchanges (expected 0)")
+      require(shufEx >= 2, s"shuffle baseline lost its exchanges ($shufEx) — A/B is not measuring the join")
+      require(spjRows.sameElements(shufRows),
+        "storage-partitioned join disagrees with the shuffled join")
+      System.err.println(f"[stress] spj_join spj=$spjSec%.2fs shuffled=$shufSec%.2fs (x${shufSec / spjSec}%.2f)")
 
-    val qs = results.map { case (k, (fst, std)) =>
-      f""""$k":{"first_sec":$fst%.2f,"steady_sec":$std%.2f}"""
-    }.mkString("{", ",", "}")
-    val abJson =
-      f""""kv_columnar_ab":{"columnar_sec":$colSec%.2f,"row_sec":$rowSec%.2f,"speedup":${rowSec / colSec}%.2f}"""
-    val pairsJson =
-      f""""near_dup_pairs":{"planes":$planes,"first_sec":$pFirst%.2f,"steady_sec":$pSteady%.2f,"pairs":$nPairs$recallJson}"""
-    val packJson =
-      f""""packing_ab":{"distributed_sec":$packDistSec%.2f,"per_lang_window_sec":$packLangSec%.2f,"speedup":${packLangSec / packDistSec}%.2f}"""
-    val spjJson =
-      f""""spj_ab":{"spj_sec":$spjSec%.2f,"shuffled_sec":$shufSec%.2f,"speedup":${shufSec / spjSec}%.2f}"""
-    val pointJson =
+      // Point-lookup bucket-pruning A/B on the same 32-bucket fact table:
+      // an IN over a handful of order keys (the canonical "fetch these
+      // records" access) planned (A) with bucket pruning — only shards
+      // tagged with the keys' buckets — vs (B) with the
+      // `bucketPointPrune=false` escape hatch, which falls back to range
+      // pruning alone (near-useless on a hash layout: every bucket's
+      // shards span the keyspace). Same rows both ways, by construction;
+      // the metric delta is the shards a 100 TB point read skips.
+      def pointKeysSample(): Seq[Long] =
+        spark.read.table("stress_spj.default.order_lines")
+          .select("ok").limit(500).collect().map(_.getLong(0)).toSeq
+          .grouped(37).map(_.head).take(12).toSeq
+      val pk = pointKeysSample()
+      def timePoint(prune: Boolean): (Double, Set[Long], Long, Long) = {
+        def once(): (Double, Set[Long], Long, Long) = {
+          val t0 = System.nanoTime()
+          val df = spark.read.option("bucketPointPrune", prune.toString)
+            .table("stress_spj.default.order_lines")
+            .filter(col("ok").isin(pk: _*))
+          val rows = df.collect().map(_.getLong(0)).toSet
+          val m = df.queryExecution.executedPlan.collectLeaves().head.metrics
+          ((System.nanoTime() - t0) / 1e9, rows,
+            m.get("kvShardsPrunedBucket").map(_.value).getOrElse(0L),
+            m.get("kvShardsTotal").map(_.value).getOrElse(0L))
+        }
+        val (a, _, _, _) = once(); val (b, rows, pruned, total) = once()
+        (math.min(a, b), rows, pruned, total)
+      }
+      val (ptPruneSec, ptRowsA, ptPruned, ptTotal) = timePoint(prune = true)
+      val (ptBaseSec, ptRowsB, ptPrunedOff, _) = timePoint(prune = false)
+      require(ptRowsA == ptRowsB && ptRowsA.nonEmpty,
+        s"bucket-pruned point lookup disagrees (${ptRowsA.size} vs ${ptRowsB.size})")
+      require(ptPruned > 0, "bucket pruning planned nothing out — probe is vacuous")
+      require(ptPrunedOff == 0L, "escape hatch did not disable bucket pruning")
+      System.err.println(f"[stress] point_lookup bucketPruned=$ptPruneSec%.2fs " +
+        f"unpruned=$ptBaseSec%.2fs (x${ptBaseSec / ptPruneSec}%.2f, " +
+        f"skipped $ptPruned of $ptTotal shards)")
+
+      f""""spj_ab":{"spj_sec":$spjSec%.2f,"shuffled_sec":$shufSec%.2f,"speedup":${shufSec / spjSec}%.2f}""" + "," +
       f""""point_lookup_ab":{"pruned_sec":$ptPruneSec%.2f,"unpruned_sec":$ptBaseSec%.2f,"speedup":${ptBaseSec / ptPruneSec}%.2f,"shards_skipped":$ptPruned,"shards_total":$ptTotal}"""
-    val frontierJson = q45Frontiers.mkString("[", ",", "]")
-    println(s"""{"metric":"stress","copies":$copies,"base":"$base","revision":"$revision","shuffle_partitions":$shuffleParts,"queries":$qs,"q45_frontier_sizes":$frontierJson,"q45_escalated":$q45Escalated,$pairsJson,$semOut,$ivfJson,$ivfPersistJson,$ivfIncJson,$ivfDmlJson,$cdcJson,$ssJoinJson,$packJson,$abJson,$spjJson,$pointJson,"peak_heap_mb":$peakHeapMb,"host":${hostJson()}}""")
-    spark.stop()
+    }
   }
 
   /** BM25 champion-sidecar lifecycle at tier scale (r22, VERDICT r21
@@ -1820,10 +1797,10 @@ object Stress {
     import queries.{Bm25Store, StreamMaint}
     val pA = s"$out/_bm25_champaa_postings"
     val lA = s"$out/_bm25_champaa_dl"
-    Seq(pA, lA).foreach(p => StreamMaint.rmrf(new File(p)))
+    Seq(pA, lA).foreach(p => rmrf(new File(p)))
     StreamMaint.copyDir(new File(pDir), new File(pA))
     StreamMaint.copyDir(new File(lDir), new File(lA))
-    StreamMaint.rmrf(new File(s"$pA/_champ"))
+    rmrf(new File(s"$pA/_champ"))
     def sec(body: => Unit): Double = {
       val t0 = System.nanoTime(); body; (System.nanoTime() - t0) / 1e9
     }
@@ -1867,10 +1844,10 @@ object Stress {
     // (c) the same delta appended WITHOUT a sidecar: the plain write cost
     val pB = s"$out/_bm25_champaa2_postings"
     val lB = s"$out/_bm25_champaa2_dl"
-    Seq(pB, lB).foreach(p => StreamMaint.rmrf(new File(p)))
+    Seq(pB, lB).foreach(p => rmrf(new File(p)))
     StreamMaint.copyDir(new File(pDir), new File(pB))
     StreamMaint.copyDir(new File(lDir), new File(lB))
-    StreamMaint.rmrf(new File(s"$pB/_champ"))
+    rmrf(new File(s"$pB/_champ"))
     val appendPlainSec = sec {
       Bm25Store.maintainBatch(spark, delta, pB, lB): Unit
     }
@@ -1926,4 +1903,3 @@ object Stress {
       replicaTables.mkString(",").getBytes("UTF-8"))
   }
 }
-

@@ -15,20 +15,16 @@ object Verify {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    def rmDir(p: java.io.File): Unit = {
-      if (p.isDirectory) Option(p.listFiles()).toSeq.flatten.foreach(rmDir)
-      p.delete()
-    }
     SparkEntry.queries.foreach { case (name, fn) =>
       // delete the PREVIOUS run's output first: a query that fails below
       // must not leave a stale (possibly still-passing) parquet behind
       // for the driver's compare to silently green-light
-      rmDir(new java.io.File(s"$outDir/$name"))
+      graft.util.Dirs.rmrf(new java.io.File(s"$outDir/$name"))
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
-        rmDir(new java.io.File(s"$outDir/$name")) // no half-written output either
+        graft.util.Dirs.rmrf(new java.io.File(s"$outDir/$name")) // no half-written output either
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)

@@ -5,6 +5,8 @@ import java.util.UUID
 
 import scala.collection.mutable
 
+import graft.util.Dirs.rmrf
+
 /** Shard compaction — the LSM-style maintenance step that keeps the
   * table healthy under the chunked write path: many small sorted runs
   * (bounded-memory writers roll a shard per chunk; streaming appends add
@@ -209,11 +211,6 @@ object KvCompactor {
         }
       stale.length + orphanBlooms.length + champReclaimed
     }
-  }
-
-  private def rmrf(f: File): Unit = {
-    if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.foreach(rmrf)
-    f.delete(): Unit
   }
 
   /** K-way streaming merge of one group into one shard file. */

@@ -3,6 +3,7 @@ package graft.queries
 import java.io.File
 
 import graft.{Q, Tables}
+import graft.util.Dirs.rmrf
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -450,7 +451,7 @@ object Bm25Store {
     champ.write.mode("overwrite").parquet(tmp.toString)
     writeChampMeta(tmp, meta)
     if (!tmp.renameTo(dir)) {
-      StreamMaint.rmrf(tmp) // lost the build race — the winner's is live
+      rmrf(tmp) // lost the build race — the winner's is live
       require(new File(dir, "_SUCCESS").exists(),
         s"champion sidecar build failed to land at $dir")
     }
@@ -460,7 +461,7 @@ object Bm25Store {
     Option(root.listFiles()).toSeq.flatten
       .filter(f => f.getName != fp &&
         System.currentTimeMillis() - f.lastModified() > 3600000L)
-      .foreach(StreamMaint.rmrf)
+      .foreach(rmrf)
     dir.toString
   }
 
@@ -558,7 +559,7 @@ object Bm25Store {
     val tmp = new File(root, s"tmp-${java.util.UUID.randomUUID()}")
     out.write.mode("overwrite").parquet(tmp.toString)
     writeChampMeta(tmp, ChampMeta(n1, sdl1, npos1, built = "merged"))
-    if (!tmp.renameTo(dir)) StreamMaint.rmrf(tmp)
+    if (!tmp.renameTo(dir)) rmrf(tmp)
   }
 
   /** The pre-append sidecar of this store, if one exists — the gate on
@@ -1179,14 +1180,14 @@ object Bm25Store {
       val seedL = s"$dir-bm25s-seed-dl"
       if (!new File(s"$seedP/_kvmeta.json").exists() ||
           !new File(s"$seedL/_kvmeta.json").exists()) {
-        Seq(seedP, seedL).foreach(p => StreamMaint.rmrf(new File(p)))
+        Seq(seedP, seedL).foreach(p => rmrf(new File(p)))
         maintainBatch(s, s.read.format("graft-kv")
           .option("catalog", KvQueries.docsIncCatalogJson).option("path", dir)
           .option("asOfVersion", 1).load(), seedP, seedL): Unit
       }
       val pDir = s"$dir-bm25s-postings"
       val lDir = s"$dir-bm25s-dl"
-      Seq(pDir, lDir).foreach(p => StreamMaint.rmrf(new File(p)))
+      Seq(pDir, lDir).foreach(p => rmrf(new File(p)))
       StreamMaint.copyDir(new File(seedP), new File(pDir))
       StreamMaint.copyDir(new File(seedL), new File(lDir))
       StreamMaint.drain(s, dir, KvQueries.docsIncCatalogJson,
@@ -1220,7 +1221,7 @@ object Bm25Store {
       val dir = KvQueries.incDocsDir(s, d)
       val pDir = s"$dir-bm25c-postings"
       val lDir = s"$dir-bm25c-dl"
-      Seq(pDir, lDir).foreach(p => StreamMaint.rmrf(new File(p)))
+      Seq(pDir, lDir).foreach(p => rmrf(new File(p)))
       StreamMaint.withConfs(s,
         "graft.ivfCompactShards" -> "2", "graft.ivfVacuumGraceMs" -> "0") {
         StreamMaint.drain(s, dir, KvQueries.docsIncCatalogJson,

@@ -8,6 +8,7 @@ import graft.{Q, Tables}
 import graft.kv.{BytesCodec, KvStore}
 import graft.queries.Similarity.IvfIndex
 import graft.sources.KeyRanges
+import graft.util.Dirs.rmrf
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
@@ -489,8 +490,8 @@ object IvfKvStore {
           m.path("phase").asText() == "appended"
       }
       if (!staged) {
-        IvfStore.rmrf(new File(corpus))
-        IvfStore.rmrf(new File(indexRoot(corpus)))
+        rmrf(new File(corpus))
+        rmrf(new File(indexRoot(corpus)))
         marker.delete()
         val raw = Tables.embeddings(s, sfDir)
           .select(col("vec_id"), col("embedding"))
@@ -570,8 +571,8 @@ object IvfKvStore {
           m.path("phase").asText() == "dmled"
       }
       if (!staged) {
-        IvfStore.rmrf(new File(corpus))
-        IvfStore.rmrf(new File(indexRoot(corpus)))
+        rmrf(new File(corpus))
+        rmrf(new File(indexRoot(corpus)))
         marker.delete()
         val raw = Tables.embeddings(s, sfDir)
           .select(col("vec_id"), col("embedding"))
@@ -692,8 +693,8 @@ object IvfKvStore {
           m.path("phase").asText() == "maintained"
       }
       if (!staged) {
-        IvfStore.rmrf(new File(corpus))
-        IvfStore.rmrf(new File(indexRoot(corpus)))
+        rmrf(new File(corpus))
+        rmrf(new File(indexRoot(corpus)))
         marker.delete()
         val raw = Tables.embeddings(s, sfDir)
           .select(col("vec_id"), col("embedding"))

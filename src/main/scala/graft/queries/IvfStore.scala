@@ -6,6 +6,7 @@ import com.fasterxml.jackson.databind.ObjectMapper
 
 import graft.{Q, Tables}
 import graft.kv.KvStore
+import graft.util.Dirs.rmrf
 import graft.queries.Similarity.IvfIndex
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -523,11 +524,6 @@ object IvfStore {
     val abs = new File(sfDir).getAbsolutePath
     KvStore.cacheDir(
       s"ivfinc-${new File(sfDir).getName}-${Integer.toHexString(abs.hashCode)}")
-  }
-
-  private[queries] def rmrf(f: File): Unit = {
-    if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.foreach(rmrf)
-    f.delete(): Unit
   }
 
   /** Stage the append scenario against the driver corpus, derive the

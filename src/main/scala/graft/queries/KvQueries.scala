@@ -3,6 +3,7 @@ package graft.queries
 import java.io.File
 
 import graft.{Q, Tables}
+import graft.util.Dirs.rmrf
 import graft.util.Exact._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -344,11 +345,6 @@ object KvQueries {
     dir
   }
 
-  private def deleteRecursively(f: File): Unit = {
-    Option(f.listFiles()).getOrElse(Array.empty).foreach(deleteRecursively)
-    f.delete()
-  }
-
   /** Build (once per sfDir) a KV `orders` table through the STREAMING
     * sink: the source parquet is split into 8 files and streamed with
     * `Trigger.AvailableNow` + `maxFilesPerTrigger=1`, so the table is
@@ -359,9 +355,9 @@ object KvQueries {
     val dir = graft.kv.KvStore.cacheDir(s"orders-streamed-${cacheKey(sfDir)}")
     val done = new File(s"$dir/_stream_done")
     if (!done.exists()) {
-      deleteRecursively(new File(dir))
-      deleteRecursively(new File(s"$dir-ckpt"))
-      deleteRecursively(new File(s"$dir-src"))
+      rmrf(new File(dir))
+      rmrf(new File(s"$dir-ckpt"))
+      rmrf(new File(s"$dir-src"))
       val src = Tables.orders(s, sfDir)
         .select("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
                 "o_orderpriority")
@@ -383,8 +379,8 @@ object KvQueries {
       done.createNewFile()
       // build-only artifacts (source parquet copy + stream checkpoint)
       // are dead once the marker exists — don't leave them on disk
-      deleteRecursively(new File(s"$dir-ckpt"))
-      deleteRecursively(new File(s"$dir-src"))
+      rmrf(new File(s"$dir-ckpt"))
+      rmrf(new File(s"$dir-src"))
     }
     dir
   }
@@ -967,10 +963,6 @@ object KvQueries {
       val sinkDir = s"$dir-tail-sink"
       val ckpt = s"$dir-ckpt-handoff"
       val tailCatalog = incCatalogJson.replace("lineitem_inc", "lineitem_tail")
-      def rmrf(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles().foreach(rmrf)
-        f.delete(): Unit
-      }
       rmrf(new java.io.File(ckpt)) // stale leftover from a crashed run
       rmrf(new java.io.File(sinkDir))
       try {
@@ -1081,10 +1073,6 @@ object KvQueries {
       val dir = incDocsDir(s, d)
       val sinkDir = s"$dir-keepers"
       val ckpt = s"$dir-ckpt-dedup"
-      def rmrf(f: File): Unit = {
-        if (f.isDirectory) f.listFiles().foreach(rmrf)
-        f.delete(): Unit
-      }
       rmrf(new File(ckpt))
       rmrf(new File(sinkDir))
       try {

@@ -3,6 +3,7 @@ package graft.queries
 import java.io.File
 
 import graft.{Q, Tables}
+import graft.util.Dirs.rmrf
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -375,14 +376,14 @@ object LshStore {
       val seedL = s"$dir-lshs-seed-shingles"
       if (!new File(s"$seedB/_kvmeta.json").exists() ||
           !new File(s"$seedL/_kvmeta.json").exists()) {
-        Seq(seedB, seedL).foreach(p => StreamMaint.rmrf(new File(p)))
+        Seq(seedB, seedL).foreach(p => rmrf(new File(p)))
         maintainBatch(s, s.read.format("graft-kv")
           .option("catalog", KvQueries.docsIncCatalogJson).option("path", dir)
           .option("asOfVersion", 1).load(), seedB, seedL): Unit
       }
       val bDir = s"$dir-lshs-bands"
       val lDir = s"$dir-lshs-shingles"
-      Seq(bDir, lDir).foreach(p => StreamMaint.rmrf(new File(p)))
+      Seq(bDir, lDir).foreach(p => rmrf(new File(p)))
       StreamMaint.copyDir(new File(seedB), new File(bDir))
       StreamMaint.copyDir(new File(seedL), new File(lDir))
       StreamMaint.drain(s, dir, KvQueries.docsIncCatalogJson,
@@ -408,7 +409,7 @@ object LshStore {
       val dir = KvQueries.incDocsDir(s, d)
       val bDir = s"$dir-lshc-bands"
       val lDir = s"$dir-lshc-shingles"
-      Seq(bDir, lDir).foreach(p => StreamMaint.rmrf(new File(p)))
+      Seq(bDir, lDir).foreach(p => rmrf(new File(p)))
       StreamMaint.withConfs(s,
         "graft.ivfCompactShards" -> "2", "graft.ivfVacuumGraceMs" -> "0") {
         StreamMaint.drain(s, dir, KvQueries.docsIncCatalogJson,

@@ -444,7 +444,7 @@ object Similarity {
     * The candidates join is SKEW-AWARE (r20). The r19 shape shuffled
     * `assigned` on `cell`, and the measured per-cell candidate load is
     * badly skewed (100× audit: hottest cell 783k candidate pairs vs a
-    * 7.1k median — ratio 110; `ivf_cell_skew` in the probeonly stress
+    * 7.1k median — ratio 110; `ivf_cell_skew` in the `probe` stress
     * rows): queries are corpus-shaped, so a populous cell draws
     * probes AND holds vectors — load grows ~quadratically in cell
     * population. At 64 local partitions hash-bundling masks it

@@ -3,6 +3,7 @@ package graft.queries
 import java.io.File
 
 import graft.kv.{KvCompactor, KvStore}
+import graft.util.Dirs.rmrf
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Shared scaffolding for the streaming-maintenance family.
@@ -36,15 +37,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * fails the gate); StreamMaintCompactSpec drains a 10-commit feed
   * against an uncompacted control and asserts per-batch shard bounds,
   * bit-identical probes/pairs, and grace-0 file reclamation; the
-  * stress harness's streamonly tiers carry the long-run probe-latency
+  * stress harness's `compact` section carries the long-run probe-latency
   * rows.
   */
 private[graft] object StreamMaint {
-
-  private[graft] def rmrf(f: File): Unit = {
-    if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.foreach(rmrf)
-    f.delete(): Unit
-  }
 
   /** Recursive copy (for pristine-state resets: q133 restores the
     * seed-built index before each timed drain). */

@@ -334,11 +334,7 @@ class KvSqlCatalog extends TableCatalog with SupportsNamespaces
     if (!cascade && d.listFiles().nonEmpty)
       throw new IllegalStateException(
         s"namespace ${namespace.mkString(".")} is not empty (use CASCADE)")
-    def rm(f: File): Unit = {
-      if (f.isDirectory) f.listFiles().foreach(rm)
-      f.delete()
-    }
-    rm(d)
+    graft.util.Dirs.rmrf(d)
     true
   }
 }

@@ -101,11 +101,7 @@ class ScaleOpsSpec extends SparkSpec {
         // unset (null → None) so other suites' no-dir refusal checks
         // still see the shared session pristine
         spark.sparkContext.setCheckpointDir(null)
-        def rmrf(f: java.io.File): Unit = {
-          if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.foreach(rmrf)
-          f.delete(): Unit
-        }
-        rmrf(ckptDir.toFile)
+        graft.util.Dirs.rmrf(ckptDir.toFile)
       }
     } finally spark.conf.set("spark.sql.shuffle.partitions", before)
   }

@@ -56,11 +56,7 @@ class IvfStoreSpec extends SparkSpec {
     val emb2 = Tables.embeddings(spark, corpus).filter(col("vec_id") =!= dropped)
     val tmpOut = Files.createTempDirectory("ivf-rewrite").toString
     emb2.coalesce(1).write.mode("overwrite").parquet(s"$tmpOut/embeddings.parquet")
-    def rmrf(f: File): Unit = {
-      if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.foreach(rmrf)
-      f.delete(): Unit
-    }
-    rmrf(new File(s"$corpus/embeddings.parquet"))
+    graft.util.Dirs.rmrf(new File(s"$corpus/embeddings.parquet"))
     Files.move(Paths.get(s"$tmpOut/embeddings.parquet"),
       Paths.get(s"$corpus/embeddings.parquet"))
     // default: refuse with the descriptive error (both load and ensure)

@@ -215,11 +215,7 @@ class OperatorSpec extends SparkSpec {
       // the dir itself too (null → None), so their no-dir refusal
       // checks see the shared session pristine
       spark.sparkContext.setCheckpointDir(null)
-      def rmrf(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.foreach(rmrf)
-        f.delete(): Unit
-      }
-      rmrf(ckptDir.toFile)
+      graft.util.Dirs.rmrf(ckptDir.toFile)
     }
   }
 
