@@ -529,10 +529,8 @@ object Stress {
       graft.queries.IvfKvStore.build(spark, corpus)
       val dmlBuildSec = (System.nanoTime() - tb) / 1e9
       // fixed-size mid-corpus key range [thLo+1, thHi]
-      def thAt(m: Long): Long = emb.select(col("vec_id")).orderBy(col("vec_id"))
-        .limit(m.toInt).agg(max(col("vec_id"))).head().getLong(0)
-      val thLo = thAt(n / 2)
-      val thHi = thAt(n / 2 + regionRows)
+      val thLo = queries.IvfStore.vecIdAt(emb, n / 2)
+      val thHi = queries.IvfStore.vecIdAt(emb, n / 2 + regionRows)
       val survivors = emb
         .filter(col("vec_id") > thLo && col("vec_id") <= thHi &&
           col("vec_id") % 7 =!= 3)
@@ -1048,9 +1046,8 @@ object Stress {
           * checkpoint is KEPT across calls so each drain continues from
           * the previous phase's offset. */
         def drainPhase(): Unit = {
-          spark.conf.set("graft.ivfCompactShards", threshold)
-          spark.conf.set("graft.ivfVacuumGraceMs", "0")
-          try {
+          queries.StreamMaint.withConfs(spark,
+            "graft.ivfCompactShards" -> threshold, "graft.ivfVacuumGraceMs" -> "0") {
             val q = spark.readStream.format("graft-kv")
               .option("catalog", feedCat).option("path", feedDir)
               .option("maxVersionsPerTrigger", 1).load()
@@ -1074,9 +1071,6 @@ object Stress {
               .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
               .start()
             q.awaitTermination()
-          } finally {
-            spark.conf.unset("graft.ivfCompactShards")
-            spark.conf.unset("graft.ivfVacuumGraceMs")
           }
           sampleHeap()
         }

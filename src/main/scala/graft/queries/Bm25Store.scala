@@ -3,7 +3,8 @@ package graft.queries
 import java.io.File
 
 import graft.{Q, Tables}
-import graft.util.Dirs.rmrf
+import graft.util.Dirs.{cacheKey, rmrf, writeAtomic}
+import graft.queries.StreamMaint.tableFrontier
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -54,11 +55,6 @@ object Bm25Store {
       |    "dl": {"cf": "l", "col": "dl", "type": "long"}
       |  }
       |}""".stripMargin
-
-  private def cacheKey(sfDir: String): String = {
-    val abs = new File(sfDir).getAbsolutePath
-    s"${new File(sfDir).getName}-${Integer.toHexString(abs.hashCode)}"
-  }
 
   /** The shared tokenize pass both index tables derive from — split out
     * so [[maintainBatch]]'s steady state can cache it ONCE per
@@ -127,12 +123,7 @@ object Bm25Store {
                             docs: => DataFrame): (String, String) = {
     val pDir = graft.kv.KvStore.cacheDir(s"bm25-$tag-postings-${cacheKey(d)}")
     val lDir = graft.kv.KvStore.cacheDir(s"bm25-$tag-dl-${cacheKey(d)}")
-    // gate on BOTH tables' commit markers: a crash between writePostings
-    // and writeDl would otherwise leave a complete postings table whose
-    // presence makes every later run skip the rebuild the missing dl
-    // table needs
-    if (!new File(s"$pDir/_kvmeta.json").exists() ||
-        !new File(s"$lDir/_kvmeta.json").exists()) {
+    if (!StreamMaint.committed(pDir, lDir)) {
       val dd = docs
       val chars = dd.agg(sum(col("n_chars"))).head().getLong(0)
       val (p, dl) = indexRows(dd)
@@ -149,19 +140,6 @@ object Bm25Store {
   private[graft] def ensureIndexed(s: SparkSession, d: String,
                                      pDir: String, lDir: String): Long =
     maintainBatch(s, Tables.documents(s, d), pDir, lDir)
-
-  /** One table's indexed frontier: its pushed `max(doc_id)`, or -1 for
-    * an absent or empty table (coalesce: dl keeps a row per doc, so an
-    * empty table means an empty SEED CORPUS — legal; frontier -1 treats
-    * everything as the delta instead of NPE-ing on a null max). */
-  private def tableFrontier(s: SparkSession, catalogJson: String,
-                            dir: String): Long =
-    if (!new File(s"$dir/_kvmeta.json").exists()) -1L
-    else FrontierCache.frontier(s, dir) {
-      s.read.format("graft-kv")
-        .option("catalog", catalogJson).option("path", dir).load()
-        .agg(coalesce(max(col("doc_id")), lit(-1L))).head().getLong(0)
-    }
 
   /** Postings COVERAGE stamp (r20). The postings table's own
     * `max(doc_id)` cannot express "this doc was tokenized and
@@ -189,13 +167,7 @@ object Bm25Store {
   }
 
   private def writeStamp(pDir: String, v: Long): Unit =
-    if (v > readStamp(pDir)) {
-      val tmp = new File(s"$pDir/_frontier.stamp.tmp")
-      java.nio.file.Files.write(tmp.toPath, s"$v\n".getBytes("UTF-8"))
-      java.nio.file.Files.move(tmp.toPath, stampFile(pDir).toPath,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE): Unit
-    }
+    if (v > readStamp(pDir)) writeAtomic(stampFile(pDir), s"$v\n".getBytes("UTF-8"))
 
   /** The postings table's effective frontier: committed rows OR stamped
     * token-less coverage, whichever reaches further. */
@@ -361,9 +333,9 @@ object Bm25Store {
   private def champMetaFile(dir: File): File = new File(dir, "_meta.json")
 
   private def writeChampMeta(dir: File, m: ChampMeta): Unit =
-    java.nio.file.Files.write(champMetaFile(dir).toPath,
+    writeAtomic(champMetaFile(dir),
       s"""{"n":${m.n},"sdl":${m.sdl},"npos":${m.npos},"built":"${m.built}","c":$ChampC}\n"""
-        .getBytes("UTF-8")): Unit
+        .getBytes("UTF-8"))
 
   private[graft] def readChampMeta(dir: String): Option[ChampMeta] = {
     val f = champMetaFile(new File(dir))
@@ -1175,25 +1147,8 @@ object Bm25Store {
   val q132Bm25Stream: Q = Q(
     "q132_bm25_stream",
     (s, d) => {
-      val dir = KvQueries.incDocsDir(s, d)
-      val seedP = s"$dir-bm25s-seed-postings"
-      val seedL = s"$dir-bm25s-seed-dl"
-      if (!new File(s"$seedP/_kvmeta.json").exists() ||
-          !new File(s"$seedL/_kvmeta.json").exists()) {
-        Seq(seedP, seedL).foreach(p => rmrf(new File(p)))
-        maintainBatch(s, s.read.format("graft-kv")
-          .option("catalog", KvQueries.docsIncCatalogJson).option("path", dir)
-          .option("asOfVersion", 1).load(), seedP, seedL): Unit
-      }
-      val pDir = s"$dir-bm25s-postings"
-      val lDir = s"$dir-bm25s-dl"
-      Seq(pDir, lDir).foreach(p => rmrf(new File(p)))
-      StreamMaint.copyDir(new File(seedP), new File(pDir))
-      StreamMaint.copyDir(new File(seedL), new File(lDir))
-      StreamMaint.drain(s, dir, KvQueries.docsIncCatalogJson,
-        s"$dir-ckpt-bm25s", sinceVersion = Some(1)) { batch =>
-        maintainBatch(s, batch, pDir, lDir): Unit
-      }
+      val (pDir, lDir) = StreamMaint.seededDrain(s, d, "bm25s", "postings", "dl")(
+        maintainBatch(s, _, _, _))
       probe(s, pDir, lDir, Terms)
     },
     Some(TextOps.bm25OracleSql),
@@ -1218,22 +1173,8 @@ object Bm25Store {
   val q135Bm25StreamCompact: Q = Q(
     "q135_bm25_stream_compact",
     (s, d) => {
-      val dir = KvQueries.incDocsDir(s, d)
-      val pDir = s"$dir-bm25c-postings"
-      val lDir = s"$dir-bm25c-dl"
-      Seq(pDir, lDir).foreach(p => rmrf(new File(p)))
-      StreamMaint.withConfs(s,
-        "graft.ivfCompactShards" -> "2", "graft.ivfVacuumGraceMs" -> "0") {
-        StreamMaint.drain(s, dir, KvQueries.docsIncCatalogJson,
-          s"$dir-ckpt-bm25c") { batch =>
-          maintainBatch(s, batch, pDir, lDir): Unit
-        }
-      }
-      Seq("postings" -> pDir, "dl" -> lDir).foreach { case (t, p) =>
-        val live = graft.kv.KvStore.readMeta(p).shards.length
-        require(live <= 2,
-          s"self-compaction left the $t table at $live live shards (> threshold 2)")
-      }
+      val (pDir, lDir) = StreamMaint.compactedDrain(s, d, "bm25c", "postings", "dl")(
+        maintainBatch(s, _, _, _))
       probe(s, pDir, lDir, Terms)
     },
     Some(TextOps.bm25OracleSql),

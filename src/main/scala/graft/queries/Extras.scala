@@ -103,9 +103,8 @@ object Extras {
   val q73FileFormats: Q = Q(
     "q73_file_formats",
     (s, d) => {
-      val abs = new java.io.File(d).getAbsolutePath
       val tmp = s"${System.getProperty("java.io.tmpdir")}/graft-fmt-" +
-        s"${new java.io.File(d).getName}-${Integer.toHexString(abs.hashCode)}"
+        graft.util.Dirs.cacheKey(d)
       val n = Tables.nation(s, d)
       n.coalesce(1).write.mode("overwrite").option("header", "true").csv(s"$tmp/csv")
       // explicit schema: one pass over the csv (inferSchema would scan twice)

@@ -2,13 +2,11 @@ package graft.queries
 
 import java.io.File
 
-import com.fasterxml.jackson.databind.ObjectMapper
-
 import graft.{Q, Tables}
 import graft.kv.{BytesCodec, KvStore}
 import graft.queries.Similarity.IvfIndex
 import graft.sources.KeyRanges
-import graft.util.Dirs.rmrf
+import graft.util.Dirs.cacheKey
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
@@ -53,21 +51,14 @@ import org.apache.spark.sql.types.LongType
   */
 object IvfKvStore {
 
-  private val mapper = new ObjectMapper()
-
   /** Catalog of a KV-resident embeddings corpus (vec_id, embedding). */
   private[graft] val corpusCatalog: String =
     """{"table":{"name":"ivf_corpus"},"rowkey":"vec_id",
       | "columns":{"vec_id":{"cf":"rowkey","col":"vec_id","type":"long"},
       |            "embedding":{"cf":"i","col":"e","type":"array<float>"}}}""".stripMargin
 
-  private[graft] def indexRoot(corpusDir: String): String = {
-    val abs = new File(corpusDir).getAbsolutePath
-    KvStore.cacheDir(
-      s"ivfkv-${new File(corpusDir).getName}-${Integer.toHexString(abs.hashCode)}")
-  }
-
-  private def metaFile(root: String) = new File(s"$root/_ivfmeta.json")
+  private[graft] def indexRoot(corpusDir: String): String =
+    KvStore.cacheDir(s"ivfkv-${cacheKey(corpusDir)}")
 
   private def readCorpus(s: SparkSession, corpusDir: String,
                          asOf: Long, since: Option[Long]): DataFrame = {
@@ -78,6 +69,14 @@ object IvfKvStore {
     since.foreach(v => r = r.option("sinceVersion", v))
     r.load().select(col("vec_id"), col("embedding"))
   }
+
+  /** Append-commit (vec_id, embedding) rows to a staged KV corpus. */
+  private def commit(df: DataFrame, corpusDir: String, shards: Int = 2): Unit =
+    df.repartitionByRange(shards, col("vec_id"))
+      .write.format("graft-kv")
+      .option("catalog", corpusCatalog)
+      .option("path", corpusDir)
+      .mode("append").save()
 
   private[queries] sealed trait KvCorpusDelta
   private[queries] case object KvFresh extends KvCorpusDelta
@@ -131,39 +130,13 @@ object IvfKvStore {
     shards.map(sh => new File(s"$dir/${sh.file}").length()).sum
 
   private def buildLocked(s: SparkSession, corpusDir: String): IvfIndex = {
-    val root = indexRoot(corpusDir)
     val liveMeta = KvStore.readMeta(corpusDir)
     val cur = liveMeta.version
-    val corpusBytes = kvShardBytes(corpusDir, liveMeta.shards)
     val idx = Similarity.ivfIndexFrom(s, readCorpus(s, corpusDir, cur, None))
-    val k = idx.nlist
-    val c = math.max(4L, math.ceil(math.sqrt(k.toDouble)).toLong)
-    idx.centRouted
-      .select(col("cid"), col("gid"), col("cemb"))
-      .repartitionByRange(IvfStore.indexShards(s,
-        corpusBytes * k / math.max(1L, idx.nVectors), 4), col("cid"))
-      .write.format("graft-kv")
-      .option("catalog", IvfStore.centCatalog("ivf_centroids"))
-      .option("path", s"$root/centroids")
-      .mode("overwrite").save()
-    idx.assigned
-      .select(col("vec_id"), col("embedding"), col("cell"))
-      .repartitionByRange(IvfStore.indexShards(s, corpusBytes, 32),
-        col("vec_id"))
-      .write.format("graft-kv")
-      .option("catalog", IvfStore.assignedCatalog("ivf_assigned"))
-      .option("path", s"$root/assigned")
-      .mode("overwrite").save()
-    val node = mapper.createObjectNode()
-    node.put("corpus", new File(corpusDir).getAbsolutePath)
-    node.put("corpusVersion", cur)
-    node.put("n", idx.nVectors); node.put("k", k); node.put("c", c)
-    node.put("baseN", idx.nVectors)
-    node.put("appendedRows", 0L)
-    node.put("centroidsVersion", KvStore.readMeta(s"$root/centroids").version)
-    node.put("assignedVersion", KvStore.readMeta(s"$root/assigned").version)
-    IvfStore.writeMetaAtomic(root, node)
-    IvfStore.loadPinned(s, root, mapper.readTree(metaFile(root)))
+    IvfStore.writeIndex(s, indexRoot(corpusDir), corpusDir, idx,
+      kvShardBytes(corpusDir, liveMeta.shards), recordBaseBytes = false) {
+      _.put("corpusVersion", cur): Unit
+    }
   }
 
   private def staleError(root: String, delta: KvCorpusDelta): Nothing = delta match {
@@ -186,11 +159,11 @@ object IvfKvStore {
     * classification. */
   def load(s: SparkSession, corpusDir: String): IvfIndex = {
     val root = indexRoot(corpusDir)
-    val mf = metaFile(root)
+    val mf = IvfStore.metaFile(root)
     if (!mf.exists()) throw new IllegalStateException(
       s"no persisted IVF index for KV corpus $corpusDir (expected ${mf.getPath}); " +
         "run IvfKvStore.build/ensure first")
-    val meta = mapper.readTree(mf)
+    val meta = IvfStore.readIvfMeta(root)
     classify(corpusDir, meta) match {
       case KvFresh => IvfStore.loadPinned(s, root, meta)
       case delta => staleError(root, delta)
@@ -200,14 +173,8 @@ object IvfKvStore {
   private def incrementLocked(s: SparkSession, corpusDir: String,
                               app: KvAppend): IvfIndex = {
     val root = indexRoot(corpusDir)
-    val meta = mapper.readTree(metaFile(root))
-    if (KvStore.readMeta(s"$root/assigned").version != meta.path("assignedVersion").asLong() ||
-        KvStore.readMeta(s"$root/centroids").version != meta.path("centroidsVersion").asLong()) {
-      System.err.println(
-        s"[graft] IvfKvStore: dangling index commit detected at $root; " +
-          "falling back to a full rebuild")
-      return buildLocked(s, corpusDir)
-    }
+    val meta = IvfStore.readIvfMeta(root)
+    if (IvfStore.dangling(root, meta)) return buildLocked(s, corpusDir)
     val k = meta.path("k").asLong()
     val frozen = IvfStore.loadPinned(s, root, meta)
     // the engine enumerates the delta: an incremental read of exactly
@@ -218,10 +185,7 @@ object IvfKvStore {
     if (deltaRows == 0L) {
       // compaction-only window: the logical corpus is unchanged — just
       // re-pin the covered version, no assignment, no index commit
-      val node = meta.deepCopy[com.fasterxml.jackson.databind.node.ObjectNode]()
-      node.put("corpusVersion", app.cur)
-      IvfStore.writeMetaAtomic(root, node)
-      return IvfStore.loadPinned(s, root, mapper.readTree(metaFile(root)))
+      return IvfStore.advance(s, root, meta)(_.put("corpusVersion", app.cur): Unit)
     }
     val assignedDelta =
       Similarity.assignRouted(delta, frozen.coarse, frozen.centRouted, k)
@@ -235,18 +199,15 @@ object IvfKvStore {
       .option("catalog", IvfStore.assignedCatalog("ivf_assigned"))
       .option("path", s"$root/assigned")
       .mode("append").save()
-    val node = meta.deepCopy[com.fasterxml.jackson.databind.node.ObjectNode]()
-    node.put("corpusVersion", app.cur)
-    node.put("n", meta.path("n").asLong() + deltaRows)
-    node.put("appendedRows", meta.path("appendedRows").asLong() + deltaRows)
-    node.put("assignedVersion", KvStore.readMeta(s"$root/assigned").version)
-    IvfStore.writeMetaAtomic(root, node)
     System.err.println(
       s"[graft] IvfKvStore: appended $deltaRows vectors (manifest window " +
         s"(${app.v0}, ${app.cur}]) to the persisted index at $root against " +
         s"frozen k=$k centroids")
-    IvfStore.maybeCompactAssigned(s, root)
-    IvfStore.loadPinned(s, root, mapper.readTree(metaFile(root)))
+    IvfStore.advance(s, root, meta) { node =>
+      node.put("corpusVersion", app.cur)
+      node.put("n", meta.path("n").asLong() + deltaRows)
+      node.put("appendedRows", meta.path("appendedRows").asLong() + deltaRows)
+    }
   }
 
   /** The TOUCHED KEY REGION of a rewrite window (v0, live]: the union
@@ -320,15 +281,8 @@ object IvfKvStore {
   private def dmlIncrementLocked(s: SparkSession, corpusDir: String,
                                  rw: KvRewrite, rebuildOk: Boolean): IvfIndex = {
     val root = indexRoot(corpusDir)
-    val meta = mapper.readTree(metaFile(root))
-    val assignedV = KvStore.readMeta(s"$root/assigned").version
-    if (assignedV != meta.path("assignedVersion").asLong() ||
-        KvStore.readMeta(s"$root/centroids").version != meta.path("centroidsVersion").asLong()) {
-      System.err.println(
-        s"[graft] IvfKvStore: dangling index commit detected at $root; " +
-          "falling back to a full rebuild")
-      return buildLocked(s, corpusDir)
-    }
+    val meta = IvfStore.readIvfMeta(root)
+    if (IvfStore.dangling(root, meta)) return buildLocked(s, corpusDir)
     dmlRegion(corpusDir, rw.v0) match {
       case None =>
         if (rebuildOk) buildLocked(s, corpusDir) else staleError(root, rw)
@@ -397,20 +351,17 @@ object IvfKvStore {
           .option("catalog", IvfStore.assignedCatalog("ivf_assigned"))
           .option("path", s"$root/assigned")
           .option("replaceKeyRanges", KeyRanges.serializeBounded(ranges))
-          .option("expectedVersion", assignedV)
+          .option("expectedVersion", meta.path("assignedVersion").asLong())
           .mode("overwrite").save()
-        val node = meta.deepCopy[com.fasterxml.jackson.databind.node.ObjectNode]()
-        node.put("corpusVersion", rw.cur)
-        node.put("n", liveTotal)
-        node.put("appendedRows", meta.path("appendedRows").asLong() + changedOrAdded)
-        node.put("assignedVersion", KvStore.readMeta(s"$root/assigned").version)
-        IvfStore.writeMetaAtomic(root, node)
         System.err.println(
           s"[graft] IvfKvStore: patched the rewrite window (${rw.v0}, ${rw.cur}] " +
             s"by re-assigning $regionRows region rows ($changedOrAdded changed/" +
             s"added) against frozen k=$k centroids at $root")
-        IvfStore.maybeCompactAssigned(s, root)
-        IvfStore.loadPinned(s, root, mapper.readTree(metaFile(root)))
+        IvfStore.advance(s, root, meta) { node =>
+          node.put("corpusVersion", rw.cur)
+          node.put("n", liveTotal)
+          node.put("appendedRows", meta.path("appendedRows").asLong() + changedOrAdded)
+        }
     }
   }
 
@@ -424,11 +375,10 @@ object IvfKvStore {
   def ensure(s: SparkSession, corpusDir: String): IvfIndex =
     KvStore.withTableLock(indexRoot(corpusDir)) {
       val root = indexRoot(corpusDir)
-      val mf = metaFile(root)
       def rebuildOk = s.conf.get("graft.ivfRebuildOnStale", "false").toBoolean
-      if (!mf.exists()) buildLocked(s, corpusDir)
+      if (!IvfStore.metaFile(root).exists()) buildLocked(s, corpusDir)
       else {
-        val meta = mapper.readTree(mf)
+        val meta = IvfStore.readIvfMeta(root)
         classify(corpusDir, meta) match {
           case KvFresh => IvfStore.loadPinned(s, root, meta)
           case app: KvAppend =>
@@ -465,11 +415,8 @@ object IvfKvStore {
 
   // ---- q117: the whole composition, oracle-checked ----
 
-  private[graft] def stagedRoot(sfDir: String): String = {
-    val abs = new File(sfDir).getAbsolutePath
-    KvStore.cacheDir(
-      s"ivfkvinc-${new File(sfDir).getName}-${Integer.toHexString(abs.hashCode)}")
-  }
+  private[graft] def stagedRoot(sfDir: String): String =
+    KvStore.cacheDir(s"ivfkvinc-${cacheKey(sfDir)}")
 
   /** Stage the driver corpus as a VERSIONED KV TABLE and exercise the
     * manifest-native maintenance path: commit the first ⌊9n/10⌋ vectors
@@ -481,41 +428,18 @@ object IvfKvStore {
       s: SparkSession, sfDir: String): IvfIndex = {
     val root = stagedRoot(sfDir)
     val corpus = s"$root/corpus"
-    KvStore.withTableLock(root) {
-      val srcFp = IvfStore.corpusFingerprint(sfDir)
-      val marker = new File(s"$root/_staged.json")
-      val staged = marker.exists() && {
-        val m = mapper.readTree(marker)
-        m.path("sourceFingerprint").asText() == srcFp &&
-          m.path("phase").asText() == "appended"
-      }
-      if (!staged) {
-        rmrf(new File(corpus))
-        rmrf(new File(indexRoot(corpus)))
-        marker.delete()
-        val raw = Tables.embeddings(s, sfDir)
-          .select(col("vec_id"), col("embedding"))
-        val n = raw.count()
-        val n0 = n * 9 / 10
-        require(n0 > 0 && n0 < n, s"corpus too small to stage an append split: n=$n")
-        val thr = raw.select(col("vec_id")).orderBy(col("vec_id"))
-          .limit(n0.toInt).agg(max(col("vec_id"))).head().getLong(0)
-        def commit(df: DataFrame): Unit =
-          df.repartitionByRange(2, col("vec_id"))
-            .write.format("graft-kv")
-            .option("catalog", corpusCatalog)
-            .option("path", corpus)
-            .mode("append").save()
-        commit(raw.filter(col("vec_id") <= thr)) // v1
-        build(s, corpus)
-        commit(raw.filter(col("vec_id") > thr)) // v2 — the append window
-        val node = mapper.createObjectNode()
-        node.put("sourceFingerprint", srcFp)
-        node.put("phase", "appended")
-        node.put("thresholdVecId", thr)
-        java.nio.file.Files.write(marker.toPath,
-          mapper.writerWithDefaultPrettyPrinter().writeValueAsBytes(node))
-      }
+    IvfStore.stageOnce(root, IvfStore.corpusFingerprint(sfDir), "appended",
+        indexRoot(corpus)) { marker =>
+      val raw = Tables.embeddings(s, sfDir)
+        .select(col("vec_id"), col("embedding"))
+      val n = raw.count()
+      val n0 = n * 9 / 10
+      require(n0 > 0 && n0 < n, s"corpus too small to stage an append split: n=$n")
+      val thr = IvfStore.vecIdAt(raw, n0)
+      commit(raw.filter(col("vec_id") <= thr), corpus) // v1
+      build(s, corpus)
+      commit(raw.filter(col("vec_id") > thr), corpus) // v2 — the append window
+      marker.put("thresholdVecId", thr): Unit
     }
     ensure(s, corpus)
   }
@@ -540,11 +464,8 @@ object IvfKvStore {
 
   // ---- q118: DML-incremental maintenance, oracle-checked ----
 
-  private[graft] def dmlStagedRoot(sfDir: String): String = {
-    val abs = new File(sfDir).getAbsolutePath
-    KvStore.cacheDir(
-      s"ivfkvdml-${new File(sfDir).getName}-${Integer.toHexString(abs.hashCode)}")
-  }
+  private[graft] def dmlStagedRoot(sfDir: String): String =
+    KvStore.cacheDir(s"ivfkvdml-${cacheKey(sfDir)}")
 
   /** Stage the DML scenario: commit the WHOLE driver corpus as a KV
     * table (v1, 8 range shards), build the index on it, then issue one
@@ -562,57 +483,33 @@ object IvfKvStore {
   private[queries] def ensureDmlStageKv(s: SparkSession, sfDir: String): IvfIndex = {
     val root = dmlStagedRoot(sfDir)
     val corpus = s"$root/corpus"
-    KvStore.withTableLock(root) {
-      val srcFp = IvfStore.corpusFingerprint(sfDir)
-      val marker = new File(s"$root/_staged.json")
-      val staged = marker.exists() && {
-        val m = mapper.readTree(marker)
-        m.path("sourceFingerprint").asText() == srcFp &&
-          m.path("phase").asText() == "dmled"
-      }
-      if (!staged) {
-        rmrf(new File(corpus))
-        rmrf(new File(indexRoot(corpus)))
-        marker.delete()
-        val raw = Tables.embeddings(s, sfDir)
-          .select(col("vec_id"), col("embedding"))
-        val n = raw.count()
-        require(n >= 40, s"corpus too small to stage a DML region: n=$n")
-        raw.repartitionByRange(8, col("vec_id"))
-          .write.format("graft-kv")
-          .option("catalog", corpusCatalog)
-          .option("path", corpus).mode("append").save()
-        build(s, corpus)
-        // positional thresholds: vec_ids are unique, so `vec_id <= thr`
-        // ≡ the first m rows in vec_id order — the oracle replays them
-        // as row_number() OVER (ORDER BY vec_id) bounds
-        def thAt(m: Long): Long = raw.select(col("vec_id"))
-          .orderBy(col("vec_id")).limit(m.toInt)
-          .agg(max(col("vec_id"))).head().getLong(0)
-        val th1 = thAt(n * 4 / 10)
-        val th2 = thAt(n * 6 / 10)
-        val survivors = raw
-          .filter(col("vec_id") > th1 && col("vec_id") <= th2 &&
-            col("vec_id") % 7 =!= 3)
-          .withColumn("embedding",
-            when(col("vec_id") % 7 === 5,
-              transform(col("embedding"), x => x * lit(2.0f)))
-              .otherwise(col("embedding")))
-        survivors.repartitionByRange(2, col("vec_id"))
-          .write.format("graft-kv")
-          .option("catalog", corpusCatalog)
-          .option("path", corpus)
-          .option("replaceKeyRanges",
-            KeyRanges.serializeTyped(LongType, Seq((th1 + 1, th2))))
-          .mode("overwrite").save()
-        val node = mapper.createObjectNode()
-        node.put("sourceFingerprint", srcFp)
-        node.put("phase", "dmled")
-        node.put("th1", th1)
-        node.put("th2", th2)
-        java.nio.file.Files.write(marker.toPath,
-          mapper.writerWithDefaultPrettyPrinter().writeValueAsBytes(node))
-      }
+    IvfStore.stageOnce(root, IvfStore.corpusFingerprint(sfDir), "dmled",
+        indexRoot(corpus)) { marker =>
+      val raw = Tables.embeddings(s, sfDir)
+        .select(col("vec_id"), col("embedding"))
+      val n = raw.count()
+      require(n >= 40, s"corpus too small to stage a DML region: n=$n")
+      commit(raw, corpus, shards = 8)
+      build(s, corpus)
+      // positional thresholds, replayed by the oracle as row_number bounds
+      val th1 = IvfStore.vecIdAt(raw, n * 4 / 10)
+      val th2 = IvfStore.vecIdAt(raw, n * 6 / 10)
+      val survivors = raw
+        .filter(col("vec_id") > th1 && col("vec_id") <= th2 &&
+          col("vec_id") % 7 =!= 3)
+        .withColumn("embedding",
+          when(col("vec_id") % 7 === 5,
+            transform(col("embedding"), x => x * lit(2.0f)))
+            .otherwise(col("embedding")))
+      survivors.repartitionByRange(2, col("vec_id"))
+        .write.format("graft-kv")
+        .option("catalog", corpusCatalog)
+        .option("path", corpus)
+        .option("replaceKeyRanges",
+          KeyRanges.serializeTyped(LongType, Seq((th1 + 1, th2))))
+        .mode("overwrite").save()
+      marker.put("th1", th1)
+      marker.put("th2", th2): Unit
     }
     ensure(s, corpus)
   }
@@ -663,11 +560,8 @@ object IvfKvStore {
 
   // ---- q119: index-table self-maintenance, oracle-checked ----
 
-  private[graft] def selfMaintStagedRoot(sfDir: String): String = {
-    val abs = new File(sfDir).getAbsolutePath
-    KvStore.cacheDir(
-      s"ivfkvsm-${new File(sfDir).getName}-${Integer.toHexString(abs.hashCode)}")
-  }
+  private[graft] def selfMaintStagedRoot(sfDir: String): String =
+    KvStore.cacheDir(s"ivfkvsm-${cacheKey(sfDir)}")
 
   /** Stage the self-maintenance scenario: build on the 90% prefix (same
     * split as q116/q117, so the SAME frozen-centroid oracle applies —
@@ -684,60 +578,33 @@ object IvfKvStore {
       s: SparkSession, sfDir: String): IvfIndex = {
     val root = selfMaintStagedRoot(sfDir)
     val corpus = s"$root/corpus"
-    KvStore.withTableLock(root) {
-      val srcFp = IvfStore.corpusFingerprint(sfDir)
-      val marker = new File(s"$root/_staged.json")
-      val staged = marker.exists() && {
-        val m = mapper.readTree(marker)
-        m.path("sourceFingerprint").asText() == srcFp &&
-          m.path("phase").asText() == "maintained"
+    IvfStore.stageOnce(root, IvfStore.corpusFingerprint(sfDir), "maintained",
+        indexRoot(corpus)) { _ =>
+      val raw = Tables.embeddings(s, sfDir)
+        .select(col("vec_id"), col("embedding"))
+      val n = raw.count()
+      val n0 = n * 9 / 10
+      require(n0 > 0 && n0 + 3 <= n,
+        s"corpus too small to stage a 3-cycle append split: n=$n")
+      val cuts = Seq(n0, n0 + (n - n0) / 3, n0 + 2 * (n - n0) / 3)
+        .map(IvfStore.vecIdAt(raw, _))
+      commit(raw.filter(col("vec_id") <= cuts(0)), corpus) // v1: the build basis
+      build(s, corpus)
+      // the caller's own values come back afterwards, not the defaults
+      StreamMaint.withConfs(s,
+        "graft.ivfCompactShards" -> "4", "graft.ivfVacuumGraceMs" -> "0") {
+        commit(raw.filter(col("vec_id") > cuts(0) && col("vec_id") <= cuts(1)), corpus)
+        ensure(s, corpus) // cycle 1: increment + self-compact + vacuum
+        commit(raw.filter(col("vec_id") > cuts(1) && col("vec_id") <= cuts(2)), corpus)
+        ensure(s, corpus) // cycle 2
+        commit(raw.filter(col("vec_id") > cuts(2)), corpus)
+        ensure(s, corpus) // cycle 3
       }
-      if (!staged) {
-        rmrf(new File(corpus))
-        rmrf(new File(indexRoot(corpus)))
-        marker.delete()
-        val raw = Tables.embeddings(s, sfDir)
-          .select(col("vec_id"), col("embedding"))
-        val n = raw.count()
-        val n0 = n * 9 / 10
-        require(n0 > 0 && n0 + 3 <= n,
-          s"corpus too small to stage a 3-cycle append split: n=$n")
-        def thAt(m: Long): Long = raw.select(col("vec_id"))
-          .orderBy(col("vec_id")).limit(m.toInt)
-          .agg(max(col("vec_id"))).head().getLong(0)
-        val cuts = Seq(n0, n0 + (n - n0) / 3, n0 + 2 * (n - n0) / 3).map(thAt)
-        def commit(df: DataFrame): Unit =
-          df.repartitionByRange(2, col("vec_id"))
-            .write.format("graft-kv")
-            .option("catalog", corpusCatalog)
-            .option("path", corpus)
-            .mode("append").save()
-        commit(raw.filter(col("vec_id") <= cuts(0))) // v1: the build basis
-        build(s, corpus)
-        s.conf.set("graft.ivfCompactShards", "4")
-        s.conf.set("graft.ivfVacuumGraceMs", "0")
-        try {
-          commit(raw.filter(col("vec_id") > cuts(0) && col("vec_id") <= cuts(1)))
-          ensure(s, corpus) // cycle 1: increment + self-compact + vacuum
-          commit(raw.filter(col("vec_id") > cuts(1) && col("vec_id") <= cuts(2)))
-          ensure(s, corpus) // cycle 2
-          commit(raw.filter(col("vec_id") > cuts(2)))
-          ensure(s, corpus) // cycle 3
-        } finally {
-          s.conf.unset("graft.ivfCompactShards")
-          s.conf.unset("graft.ivfVacuumGraceMs")
-        }
-        val liveShards =
-          KvStore.readMeta(s"${indexRoot(corpus)}/assigned").shards.length
-        require(liveShards <= 4,
-          s"self-maintenance left $liveShards live shards after 3 cycles " +
-            "(expected the compacted bound)")
-        val node = mapper.createObjectNode()
-        node.put("sourceFingerprint", srcFp)
-        node.put("phase", "maintained")
-        java.nio.file.Files.write(marker.toPath,
-          mapper.writerWithDefaultPrettyPrinter().writeValueAsBytes(node))
-      }
+      val liveShards =
+        KvStore.readMeta(s"${indexRoot(corpus)}/assigned").shards.length
+      require(liveShards <= 4,
+        s"self-maintenance left $liveShards live shards after 3 cycles " +
+          "(expected the compacted bound)")
     }
     ensure(s, corpus)
   }

@@ -2,11 +2,12 @@ package graft.queries
 
 import java.io.File
 
-import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import com.fasterxml.jackson.databind.node.ObjectNode
 
 import graft.{Q, Tables}
 import graft.kv.KvStore
-import graft.util.Dirs.rmrf
+import graft.util.Dirs.{cacheKey, rmrf, writeAtomic}
 import graft.queries.Similarity.IvfIndex
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -100,13 +101,24 @@ object IvfStore {
     * Package-visible so the stress harness points at the REAL path
     * instead of re-deriving the formula (which would silently break its
     * built-detection if this keying ever changed). */
-  private[graft] def indexRoot(sfDir: String): String = {
-    val abs = new File(sfDir).getAbsolutePath
-    KvStore.cacheDir(
-      s"ivf-${new File(sfDir).getName}-${Integer.toHexString(abs.hashCode)}")
-  }
+  private[graft] def indexRoot(sfDir: String): String =
+    KvStore.cacheDir(s"ivf-${cacheKey(sfDir)}")
 
   private[graft] def metaFile(root: String) = new File(s"$root/_ivfmeta.json")
+
+  private[queries] def readIvfMeta(root: String): JsonNode =
+    mapper.readTree(metaFile(root))
+
+  private def pretty(node: JsonNode): Array[Byte] =
+    mapper.writerWithDefaultPrettyPrinter().writeValueAsBytes(node)
+
+  /** A marker file's JSON, or None when it is absent or unparseable: a
+    * marker torn by a crash mid-write makes no claim — the rule
+    * [[Bm25Store]]'s frontier stamp already follows ("unreadable = no
+    * claim"), so a torn marker can never wedge a store. */
+  private def readMarker(f: File): Option[JsonNode] =
+    if (!f.exists()) None
+    else try Some(mapper.readTree(f)) catch { case _: Exception => None }
 
   /** Index-write shard sizing: one shard per ~`graft.ivfShardTargetBytes`
     * (default 128 MiB) of estimated input bytes, floored at the
@@ -124,13 +136,14 @@ object IvfStore {
 
   /** Index-table SELF-maintenance: every incremental append/patch adds
     * shards to `assigned`, so over many maintenance cycles the index
-    * table fragments without bound. Past `graft.ivfCompactShards`
-    * (default 64) live shards, merge back toward the byte-sized target
-    * (no floor here — a sub-target index table compacts to one shard)
-    * in RETAIN mode, so superseded files stay on the vacuum grace
-    * clock and a concurrently pinned load keeps replaying its
-    * snapshot, then re-pin `assignedVersion`. Compaction merges files
-    * and never touches rows, so probe results are bit-identical.
+    * table fragments without bound. This is the shared
+    * [[StreamMaint.maybeCompact]] (retain mode, so superseded files stay
+    * on the vacuum grace clock and a concurrently pinned load keeps
+    * replaying its snapshot) with the meta re-pinned to the compacted
+    * `assignedVersion` right after the swap, before any opt-in
+    * reclamation — current loads pin the just-re-pinned version and
+    * never replay reclaimed history. Compaction merges files and never
+    * touches rows, so probe results are bit-identical.
     *
     * Caller must hold the index-root table lock (the KV-level swap
     * takes the assigned table's own lock — a different key, no
@@ -139,40 +152,9 @@ object IvfStore {
     * loads keep working (archived manifest + retained files), and the
     * next incremental window's dangling-commit guard answers with a
     * rebuild: sound, never silent. */
-  private[queries] def maybeCompactAssigned(s: SparkSession, root: String): Unit = {
-    val assignedDir = s"$root/assigned"
-    val threshold = s.conf.get("graft.ivfCompactShards", "64").toInt
-    val m = KvStore.readMeta(assignedDir)
-    if (m.shards.length <= threshold) return
-    val totalBytes =
-      m.shards.map(sh => new File(s"$assignedDir/${sh.file}").length()).sum
-    val desired = indexShards(s, totalBytes, 1)
-    val targetBytes = math.max(1L, totalBytes / desired + 1)
-    if (graft.kv.KvCompactor.compact(assignedDir, targetBytes,
-        retainInputs = true) > 0) {
-      val node = mapper.readTree(metaFile(root))
-        .deepCopy[com.fasterxml.jackson.databind.node.ObjectNode]()
-      node.put("assignedVersion", KvStore.readMeta(assignedDir).version)
-      writeMetaAtomic(root, node)
-      System.err.println(
-        s"[graft] IvfStore: compacted the assigned index table at $root " +
-          s"(${m.shards.length} shards past graft.ivfCompactShards=$threshold " +
-          s"-> ${KvStore.readMeta(assignedDir).shards.length})")
-      // opt-in reclamation: without it, retained compaction inputs
-      // accumulate one generation per maintenance cycle even though the
-      // live manifest stays bounded. The grace period must exceed the
-      // longest concurrently pinned load (the standard vacuum
-      // discipline); -1 (default) leaves reclamation to the operator.
-      // Current loads pin the just-re-pinned version and never replay
-      // reclaimed history.
-      val grace = s.conf.get("graft.ivfVacuumGraceMs", "-1").toLong
-      if (grace >= 0) {
-        val reclaimed = graft.kv.KvCompactor.vacuum(assignedDir, grace)
-        if (reclaimed > 0) System.err.println(
-          s"[graft] IvfStore: vacuumed $reclaimed superseded index files at $root")
-      }
-    }
-  }
+  private[queries] def maybeCompactAssigned(s: SparkSession, root: String): Unit =
+    StreamMaint.maybeCompact(s, s"$root/assigned",
+      onSwap = () => commitMeta(root, readIvfMeta(root).deepCopy[ObjectNode]()))
 
   /** The corpus DATA file listing: (relative-path, file) of every file
     * under the embeddings input, skipping underscore/dot-prefixed
@@ -253,12 +235,31 @@ object IvfStore {
     KvStore.withTableLock(indexRoot(sfDir)) { buildLocked(s, sfDir) }
 
   private def buildLocked(s: SparkSession, sfDir: String): IvfIndex = {
-    val root = indexRoot(sfDir)
     val files = listingEntries(sfDir)
     val idx = Similarity.ivfIndex(s, sfDir)
+    val corpusBytes = corpusDataFiles(sfDir).map(_._2.length()).sum
+    writeIndex(s, indexRoot(sfDir), sfDir, idx, corpusBytes,
+      recordBaseBytes = true) { node =>
+      node.put("fingerprint", md5Of(files))
+      val farr = node.putArray("files")
+      files.foreach(farr.add)
+    }
+  }
+
+  // ---- the IVF commit path, shared with IvfKvStore ----
+
+  /** Write a full index over `idx` at `root` and commit it: the routed
+    * fine-centroid table, the assigned corpus (both overwritten), then
+    * the base meta — the commit point. `stamp` records the corpus state
+    * the build covers (the file listing here, the manifest version for
+    * [[IvfKvStore]]); `recordBaseBytes` keeps the byte-proxy drift base
+    * that only the file-listing store needs. Returns the pinned load. */
+  private[queries] def writeIndex(s: SparkSession, root: String, corpusDir: String,
+                                  idx: IvfIndex, corpusBytes: Long,
+                                  recordBaseBytes: Boolean)
+                                 (stamp: ObjectNode => Unit): IvfIndex = {
     val k = idx.nlist
     val c = math.max(4L, math.ceil(math.sqrt(k.toDouble)).toLong)
-    val corpusBytes = corpusDataFiles(sfDir).map(_._2.length()).sum
     // fine-centroid table: k rows — estimated as the k/n slice of the
     // corpus bytes (the embedding dominates a row either way)
     idx.centRouted
@@ -282,29 +283,93 @@ object IvfStore {
       .mode("overwrite").save()
     val n = idx.nVectors
     val node = mapper.createObjectNode()
-    node.put("corpus", new File(sfDir).getAbsolutePath)
-    node.put("fingerprint", md5Of(files))
-    val farr = node.putArray("files")
-    files.foreach(farr.add)
+    node.put("corpus", new File(corpusDir).getAbsolutePath)
+    stamp(node)
     node.put("n", n); node.put("k", k); node.put("c", c)
     node.put("baseN", n)
-    node.put("baseBytes", corpusBytes)
+    if (recordBaseBytes) node.put("baseBytes", corpusBytes)
     node.put("appendedRows", 0L)
     node.put("centroidsVersion", KvStore.readMeta(s"$root/centroids").version)
-    node.put("assignedVersion", KvStore.readMeta(s"$root/assigned").version)
-    writeMetaAtomic(root, node)
-    loadPinned(s, root, mapper.readTree(metaFile(root)))
+    commitMeta(root, node)
+    loadPinned(s, root, readIvfMeta(root))
   }
 
-  private[queries] def writeMetaAtomic(root: String,
-                              node: com.fasterxml.jackson.databind.node.ObjectNode): Unit = {
-    val tmp = new File(s"$root/_ivfmeta.json.tmp")
-    java.nio.file.Files.write(tmp.toPath,
-      mapper.writerWithDefaultPrettyPrinter().writeValueAsBytes(node))
-    java.nio.file.Files.move(tmp.toPath, metaFile(root).toPath,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+  /** The one `_ivfmeta.json` write: pin the `assigned` table's current
+    * version into `node` and replace the meta atomically. */
+  private def commitMeta(root: String, node: ObjectNode): Unit = {
+    node.put("assignedVersion", KvStore.readMeta(s"$root/assigned").version)
+    writeAtomic(metaFile(root), pretty(node))
   }
+
+  /** Commit an incremental update whose KV write on `assigned` already
+    * landed: copy `meta`, let `fields` advance its counters, pin the
+    * table's new version and commit, self-compact
+    * ([[maybeCompactAssigned]]), and return the pinned reload. Every
+    * incremental IVF update — append, DML patch, compaction-only
+    * re-pin, orphan adoption, stream batch — ends here. */
+  private[queries] def advance(s: SparkSession, root: String, meta: JsonNode)
+                              (fields: ObjectNode => Unit): IvfIndex = {
+    val node = meta.deepCopy[ObjectNode]()
+    fields(node)
+    commitMeta(root, node)
+    maybeCompactAssigned(s, root)
+    loadPinned(s, root, readIvfMeta(root))
+  }
+
+  /** The dangling-commit guard of every incremental update: a KV table
+    * version ahead of the meta's pin means a prior update crashed
+    * between its KV commit and its meta commit, and appending again
+    * would double-insert that delta. Reads still serve the last
+    * consistent state (they pin the meta's versions); the sound
+    * recovery is a full rebuild — the caller's answer to `true`. */
+  private[queries] def dangling(root: String, meta: JsonNode): Boolean = {
+    val ahead =
+      KvStore.readMeta(s"$root/assigned").version != meta.path("assignedVersion").asLong() ||
+        KvStore.readMeta(s"$root/centroids").version != meta.path("centroidsVersion").asLong()
+    if (ahead) System.err.println(
+      s"[graft] dangling index commit detected at $root (KV table version ahead " +
+        "of _ivfmeta.json — a prior update crashed between its KV commit and its " +
+        "meta commit); falling back to a full rebuild")
+    ahead
+  }
+
+  /** Stage a scenario ONCE per source corpus, under the staging root's
+    * table lock: a `_staged.json` marker matching `sourceFp` and
+    * `phase` short-circuits; otherwise everything under `root` (but the
+    * lock file) and the scenario's `index` root is wiped, `body`
+    * re-stages and adds its own fields to the marker, and the marker is
+    * written atomically LAST. A partial staging is therefore wiped and
+    * redone, and a marker torn by a crash reads as "not staged". Keyed
+    * on the SOURCE corpus fingerprint, so a regeneration of the source
+    * re-stages from scratch. An empty `phase` is neither checked nor
+    * written (the q133 stream stage's marker has never carried one). */
+  private[queries] def stageOnce(root: String, sourceFp: String, phase: String,
+                                 index: String)(body: ObjectNode => Unit): Unit =
+    KvStore.withTableLock(root) {
+      val marker = new File(s"$root/_staged.json")
+      val staged = readMarker(marker).exists { m =>
+        m.path("sourceFingerprint").asText() == sourceFp &&
+          m.path("phase").asText() == phase
+      }
+      if (!staged) {
+        Option(new File(root).listFiles()).toSeq.flatten
+          .filterNot(_.getName == "_kvlock").foreach(rmrf)
+        rmrf(new File(index))
+        val node = mapper.createObjectNode()
+        node.put("sourceFingerprint", sourceFp)
+        if (phase.nonEmpty) node.put("phase", phase)
+        body(node)
+        writeAtomic(marker, pretty(node))
+      }
+    }
+
+  /** The m-th smallest vec_id of `df` — a POSITIONAL threshold: vec_ids
+    * are unique (the corpus rowkey), so `vec_id <= vecIdAt(df, m)` ≡ the
+    * first m rows in vec_id order, which the oracles replay as
+    * `row_number() OVER (ORDER BY vec_id)` bounds. */
+  private[graft] def vecIdAt(df: DataFrame, m: Long): Long =
+    df.select(col("vec_id")).orderBy(col("vec_id")).limit(m.toInt)
+      .agg(max(col("vec_id"))).head().getLong(0)
 
   private def staleError(root: String, sfDir: String, delta: CorpusDelta): Nothing =
     delta match {
@@ -337,7 +402,7 @@ object IvfStore {
     if (!mf.exists()) throw new IllegalStateException(
       s"no persisted IVF index for $sfDir (expected ${mf.getPath}); " +
         "run IvfStore.build/ensure first")
-    val meta = mapper.readTree(mf)
+    val meta = readIvfMeta(root)
     classify(meta, sfDir) match {
       case CorpusFresh => loadPinned(s, root, meta)
       case delta => staleError(root, sfDir, delta)
@@ -383,21 +448,8 @@ object IvfStore {
   private def incrementLocked(s: SparkSession, sfDir: String,
                               app: CorpusAppend): IvfIndex = {
     val root = indexRoot(sfDir)
-    val meta = mapper.readTree(metaFile(root))
-    val assignedDir = s"$root/assigned"
-    // dangling-commit guard: a crashed prior update may have committed
-    // the KV append without advancing the meta; appending again would
-    // double-insert that delta at the NEW pinned version. The last
-    // consistent state is still served (reads pin the meta's versions),
-    // and the sound recovery is a full rebuild.
-    if (KvStore.readMeta(assignedDir).version != meta.path("assignedVersion").asLong() ||
-        KvStore.readMeta(s"$root/centroids").version != meta.path("centroidsVersion").asLong()) {
-      System.err.println(
-        s"[graft] IvfStore: dangling index commit detected at $root " +
-          "(KV table version ahead of _ivfmeta.json — a prior update crashed " +
-          "between its KV commit and its meta commit); falling back to a full rebuild")
-      return buildLocked(s, sfDir)
-    }
+    val meta = readIvfMeta(root)
+    if (dangling(root, meta)) return buildLocked(s, sfDir)
     val k = meta.path("k").asLong()
     val frozen = loadPinned(s, root, meta)
     graft.functions.CosineSimilarity.register(s)
@@ -410,24 +462,21 @@ object IvfStore {
       .repartitionByRange(indexShards(s, app.newBytes, 4), col("vec_id"))
       .write.format("graft-kv")
       .option("catalog", assignedCatalog("ivf_assigned"))
-      .option("path", assignedDir)
+      .option("path", s"$root/assigned")
       .mode("append").save()
     // bounded scalar: one count over the DELTA files only
     val deltaRows = delta.count()
     val files = listingEntries(sfDir)
-    val node = meta.deepCopy[com.fasterxml.jackson.databind.node.ObjectNode]()
-    node.put("fingerprint", md5Of(files))
-    val farr = node.putArray("files")
-    files.foreach(farr.add)
-    node.put("n", meta.path("n").asLong() + deltaRows)
-    node.put("appendedRows", meta.path("appendedRows").asLong() + deltaRows)
-    node.put("assignedVersion", KvStore.readMeta(assignedDir).version)
-    writeMetaAtomic(root, node)
     System.err.println(
       s"[graft] IvfStore: appended $deltaRows vectors (${app.newFiles.size} files) " +
         s"to the persisted index at $root against frozen k=$k centroids")
-    maybeCompactAssigned(s, root)
-    loadPinned(s, root, mapper.readTree(metaFile(root)))
+    advance(s, root, meta) { node =>
+      node.put("fingerprint", md5Of(files))
+      val farr = node.putArray("files")
+      files.foreach(farr.add)
+      node.put("n", meta.path("n").asLong() + deltaRows)
+      node.put("appendedRows", meta.path("appendedRows").asLong() + deltaRows)
+    }
   }
 
   /** The build-once contract: load when fresh; build when absent;
@@ -442,7 +491,7 @@ object IvfStore {
       def rebuildOk = s.conf.get("graft.ivfRebuildOnStale", "false").toBoolean
       if (!mf.exists()) buildLocked(s, sfDir)
       else {
-        val meta = mapper.readTree(mf)
+        val meta = readIvfMeta(root)
         classify(meta, sfDir) match {
           case CorpusFresh => loadPinned(s, root, meta)
           case app: CorpusAppend =>
@@ -520,11 +569,8 @@ object IvfStore {
     * like [[indexRoot]]). Layout: `<root>/corpus/embeddings.parquet`
     * (the staged corpus the index is built over) + `<root>/_staged.json`
     * (records the SOURCE corpus fingerprint and the staging phase). */
-  private[graft] def stagedRoot(sfDir: String): String = {
-    val abs = new File(sfDir).getAbsolutePath
-    KvStore.cacheDir(
-      s"ivfinc-${new File(sfDir).getName}-${Integer.toHexString(abs.hashCode)}")
-  }
+  private[graft] def stagedRoot(sfDir: String): String =
+    KvStore.cacheDir(s"ivfinc-${cacheKey(sfDir)}")
 
   /** Stage the append scenario against the driver corpus, derive the
     * index incrementally, and return it with the staged corpus dir:
@@ -538,49 +584,27 @@ object IvfStore {
     *  3. ensure(): classifies the append, assigns ONLY the delta
     *     against the frozen centroids, append-commits, advances meta.
     *
-    * Idempotent and crash-safe: `_staged.json` is written only after
-    * the append lands, so a partial staging is wiped and redone; a
-    * completed staging short-circuits to a plain fresh load. Keyed on
-    * the SOURCE corpus fingerprint, so a driver-side regeneration of
-    * the testdata re-stages from scratch. */
+    * Staged once per source corpus through [[stageOnce]]: a partial
+    * staging is wiped and redone, a completed one short-circuits to a
+    * plain fresh load. */
   private[queries] def ensureIncrementalStage(
       s: SparkSession, sfDir: String): (IvfIndex, String) = {
     val root = stagedRoot(sfDir)
     val corpus = s"$root/corpus"
-    KvStore.withTableLock(root) {
-      val srcFp = corpusFingerprint(sfDir)
-      val marker = new File(s"$root/_staged.json")
-      val staged = marker.exists() && {
-        val m = mapper.readTree(marker)
-        m.path("sourceFingerprint").asText() == srcFp &&
-          m.path("phase").asText() == "appended"
-      }
-      if (!staged) {
-        rmrf(new File(corpus))
-        rmrf(new File(indexRoot(corpus)))
-        marker.delete()
-        val raw = Tables.load(s, sfDir, "embeddings")
-        val n = raw.count()
-        val n0 = n * 9 / 10
-        require(n0 > 0 && n0 < n, s"corpus too small to stage an append split: n=$n")
-        // the n0-th smallest vec_id bounds the initial prefix; vec_ids
-        // are unique (the corpus rowkey), so `vec_id <= thr` ≡ the
-        // first n0 rows in vec_id order — replayed by the oracle as
-        // row_number() OVER (ORDER BY vec_id) <= 9·cnt//10
-        val thr = raw.select(col("vec_id")).orderBy(col("vec_id"))
-          .limit(n0.toInt).agg(max(col("vec_id"))).head().getLong(0)
-        raw.filter(col("vec_id") <= thr).coalesce(1)
-          .write.mode("overwrite").parquet(s"$corpus/embeddings.parquet")
-        build(s, corpus)
-        raw.filter(col("vec_id") > thr).coalesce(1)
-          .write.mode("append").parquet(s"$corpus/embeddings.parquet")
-        val node = mapper.createObjectNode()
-        node.put("sourceFingerprint", srcFp)
-        node.put("phase", "appended")
-        node.put("thresholdVecId", thr)
-        java.nio.file.Files.write(marker.toPath,
-          mapper.writerWithDefaultPrettyPrinter().writeValueAsBytes(node))
-      }
+    stageOnce(root, corpusFingerprint(sfDir), "appended", indexRoot(corpus)) { marker =>
+      val raw = Tables.load(s, sfDir, "embeddings")
+      val n = raw.count()
+      val n0 = n * 9 / 10
+      require(n0 > 0 && n0 < n, s"corpus too small to stage an append split: n=$n")
+      // the first n0 rows in vec_id order — replayed by the oracle as
+      // row_number() OVER (ORDER BY vec_id) <= 9·cnt//10
+      val thr = vecIdAt(raw, n0)
+      raw.filter(col("vec_id") <= thr).coalesce(1)
+        .write.mode("overwrite").parquet(s"$corpus/embeddings.parquet")
+      build(s, corpus)
+      raw.filter(col("vec_id") > thr).coalesce(1)
+        .write.mode("append").parquet(s"$corpus/embeddings.parquet")
+      marker.put("thresholdVecId", thr): Unit
     }
     // outside the staging lock: ensure takes the index lock itself —
     // first call after staging runs the incremental update, every call
@@ -628,11 +652,8 @@ object IvfStore {
       | "columns":{"vec_id":{"cf":"rowkey","col":"vec_id","type":"long"},
       |            "embedding":{"cf":"f","col":"e","type":"array<float>"}}}""".stripMargin
 
-  private[graft] def streamRoot(sfDir: String): String = {
-    val abs = new File(sfDir).getAbsolutePath
-    KvStore.cacheDir(
-      s"ivfstream-${new File(sfDir).getName}-${Integer.toHexString(abs.hashCode)}")
-  }
+  private[graft] def streamRoot(sfDir: String): String =
+    KvStore.cacheDir(s"ivfstream-${cacheKey(sfDir)}")
 
   /** Stage q133's scenario once per corpus: seed = the same 90% prefix
     * q116 uses (so [[incOracleSql]] pins both), the seed-built index at
@@ -646,44 +667,28 @@ object IvfStore {
   private def ensureStreamStage(s: SparkSession, sfDir: String): String = {
     val root = streamRoot(sfDir)
     val corpus = s"$root/corpus"
-    KvStore.withTableLock(root) {
-      val srcFp = corpusFingerprint(sfDir)
-      val marker = new File(s"$root/_staged.json")
-      val staged = marker.exists() &&
-        mapper.readTree(marker).path("sourceFingerprint").asText() == srcFp &&
-        metaFile(s"$root/index-seed").exists()
-      if (!staged) {
-        rmrf(new File(root))
-        new File(root).mkdirs()
-        val raw = Tables.load(s, sfDir, "embeddings")
-          .select(col("vec_id"), col("embedding").cast("array<float>").as("embedding"))
-        val n = raw.count()
-        val n0 = n * 9 / 10
-        require(n0 > 0 && n0 + 3 <= n, s"corpus too small to stage a 3-batch tail: n=$n")
-        def thAt(m: Long): Long = raw.select(col("vec_id"))
-          .orderBy(col("vec_id")).limit(m.toInt)
-          .agg(max(col("vec_id"))).head().getLong(0)
-        val thr = thAt(n0)
-        val cuts = Seq(thAt(n0 + (n - n0) / 3), thAt(n0 + 2 * (n - n0) / 3))
-        raw.filter(col("vec_id") <= thr).coalesce(1)
-          .write.mode("overwrite").parquet(s"$corpus/embeddings.parquet")
-        build(s, corpus) // seed-frozen centroids, seed-only assigned table
-        StreamMaint.copyDir(new File(indexRoot(corpus)),
-          new File(s"$root/index-seed"))
-        def commitFeed(df: DataFrame): Unit =
-          df.repartitionByRange(2, col("vec_id"))
-            .write.format("graft-kv")
-            .option("catalog", feedCatalog).option("path", s"$root/feed")
-            .mode("append").save()
-        commitFeed(raw.filter(col("vec_id") <= thr))
-        commitFeed(raw.filter(col("vec_id") > thr && col("vec_id") <= cuts(0)))
-        commitFeed(raw.filter(col("vec_id") > cuts(0) && col("vec_id") <= cuts(1)))
-        commitFeed(raw.filter(col("vec_id") > cuts(1)))
-        val node = mapper.createObjectNode()
-        node.put("sourceFingerprint", srcFp)
-        java.nio.file.Files.write(marker.toPath,
-          mapper.writerWithDefaultPrettyPrinter().writeValueAsBytes(node))
-      }
+    stageOnce(root, corpusFingerprint(sfDir), "", indexRoot(corpus)) { _ =>
+      val raw = Tables.load(s, sfDir, "embeddings")
+        .select(col("vec_id"), col("embedding").cast("array<float>").as("embedding"))
+      val n = raw.count()
+      val n0 = n * 9 / 10
+      require(n0 > 0 && n0 + 3 <= n, s"corpus too small to stage a 3-batch tail: n=$n")
+      val thr = vecIdAt(raw, n0)
+      val cuts = Seq(vecIdAt(raw, n0 + (n - n0) / 3), vecIdAt(raw, n0 + 2 * (n - n0) / 3))
+      raw.filter(col("vec_id") <= thr).coalesce(1)
+        .write.mode("overwrite").parquet(s"$corpus/embeddings.parquet")
+      build(s, corpus) // seed-frozen centroids, seed-only assigned table
+      StreamMaint.copyDir(new File(indexRoot(corpus)),
+        new File(s"$root/index-seed"))
+      def commitFeed(df: DataFrame): Unit =
+        df.repartitionByRange(2, col("vec_id"))
+          .write.format("graft-kv")
+          .option("catalog", feedCatalog).option("path", s"$root/feed")
+          .mode("append").save()
+      commitFeed(raw.filter(col("vec_id") <= thr))
+      commitFeed(raw.filter(col("vec_id") > thr && col("vec_id") <= cuts(0)))
+      commitFeed(raw.filter(col("vec_id") > cuts(0) && col("vec_id") <= cuts(1)))
+      commitFeed(raw.filter(col("vec_id") > cuts(1)))
     }
     root
   }
@@ -725,34 +730,33 @@ object IvfStore {
                                    crashAfterAppend: Boolean = false): Long =
     KvStore.withTableLock(indexRoot(corpus)) {
       val root = indexRoot(corpus)
-      var meta = mapper.readTree(metaFile(root))
+      var meta = readIvfMeta(root)
       val assignedDir = s"$root/assigned"
       val tableV = KvStore.readMeta(assignedDir).version
       val metaV = meta.path("assignedVersion").asLong()
       if (tableV != metaV) {
-        val marker = pendingMarker(root)
-        val adoptable = marker.exists() &&
-          mapper.readTree(marker).path("assignedVersion").asLong() == metaV
+        // a torn (unparseable) marker reads as absent: no claim, rebuild
+        val adoptable = readMarker(pendingMarker(root))
+          .exists(_.path("assignedVersion").asLong() == metaV)
         if (!adoptable) {
           System.err.println(
             s"[graft] IvfStore: dangling index commit at $root with no pending " +
               "marker (an unknown writer advanced the assigned table past the " +
               "meta); falling back to a full rebuild")
           buildLocked(s, corpus)
-          meta = mapper.readTree(metaFile(root))
+          meta = readIvfMeta(root)
         } else {
           val orphanRows = s.read.format("graft-kv")
             .option("catalog", assignedCatalog("ivf_assigned"))
             .option("path", assignedDir)
             .option("sinceVersion", metaV).option("asOfVersion", tableV)
             .load().count()
-          val node = meta.deepCopy[com.fasterxml.jackson.databind.node.ObjectNode]()
-          node.put("n", meta.path("n").asLong() + orphanRows)
-          node.put("appendedRows", meta.path("appendedRows").asLong() + orphanRows)
-          node.put("assignedVersion", tableV)
-          writeMetaAtomic(root, node)
-          marker.delete()
-          meta = mapper.readTree(metaFile(root))
+          advance(s, root, meta) { node =>
+            node.put("n", meta.path("n").asLong() + orphanRows)
+            node.put("appendedRows", meta.path("appendedRows").asLong() + orphanRows)
+          }
+          pendingMarker(root).delete()
+          meta = readIvfMeta(root)
           System.err.println(
             s"[graft] IvfStore: adopted a dangling maintainBatch commit at $root " +
               s"($orphanRows rows, KV v$metaV -> v$tableV) — a prior batch crashed " +
@@ -770,8 +774,7 @@ object IvfStore {
       if (nFresh > 0) {
         val marker = mapper.createObjectNode()
         marker.put("assignedVersion", meta.path("assignedVersion").asLong())
-        java.nio.file.Files.write(pendingMarker(root).toPath,
-          mapper.writerWithDefaultPrettyPrinter().writeValueAsBytes(marker))
+        writeAtomic(pendingMarker(root), pretty(marker))
         val frozen = loadPinned(s, root, meta)
         // register on the BATCH's session, not (only) the outer one:
         // inside a streaming foreachBatch the batch frame belongs to the
@@ -794,13 +797,11 @@ object IvfStore {
           .mode("append").save()
         // crashAfterAppend: spec-injected crash — KV committed, meta not
         if (!crashAfterAppend) {
-          val node = meta.deepCopy[com.fasterxml.jackson.databind.node.ObjectNode]()
-          node.put("n", meta.path("n").asLong() + nFresh)
-          node.put("appendedRows", meta.path("appendedRows").asLong() + nFresh)
-          node.put("assignedVersion", KvStore.readMeta(assignedDir).version)
-          writeMetaAtomic(root, node)
+          advance(s, root, meta) { node =>
+            node.put("n", meta.path("n").asLong() + nFresh)
+            node.put("appendedRows", meta.path("appendedRows").asLong() + nFresh)
+          }
           pendingMarker(root).delete()
-          maybeCompactAssigned(s, root)
         }
       }
       nFresh

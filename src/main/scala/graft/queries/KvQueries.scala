@@ -3,7 +3,7 @@ package graft.queries
 import java.io.File
 
 import graft.{Q, Tables}
-import graft.util.Dirs.rmrf
+import graft.util.Dirs.{cacheKey, rmrf}
 import graft.util.Exact._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -35,14 +35,6 @@ object KvQueries {
       |    "l_shipdate": {"cf": "m", "col": "sd", "type": "timestamp"}
       |  }
       |}""".stripMargin
-
-  /** Cache key for a corpus dir: basename AND a full-path hash, so
-    * same-named corpora in different locations never share an entry.
-    * Single definition — every KV table builder keys through it. */
-  private def cacheKey(sfDir: String): String = {
-    val abs = new File(sfDir).getAbsolutePath
-    s"${new File(sfDir).getName}-${Integer.toHexString(abs.hashCode)}"
-  }
 
   /** Build (once per sfDir per JVM/host) the KV copy of lineitem, range-
     * partitioned on the synthetic rowkey for non-overlapping shards. */

@@ -1,9 +1,8 @@
 package graft.queries
 
-import java.io.File
-
 import graft.{Q, Tables}
-import graft.util.Dirs.rmrf
+import graft.util.Dirs.cacheKey
+import graft.queries.StreamMaint.tableFrontier
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -55,11 +54,6 @@ object LshStore {
       |    "sh": {"cf": "s", "col": "sh", "type": "string"}
       |  }
       |}""".stripMargin
-
-  private def cacheKey(sfDir: String): String = {
-    val abs = new File(sfDir).getAbsolutePath
-    s"${new File(sfDir).getName}-${Integer.toHexString(abs.hashCode)}"
-  }
 
   private def pad(id: org.apache.spark.sql.Column) =
     lpad(id.cast("string"), 12, "0")
@@ -116,12 +110,7 @@ object LshStore {
                                      docs: => DataFrame): (String, String) = {
     val bDir = graft.kv.KvStore.cacheDir(s"lsh-$tag-bands-${cacheKey(d)}")
     val lDir = graft.kv.KvStore.cacheDir(s"lsh-$tag-shingles-${cacheKey(d)}")
-    // gate on BOTH tables' commit markers: a crash between the two
-    // writes inside writeIndex must not leave a complete bands table
-    // that makes every later run skip the rebuild (Bm25Store has the
-    // same two-table shape and the same gate)
-    if (!new File(s"$bDir/_kvmeta.json").exists() ||
-        !new File(s"$lDir/_kvmeta.json").exists())
+    if (!StreamMaint.committed(bDir, lDir))
       writeIndex(s, docs, bDir, lDir, "overwrite")
     (bDir, lDir)
   }
@@ -133,19 +122,6 @@ object LshStore {
   private[graft] def ensureIndexed(s: SparkSession, d: String,
                                      bDir: String, lDir: String): Long =
     maintainBatch(s, Tables.documents(s, d), bDir, lDir)
-
-  /** One table's indexed frontier: its pushed `max(doc_id)`, or -1 for
-    * an absent or EMPTY table (legal — every seed doc shorter than 3
-    * tokens sketches to no rows; max(doc_id) is then null and a bare
-    * getLong would NPE; frontier -1 treats everything as the delta). */
-  private def tableFrontier(s: SparkSession, catalogJson: String,
-                            dir: String): Long =
-    if (!new File(s"$dir/_kvmeta.json").exists()) -1L
-    else FrontierCache.frontier(s, dir) {
-      s.read.format("graft-kv")
-        .option("catalog", catalogJson).option("path", dir).load()
-        .agg(coalesce(max(col("doc_id")), lit(-1L))).head().getLong(0)
-    }
 
   /** One batch of sketch-index maintenance: sketch and append ONLY the
     * batch's documents past the index frontier — the q131 update, per
@@ -371,25 +347,8 @@ object LshStore {
   val q134LshStream: Q = Q(
     "q134_lsh_stream",
     (s, d) => {
-      val dir = KvQueries.incDocsDir(s, d)
-      val seedB = s"$dir-lshs-seed-bands"
-      val seedL = s"$dir-lshs-seed-shingles"
-      if (!new File(s"$seedB/_kvmeta.json").exists() ||
-          !new File(s"$seedL/_kvmeta.json").exists()) {
-        Seq(seedB, seedL).foreach(p => rmrf(new File(p)))
-        maintainBatch(s, s.read.format("graft-kv")
-          .option("catalog", KvQueries.docsIncCatalogJson).option("path", dir)
-          .option("asOfVersion", 1).load(), seedB, seedL): Unit
-      }
-      val bDir = s"$dir-lshs-bands"
-      val lDir = s"$dir-lshs-shingles"
-      Seq(bDir, lDir).foreach(p => rmrf(new File(p)))
-      StreamMaint.copyDir(new File(seedB), new File(bDir))
-      StreamMaint.copyDir(new File(seedL), new File(lDir))
-      StreamMaint.drain(s, dir, KvQueries.docsIncCatalogJson,
-        s"$dir-ckpt-lshs", sinceVersion = Some(1)) { batch =>
-        maintainBatch(s, batch, bDir, lDir): Unit
-      }
+      val (bDir, lDir) = StreamMaint.seededDrain(s, d, "lshs", "bands", "shingles")(
+        maintainBatch(s, _, _, _))
       pairs(s, bDir, lDir)
     },
     Dedup.q46MinhashMd5.oracle,
@@ -406,22 +365,8 @@ object LshStore {
   val q136LshStreamCompact: Q = Q(
     "q136_lsh_stream_compact",
     (s, d) => {
-      val dir = KvQueries.incDocsDir(s, d)
-      val bDir = s"$dir-lshc-bands"
-      val lDir = s"$dir-lshc-shingles"
-      Seq(bDir, lDir).foreach(p => rmrf(new File(p)))
-      StreamMaint.withConfs(s,
-        "graft.ivfCompactShards" -> "2", "graft.ivfVacuumGraceMs" -> "0") {
-        StreamMaint.drain(s, dir, KvQueries.docsIncCatalogJson,
-          s"$dir-ckpt-lshc") { batch =>
-          maintainBatch(s, batch, bDir, lDir): Unit
-        }
-      }
-      Seq("bands" -> bDir, "shingles" -> lDir).foreach { case (t, p) =>
-        val live = graft.kv.KvStore.readMeta(p).shards.length
-        require(live <= 2,
-          s"self-compaction left the $t table at $live live shards (> threshold 2)")
-      }
+      val (bDir, lDir) = StreamMaint.compactedDrain(s, d, "lshc", "bands", "shingles")(
+        maintainBatch(s, _, _, _))
       pairs(s, bDir, lDir)
     },
     Dedup.q46MinhashMd5.oracle,

@@ -466,4 +466,20 @@ class IvfKvStoreSpec extends SparkSpec {
       } finally spark.conf.unset("graft.ivfMaxDmlFrac")
     } finally spark.sql("DROP TABLE IF EXISTS ivfkv_corrupt")
   }
+
+  test("self-maintenance staging restores the caller's compaction confs") {
+    // the q119 stage forces an every-cycle compaction; afterwards the
+    // caller's own values must come back, not fall to the defaults
+    spark.conf.set("graft.ivfCompactShards", "777")
+    spark.conf.set("graft.ivfVacuumGraceMs", "12345")
+    try {
+      graft.util.Dirs.rmrf(new java.io.File(IvfKvStore.selfMaintStagedRoot(d)))
+      IvfKvStore.ensureSelfMaintStageKv(spark, d)
+      assert(spark.conf.get("graft.ivfCompactShards") == "777")
+      assert(spark.conf.get("graft.ivfVacuumGraceMs") == "12345")
+    } finally {
+      spark.conf.unset("graft.ivfCompactShards")
+      spark.conf.unset("graft.ivfVacuumGraceMs")
+    }
+  }
 }

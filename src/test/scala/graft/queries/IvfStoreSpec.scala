@@ -274,4 +274,26 @@ class IvfStoreSpec extends SparkSpec {
     finally spark.conf.unset("graft.ivfShardTargetBytes")
     assert(IvfStore.indexShards(spark, Long.MaxValue / 4, 32) == (1 << 20))
   }
+
+  test("cache roots keep their historical <prefix>-<name>-<hex(abs path hash)> paths") {
+    // the stress harness's built-detection and perfbench's pipeline find
+    // the persisted indexes at these paths; a changed key would only
+    // surface as a silent rebuild
+    val key = s"${new File(d).getName}-" +
+      Integer.toHexString(new File(d).getAbsolutePath.hashCode)
+    def cache(prefix: String) = s"${System.getProperty("java.io.tmpdir")}" +
+      s"/graft-kv-cache/v${graft.kv.KvStore.FormatVersion}-$prefix-$key"
+    assert(IvfStore.indexRoot(d) == cache("ivf"))
+    assert(IvfStore.stagedRoot(d) == cache("ivfinc"))
+    assert(IvfStore.streamRoot(d) == cache("ivfstream"))
+    assert(IvfKvStore.indexRoot(d) == cache("ivfkv"))
+    assert(IvfKvStore.stagedRoot(d) == cache("ivfkvinc"))
+    assert(IvfKvStore.dmlStagedRoot(d) == cache("ivfkvdml"))
+    assert(IvfKvStore.selfMaintStagedRoot(d) == cache("ivfkvsm"))
+    val docs = Tables.documents(spark, d)
+    assert(Bm25Store.buildIfAbsent(spark, d, "full", docs) ==
+      (cache("bm25-full-postings"), cache("bm25-full-dl")))
+    assert(LshStore.buildIfAbsent(spark, d, "full", docs) ==
+      (cache("lsh-full-bands"), cache("lsh-full-shingles")))
+  }
 }

@@ -201,4 +201,30 @@ class StreamMaintCrashSpec extends SparkSpec {
     assert(probeRows(corpus) == probeRows(twin),
       "the rebuilt-and-replayed index must probe identically to a clean one")
   }
+
+  test("IVF: a torn pending marker makes no claim — the replay rebuilds instead of wedging") {
+    val vecs = Tables.embeddings(spark, d).select(col("vec_id"), col("embedding"))
+    val n = vecs.count()
+    val seedN = n / 2
+    val corpus = ivfStage("torn", seedN)
+    val tail = vecs.filter(col("vec_id") >= seedN)
+    IvfStore.maintainBatch(spark, corpus, tail, crashAfterAppend = true)
+    // a crash in the middle of the marker write: truncated JSON, e.g.
+    // `{"assignedVersion" :` — unparseable, so it must read as absent
+    val marker = IvfStore.pendingMarker(IvfStore.indexRoot(corpus)).toPath
+    val bytes = Files.readAllBytes(marker)
+    Files.write(marker, bytes.take(bytes.indexOf(':'.toByte) + 1))
+    assert(IvfStore.maintainBatch(spark, corpus, tail) == n - seedN,
+      "the replay must rebuild from the corpus and re-append the tail")
+    val meta = mapper.readTree(IvfStore.metaFile(IvfStore.indexRoot(corpus)))
+    assert(meta.path("n").asLong() == n)
+    val assigned = IvfStore.load(spark, corpus).assigned
+    assert(assigned.count() == n &&
+      assigned.select("vec_id").distinct().count() == n,
+      "no duplicate vec_ids after the rebuild + replay")
+    val twin = ivfStage("torn-twin", seedN)
+    IvfStore.maintainBatch(spark, twin, tail)
+    assert(probeRows(corpus) == probeRows(twin),
+      "the rebuilt-and-replayed index must probe identically to a clean drain")
+  }
 }
