@@ -110,48 +110,20 @@ object KvCompactor {
     * branch is directly testable. */
   private[kv] def swapCompacted(tableDir: String, inputs: Seq[KvShardMeta],
                                 outputs: Seq[KvShardMeta],
-                                retainInputs: Boolean): Int = {
-    val inputFiles = inputs.map(_.file).toSet
-    KvStore.withTableLock(tableDir) {
-      val current = KvStore.readMeta(tableDir)
-      val live = current.shards.map(_.file).toSet
-      def discardOutputs(): Unit = outputs.foreach { o =>
-        new File(s"$tableDir/${o.file}").delete()
-        if (o.bloom.nonEmpty) new File(s"$tableDir/${o.bloom}").delete()
-      }
-      if (!inputFiles.forall(live)) {
-        discardOutputs()
-        return 0
-      }
-      if (retainInputs) {
-        // start the vacuum grace clock NOW: the guarantee is "grace
-        // since the file left the manifest", but vacuum can only see
-        // mtimes — an input WRITTEN long ago would otherwise be
-        // reclaimable the instant it is superseded, breaking both
-        // in-flight scans and snapshot reads planned minutes earlier.
-        // The bump must land BEFORE the manifest swap commits: a bump
-        // failure after commit would throw out of a compaction that
-        // already succeeded (caller retries a done swap, return count
-        // lost). Bumping first means failure and commit cannot
-        // coexist — on a failed bump the outputs are discarded and the
-        // swap aborts cleanly with 0, leaving the table untouched.
-        val now = System.currentTimeMillis()
-        if (!inputs.forall(s => new File(s"$tableDir/${s.file}").setLastModified(now))) {
-          discardOutputs()
-          return 0
-        }
-      }
-      KvStore.writeMeta(tableDir,
-        KvTableMeta(current.shards.filterNot(s => inputFiles(s.file)) ++ outputs,
-          current.committedEpochs, current.version))
-      if (!retainInputs)
-        inputs.foreach { s =>
-          new File(s"$tableDir/${s.file}").delete()
-          if (s.bloom.nonEmpty) new File(s"$tableDir/${s.bloom}").delete()
-        }
+                                retainInputs: Boolean): Int =
+    // retain mode starts the vacuum grace clock NOW: the guarantee is
+    // "grace since the file left the manifest", but vacuum can only see
+    // mtimes — an input WRITTEN long ago would otherwise be reclaimable
+    // the instant it is superseded, breaking both in-flight scans and
+    // snapshot reads planned minutes earlier. The commit bumps BEFORE
+    // the swap: a bump failure after it would throw out of a compaction
+    // that already succeeded. On a failed bump the outputs are discarded
+    // and the swap aborts cleanly with 0, leaving the table untouched.
+    KvStore.commit(tableDir)(_ => KvEdit(outputs,
+      remove = inputs.map(_.file).toSet, deleteRemoved = !retainInputs)) match {
+      case KvStore.Committed => outputs.length
+      case _ => 0
     }
-    outputs.length
-  }
 
   /** Delete shard files no longer referenced by the manifest whose
     * last modification is older than `graceMs` — the cleanup half of

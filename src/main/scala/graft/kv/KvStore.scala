@@ -138,6 +138,31 @@ final case class KvTableMeta(shards: Seq[KvShardMeta],
                              addsSince: Long = -1,
                              lastRewriteVersion: Long = 0)
 
+/** What one [[KvStore.commit]] changes, computed by the committer from
+  * the live manifest the commit read under the table lock.
+  *  - `add`: new shards, appended at the end, `firstVersion` already
+  *    stamped by the committer.
+  *  - `remove`: live shard files this commit takes out; one that is no
+  *    longer live makes the commit a `Conflict`.
+  *  - `inPlace`: removed files whose replacements take the removed
+  *    file's manifest position (DELETE's per-shard rewrite).
+  *  - `deleteRemoved`: delete removed files (and bloom sidecars) after
+  *    the commit; otherwise their vacuum grace clock restarts BEFORE it,
+  *    so pre-commit snapshots keep replaying until vacuum.
+  *  - `rewrite`: the commit replaced live rows in place and stamps
+  *    `lastRewriteVersion`.
+  *  - `archive = false` (truncate only): neither the superseded manifest
+  *    nor its epoch records survive, see [[KvStore.writeMeta]].
+  *  - `epoch`: a streaming "queryId-epochId" recorded in the same write;
+  *    an already-recorded one makes the commit a `DuplicateEpoch`. */
+final case class KvEdit(add: Seq[KvShardMeta] = Nil,
+                        remove: Set[String] = Set.empty,
+                        inPlace: Map[String, Seq[KvShardMeta]] = Map.empty,
+                        deleteRemoved: Boolean = false,
+                        rewrite: Boolean = false,
+                        archive: Boolean = true,
+                        epoch: Option[String] = None)
+
 object KvStore {
   /** Bump when the shard-file or manifest layout changes — cache dirs
     * embed it so stale cross-round caches are never misread. */
@@ -186,12 +211,15 @@ object KvStore {
     * rather than blocking). On filesystems without lock support (object
     * stores) this degrades to the JVM-local monitor — there a single
     * maintainer per table is the deployment contract, as in the
-    * reference's store. */
+    * reference's store. A section nested on the thread that already
+    * holds the lock runs inside the outer one, so a fixture can stage
+    * several commits under its table's lock. */
   def withTableLock[T](tableDir: String)(f: => T): T = {
     Files.createDirectories(Paths.get(tableDir))
     val canon = new File(tableDir).getCanonicalPath
     val monitor = jvmLocks.computeIfAbsent(canon, _ => new Object)
-    monitor.synchronized {
+    if (Thread.holdsLock(monitor)) f
+    else monitor.synchronized {
       val ch = java.nio.channels.FileChannel.open(
         Paths.get(s"$tableDir/_kvlock"),
         java.nio.file.StandardOpenOption.CREATE,
@@ -206,6 +234,11 @@ object KvStore {
 
   def readMeta(tableDir: String): KvTableMeta =
     readMetaFile(new File(metaPath(tableDir)))
+
+  /** [[readMeta]], or the empty version-0 manifest of a table never
+    * committed to. */
+  def readMetaOrEmpty(tableDir: String): KvTableMeta =
+    if (new File(metaPath(tableDir)).exists()) readMeta(tableDir) else KvTableMeta(Nil)
 
   /** Manifest as of a past commit. `None` → current. A missing archived
     * version means it either never existed or was vacuumed — time travel
@@ -415,9 +448,76 @@ object KvStore {
     * of commits behind — while time travel stays a debugging window. */
   val MaxAddLineage = 256
 
+  /** Bounded streaming epoch-record tail (FIFO across all writing
+    * queries): a restart can only re-attempt epochs at/after its
+    * checkpointed offset, which by then is never hundreds of commits
+    * behind — while an unbounded list would grow the manifest forever on
+    * a long-lived stream. */
+  val MaxEpochRecords = 256
+
+  sealed trait CommitResult
+  case object Committed extends CommitResult
+  /** A shard the edit removes is no longer live: concurrent maintenance
+    * swapped it first. */
+  case object Conflict extends CommitResult
+  case object DuplicateEpoch extends CommitResult
+  /** The vacuum grace clock of a removed file could not be restarted. */
+  case object StuckClock extends CommitResult
+
+  /** The error a committer raises on [[StuckClock]]. */
+  def stuckClock(what: String): IllegalStateException = new IllegalStateException(
+    s"cannot restart the vacuum grace clock on replaced shards; $what aborted")
+
+  /** Delete a shard file and its bloom sidecar. */
+  def deleteShard(tableDir: String, s: KvShardMeta): Unit = {
+    new File(s"$tableDir/${s.file}").delete()
+    if (s.bloom.nonEmpty) new File(s"$tableDir/${s.bloom}").delete()
+  }
+
+  /** The one manifest commit of every table write, rewrite and
+    * compaction. Under the table lock it reads the live manifest (or the
+    * empty one), asks `edit` what to change, checks that every removed
+    * file is still live and the epoch is new, restarts the grace clock on
+    * retained removed files, writes version+1 through [[writeMeta]] and
+    * then deletes the removed files if the edit says so. Every outcome
+    * but [[Committed]] deletes the edit's new files: they never became
+    * live. The caller owns the policy for the other outcomes (retry,
+    * throw, return 0, ignore). */
+  def commit(tableDir: String)(edit: KvTableMeta => KvEdit): CommitResult =
+    withTableLock(tableDir) {
+      val prev = readMetaOrEmpty(tableDir)
+      val e = edit(prev)
+      val gone = e.remove ++ e.inPlace.keySet
+      val live = prev.shards.map(_.file).toSet
+      val removed = prev.shards.filter(s => gone(s.file))
+      val now = System.currentTimeMillis()
+      val result =
+        if (!gone.forall(live)) Conflict
+        else if (e.epoch.exists(prev.committedEpochs.contains)) DuplicateEpoch
+        else if (!e.deleteRemoved &&
+          !removed.forall(s => new File(s"$tableDir/${s.file}").setLastModified(now)))
+          StuckClock
+        else Committed
+      if (result != Committed)
+        (e.add ++ e.inPlace.values.flatten).foreach(deleteShard(tableDir, _))
+      else {
+        val shards = prev.shards.flatMap(s =>
+          if (gone(s.file)) e.inPlace.getOrElse(s.file, Nil) else Seq(s)) ++ e.add
+        val epochs =
+          if (!e.archive) Nil
+          else e.epoch.fold(prev.committedEpochs)(k =>
+            (prev.committedEpochs :+ k).takeRight(MaxEpochRecords))
+        writeMeta(tableDir, KvTableMeta(shards, epochs, prev.version),
+          archiveSuperseded = e.archive, rewriteCommit = e.rewrite)
+        if (e.deleteRemoved) removed.foreach(deleteShard(tableDir, _))
+      }
+      result
+    }
+
   /** Atomic manifest write (temp + move) — the commit point of every
     * batch / streaming-epoch / compaction-swap commit. ALL callers are
-    * read-modify-write sections under [[withTableLock]], and
+    * read-modify-write sections under [[withTableLock]] (in the engine
+    * the one caller is [[commit]]), and
     * `meta.version` MUST be the version of the manifest state the
     * caller read under that lock (0 for a fresh table): the superseded
     * file is archived as `_kvmeta.v{meta.version}.json` and version+1
@@ -538,10 +638,8 @@ object KvStore {
     }
     node.put("version", meta.version + 1)
     node.put("committedAtMs", System.currentTimeMillis())
-    val tmp = Paths.get(metaPath(tableDir) + ".tmp")
-    Files.write(tmp, mapper.writerWithDefaultPrettyPrinter().writeValueAsBytes(node))
-    Files.move(tmp, live, StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
+    graft.util.Dirs.writeAtomic(live.toFile,
+      mapper.writerWithDefaultPrettyPrinter().writeValueAsBytes(node))
     // exact same-JVM read-after-write even on coarse-mtime filesystems:
     // the next readMetaFile re-parses the moved file once and re-memoizes
     manifestCache.remove(live.toFile.getAbsolutePath)

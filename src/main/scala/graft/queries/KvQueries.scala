@@ -812,6 +812,21 @@ object KvQueries {
       ORDER BY ok"""),
     doc = "storage-partitioned join: co-bucketed rowkey tables join with zero exchanges")
 
+  /** Stage a multi-commit fixture table once. It counts as built only
+    * at its final manifest version `commits` (the first commit already
+    * creates the manifest), so a fixture cut short by a crash is wiped
+    * and staged again. The table lock serializes stagers across JVMs;
+    * the fixture's own commits nest inside it, so `stage` must commit
+    * on the calling thread (batch writes and DML, never a stream). */
+  private def stageCommits(dir: String, commits: Long)(stage: => Unit): Unit =
+    graft.kv.KvStore.withTableLock(dir) {
+      if (graft.kv.KvStore.readMetaOrEmpty(dir).version != commits) {
+        Option(new File(dir).listFiles()).toSeq.flatten
+          .filterNot(_.getName == "_kvlock").foreach(rmrf)
+        stage
+      }
+    }
+
   /** Time-travel gate ([[graft.sources.KvSqlCatalog.loadTable]] version
     * overloads): the table is CTAS'd (manifest version 1), then a
     * row-level DELETE commits version 2; the query reads BOTH states of
@@ -829,9 +844,8 @@ object KvQueries {
       val wh = graft.kv.KvStore.cacheDir(s"tt-wh-${cacheKey(d)}")
       s.conf.set("spark.sql.catalog.graft_tt", "graft.sources.KvSqlCatalog")
       s.conf.set("spark.sql.catalog.graft_tt.warehouse", wh)
-      if (!new File(s"$wh/default/li_hist/_kvmeta.json").exists()) {
+      stageCommits(s"$wh/default/li_hist", 2) {
         Tables.lineitem(s, d).createOrReplaceTempView("lineitem_tt_src")
-        s.sql("DROP TABLE IF EXISTS graft_tt.default.li_hist")
         s.sql("""CREATE TABLE graft_tt.default.li_hist
                  TBLPROPERTIES ('rowkey'='lk') AS
                  SELECT l_orderkey * 100 + l_linenumber AS lk, l_quantity,
@@ -883,7 +897,7 @@ object KvQueries {
     * (q113). */
   private def incLineitemDir(s: SparkSession, d: String): String = {
     val dir = graft.kv.KvStore.cacheDir(s"inc-lineitem-${cacheKey(d)}")
-    if (!new File(s"$dir/_kvmeta.json").exists()) {
+    stageCommits(dir, 3) {
       val li = Tables.lineitem(s, d)
         .withColumn("lk", col("l_orderkey") * 100 + col("l_linenumber"))
         .select("lk", "l_orderkey", "l_quantity", "l_extendedprice", "l_returnflag")
@@ -1022,7 +1036,7 @@ object KvQueries {
     * the ingest-feed shape the streaming dedup consumes. */
   private[queries] def incDocsDir(s: SparkSession, d: String): String = {
     val dir = graft.kv.KvStore.cacheDir(s"inc-docs-${cacheKey(d)}")
-    if (!new File(s"$dir/_kvmeta.json").exists()) {
+    stageCommits(dir, 3) {
       val docs = Tables.documents(s, d).select("doc_id", "text")
       val n = docs.count()
       Seq(

@@ -2,7 +2,7 @@ package graft.sources
 
 import java.util
 
-import graft.kv.{KvCatalog, KvShardMeta, KvStore, KvTableMeta}
+import graft.kv.{KvCatalog, KvEdit, KvShardMeta, KvStore}
 import org.apache.spark.sql.connector.catalog._
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.ScanBuilder
@@ -208,15 +208,14 @@ class KvTable(val catalog: KvCatalog, val dir: String,
             try w.close() catch { case _: Exception => () }
             new java.io.File(s"$dir/$outName").delete()
             // discard any outputs from earlier shards of this failed pass
-            replacements.values.flatten
-              .foreach(o => new java.io.File(s"$dir/${o.file}").delete())
+            replacements.values.flatten.foreach(KvStore.deleteShard(dir, _))
           }
         }
         val out = w.close()
         if (removed == 0L)
           // nothing matched after all (bounds were loose): keep the
           // original file — no churn, no new vacuum debt
-          out.foreach(o => new java.io.File(s"$dir/${o.file}").delete())
+          out.foreach(KvStore.deleteShard(dir, _))
         else
           // fresh survivor stats (exact, see tracker note above); hosts
           // and the bucket tag carry over (same storage locality, same
@@ -228,41 +227,21 @@ class KvTable(val catalog: KvCatalog, val dir: String,
       }
     }
     if (replacements.isEmpty) return true
-    def discardOutputs(): Unit = replacements.values.flatten
-      .foreach(o => new java.io.File(s"$dir/${o.file}").delete())
-
-    KvStore.withTableLock(dir) {
-      val current = KvStore.readMeta(dir)
-      val live = current.shards.map(_.file).toSet
-      if (!replacements.keySet.forall(live)) {
-        // a concurrent compaction superseded an input mid-rewrite: its
-        // merged shard holds rows this pass would have deleted — swap
-        // would resurrect nothing but would LOSE the delete for those
-        // rows. Abort and retry from the fresh manifest.
-        discardOutputs()
-        false
-      } else {
-        // restart the vacuum grace clock on replaced inputs BEFORE the
-        // swap commits (failure and commit cannot coexist)
-        val now = System.currentTimeMillis()
-        if (!replacements.keys.forall(f => new java.io.File(s"$dir/$f").setLastModified(now))) {
-          discardOutputs()
-          throw new IllegalStateException(
-            "cannot restart the vacuum grace clock on replaced shards; delete aborted")
-        }
-        val newShards = current.shards.flatMap(s =>
-          replacements.getOrElse(s.file, Seq(s)))
-        // replacements is non-empty here (early return above), so this
-        // commit REPLACED live rows in place — stamp the rewrite
-        // watermark exactly like the group-based DML path
-        // (KvRowLevelOps) does, or derived-state consumers (IvfKvStore)
-        // would classify the window as a pure append and silently keep
-        // serving deleted rows.
-        KvStore.writeMeta(dir,
-          KvTableMeta(newShards, current.committedEpochs, current.version),
-          rewriteCommit = true)
-        true
-      }
+    // replacements take their input's manifest position; entries added
+    // concurrently (appends, epoch commits) are kept — their rows were
+    // not visible to this delete's snapshot. The commit REPLACED live
+    // rows in place, so it stamps the rewrite watermark exactly like the
+    // group-based DML path does, or derived-state consumers (IvfKvStore)
+    // would classify the window as a pure append and keep serving
+    // deleted rows.
+    KvStore.commit(dir)(_ => KvEdit(inPlace = replacements.toMap, rewrite = true)) match {
+      // a concurrent compaction superseded an input mid-rewrite: its
+      // merged shard holds rows this pass would have deleted — the swap
+      // would LOSE the delete for those rows. Retry from the fresh
+      // manifest.
+      case KvStore.Conflict => false
+      case KvStore.StuckClock => throw KvStore.stuckClock("delete")
+      case _ => true
     }
   }
 

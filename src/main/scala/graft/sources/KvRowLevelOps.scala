@@ -1,8 +1,6 @@
 package graft.sources
 
-import java.io.File
-
-import graft.kv.{KvCatalog, KvStore, KvTableMeta}
+import graft.kv.{KvCatalog, KvEdit, KvStore, KvTableMeta}
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReaderFactory, Scan, ScanBuilder, SupportsPushDownRequiredColumns, SupportsPushDownV2Filters}
 import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.sources.Filter
@@ -154,9 +152,7 @@ class KvGroupScan(catalog: KvCatalog, dir: String, prunedSchema: StructType,
   private val declared = catalog.schema
   // pinned at creation: planning and the commit's conflict check reason
   // about one manifest snapshot even if maintenance lands mid-job
-  private val meta: KvTableMeta =
-    if (new File(KvStore.metaPath(dir)).exists()) KvStore.readMeta(dir)
-    else KvTableMeta(Nil)
+  private val meta: KvTableMeta = KvStore.readMetaOrEmpty(dir)
 
   override def readSchema(): StructType = prunedSchema
   override def toBatch: Batch = this
@@ -202,31 +198,7 @@ class KvReplaceGroupsWrite(catalog: KvCatalog, dir: String,
     require(op.scanPlanned, "row-level rewrite committed before its scan planned")
     val replaced = op.scannedFiles.toSet
     if (replaced.isEmpty && newShards.isEmpty) return // no affected groups
-    def discard(): Unit =
-      newShards.foreach(s => new File(s"$dir/${s.file}").delete())
-    KvStore.withTableLock(dir) {
-      val current: KvTableMeta =
-        if (new File(KvStore.metaPath(dir)).exists()) KvStore.readMeta(dir)
-        else KvTableMeta(Nil)
-      val live = current.shards.map(_.file).toSet
-      if (!replaced.forall(live)) {
-        // a concurrent compaction superseded a scanned input: its merged
-        // shard may mix scanned and unscanned rows — swapping would lose
-        // either the rewrite or the merge. Abort; the statement retries
-        // against the fresh manifest.
-        discard()
-        throw new IllegalStateException(
-          s"${op.command()} lost the manifest swap to concurrent maintenance; " +
-            "re-run the statement")
-      }
-      // restart the vacuum grace clock on replaced inputs BEFORE the
-      // swap commits so pre-rewrite snapshots stay replayable
-      val now = System.currentTimeMillis()
-      if (!replaced.forall(f => new File(s"$dir/$f").setLastModified(now))) {
-        discard()
-        throw new IllegalStateException(
-          "cannot restart the vacuum grace clock on replaced shards; rewrite aborted")
-      }
+    KvStore.commit(dir) { current =>
       // lineage = min over the replaced inputs: a rewrite reshuffles
       // surviving rows across its output shards, so per-output tighter
       // bounds don't exist — the min keeps incremental reads from ever
@@ -234,15 +206,21 @@ class KvReplaceGroupsWrite(catalog: KvCatalog, dir: String,
       // surface as changes; the incremental contract is append-only.)
       val inheritedFirst = current.shards.filter(s => replaced(s.file))
         .map(_.firstVersion).minOption.getOrElse(0L)
-      val keep = current.shards.filterNot(s => replaced(s.file)) ++
-        newShards.map(_.copy(firstVersion = inheritedFirst))
-      KvStore.writeMeta(dir,
-        KvTableMeta(keep, current.committedEpochs, current.version),
-        rewriteCommit = true)
+      KvEdit(newShards.map(_.copy(firstVersion = inheritedFirst)),
+        remove = replaced, rewrite = true)
+    } match {
+      // a concurrent compaction superseded a scanned input: its merged
+      // shard may mix scanned and unscanned rows — swapping would lose
+      // either the rewrite or the merge. The statement retries against
+      // the fresh manifest.
+      case KvStore.Conflict => throw new IllegalStateException(
+        s"${op.command()} lost the manifest swap to concurrent maintenance; " +
+          "re-run the statement")
+      case KvStore.StuckClock => throw KvStore.stuckClock("rewrite")
+      case _ => ()
     }
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit =
-    messages.collect { case KvCommit(s) => s }
-      .flatten.foreach(s => new File(s"$dir/${s.file}").delete())
+    messages.collect { case KvCommit(s) => s }.flatten.foreach(KvStore.deleteShard(dir, _))
 }

@@ -79,12 +79,8 @@ class KvSqlCatalog extends TableCatalog with SupportsNamespaces
     new File(nsDir(ident.namespace()), ident.name())
   private def catalogFile(dir: File): File = new File(dir, "_kvcatalog.json")
 
-  private def writeCatalogFile(dir: File, cat: KvCatalog): Unit = {
-    val tmp = new File(dir, "_kvcatalog.json.tmp")
-    Files.write(tmp.toPath, KvCatalog.render(cat).getBytes("UTF-8"))
-    Files.move(tmp.toPath, catalogFile(dir).toPath,
-      StandardCopyOption.REPLACE_EXISTING, StandardCopyOption.ATOMIC_MOVE)
-  }
+  private def writeCatalogFile(dir: File, cat: KvCatalog): Unit =
+    graft.util.Dirs.writeAtomic(catalogFile(dir), KvCatalog.render(cat).getBytes("UTF-8"))
 
   private def readCatalog(ident: Identifier): KvCatalog = {
     val f = catalogFile(tableDir(ident))

@@ -163,13 +163,9 @@ class KvBatchWrite(catalog: KvCatalog, dir: String, schema: StructType,
       chunkBytes, bloomColumns, bloomBits, catalog.buckets,
       replaceRanges.getOrElse(""))
 
-  override def commit(messages: Array[WriterCommitMessage]): Unit =
-    // lock: the read-modify-write must not interleave with a concurrent
-    // epoch commit or compaction swap on the same table dir
-    KvStore.withTableLock(dir) {
-      val prev: KvTableMeta =
-        if (new File(KvStore.metaPath(dir)).exists()) KvStore.readMeta(dir)
-        else KvTableMeta(Nil)
+  override def commit(messages: Array[WriterCommitMessage]): Unit = {
+    val newShards = messages.flatMap { case KvCommit(s) => s }.toSeq
+    KvStore.commit(dir) { prev =>
       // optimistic truncate/replace (`expectedVersion` option): a
       // rewrite job that read the table at version V must not clobber
       // commits that landed while it ran — abort and let the caller
@@ -180,33 +176,27 @@ class KvBatchWrite(catalog: KvCatalog, dir: String, schema: StructType,
           s"concurrent modification: table at version ${prev.version}, " +
             s"rewrite expected $expectedVersion — rerun against current state")
       }
-      val newShards = messages.flatMap { case KvCommit(s) => s }.toSeq
       replaceRanges match {
-        case Some(ser) => commitReplace(prev, ser, newShards)
-        case None =>
-          // lineage for incremental reads: these rows first appear in
-          // the version this commit is about to create (prev.version+1)
-          val stamped = newShards.map(_.copy(firstVersion = prev.version + 1))
-          val keep = if (truncateFirst) stamped else prev.shards ++ stamped
-          val epochs = if (truncateFirst) Nil else prev.committedEpochs
-          // truncate deletes the superseded shard files below, so
-          // archiving the pre-truncate manifest would only set up an
-          // asOfVersion scan that plans fine and dies mid-task on
-          // missing files — skip it so the pinned read fails at
-          // planning with "version unavailable"
-          KvStore.writeMeta(dir, KvTableMeta(keep, epochs, prev.version),
-            archiveSuperseded = !truncateFirst, rewriteCommit = truncateFirst)
-          if (truncateFirst) {
-            val keepFiles = stamped.map(_.file).toSet
-            prev.shards.filterNot(s => keepFiles(s.file)).foreach { s =>
-              new File(s"$dir/${s.file}").delete()
-              if (s.bloom.nonEmpty) new File(s"$dir/${s.bloom}").delete()
-            }
-          }
+        case Some(ser) => replaceEdit(prev, ser, newShards)
+        // lineage for incremental reads: these rows first appear in the
+        // version this commit is about to create (prev.version+1).
+        // Truncate deletes the superseded shard files, so archiving the
+        // pre-truncate manifest would only set up an asOfVersion scan
+        // that plans fine and dies mid-task on missing files — it is
+        // skipped so the pinned read fails at planning with "version
+        // unavailable"
+        case None => KvEdit(newShards.map(_.copy(firstVersion = prev.version + 1)),
+          remove = if (truncateFirst) prev.shards.map(_.file).toSet else Set.empty,
+          deleteRemoved = truncateFirst, rewrite = truncateFirst,
+          archive = !truncateFirst)
       }
+    } match {
+      case KvStore.StuckClock => throw KvStore.stuckClock("range replace")
+      case _ => ()
     }
+  }
 
-  /** Range-scoped overwrite commit — PREDICATE-EXACT (Delta
+  /** Range-scoped overwrite edit — PREDICATE-EXACT (Delta
     * `replaceWhere`) semantics: atomically delete every row whose key
     * falls inside the ranges and insert the written rows (which the
     * task-side check already pinned inside the ranges). Interior
@@ -221,36 +211,26 @@ class KvBatchWrite(catalog: KvCatalog, dir: String, schema: StructType,
     * firstVersion (never resurfacing as change-feed adds; carry shards
     * keep their source's exact firstVersion), and the manifest's
     * rewrite watermark is stamped. Runs under the table lock held by
-    * commit(). */
-  private def commitReplace(prev: KvTableMeta, ser: String,
-                            newShards: Seq[KvShardMeta]): Unit = {
+    * the commit. */
+  private def replaceEdit(prev: KvTableMeta, ser: String,
+                          newShards: Seq[KvShardMeta]): KvEdit = {
     val ranges = KeyRanges.parseBounded(ser)
     val replaced = prev.shards.filter(s =>
       KeyRanges.intersectsShard(ranges, s.minKey, s.maxKey))
-    val (interior, boundary) = replaced.partition(s =>
+    // interior shards (covered by a range) just drop; boundary ones carve
+    val boundary = replaced.filterNot(s =>
       KeyRanges.coversShard(ranges, s.minKey, s.maxKey))
     val carryToken = java.util.UUID.randomUUID().toString.substring(0, 8)
     val carries = new ArrayBuffer[KvShardMeta]()
-    def discard(): Unit = {
-      (newShards ++ carries).foreach { s =>
-        new File(s"$dir/${s.file}").delete()
-        if (s.bloom.nonEmpty) new File(s"$dir/${s.bloom}").delete()
-      }
-    }
     try {
       boundary.zipWithIndex.foreach { case (s, i) =>
         carveSurvivors(s, ranges, f"carry-$carryToken-$i%03d.kv")
           .foreach(carries += _)
       }
-    } catch { case e: Throwable => discard(); throw e }
-    // restart the vacuum grace clock on replaced inputs BEFORE the swap
-    // commits so pre-replace snapshots stay replayable
-    val now = System.currentTimeMillis()
-    if (!replaced.forall(s => new File(s"$dir/${s.file}").setLastModified(now))) {
-      discard()
-      throw new IllegalStateException(
-        "cannot restart the vacuum grace clock on replaced shards; " +
-          "range replace aborted")
+    } catch {
+      case e: Throwable =>
+        (newShards ++ carries).foreach(KvStore.deleteShard(dir, _))
+        throw e
     }
     // lineage = min over the replaced inputs (a replace reshuffles
     // surviving rows across its outputs, so tighter per-output bounds
@@ -258,13 +238,8 @@ class KvBatchWrite(catalog: KvCatalog, dir: String, schema: StructType,
     // of new rows into the range — genuine adds at this commit
     val inheritedFirst = replaced.map(_.firstVersion).minOption
       .getOrElse(prev.version + 1)
-    val replacedFiles = replaced.map(_.file).toSet
-    val keep = prev.shards.filterNot(s => replacedFiles(s.file)) ++
-      carries ++ newShards.map(_.copy(firstVersion = inheritedFirst))
-    val _ = interior // read for symmetry: interior shards just drop
-    KvStore.writeMeta(dir,
-      KvTableMeta(keep, prev.committedEpochs, prev.version),
-      rewriteCommit = replaced.nonEmpty)
+    KvEdit(carries.toSeq ++ newShards.map(_.copy(firstVersion = inheritedFirst)),
+      remove = replaced.map(_.file).toSet, rewrite = replaced.nonEmpty)
   }
 
   /** Stream one boundary shard, keeping every record OUTSIDE the
@@ -294,11 +269,7 @@ class KvBatchWrite(catalog: KvCatalog, dir: String, schema: StructType,
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit =
-    messages.collect { case KvCommit(s) => s }
-      .flatten.foreach { s =>
-        new File(s"$dir/${s.file}").delete()
-        if (s.bloom.nonEmpty) new File(s"$dir/${s.bloom}").delete()
-      }
+    messages.collect { case KvCommit(s) => s }.flatten.foreach(KvStore.deleteShard(dir, _))
 }
 
 /** Streaming sink (append mode): each epoch's tasks write shards exactly
@@ -312,8 +283,8 @@ class KvBatchWrite(catalog: KvCatalog, dir: String, schema: StructType,
   * can never mistake each other's epoch 0) travels INSIDE the same
   * atomic manifest write as the shard append, so no crash point can
   * separate "shards appended" from "epoch recorded". A retried commit
-  * for an already-recorded epoch deletes its duplicate shard files
-  * instead of double-appending. The whole read-modify-write runs under
+  * for an already-recorded epoch deletes its duplicate shard files and
+  * their bloom sidecars instead of double-appending. The whole read-modify-write runs under
   * the table lock. */
 class KvStreamingWrite(catalog: KvCatalog, dir: String, schema: StructType,
                        chunkBytes: Long, queryId: String,
@@ -325,40 +296,19 @@ class KvStreamingWrite(catalog: KvCatalog, dir: String, schema: StructType,
     KvStreamingDataWriterFactory(dir, schema.json, catalog.schema.json,
       catalog.rowkey, chunkBytes, bloomColumns, bloomBits, catalog.buckets)
 
-  override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit =
-    KvStore.withTableLock(dir) {
-      val epochKey = s"$queryId-$epochId"
-      val prev: KvTableMeta =
-        if (new File(KvStore.metaPath(dir)).exists()) KvStore.readMeta(dir)
-        else KvTableMeta(Nil)
-      val newShards = messages.flatMap { case KvCommit(s) => s }.toSeq
-        .map(_.copy(firstVersion = prev.version + 1))
-      if (prev.committedEpochs.contains(epochKey)) {
-        // epoch already committed (driver retry): drop the duplicates
-        newShards.foreach(s => new File(s"$dir/${s.file}").delete())
-      } else {
-        // keep a bounded tail of epoch records: a restart can only
-        // re-attempt epochs at/after its checkpointed offset, which by
-        // then is never hundreds of commits behind — while an unbounded
-        // list would grow the manifest forever on a long-lived stream
-        val epochs = (prev.committedEpochs :+ epochKey)
-          .takeRight(KvStreamingWrite.MaxEpochRecords)
-        KvStore.writeMeta(dir,
-          KvTableMeta(prev.shards ++ newShards, epochs, prev.version))
-      }
-    }
+  override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
+    val newShards = messages.flatMap { case KvCommit(s) => s }.toSeq
+    KvStore.commit(dir)(prev => KvEdit(
+      newShards.map(_.copy(firstVersion = prev.version + 1)),
+      epoch = Some(s"$queryId-$epochId"))): Unit
+  }
 
   override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit =
-    messages.collect { case KvCommit(s) => s }
-      .flatten.foreach { s =>
-        new File(s"$dir/${s.file}").delete()
-        if (s.bloom.nonEmpty) new File(s"$dir/${s.bloom}").delete()
-      }
+    messages.collect { case KvCommit(s) => s }.flatten.foreach(KvStore.deleteShard(dir, _))
 }
 
 object KvStreamingWrite {
-  /** Bounded epoch-record tail (FIFO across all writing queries). */
-  val MaxEpochRecords = 256
+  val MaxEpochRecords: Int = KvStore.MaxEpochRecords
 }
 
 case class KvStreamingDataWriterFactory(dir: String, schemaJson: String,

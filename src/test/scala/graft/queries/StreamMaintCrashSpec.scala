@@ -227,4 +227,33 @@ class StreamMaintCrashSpec extends SparkSpec {
     assert(probeRows(corpus) == probeRows(twin),
       "the rebuilt-and-replayed index must probe identically to a clean drain")
   }
+
+  // ---- the staged feed itself: a crash between its three commits ----
+
+  test("a staged feed cut short after its first commit restages to all three") {
+    // a private corpus dir (symlinked parquet) keys a private cache dir
+    val corpus = Files.createTempDirectory("inc-docs-crash-corpus")
+    Files.createSymbolicLink(corpus.resolve("documents.parquet"),
+      java.nio.file.Paths.get(s"$d/documents.parquet"))
+    val dir = KvQueries.incDocsDir(spark, corpus.toString)
+    try {
+      def feed() = spark.read.format("graft-kv")
+        .option("catalog", KvQueries.docsIncCatalogJson).option("path", dir).load()
+      val docs = Tables.documents(spark, d).count()
+      assert(graft.kv.KvStore.readMeta(dir).version == 3 && feed().count() == docs)
+      // the state a crash after commit 1 leaves: version 1 is live
+      Files.copy(java.nio.file.Paths.get(s"$dir/_kvmeta.v1.json"),
+        java.nio.file.Paths.get(graft.kv.KvStore.metaPath(dir)),
+        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+      assert(feed().count() < docs)
+      assert(KvQueries.incDocsDir(spark, corpus.toString) == dir)
+      assert(graft.kv.KvStore.readMeta(dir).version == 3,
+        "a partial feed must be restaged, not accepted as built")
+      assert(feed().count() == docs)
+      assert(feed().select("doc_id").distinct().count() == docs)
+    } finally {
+      graft.util.Dirs.rmrf(new java.io.File(dir))
+      graft.util.Dirs.rmrf(corpus.toFile)
+    }
+  }
 }

@@ -76,6 +76,29 @@ class KvStreamSpec extends SparkSpec {
     assert(!epochs.contains("queryA-0"), "oldest records age out")
   }
 
+  test("a replayed epoch on a bloom sink leaves no sidecar without its shard") {
+    import graft.kv.{KvCatalog, KvStore}
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.unsafe.types.UTF8String
+    val dir = Files.createTempDirectory("graft-kv-epoch-bloom").toString
+    val schema = KvCatalog.parse(cat).schema
+    def commitEpoch(offset: Long): Unit = {
+      val w = new KvDataWriter(dir, schema, schema, "k", 0, 0L, bloomColumns = "v")
+      (0L until 5L).foreach(i =>
+        w.write(InternalRow(offset + i, UTF8String.fromString(s"v${offset + i}"))))
+      new KvStreamingWrite(KvCatalog.parse(cat), dir, schema, 256L << 20, "q", "v")
+        .commit(0L, Array(w.commit()))
+    }
+    commitEpoch(0L)
+    commitEpoch(100L) // retry of epoch 0 → dropped
+    assert(KvStore.readMeta(dir).shards.forall(_.bloom.nonEmpty))
+    val names = new java.io.File(dir).list().toSet
+    val blooms = names.filter(_.endsWith(".kv.bloom"))
+    assert(blooms.nonEmpty)
+    assert(blooms.forall(b => names(b.stripSuffix(".bloom"))),
+      s"orphaned sidecars: ${blooms.filterNot(b => names(b.stripSuffix(".bloom")))}")
+  }
+
   test("stream tails appended shards across micro-batches") {
     import spark.implicits._
     val dir = Files.createTempDirectory("graft-kv-stream").toString
