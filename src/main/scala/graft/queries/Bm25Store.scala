@@ -57,10 +57,8 @@ object Bm25Store {
       |}""".stripMargin
 
   /** The shared tokenize pass both index tables derive from — split out
-    * so [[maintainBatch]]'s steady state can cache it ONCE per
-    * micro-batch instead of re-tokenizing per table write (the r18
-    * crash-safety fix doubled the per-batch tokenize cost; splitting
-    * the pipeline at the (doc_id, tokens) seam reclaims it). */
+    * so [[maintainBatch]] can cache it ONCE per micro-batch and feed
+    * both table writes from the (doc_id, tokens) rows. */
   private[graft] def tokensOf(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"),
       graft.functions.Text.tokens(col("text")).as("t"))
@@ -145,8 +143,9 @@ object Bm25Store {
     * `max(doc_id)` cannot express "this doc was tokenized and
     * contributed NO rows": a delta whose tail documents are token-less
     * leaves the postings max short of the dl frontier forever, and
-    * every later batch then takes the divergent-frontier crash-replay
-    * branch (tokenize twice) even though no crash occurred. The stamp
+    * every later batch would then re-admit that tail and skip the
+    * champion-sidecar merge (which needs equal frontiers on entry)
+    * even though no crash occurred. The stamp
     * is a tiny sidecar next to the manifest recording the max doc_id
     * whose tokenization OUTCOME the postings table already reflects —
     * rows committed, or known token-less. It is written atomically
@@ -176,8 +175,8 @@ object Bm25Store {
 
   /** Both effective frontiers, exposed for the steady-state-invariant
     * spec: after ANY crash-free batch — token-less tails included —
-    * these must be equal (the steady-state single-tokenize path's
-    * entry condition). */
+    * these must be equal (the champion-sidecar merge's entry
+    * condition). */
   private[graft] def frontiers(s: SparkSession, pDir: String,
                                lDir: String): (Long, Long) =
     (postingsFrontier(s, pDir), tableFrontier(s, dlCatalogJson, lDir))
@@ -471,9 +470,10 @@ object Bm25Store {
     *
     * The merge is skipped unless a sidecar exists for the PRE-append
     * fingerprint (q132/q135's stream stores never probe, so their
-    * per-batch cost is one directory stat), and skipped on the
-    * divergent-frontier crash-replay branch (the next large probe
-    * full-builds — crash recovery is not the path to optimize).
+    * per-batch cost is one directory stat), and skipped unless both
+    * frontiers agreed on entry: a batch replayed after a crash between
+    * the two table commits leaves the next large probe to full-build
+    * (crash recovery is not the path to optimize).
     * Chain-of-custody is CONTENT-keyed: fpOld is captured before the
     * batch's first write, fpNew after its last compaction, so any
     * mutation outside this batch breaks the chain instead of silently
@@ -1003,118 +1003,95 @@ object Bm25Store {
     * restart-idempotency spec.
     *
     * The two appends are separate KV commits and a crash can land
-    * BETWEEN them, so each table reconciles against ITS OWN frontier
-    * (r18): a single shared frontier read from dl would re-append
-    * postings after a crash that committed postings but not dl
-    * (doubling tf/df for the batch), and the reverse order would
-    * permanently drop the uncommitted table's rows. Per-table filters
-    * make replay after ANY crash point exactly-once for both tables —
-    * the fully-committed table's filter drops the whole batch, the
-    * crashed-out table's filter admits exactly its missing rows.
-    *
-    * The happy path (equal frontiers — every run that didn't JUST
-    * crash) pays for the guarantee only in pushed frontier aggregates:
-    * the delta is tokenized ONCE, cached, and both table writes read
-    * the cache (r18 shipped the reconciliation with a duplicated
-    * tokenize job per batch — +37% on q132's drain; r19 reclaims it).
-    * Per-table reconciliation — tokenize per table — runs only when
-    * the frontiers actually diverge, i.e. after a real crash.
+    * BETWEEN them, so each table admits the batch past ITS OWN
+    * frontier: the delta is everything past the LOWER frontier,
+    * tokenized once and cached, and each table's write takes the
+    * cached rows past its own frontier. A fully-committed table's
+    * filter drops the whole replayed batch, a crashed-out table's
+    * filter admits exactly its missing rows; with equal frontiers —
+    * every batch that does not follow a crash — both filters are the
+    * identity, so crash replay runs the steady-state code. One
+    * aggregate over the cached rows decides which tables get rows.
     *
     * A delta whose documents are all TOKEN-LESS produces dl rows but
     * zero postings rows; appending the empty postings frame would
     * churn table versions forever (the postings frontier can never
-    * catch up to dl's), so both branches skip a table's write when the
-    * delta contributes no rows to it. The skipped write still ADVANCES
-    * the postings frontier through the coverage stamp (r20): without
-    * it, one token-less tail document left `fP < fDl` forever and
-    * permanently evicted every later batch from this steady-state
-    * single-tokenize path into the double-tokenize reconciliation
-    * below. Stamp ordering is the crash discipline: rows commit first,
-    * stamp second, dl last — so a crash at any point leaves the stamp
-    * at or behind the durable postings coverage and replay re-admits
-    * exactly the missing rows. */
+    * catch up to dl's), so a table's write is skipped when the delta
+    * contributes no rows to it. The skipped write still ADVANCES the
+    * postings frontier through the coverage stamp, so the two
+    * frontiers stay equal after every crash-free batch. Stamp ordering
+    * is the crash discipline: rows commit first, stamp second, dl
+    * last — so a crash at any point leaves the stamp at or behind the
+    * durable postings coverage and replay re-admits exactly the
+    * missing rows. Returns the number of documents past the dl
+    * frontier. */
   private[graft] def maintainBatch(s: SparkSession, batch: DataFrame,
                                    pDir: String, lDir: String): Long = {
     val fPtab = tableFrontier(s, postingsCatalogJson, pDir)
     val fP = math.max(fPtab, readStamp(pDir))
     val fDl = tableFrontier(s, dlCatalogJson, lDir)
-    if (fP == fDl) {
-      // steady state: same delta for both tables — one tokenize pass.
-      // The pre-append champion sidecar (if any) is looked up BEFORE the
-      // first write: its fingerprint is the merge's chain-of-custody.
-      val champs0 = currentChampions(pDir, lDir)
-      val deltaRaw = batch.filter(col("doc_id") > fDl)
-      // Spread tokenize+explode across cores before the delta-sized
-      // write exchanges (r22, guide §2 — the LSH twin's md5 fix): the
-      // staged feed delivers a micro-batch in 1–2 scan partitions, so
-      // the tokenize pass otherwise runs near-serial. Sized from the
-      // delta's plan-time byte estimate (~512 KiB of raw text per
-      // task), capped at the session's parallelism — an unknown
-      // estimate just caps out, costing empty tasks, never rows.
-      val estBytes = deltaRaw.queryExecution.optimizedPlan.stats
-        .sizeInBytes
-      val par = BigInt(s.sparkContext.defaultParallelism)
-        .min(estBytes / (512L << 10)).max(BigInt(1)).toInt
-      val toks = tokensOf(deltaRaw.repartition(par)).persist()
-      try {
-        val st = toks.agg(count(lit(1)).as("docs"),
-          coalesce(sum(size(col("t"))), lit(0L)).as("toks"),
-          coalesce(max(col("doc_id")), lit(-1L)).as("mx"),
-          count(when(size(col("t")) > 0, 1)).as("npos"),
-          coalesce(max(when(size(col("t")) > 0, col("doc_id"))), lit(-1L))
-            .as("mx_tok")).head()
-        val nDelta = st.getLong(0)
+    val lo = math.min(fP, fDl)
+    // The pre-append champion sidecar (if any) is looked up BEFORE the
+    // first write: its fingerprint is the merge's chain-of-custody. It
+    // is carried forward only when both frontiers agreed on entry.
+    val champs0 = if (fP == fDl) currentChampions(pDir, lDir) else None
+    val deltaRaw = batch.filter(col("doc_id") > lo)
+    // Spread tokenize+explode across cores before the delta-sized
+    // write exchanges (r22, guide §2 — the LSH twin's md5 fix): the
+    // staged feed delivers a micro-batch in 1–2 scan partitions, so
+    // the tokenize pass otherwise runs near-serial. Sized from the
+    // delta's plan-time byte estimate (~512 KiB of raw text per
+    // task), capped at the session's parallelism — an unknown
+    // estimate just caps out, costing empty tasks, never rows.
+    val estBytes = deltaRaw.queryExecution.optimizedPlan.stats
+      .sizeInBytes
+    val par = BigInt(s.sparkContext.defaultParallelism)
+      .min(estBytes / (512L << 10)).max(BigInt(1)).toInt
+    val toks = tokensOf(deltaRaw.repartition(par)).persist()
+    def past(f: Long): DataFrame =
+      if (f > lo) toks.filter(col("doc_id") > f) else toks
+    val (inP, inDl) = (col("doc_id") > fP, col("doc_id") > fDl)
+    val tokened = size(col("t")) > 0
+    try {
+      val st = toks.agg(count(when(inDl, 1)).as("docs"),
+        coalesce(sum(when(inP, size(col("t")))), lit(0L)).as("toks"),
+        coalesce(max(col("doc_id")), lit(-1L)).as("mx"),
+        count(when(inDl && tokened, 1)).as("npos"),
+        coalesce(max(when(inP && tokened, col("doc_id"))), lit(-1L))
+          .as("mx_tok")).head()
+      val nDelta = st.getLong(0)
+      if (st.getLong(2) >= 0) {
+        if (st.getLong(1) > 0) {
+          // ~24 B per (token#id key, token, doc_id, tf) posting row
+          writePostings(s, postingsOf(past(fP)), pDir, "append",
+            deltaShards(s, st.getLong(1) * 24))
+        }
+        // coverage reaches the delta max either way: rows just
+        // committed above, or the uncovered tail is token-less
+        writeStamp(pDir, st.getLong(2))
         if (nDelta > 0) {
-          if (st.getLong(1) > 0) {
-            // ~24 B per (token#id key, token, doc_id, tf) posting row
-            writePostings(s, postingsOf(toks), pDir, "append",
-              deltaShards(s, st.getLong(1) * 24))
-          }
-          // coverage reaches the delta max either way: rows just
-          // committed above, or the uncovered tail is token-less
-          writeStamp(pDir, st.getLong(2))
           // ~16 B per (doc_id, dl) row
-          writeDl(s, dlOf(toks), lDir, "append", deltaShards(s, nDelta * 16))
-          // independent tables — overlap the two self-compactions
-          // (row-preserving, so running them after BOTH commits leaves
-          // the rows-first/stamp-second/dl-last crash discipline intact)
-          StreamMaint.maybeCompactBoth(s, pDir, lDir)
-          // carry the champion sidecar forward (delta+sidecar-sized);
-          // runs after every table mutation of this batch so fpNew is
-          // the post-batch content
-          champs0.foreach { case (dir0, meta0) =>
-            mergeChampions(s, pDir, lDir, dir0, meta0, toks,
-              nDelta, st.getLong(1), st.getLong(3))
-          }
-          // seed the frontier memos for the post-batch content: dl's
-          // table max IS the delta max (a row per doc); the postings
-          // table max advances only to the delta's last TOKENED doc
-          FrontierCache.update(lDir, math.max(fDl, st.getLong(2)))
-          FrontierCache.update(pDir, math.max(fPtab, st.getLong(4)))
+          writeDl(s, dlOf(past(fDl)), lDir, "append", deltaShards(s, nDelta * 16))
         }
-        nDelta
-      } finally { toks.unpersist(); () }
-    } else {
-      // divergent frontiers: a crash landed between the two commits —
-      // reconcile each table against its own delta
-      val pDelta = batch.filter(col("doc_id") > fP)
-      val pRows = postingsOf(tokensOf(pDelta)).persist()
-      try {
-        if (pRows.limit(1).count() > 0) {
-          writePostings(s, pRows, pDir, "append", 2)
-          StreamMaint.maybeCompact(s, pDir)
+        // independent tables — overlap the two self-compactions
+        // (row-preserving, so running them after BOTH commits leaves
+        // the rows-first/stamp-second/dl-last crash discipline intact)
+        StreamMaint.maybeCompactBoth(s, pDir, lDir)
+        // carry the champion sidecar forward (delta+sidecar-sized);
+        // runs after every table mutation of this batch so fpNew is
+        // the post-batch content
+        champs0.foreach { case (dir0, meta0) =>
+          mergeChampions(s, pDir, lDir, dir0, meta0, toks,
+            nDelta, st.getLong(1), st.getLong(3))
         }
-        val mx = pDelta.agg(coalesce(max(col("doc_id")), lit(-1L))).head().getLong(0)
-        if (mx >= 0) writeStamp(pDir, mx)
-      } finally { pRows.unpersist(); () }
-      val nPastDl = batch.filter(col("doc_id") > fDl).count()
-      if (nPastDl > 0) {
-        writeDl(s, dlOf(tokensOf(batch.filter(col("doc_id") > fDl))),
-          lDir, "append")
-        StreamMaint.maybeCompact(s, lDir)
+        // seed the frontier memos for the post-batch content: dl's
+        // table max IS the delta max (a row per doc); the postings
+        // table max advances only to the delta's last TOKENED doc
+        FrontierCache.update(lDir, math.max(fDl, st.getLong(2)))
+        FrontierCache.update(pDir, math.max(fPtab, st.getLong(4)))
       }
-      nPastDl
-    }
+      nDelta
+    } finally { toks.unpersist(); () }
   }
 
   /** Streaming index maintenance — the index is kept fresh BY the

@@ -6,8 +6,8 @@ import org.apache.spark.sql.SparkSession
   * maintenance loops re-derive every micro-batch (r22, guide §1/§5 —
   * remove driver-side jobs from the per-batch floor).
   *
-  * Every `maintainBatch` (BM25 postings/dl, LSH bands/shingles, q126
-  * keeper store) opens with "what is this table's indexed frontier?" —
+  * Every two-table `maintainBatch` (BM25 postings/dl, LSH
+  * bands/shingles) opens with "what is this table's indexed frontier?" —
   * a pushed `max(doc_id)` aggregate. The aggregate is manifest-cheap
   * but still a full Spark job (plan + schedule + one task wave), and a
   * drain pays TWO of them per micro-batch before doing any work; at
@@ -26,12 +26,12 @@ import org.apache.spark.sql.SparkSession
   * the memoized value is a table statistic revalidated against the
   * table's own durable manifest, never reused across content states.
   *
-  * Compaction is row-preserving, so callers that just compacted may
-  * re-seed the entry via [[update]] with the unchanged frontier instead
-  * of paying a recompute on the next batch. `update` is only sound for
-  * row-preserving or frontier-advancing writers — both call sites
-  * (post-append with the delta max, post-compaction with the prior
-  * frontier) qualify.
+  * After its appends (and the row-preserving self-compactions that
+  * follow them) each `maintainBatch` re-seeds both tables' entries via
+  * [[update]] with the frontier the batch just established, instead of
+  * paying a recompute on the next batch. `update` is only sound for
+  * frontier-advancing or row-preserving writers; its four call sites,
+  * the post-append updates in `Bm25Store`/`LshStore`, qualify.
   */
 private[queries] object FrontierCache {
   private val cache =
@@ -62,8 +62,7 @@ private[queries] object FrontierCache {
     }
 
   /** Seed the entry for `dir`'s CURRENT content with a frontier the
-    * caller just established (the append's own delta max, or the
-    * pre-compaction frontier after a row-preserving compaction). */
+    * caller just established (the append's own delta max). */
   def update(dir: String, frontierValue: Long): Unit =
     fp(dir).foreach(f => cache.put(dir, (f, frontierValue)): Unit)
 

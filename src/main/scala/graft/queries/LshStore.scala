@@ -21,14 +21,14 @@ import org.apache.spark.sql.functions._
   *    pair's exact-Jaccard verification fetches each doc's shingle
   *    set by doc-id prefix.
   *
-  * Maintenance is frontier-incremental like q116/q128: only documents
-  * past the bands table's pushed `max(doc_id)` are sketched and
-  * appended. MinHash signatures are per-document — a new doc never
-  * changes an indexed doc's rows — so an appended index is EXACTLY a
-  * full rebuild, and both q130 (build → pair scan) and q131 (build
-  * 90% → append 10% → pair scan) hash-check against q46's
-  * full-pipeline oracle (the md5 hash family exists precisely so this
-  * sketch is SQL-replayable).
+  * Maintenance is frontier-incremental like q116/q128: each table
+  * appends only the documents past its own pushed `max(doc_id)`, and
+  * the batch is sketched once for both. MinHash signatures are
+  * per-document — a new doc never changes an indexed doc's rows — so
+  * an appended index is EXACTLY a full rebuild, and both q130
+  * (build → pair scan) and q131 (build 90% → append 10% → pair scan)
+  * hash-check against q46's full-pipeline oracle (the md5 hash family
+  * exists precisely so this sketch is SQL-replayable).
   */
 object LshStore {
 
@@ -59,9 +59,8 @@ object LshStore {
     lpad(id.cast("string"), 12, "0")
 
   /** The bands half of the index write, from an already-computed
-    * (doc_id, sh) shingle relation — [[maintainBatch]]'s steady state
-    * shingles the delta ONCE and feeds both table writes from the
-    * cached rows. */
+    * (doc_id, sh) shingle relation — [[maintainBatch]] shingles the
+    * delta ONCE and feeds both table writes from the cached rows. */
   private[graft] def writeBandsFrom(s: SparkSession, sh: DataFrame,
                                     bDir: String, mode: String,
                                     shards: Int = 4): Unit =
@@ -115,10 +114,11 @@ object LshStore {
     (bDir, lDir)
   }
 
-  /** Frontier maintenance: sketch and append ONLY documents past the
-    * bands table's pushed `max(doc_id)`. Signatures are per-document,
-    * so appended rows compose with the indexed ones exactly. Returns
-    * the number of newly indexed documents. */
+  /** Frontier maintenance: sketch and append ONLY documents past each
+    * table's pushed `max(doc_id)` ([[maintainBatch]] with the whole
+    * corpus as the batch). Signatures are per-document, so appended
+    * rows compose with the indexed ones exactly. Returns the number of
+    * newly indexed documents. */
   private[graft] def ensureIndexed(s: SparkSession, d: String,
                                      bDir: String, lDir: String): Long =
     maintainBatch(s, Tables.documents(s, d), bDir, lDir)
@@ -129,97 +129,79 @@ object LshStore {
     * doc writes band rows iff it has ≥ 3 tokens, and exactly those
     * docs write shingle rows too, so the two tables hold the same
     * doc_id set — but their appends are SEPARATE KV commits, so each
-    * reconciles against ITS OWN frontier (r18): with a single shared
+    * table admits the batch past ITS OWN frontier: with a single shared
     * bands frontier, a crash that committed bands but not shingles
     * would make the replayed batch a no-op and permanently drop the
     * batch's shingle rows (every later Jaccard verification involving
     * those docs reads an incomplete shingle set — silent, not failing).
-    * Per-table filters make replay after any crash point exactly-once
-    * for both tables.
     *
-    * The happy path (equal frontiers) shingles the delta ONCE, caches
-    * it, and feeds both table writes from the cache (r18 shipped the
-    * reconciliation with a duplicated shingle job per batch; r19
-    * reclaims it). A delta whose documents are all SHORT (< 3 tokens)
-    * sketches to zero rows in BOTH tables; appending the empty frames
-    * would churn table versions on every replay (the frontiers can
-    * never advance past such a tail), so writes are skipped when the
-    * delta contributes no rows. Per-table reconciliation — shingling
-    * per table — runs only when the frontiers actually diverge, i.e.
-    * after a real crash. */
+    * The delta is everything past the LOWER frontier, shingled ONCE and
+    * cached; each table's write takes the cached rows past its own
+    * frontier. With equal frontiers — every batch that does not follow
+    * a crash — both filters are the identity, so crash replay runs the
+    * steady-state code. A delta whose documents are all SHORT
+    * (< 3 tokens) sketches to zero rows in BOTH tables; appending the
+    * empty frames would churn table versions on every replay (the
+    * frontiers can never advance past such a tail), so one aggregate
+    * over the cached rows decides which tables get rows and a table
+    * with none is skipped. Returns the number of documents past the
+    * lower frontier. */
   private[graft] def maintainBatch(s: SparkSession, batch: DataFrame,
                                    bDir: String, lDir: String): Long = {
     val fB = tableFrontier(s, bandsCatalogJson, bDir)
     val fS = tableFrontier(s, shinglesCatalogJson, lDir)
-    if (fB == fS) {
-      // steady state: same delta for both tables — one shingle pass.
-      // Delta appends are shard-sized from the delta itself (r21, guide
-      // §6): the fixed 4-way range repartition made every micro-batch
-      // pay a sampling pass + 4 write tasks and leave 4 sliver shards
-      // per table per batch; bytes-derived with a floor of 1, a typical
-      // micro-batch lands ONE range-tight shard (repartitionByRange(1,…)
-      // skips the sampling job) while a bulk backfill still fans out.
-      // ~4 KiB/doc covers band rows (32 fixed-width) and shingle rows.
-      val delta = batch.filter(col("doc_id") > fB)
-      val st = delta.agg(count(lit(1)).as("n"),
-        coalesce(max(col("doc_id")), lit(-1L)).as("mx")).head()
-      val nDocs = st.getLong(0)
-      if (nDocs > 0) {
-        val shards = IvfStore.indexShards(s, nDocs * 4096, 1)
-        // Spread the 32-md5 MinHash sketch across cores BEFORE the
-        // banded rows funnel into the delta-sized range exchange (r22,
-        // guide §2): the staged feed delivers a micro-batch in 1–2 scan
-        // partitions, so the sketch — the batch's dominant compute
-        // (JobProfile: one ~1.3 s near-serial job per batch at sf0.1) —
-        // otherwise runs on 1–2 cores while the rest idle. ~64 docs per
-        // task; the round-robin exchange moves only the delta's raw
-        // rows, bought against a cores-wide md5 stage. Scale-adaptive:
-        // a bulk backfill caps at the session's parallelism.
-        val par = math.max(1, math.min(s.sparkContext.defaultParallelism,
-          (nDocs / 64).toInt))
-        val sh = Dedup.shingleRowsOf(delta.repartition(par)).persist()
-        try {
-          if (sh.limit(1).count() > 0) {
-            writeBandsFrom(s, sh, bDir, "append", shards)
-            writeShinglesFrom(s, sh, lDir, "append", shards)
-            // independent tables — overlap the two self-compactions
-            StreamMaint.maybeCompactBoth(s, bDir, lDir)
-          }
-        } finally { sh.unpersist(); () }
-        // Seed the frontier memo with the EFFECTIVE frontier (the
-        // delta's max doc_id): docs shorter than 3 tokens never write
-        // rows to either table, so the table max can sit below this —
-        // but re-admitting such docs is a no-op by construction (they
-        // sketch to zero rows), and a fresh JVM recomputes the durable
-        // table max anyway. Within a drain this replaces the two
-        // per-batch frontier jobs with manifest reads.
-        FrontierCache.update(bDir, math.max(fB, st.getLong(1)))
-        FrontierCache.update(lDir, math.max(fB, st.getLong(1)))
-      }
-      nDocs
-    } else {
-      // divergent frontiers: a crash landed between the two commits —
-      // reconcile each table against its own delta
-      val nPastB = batch.filter(col("doc_id") > fB).count()
-      val nPastS = batch.filter(col("doc_id") > fS).count()
-      if (nPastB > 0) {
-        val shB = Dedup.shingleRowsOf(batch.filter(col("doc_id") > fB)).persist()
-        try if (shB.limit(1).count() > 0) {
-          writeBandsFrom(s, shB, bDir, "append",
-            IvfStore.indexShards(s, nPastB * 4096, 1))
-          StreamMaint.maybeCompact(s, bDir)
-        } finally { shB.unpersist(); () }
-      }
-      if (nPastS > 0) {
-        val shS = Dedup.shingleRowsOf(batch.filter(col("doc_id") > fS)).persist()
-        try if (shS.limit(1).count() > 0) {
-          writeShinglesFrom(s, shS, lDir, "append",
-            IvfStore.indexShards(s, nPastS * 4096, 1))
-          StreamMaint.maybeCompact(s, lDir)
-        } finally { shS.unpersist(); () }
-      }
-      math.max(nPastB, nPastS)
+    val lo = math.min(fB, fS)
+    val (inB, inS) = (col("doc_id") > fB, col("doc_id") > fS)
+    // Delta appends are shard-sized from the delta itself (r21, guide
+    // §6): the fixed 4-way range repartition made every micro-batch pay
+    // a sampling pass + 4 write tasks and leave 4 sliver shards per
+    // table per batch; bytes-derived with a floor of 1, a typical
+    // micro-batch lands ONE range-tight shard (repartitionByRange(1,…)
+    // skips the sampling job) while a bulk backfill still fans out.
+    // ~4 KiB/doc covers band rows (32 fixed-width) and shingle rows.
+    val delta = batch.filter(col("doc_id") > lo)
+    val st = delta.agg(count(lit(1)).as("n"),
+      coalesce(max(col("doc_id")), lit(-1L)).as("mx"),
+      count(when(inB, 1)).as("nb"), count(when(inS, 1)).as("ns")).head()
+    val nDocs = st.getLong(0)
+    if (nDocs > 0) {
+      // Spread the 32-md5 MinHash sketch across cores BEFORE the
+      // banded rows funnel into the delta-sized range exchange (r22,
+      // guide §2): the staged feed delivers a micro-batch in 1–2 scan
+      // partitions, so the sketch — the batch's dominant compute
+      // (JobProfile: one ~1.3 s near-serial job per batch at sf0.1) —
+      // otherwise runs on 1–2 cores while the rest idle. ~64 docs per
+      // task; the round-robin exchange moves only the delta's raw
+      // rows, bought against a cores-wide md5 stage. Scale-adaptive:
+      // a bulk backfill caps at the session's parallelism.
+      val par = math.max(1, math.min(s.sparkContext.defaultParallelism,
+        (nDocs / 64).toInt))
+      val sh = Dedup.shingleRowsOf(delta.repartition(par)).persist()
+      def past(f: Long): DataFrame =
+        if (f > lo) sh.filter(col("doc_id") > f) else sh
+      try {
+        val rows = sh.agg(count(when(inB, 1)), count(when(inS, 1))).head()
+        if (rows.getLong(0) > 0)
+          writeBandsFrom(s, past(fB), bDir, "append",
+            IvfStore.indexShards(s, st.getLong(2) * 4096, 1))
+        if (rows.getLong(1) > 0)
+          writeShinglesFrom(s, past(fS), lDir, "append",
+            IvfStore.indexShards(s, st.getLong(3) * 4096, 1))
+        // independent tables — overlap the two self-compactions
+        if (rows.getLong(0) > 0 || rows.getLong(1) > 0)
+          StreamMaint.maybeCompactBoth(s, bDir, lDir)
+      } finally { sh.unpersist(); () }
+      // Seed the frontier memo with the EFFECTIVE frontier (the
+      // delta's max doc_id): docs shorter than 3 tokens never write
+      // rows to either table, so the table max can sit below this —
+      // but re-admitting such docs is a no-op by construction (they
+      // sketch to zero rows), and a fresh JVM recomputes the durable
+      // table max anyway. Within a drain this replaces the two
+      // per-batch frontier jobs with manifest reads.
+      FrontierCache.update(bDir, math.max(fB, st.getLong(1)))
+      FrontierCache.update(lDir, math.max(fS, st.getLong(1)))
     }
+    nDocs
   }
 
   private[queries] def bandsRead(s: SparkSession, bDir: String): DataFrame =
@@ -330,13 +312,11 @@ object LshStore {
     * streaming trilogy (q132 inverted index, q133 IVF, this). The
     * staged document feed (q126's 3 ascending-doc_id commits) drains
     * as micro-batches (`maxVersionsPerTrigger = 1`) and every batch
-    * sketches + appends ONLY documents past the bands table's pushed
+    * sketches + appends ONLY documents past each table's pushed
     * `max(doc_id)` frontier. MinHash signatures are per-document, so
     * the drained index is EXACTLY a full build — q46's full-pipeline
     * oracle pins the pair relation hash-exactly — and a replayed batch
-    * is absorbed by the frontier (band rows exist iff ≥ 3 tokens, and
-    * exactly those docs carry shingle rows, so the bands frontier
-    * covers both tables).
+    * is absorbed by the two frontiers.
     *
     * Staging vs measurement (r19, same shape as q132): the feed's v1
     * slice is sketched ONCE into a cached pristine seed; each
@@ -352,7 +332,7 @@ object LshStore {
       pairs(s, bDir, lDir)
     },
     Dedup.q46MinhashMd5.oracle,
-    doc = "streaming LSH sketch maintenance: each micro-batch sketches past the bands frontier; drained ≡ full build")
+    doc = "streaming LSH sketch maintenance: each micro-batch sketches past the index frontiers; drained ≡ full build")
 
   /** q136: q134's maintenance stream under an EVERY-BATCH compaction
     * cycle — the LSH arm of the self-compaction proof (see

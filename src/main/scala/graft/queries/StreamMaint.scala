@@ -100,7 +100,7 @@ private[graft] object StreamMaint {
   private[graft] def maybeCompact(s: SparkSession, dir: String,
                                   onSwap: () => Unit = () => ()): Unit = {
     val threshold = s.conf.get("graft.ivfCompactShards", "64").toInt
-    val m = KvStore.readMeta(dir)
+    val m = KvStore.readMetaOrEmpty(dir)
     if (m.shards.length <= threshold) return
     val totalBytes = m.shards.map(sh => new File(s"$dir/${sh.file}").length()).sum
     val desired = IvfStore.indexShards(s, totalBytes, 1)

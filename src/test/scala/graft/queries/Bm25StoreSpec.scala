@@ -48,6 +48,21 @@ class Bm25StoreSpec extends SparkSpec {
       "the appended index must be indistinguishable from a full build")
   }
 
+  test("a fresh store whose first batch is token-less skips postings, then catches up") {
+    import org.apache.spark.sql.functions.lit
+    val pDir = Files.createTempDirectory("bm25-spec-fresh-p").toString
+    val lDir = Files.createTempDirectory("bm25-spec-fresh-l").toString
+    val docs = Tables.documents(spark, d).select("doc_id", "text")
+    val n = docs.count()
+    // no postings rows: the postings table stays uncommitted while dl
+    // commits, and the batch's self-compaction must take that in stride
+    assert(Bm25Store.maintainBatch(spark,
+      docs.filter(col("doc_id") < 5).withColumn("text", lit("")), pDir, lDir) == 5L)
+    assert(!StreamMaint.committed(pDir) && Bm25Store.frontiers(spark, pDir, lDir) == ((4L, 4L)))
+    assert(Bm25Store.maintainBatch(spark, docs.filter(col("doc_id") >= 5), pDir, lDir) == n - 5)
+    assert(Bm25Store.frontiers(spark, pDir, lDir) == ((n - 1, n - 1)))
+  }
+
   test("streaming maintenance (q132): drained index ≡ full rebuild, replay is a no-op") {
     assert(rows(Bm25Store.q132Bm25Stream.fn(spark, d)) ==
       rows(TextOps.q121Bm25.fn(spark, d)),

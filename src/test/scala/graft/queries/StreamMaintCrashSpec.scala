@@ -82,6 +82,42 @@ class StreamMaintCrashSpec extends SparkSpec {
       "recovered index must probe identically to a full build")
   }
 
+  test("BM25: a crash with a champion sidecar present replays without merging onto the pre-crash base") {
+    import org.apache.spark.sql.functions.slice
+    import spark.implicits._
+    val docs = Tables.documents(spark, d)
+    val n = docs.count()
+    val cut = (n * 9) / 10
+    val (pDir, lDir) = bm25Seed(cut)
+    assert(Bm25Store.readChampMeta(Bm25Store.ensureChampions(spark, pDir, lDir))
+      .exists(_.built == "full"))
+    val tail = docs.filter(col("doc_id") >= cut).select("doc_id", "text")
+    Bm25Store.writePostings(spark, Bm25Store.indexRows(tail)._1, pDir, "append", 2)
+    assert(Bm25Store.maintainBatch(spark, tail, pDir, lDir) == n - cut)
+    val merged = Option(new java.io.File(s"$pDir/_champ").listFiles()).toSeq.flatten
+      .filter(f => Bm25Store.readChampMeta(f.toString).exists(_.built == "merged"))
+    assert(merged.isEmpty,
+      s"a replay after a crash must not merge onto the pre-crash sidecar: $merged")
+    // the sidecar for the post-replay content is a full build
+    assert(Bm25Store.readChampMeta(Bm25Store.ensureChampions(spark, pDir, lDir))
+      .exists(_.built == "full"))
+    // force the MaxScore regime so the probe actually reads the sidecar
+    def maxScore[T](body: => T): T = StreamMaint.withConfs(spark,
+      "graft.bm25ProbeExhaustiveMaxTokens" -> "0",
+      "graft.bm25DenseVocabMax" -> "0")(body)
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toString).toSeq
+    val queries = docs.filter(col("doc_id") < 50)
+      .select(col("doc_id").as("q_id"),
+        slice(graft.functions.Text.tokens(col("text")), 1, 3).as("terms"))
+    assert(maxScore(rows(Bm25Store.probeAll(spark, pDir, lDir, queries))) ==
+      rows(Bm25Store.probeAllExhaustive(spark, pDir, lDir, queries)),
+      "the recovered index must probe rank-safely through its sidecar")
+    val q121 = bm25Rows(TextOps.q121Bm25.fn(spark, d))
+    assert(maxScore(bm25Rows(Bm25Store.probeAll(spark, pDir, lDir,
+        Seq((7L, Terms)).toDF("q_id", "terms")))) == q121,
+      "the recovered index must probe identically to a full build")
+  }
+
   // ---- LSH: crash between the bands commit and the shingles commit ----
 
   private def lshSeed(cut: Long): (String, String) = {

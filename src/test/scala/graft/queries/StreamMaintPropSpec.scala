@@ -30,27 +30,46 @@ class StreamMaintPropSpec extends SparkSpec {
     df.select("rk", "doc_id", "bm25_r").collect()
       .map(r => (r.getInt(0), r.getLong(1), r.getDouble(2))).toSeq
 
+  /** The crash arm of the BM25 schedule: at a random step (or none),
+    * ONE table's append commits through the exposed writers before
+    * maintainBatch runs — postings first or dl first — which is the
+    * state a crash between the two table commits leaves. maintainBatch
+    * is then the replay, and must land the index on the same probe as
+    * a crash-free schedule. */
   test("BM25 maintainBatch over random schedules ≡ direct pipeline at every step") {
     import org.apache.spark.sql.functions.round
     val docs = Tables.documents(spark, d)
     val n = docs.count()
     val seedN = n / 2
-    val cutsGen: Gen[List[Long]] = for {
+    val schedGen: Gen[(List[Long], Option[(Int, Boolean)])] = for {
       k <- Gen.chooseNum(0, 3)
       cuts <- Gen.listOfN(k, Gen.chooseNum(seedN + 1, n - 1))
-    } yield cuts.distinct.sorted
-    val prop = Prop.forAll(cutsGen) { cuts =>
+      // (step, postings committed first?)
+      crash <- Gen.option(Gen.zip(Gen.chooseNum(0, k), Gen.oneOf(true, false)))
+    } yield (cuts.distinct.sorted, crash)
+    val prop = Prop.forAll(schedGen) { case (cuts, crash) =>
       val bounds = (seedN +: cuts :+ n).distinct.sorted
+      val crashAt = crash.map { case (i, pFirst) => (i % (bounds.length - 1), pFirst) }
       val pDir = Files.createTempDirectory("bm25-sched-p").toString
       val lDir = Files.createTempDirectory("bm25-sched-l").toString
       val (p0, dl0) = Bm25Store.indexRows(docs.filter(col("doc_id") < seedN))
       Bm25Store.writePostings(spark, p0, pDir, "overwrite", 2)
       Bm25Store.writeDl(spark, dl0, lDir, "overwrite")
-      bounds.zip(bounds.tail).forall { case (lo, hi) =>
+      def versions = (graft.kv.KvStore.readMeta(pDir).version,
+        graft.kv.KvStore.readMeta(lDir).version)
+      bounds.zip(bounds.tail).zipWithIndex.forall { case ((lo, hi), step) =>
         val batch = docs.filter(col("doc_id") >= lo && col("doc_id") < hi)
           .select("doc_id", "text")
+        val crashed = crashAt.collect { case (`step`, pFirst) =>
+          val (pRows, dlRows) = Bm25Store.indexRows(batch)
+          if (pFirst) Bm25Store.writePostings(spark, pRows, pDir, "append", 2)
+          else Bm25Store.writeDl(spark, dlRows, lDir, "append")
+          pFirst
+        }
         val indexed = Bm25Store.maintainBatch(spark, batch, pDir, lDir)
+        val v0 = versions
         val replay = Bm25Store.maintainBatch(spark, batch, pDir, lDir)
+        val v1 = versions
         val prefixDir = Files.createTempDirectory("bm25-sched-corpus").toString
         docs.filter(col("doc_id") < hi)
           .write.mode("overwrite").parquet(s"$prefixDir/documents.parquet")
@@ -59,9 +78,13 @@ class StreamMaintPropSpec extends SparkSpec {
             .select(col("rk"), col("doc_id"), round(col("score"), 6).as("bm25_r"))
             .orderBy(col("rk")))
         val got = bm25Rows(Bm25Store.probe(spark, pDir, lDir, Terms))
-        val ok = indexed == hi - lo && replay == 0L && got == direct
+        // the return counts docs past the dl frontier: a dl-first crash
+        // already covers the batch there
+        val expected = if (crashed.contains(false)) 0L else hi - lo
+        val ok = indexed == expected && replay == 0L && v1 == v0 && got == direct
         if (!ok) System.err.println(
-          s"BM25 MISMATCH cuts=$cuts step=[$lo,$hi) indexed=$indexed replay=$replay")
+          s"BM25 MISMATCH cuts=$cuts crash=$crashAt step=[$lo,$hi) " +
+            s"indexed=$indexed replay=$replay versions=$v0->$v1")
         ok
       }
     }
@@ -141,6 +164,62 @@ class StreamMaintPropSpec extends SparkSpec {
     val res = PropTest.check(
       PropTest.Parameters.default.withMinSuccessfulTests(5), prop)
     assert(res.passed, s"property falsified: ${res.status}")
+  }
+
+  /** Spark jobs submitted by `body` on this thread, counted by job
+    * group with the listener bus drained on both sides of the body. */
+  private def jobsOf(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val group = s"job-budget-${java.util.UUID.randomUUID()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties)
+            .exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet(): Unit
+    }
+    org.apache.spark.ListenerBusAccess.drain(sc)
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "maintainBatch job budget")
+    try body
+    finally {
+      sc.clearJobGroup()
+      org.apache.spark.ListenerBusAccess.drain(sc)
+      sc.removeSparkListener(listener)
+    }
+    jobs.get
+  }
+
+  /** The steady-state job budget of one micro-batch on a warm store
+    * (both frontiers memoized by the previous batch, so reading them
+    * costs no job). Pinned exactly, so an extra per-batch job fails
+    * here. */
+  test("steady-state maintainBatch job budget on a warm store: BM25 and LSH") {
+    val docs = Tables.documents(spark, d).select("doc_id", "text")
+    val n = docs.count()
+    val (cut1, cut2) = (n / 2, (n * 3) / 4)
+    def slice(lo: Long, hi: Long) =
+      docs.filter(col("doc_id") >= lo && col("doc_id") < hi)
+    val pDir = Files.createTempDirectory("bm25-budget-p").toString
+    val lDir = Files.createTempDirectory("bm25-budget-l").toString
+    val (p0, dl0) = Bm25Store.indexRows(slice(0, cut1))
+    Bm25Store.writePostings(spark, p0, pDir, "overwrite", 2)
+    Bm25Store.writeDl(spark, dl0, lDir, "overwrite")
+    Bm25Store.maintainBatch(spark, slice(cut1, cut2), pDir, lDir): Unit
+    val bm25Jobs = jobsOf {
+      assert(Bm25Store.maintainBatch(spark, slice(cut2, n), pDir, lDir) == n - cut2)
+    }
+    val bDir = Files.createTempDirectory("lsh-budget-b").toString
+    val sDir = Files.createTempDirectory("lsh-budget-s").toString
+    LshStore.writeIndex(spark, slice(0, cut1), bDir, sDir, "overwrite")
+    LshStore.maintainBatch(spark, slice(cut1, cut2), bDir, sDir): Unit
+    val lshJobs = jobsOf {
+      assert(LshStore.maintainBatch(spark, slice(cut2, n), bDir, sDir) == n - cut2)
+    }
+    // the counts include AQE's shuffle-map-stage jobs
+    assert(bm25Jobs == 7, s"BM25 steady-state batch ran $bm25Jobs jobs, budget 7")
+    assert(lshJobs == 9, s"LSH steady-state batch ran $lshJobs jobs, budget 9")
   }
 
   test("IVF maintainBatch over random schedules ≡ one-batch twin at every step") {
