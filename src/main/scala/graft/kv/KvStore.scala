@@ -86,9 +86,10 @@ final case class KvShardMeta(file: String, rows: Long, minKeyHex: String, maxKey
   def minKey: Array[Byte] = KvStore.fromHex(minKeyHex)
   def maxKey: Array[Byte] = KvStore.fromHex(maxKeyHex)
 }
-/** `committedEpochs` records streaming epoch commits ("queryId-epochId")
-  * INSIDE the atomic manifest write, so epoch idempotence cannot be
-  * split from the shard append by a crash between two files.
+/** `committedEpochs` records epoch keys (streaming "queryId-epochId",
+  * batch appends' `epoch` option) INSIDE the atomic manifest write, so
+  * epoch idempotence cannot be split from the shard append by a crash
+  * between two files.
   *
   * `version` increments on every manifest commit; the superseded
   * manifest is archived as `_kvmeta.v{N}.json`, giving SNAPSHOT READS
@@ -153,8 +154,11 @@ final case class KvTableMeta(shards: Seq[KvShardMeta],
   *    `lastRewriteVersion`.
   *  - `archive = false` (truncate only): neither the superseded manifest
   *    nor its epoch records survive, see [[KvStore.writeMeta]].
-  *  - `epoch`: a streaming "queryId-epochId" recorded in the same write;
-  *    an already-recorded one makes the commit a `DuplicateEpoch`. */
+  *  - `epoch`: a key recorded in the same write; an already-recorded
+  *    one makes the commit a `DuplicateEpoch`. The streaming sink
+  *    records "queryId-epochId"; a batch append records its `epoch`
+  *    write option (IVF stream maintenance tags its append
+  *    `ivf-maint@<assignedVersion>`). */
 final case class KvEdit(add: Seq[KvShardMeta] = Nil,
                         remove: Set[String] = Set.empty,
                         inPlace: Map[String, Seq[KvShardMeta]] = Map.empty,

@@ -693,13 +693,9 @@ object IvfStore {
     root
   }
 
-  /** Marker for [[maintainBatch]]'s crash window: written (with the
-    * meta's pinned version) BEFORE the KV append, deleted after the
-    * meta advance. Its presence proves a version-ahead `assigned`
-    * table is maintainBatch's own half-finished commit — safe to
-    * adopt — rather than some other writer's. */
-  private[graft] def pendingMarker(root: String): File =
-    new File(s"$root/_maint_pending.json")
+  /** The epoch key [[maintainBatch]] tags its append with: the meta's
+    * pinned `assignedVersion` the append was planned against. */
+  private[graft] def maintKey(assignedVersion: Long): String = s"ivf-maint@$assignedVersion"
 
   /** One micro-batch of dense-index maintenance: assign the batch's
     * vectors PAST the assigned table's pushed `max(vec_id)` frontier
@@ -708,23 +704,22 @@ object IvfStore {
     * micro-batch). The frontier filter is the replay discipline — a
     * re-delivered batch appends nothing. Returns the rows indexed.
     *
-    * Crash window (r18): the KV append and the meta advance are two
-    * commits, and the frontier read is PINNED at the meta's version —
-    * a crash between them would leave the appended rows invisible to
-    * the replayed batch's frontier, so replay would append them AGAIN
-    * (duplicate vec_ids at the new version). maintainBatch therefore
-    * brackets its append with [[pendingMarker]]: on entry, a KV
-    * version ahead of the meta WITH a marker matching the meta's
-    * version is adopted — the orphan commit is maintainBatch's own
-    * frontier-filtered, frozen-centroid append, so its rows are
-    * counted via the lineage-sound `sinceVersion` delta read (a
-    * crashed COMPACTION swap adopts as zero rows — delta planning
-    * excludes rewrite outputs) and the meta is re-pinned over it.
-    * Without a matching marker the orphan's producer is unknown and
-    * the conservative [[incrementLocked]] answer stands: full rebuild.
-    * `crashAfterAppend` is the crash-window spec's injection point —
-    * it returns right after the KV append, exactly the state a real
-    * crash leaves. */
+    * Crash window: the KV append and the meta advance are two commits,
+    * and the frontier read is PINNED at the meta's version, so rows
+    * appended by a batch that crashed before its advance are invisible
+    * to the replay's frontier. The append therefore commits with the
+    * epoch key `ivf-maint@<assignedVersion>`, recorded in the same
+    * atomic manifest write as its rows. On entry, a table exactly one
+    * version ahead of the meta whose manifest holds the meta version's
+    * key is this method's own orphan: the meta advances over it, with
+    * the orphan's row count read from the manifest. Any other
+    * version-ahead table is an unknown writer (an untagged append, or a
+    * compaction swap that landed before its re-pin, whose key names an
+    * older version) and the index rebuilds from the corpus. A failed
+    * append leaves no key, since the key lands only with the rows.
+    * `crashAfterAppend` is the crash-window spec's injection point — it
+    * returns right after the KV append, exactly the state a real crash
+    * leaves. */
   private[graft] def maintainBatch(s: SparkSession, corpus: String,
                                    batch: DataFrame,
                                    crashAfterAppend: Boolean = false): Long =
@@ -732,37 +727,28 @@ object IvfStore {
       val root = indexRoot(corpus)
       var meta = readIvfMeta(root)
       val assignedDir = s"$root/assigned"
-      val tableV = KvStore.readMeta(assignedDir).version
+      val table = KvStore.readMeta(assignedDir)
       val metaV = meta.path("assignedVersion").asLong()
-      if (tableV != metaV) {
-        // a torn (unparseable) marker reads as absent: no claim, rebuild
-        val adoptable = readMarker(pendingMarker(root))
-          .exists(_.path("assignedVersion").asLong() == metaV)
-        if (!adoptable) {
-          System.err.println(
-            s"[graft] IvfStore: dangling index commit at $root with no pending " +
-              "marker (an unknown writer advanced the assigned table past the " +
-              "meta); falling back to a full rebuild")
-          buildLocked(s, corpus)
-          meta = readIvfMeta(root)
-        } else {
-          val orphanRows = s.read.format("graft-kv")
-            .option("catalog", assignedCatalog("ivf_assigned"))
-            .option("path", assignedDir)
-            .option("sinceVersion", metaV).option("asOfVersion", tableV)
-            .load().count()
-          advance(s, root, meta) { node =>
-            node.put("n", meta.path("n").asLong() + orphanRows)
-            node.put("appendedRows", meta.path("appendedRows").asLong() + orphanRows)
-          }
-          pendingMarker(root).delete()
-          meta = readIvfMeta(root)
-          System.err.println(
-            s"[graft] IvfStore: adopted a dangling maintainBatch commit at $root " +
-              s"($orphanRows rows, KV v$metaV -> v$tableV) — a prior batch crashed " +
-              "between its KV append and its meta advance; replay continues past it")
+      if (table.version == metaV + 1 && table.committedEpochs.contains(maintKey(metaV))) {
+        val orphanRows =
+          KvStore.deltaShards(assignedDir, metaV, Some(table.version)).map(_.rows).sum
+        advance(s, root, meta) { node =>
+          node.put("n", meta.path("n").asLong() + orphanRows)
+          node.put("appendedRows", meta.path("appendedRows").asLong() + orphanRows)
         }
-      } else pendingMarker(root).delete() // stale marker from a pre-append crash
+        meta = readIvfMeta(root)
+        System.err.println(
+          s"[graft] IvfStore: adopted a dangling maintainBatch commit at $root " +
+            s"($orphanRows rows, KV v$metaV -> v${table.version}) — a prior batch " +
+            "crashed between its KV append and its meta advance; replay continues past it")
+      } else if (table.version != metaV) {
+        System.err.println(
+          s"[graft] IvfStore: dangling index commit at $root without this store's " +
+            s"${maintKey(metaV)} key (an unknown writer advanced the assigned table " +
+            "past the meta); falling back to a full rebuild")
+        buildLocked(s, corpus)
+        meta = readIvfMeta(root)
+      }
       val frontier = s.read.format("graft-kv")
         .option("catalog", assignedCatalog("ivf_assigned"))
         .option("path", assignedDir)
@@ -772,9 +758,6 @@ object IvfStore {
         .select(col("vec_id"), col("embedding").cast("array<float>").as("embedding"))
       val nFresh = fresh.count()
       if (nFresh > 0) {
-        val marker = mapper.createObjectNode()
-        marker.put("assignedVersion", meta.path("assignedVersion").asLong())
-        writeAtomic(pendingMarker(root), pretty(marker))
         val frozen = loadPinned(s, root, meta)
         // register on the BATCH's session, not (only) the outer one:
         // inside a streaming foreachBatch the batch frame belongs to the
@@ -794,15 +777,14 @@ object IvfStore {
           .write.format("graft-kv")
           .option("catalog", assignedCatalog("ivf_assigned"))
           .option("path", assignedDir)
+          .option("epoch", maintKey(meta.path("assignedVersion").asLong()))
           .mode("append").save()
         // crashAfterAppend: spec-injected crash — KV committed, meta not
-        if (!crashAfterAppend) {
+        if (!crashAfterAppend)
           advance(s, root, meta) { node =>
             node.put("n", meta.path("n").asLong() + nFresh)
             node.put("appendedRows", meta.path("appendedRows").asLong() + nFresh)
           }
-          pendingMarker(root).delete()
-        }
       }
       nFresh
     }

@@ -133,10 +133,15 @@ class KvWriteBuilder(catalog: KvCatalog, dir: String, info: LogicalWriteInfo)
       require(ranges.isEmpty || truncateFirst,
         "replaceKeyRanges requires mode(\"overwrite\") — it IS an overwrite, " +
           "scoped to the given rowkey ranges")
+      // `epoch=<key>`: Delta's txnAppId idempotent append on the sink's epoch
+      // records — an already-recorded key makes the commit a no-op
+      val epoch = Option(info.options().get("epoch"))
+      require(epoch.isEmpty || !truncateFirst,
+        "epoch is an append option; an overwrite drops the epoch records")
       new KvBatchWrite(catalog, dir, info.schema(),
         truncateFirst && ranges.isEmpty, chunkBytes,
         bloomColumns, bloomBits,
-        info.options().getLong("expectedVersion", -1L), ranges)
+        info.options().getLong("expectedVersion", -1L), ranges, epoch)
     }
     override def toStreaming: org.apache.spark.sql.connector.write.streaming.StreamingWrite = {
       require(!truncateFirst,
@@ -155,7 +160,8 @@ class KvBatchWrite(catalog: KvCatalog, dir: String, schema: StructType,
                    truncateFirst: Boolean, chunkBytes: Long,
                    bloomColumns: String = "", bloomBits: Int = 1 << 20,
                    expectedVersion: Long = -1L,
-                   replaceRanges: Option[String] = None)
+                   replaceRanges: Option[String] = None,
+                   epoch: Option[String] = None)
     extends BatchWrite {
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
@@ -188,7 +194,7 @@ class KvBatchWrite(catalog: KvCatalog, dir: String, schema: StructType,
         case None => KvEdit(newShards.map(_.copy(firstVersion = prev.version + 1)),
           remove = if (truncateFirst) prev.shards.map(_.file).toSet else Set.empty,
           deleteRemoved = truncateFirst, rewrite = truncateFirst,
-          archive = !truncateFirst)
+          archive = !truncateFirst, epoch = epoch)
       }
     } match {
       case KvStore.StuckClock => throw KvStore.stuckClock("range replace")

@@ -5,7 +5,8 @@ import java.nio.file.Files
 import com.fasterxml.jackson.databind.ObjectMapper
 
 import graft.{SparkSpec, Tables}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{col, lit, raise_error}
 
 /** Crash-window replay for the streaming-maintenance trilogy (r18).
   *
@@ -178,35 +179,54 @@ class StreamMaintCrashSpec extends SparkSpec {
       .collect().map(_.toString).toSeq
   }
 
+  /** An unknown writer: a plain append to the index's `assigned` table
+    * that carries no epoch key. */
+  private def foreignAppend(corpus: String, rows: DataFrame): Unit =
+    rows.select(col("vec_id"), col("embedding").cast("array<float>").as("embedding"),
+        lit(0).as("cell"))
+      .write.format("graft-kv")
+      .option("catalog", IvfStore.assignedCatalog("ivf_assigned"))
+      .option("path", s"${IvfStore.indexRoot(corpus)}/assigned")
+      .mode("append").save()
+
+  /** The recovered index holds each of the `n` vectors once and probes
+    * like a twin that took `tail` as one clean batch. */
+  private def assertLikeTwin(corpus: String, tail: DataFrame, seedN: Long, n: Long,
+                             tag: String): Unit = {
+    val assigned = IvfStore.load(spark, corpus).assigned
+    assert(assigned.count() == n &&
+      assigned.select("vec_id").distinct().count() == n,
+      "no duplicate vec_ids after the recovery")
+    val twin = ivfStage(s"$tag-twin", seedN)
+    IvfStore.maintainBatch(spark, twin, tail)
+    assert(probeRows(corpus) == probeRows(twin),
+      "the recovered index must probe identically to a crash-free one")
+  }
+
   test("IVF: replay after a KV-committed/meta-lost crash adopts the orphan instead of doubling") {
     val vecs = Tables.embeddings(spark, d).select(col("vec_id"), col("embedding"))
     val n = vecs.count()
     val seedN = n / 2
     val corpus = ivfStage("adopt", seedN)
+    val root = IvfStore.indexRoot(corpus)
     val tail = vecs.filter(col("vec_id") >= seedN)
     // the crash: the injection point returns right after the assigned
-    // append commits, before the meta advance — KV version ahead,
-    // pending marker on disk
+    // append commits, before the meta advance — KV version ahead, the
+    // append's key in the table's manifest
+    val metaV = mapper.readTree(IvfStore.metaFile(root)).path("assignedVersion").asLong()
     IvfStore.maintainBatch(spark, corpus, tail, crashAfterAppend = true)
-    assert(IvfStore.pendingMarker(IvfStore.indexRoot(corpus)).exists(),
-      "the crash must leave the pending marker")
+    assert(graft.kv.KvStore.readMeta(s"$root/assigned").committedEpochs
+      .contains(IvfStore.maintKey(metaV)),
+      "the crash must leave the append's key in the assigned manifest")
     assert(IvfStore.maintainBatch(spark, corpus, tail) == 0L,
       "replay must adopt the orphan commit and append nothing new")
-    val meta = mapper.readTree(IvfStore.metaFile(IvfStore.indexRoot(corpus)))
+    val meta = mapper.readTree(IvfStore.metaFile(root))
     assert(meta.path("n").asLong() == n,
       "adoption must fold the orphan's rows into the meta's count")
     assert(meta.path("assignedVersion").asLong() ==
-      graft.kv.KvStore.readMeta(s"${IvfStore.indexRoot(corpus)}/assigned").version,
+      graft.kv.KvStore.readMeta(s"$root/assigned").version,
       "adoption must re-pin the meta at the orphan's version")
-    val assigned = IvfStore.load(spark, corpus).assigned
-    assert(assigned.count() == n &&
-      assigned.select("vec_id").distinct().count() == n,
-      "no duplicate vec_ids after the adopted replay")
-    // the recovered index ≡ a twin maintained with one clean batch
-    val twin = ivfStage("twin", seedN)
-    IvfStore.maintainBatch(spark, twin, tail)
-    assert(probeRows(corpus) == probeRows(twin),
-      "the adopted index must probe identically to a crash-free one")
+    assertLikeTwin(corpus, tail, seedN, n, "adopt")
   }
 
   test("IVF: a version-ahead table WITHOUT the marker rebuilds (unknown writer)") {
@@ -215,12 +235,11 @@ class StreamMaintCrashSpec extends SparkSpec {
     val seedN = n / 2
     val corpus = ivfStage("foreign", seedN)
     val tail = vecs.filter(col("vec_id") >= seedN)
-    IvfStore.maintainBatch(spark, corpus, tail, crashAfterAppend = true)
-    // an orphan maintainBatch did NOT produce: no marker ⇒ adoption
-    // would be a guess, and the conservative answer is a full rebuild
-    // from the corpus dir (here: the seed — the stream's own replay is
-    // the recovery channel for the tail, exercised below)
-    assert(IvfStore.pendingMarker(IvfStore.indexRoot(corpus)).delete())
+    // an orphan maintainBatch did NOT produce: no key ⇒ adoption would
+    // be a guess, and the conservative answer is a full rebuild from
+    // the corpus dir (here: the seed — the stream's own replay is the
+    // recovery channel for the tail, exercised below)
+    foreignAppend(corpus, tail)
     IvfStore.maintainBatch(spark, corpus, vecs.limit(0))
     val meta = mapper.readTree(IvfStore.metaFile(IvfStore.indexRoot(corpus)))
     assert(meta.path("appendedRows").asLong() == 0L,
@@ -228,40 +247,33 @@ class StreamMaintCrashSpec extends SparkSpec {
     // the stream re-delivers the tail (AvailableNow replay): the
     // rebuilt-from-seed index catches back up to a consistent state
     assert(IvfStore.maintainBatch(spark, corpus, tail) == n - seedN)
-    val assigned = IvfStore.load(spark, corpus).assigned
-    assert(assigned.count() == n &&
-      assigned.select("vec_id").distinct().count() == n,
-      "no duplicate vec_ids after the rebuild + replay")
-    val twin = ivfStage("foreign-twin", seedN)
-    IvfStore.maintainBatch(spark, twin, tail)
-    assert(probeRows(corpus) == probeRows(twin),
-      "the rebuilt-and-replayed index must probe identically to a clean one")
+    assertLikeTwin(corpus, tail, seedN, n, "foreign")
   }
 
-  test("IVF: a torn pending marker makes no claim — the replay rebuilds instead of wedging") {
+  test("IVF: a batch that failed before its append cannot make a later foreign append adoptable") {
     val vecs = Tables.embeddings(spark, d).select(col("vec_id"), col("embedding"))
     val n = vecs.count()
     val seedN = n / 2
-    val corpus = ivfStage("torn", seedN)
+    val corpus = ivfStage("stranger", seedN)
     val tail = vecs.filter(col("vec_id") >= seedN)
-    IvfStore.maintainBatch(spark, corpus, tail, crashAfterAppend = true)
-    // a crash in the middle of the marker write: truncated JSON, e.g.
-    // `{"assignedVersion" :` — unparseable, so it must read as absent
-    val marker = IvfStore.pendingMarker(IvfStore.indexRoot(corpus)).toPath
-    val bytes = Files.readAllBytes(marker)
-    Files.write(marker, bytes.take(bytes.indexOf(':'.toByte) + 1))
-    assert(IvfStore.maintainBatch(spark, corpus, tail) == n - seedN,
-      "the replay must rebuild from the corpus and re-append the tail")
+    // a task failure in the assign job: the frontier count prunes the
+    // embedding column, so the error is raised only once the batch's
+    // vectors are assigned, and the append never commits
+    intercept[Exception](IvfStore.maintainBatch(spark, corpus,
+      tail.withColumn("embedding", raise_error(lit("injected assign failure")))))
+    // then a writer that is not maintainBatch appends vec_ids no corpus holds
+    val foreignBase = 1000000000L
+    foreignAppend(corpus, vecs.filter(col("vec_id") < 5)
+      .withColumn("vec_id", col("vec_id") + foreignBase))
+    assert(IvfStore.maintainBatch(spark, corpus, vecs.limit(0)) == 0L)
     val meta = mapper.readTree(IvfStore.metaFile(IvfStore.indexRoot(corpus)))
-    assert(meta.path("n").asLong() == n)
-    val assigned = IvfStore.load(spark, corpus).assigned
-    assert(assigned.count() == n &&
-      assigned.select("vec_id").distinct().count() == n,
-      "no duplicate vec_ids after the rebuild + replay")
-    val twin = ivfStage("torn-twin", seedN)
-    IvfStore.maintainBatch(spark, twin, tail)
-    assert(probeRows(corpus) == probeRows(twin),
-      "the rebuilt-and-replayed index must probe identically to a clean drain")
+    assert(meta.path("appendedRows").asLong() == 0L,
+      "a foreign append after a failed batch must rebuild, not be adopted")
+    assert(IvfStore.load(spark, corpus).assigned
+      .filter(col("vec_id") >= foreignBase).count() == 0L,
+      "no foreign vec_id may be loadable after the rebuild")
+    assert(IvfStore.maintainBatch(spark, corpus, tail) == n - seedN)
+    assertLikeTwin(corpus, tail, seedN, n, "stranger")
   }
 
   // ---- the staged feed itself: a crash between its three commits ----

@@ -20,7 +20,13 @@ import org.scalacheck.{Gen, Prop, Test => PropTest}
   *    md5 seed rule, so equality is exact);
   *  - every step indexes exactly the batch that arrived, and an
   *    immediate REPLAY of the same batch appends nothing (the
-  *    lost-checkpoint discipline, at every schedule point).
+  *    lost-checkpoint discipline, at every schedule point);
+  *  - at a random step (or none) the schedule crashes between the two
+  *    commits of a batch, and the step's maintainBatch is the replay.
+  *
+  * The crash-schedule properties do not shrink: a shrunk case would lie
+  * outside the generator's range and cost one more schedule run per
+  * shrink step.
   */
 class StreamMaintPropSpec extends SparkSpec {
   private val d = "/root/testdata/sf0.001"
@@ -47,7 +53,7 @@ class StreamMaintPropSpec extends SparkSpec {
       // (step, postings committed first?)
       crash <- Gen.option(Gen.zip(Gen.chooseNum(0, k), Gen.oneOf(true, false)))
     } yield (cuts.distinct.sorted, crash)
-    val prop = Prop.forAll(schedGen) { case (cuts, crash) =>
+    val prop = Prop.forAllNoShrink(schedGen) { case (cuts, crash) =>
       val bounds = (seedN +: cuts :+ n).distinct.sorted
       val crashAt = crash.map { case (i, pFirst) => (i % (bounds.length - 1), pFirst) }
       val pDir = Files.createTempDirectory("bm25-sched-p").toString
@@ -240,26 +246,39 @@ class StreamMaintPropSpec extends SparkSpec {
       Similarity.ivfProbe(spark, IvfStore.load(spark, corpusDir), qv, nProbe = 4)
         .collect().map(_.toString).toSeq
     }
-    val cutsGen: Gen[List[Long]] = for {
+    val schedGen: Gen[(List[Long], Option[Int])] = for {
       k <- Gen.chooseNum(0, 2)
       cuts <- Gen.listOfN(k, Gen.chooseNum(seedN + 1, n - 1))
-    } yield cuts.distinct.sorted
-    val prop = Prop.forAll(cutsGen) { cuts =>
+      crash <- Gen.option(Gen.chooseNum(0, k))
+    } yield (cuts.distinct.sorted, crash)
+    val prop = Prop.forAllNoShrink(schedGen) { case (cuts, crash) =>
       val bounds = (seedN +: cuts :+ n).distinct.sorted
+      val crashAt = crash.map(_ % (bounds.length - 1))
       val streamed = stage("s")
-      bounds.zip(bounds.tail).forall { case (lo, hi) =>
+      def assignedVersion =
+        graft.kv.KvStore.readMeta(s"${IvfStore.indexRoot(streamed)}/assigned").version
+      bounds.zip(bounds.tail).zipWithIndex.forall { case ((lo, hi), step) =>
         val batch = vecs.filter(col("vec_id") >= lo && col("vec_id") < hi)
+        // the crash arm: the step's append commits and its meta advance
+        // does not; the step's maintainBatch is then the replay, which
+        // adopts the orphan and so indexes nothing new
+        val crashed = crashAt.contains(step)
+        if (crashed)
+          IvfStore.maintainBatch(spark, streamed, batch, crashAfterAppend = true): Unit
         val indexed = IvfStore.maintainBatch(spark, streamed, batch)
+        val v0 = assignedVersion
         val replay = IvfStore.maintainBatch(spark, streamed, batch)
+        val v1 = assignedVersion
         // twin: an identically-seeded index (deterministic md5 centroid
         // sample over the same seed prefix) catching up in ONE batch
         val twin = stage("t")
         IvfStore.maintainBatch(spark, twin,
           vecs.filter(col("vec_id") >= seedN && col("vec_id") < hi))
-        val ok = indexed == hi - lo && replay == 0L &&
-          probeRows(streamed) == probeRows(twin)
+        val ok = indexed == (if (crashed) 0L else hi - lo) && replay == 0L &&
+          v1 == v0 && probeRows(streamed) == probeRows(twin)
         if (!ok) System.err.println(
-          s"IVF MISMATCH cuts=$cuts step=[$lo,$hi) indexed=$indexed replay=$replay")
+          s"IVF MISMATCH cuts=$cuts crash=$crashAt step=[$lo,$hi) indexed=$indexed " +
+            s"replay=$replay assignedVersion=$v0->$v1")
         ok
       }
     }

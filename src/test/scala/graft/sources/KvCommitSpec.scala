@@ -82,6 +82,23 @@ class KvCommitSpec extends SparkSpec {
     }
   }
 
+  test("tagged append") {
+    check("kc_tagged", stamps = false, archives = true, retains = None) { dir =>
+      write("kc_tagged", dir, rows(801L, 900L)).option("epoch", "job-7")
+        .mode("append").save()
+      val tagged = KvStore.readMeta(dir)
+      assert(tagged.committedEpochs.contains("job-7"), "the key is recorded in the manifest")
+      val files = new File(dir).list().toSet
+      write("kc_tagged", dir, rows(901L, 1000L)).option("epoch", "job-7")
+        .mode("append").save()
+      assert(KvStore.readMeta(dir).version == tagged.version,
+        "a repeated key leaves the version unchanged")
+      assert(new File(dir).list().toSet == files,
+        "a repeated key deletes the append's shards and bloom sidecars")
+      assert(spark.table("kc_tagged").count() == 900L)
+    }
+  }
+
   test("stream epoch") {
     check("kc_stream", stamps = false, archives = true, retains = None) { dir =>
       val cat = KvCatalog.parse(catJson("kc_stream"))
