@@ -967,7 +967,7 @@ object Stress {
         val (pMax, pMed) = (byPart.lastOption.getOrElse(0L), med(byPart))
         // the same load under the salted regime's exact (cell, salt)
         // key — the distribution the mitigation actually shuffles
-        val saltF = spark.conf.get("graft.ivfProbeSaltFactor", "16").toInt
+        val saltF = queries.Similarity.ProbeSaltFactor
         val sLoads = queries.Similarity
           .ivfCellLoadSalted(spark, idx, qs, nProbe = 4, saltF = saltF)
           .select(col("candidates"),

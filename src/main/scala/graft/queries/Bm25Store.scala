@@ -207,22 +207,13 @@ object Bm25Store {
                              terms: Seq[String], topK: Int = 10,
                              postingsTap: DataFrame => DataFrame = identity): DataFrame = {
     val p = postingsTap(postingsRead(s, pDir, terms))
-    val dl = s.read.format("graft-kv")
-      .option("catalog", dlCatalogJson).option("path", lDir).load()
-    val stats = dl.agg(count(lit(1)).as("n"), sum(col("dl")).as("sdl"),
-        count(when(col("dl") > 0, 1)).as("npos"))
-      .select(col("n"),
-        (col("sdl").cast("double") / col("npos").cast("double")).as("avgdl"))
+    val dl = dlRead(s, lDir)
     val df = p.groupBy(col("token")).agg(count(lit(1)).as("df"))
     val scored = p
       .join(broadcast(df), "token")
       .join(dl, "doc_id")
-      .crossJoin(broadcast(stats))
-      .select(col("doc_id"),
-        (log(lit(1.0) + (col("n") - col("df") + 0.5) / (col("df") + 0.5)) *
-          (col("tf") * 2.2) /
-          (col("tf") + lit(1.2) * (lit(0.25) + lit(0.75) * col("dl") / col("avgdl"))))
-          .as("term_score"))
+      .crossJoin(broadcast(corpusStats(dl)))
+      .select(col("doc_id"), termScoreCol.as("term_score"))
       .groupBy(col("doc_id")).agg(sum(col("term_score")).as("score"))
     // rounded-score ranking, matching bm25Ranked: fp-tied docs order
     // identically regardless of either plan's summation order
@@ -249,11 +240,11 @@ object Bm25Store {
     * provably-losing candidates. */
   private val PruneMargin = 1e-4
 
-  /** The BM25 per-(token, doc) term-score column — one definition so
-    * the sidecar build and the pruned re-score can never drift from
-    * each other (and it is character-identical to [[probe]]'s and
-    * [[probeAllExhaustive]]'s inline copies: identical expression tree
-    * -> identical codegen -> bitwise-identical doubles). */
+  /** The BM25 per-(token, doc) term-score column — the one definition
+    * every scoring plan ([[probe]], [[probeAllExhaustive]], the sidecar
+    * build, the pruned and dense re-scores) selects, so their doubles
+    * can never drift from each other: identical expression tree ->
+    * identical codegen -> bitwise-identical doubles. */
   private def termScoreCol: Column =
     (log(lit(1.0) + (col("n") - col("df") + 0.5) / (col("df") + 0.5)) *
       (col("tf") * 2.2) /
@@ -283,7 +274,7 @@ object Bm25Store {
       .option("catalog", dlCatalogJson).option("path", lDir).load()
 
   /** Corpus stats (N, avgdl) — one pushed-aggregate-friendly pass over
-    * the dl table, exactly [[probe]]'s formula. */
+    * the dl table. */
   private def corpusStats(dl: DataFrame): DataFrame =
     dl.agg(count(lit(1)).as("n"), sum(col("dl")).as("sdl"),
         count(when(col("dl") > 0, 1)).as("npos"))
@@ -553,6 +544,11 @@ object Bm25Store {
     scala.math.BigDecimal(x)
       .setScale(6, scala.math.BigDecimal.RoundingMode.HALF_UP).toDouble
 
+  /** The dense kernel's work gate: past |sigs| x |docs| = 2e10 the
+    * driver-side signature state is too large and [[probeAllDense]]
+    * declines. */
+  private val DenseBudget = 20000000000L
+
   /** DENSE batched scoring for the small-vocabulary regime.
     *
     * When a large query batch probes few distinct tokens, every token
@@ -584,7 +580,7 @@ object Bm25Store {
     * (round(score, 6) desc, doc_id asc) — [[round6]] replicates the SQL
     * round — and zero-score docs (no shared token) are excluded exactly
     * as the join-based plans exclude them. Work is |sigs| x |docs with
-    * any probed token|; the `graft.bm25DenseBudget` gate (default 2e10)
+    * any probed token|; the [[DenseBudget]] gate
     * returns None past it and the caller falls back to MaxScore. */
   private def probeAllDense(s: SparkSession, pDir: String, lDir: String,
                             queries: DataFrame, qt: DataFrame,
@@ -601,8 +597,7 @@ object Bm25Store {
     val nSigs = sigRel.count()
     val dl = dlRead(s, lDir)
     val nDocs = dl.count() // pushed aggregate — manifest-cheap
-    val budget = s.conf.get("graft.bm25DenseBudget", "20000000000").toLong
-    if (nSigs * nDocs > budget) return None
+    if (nSigs * nDocs > DenseBudget) return None
     // signature -> ascending token indexes, driver-side (bounded by the
     // budget gate; ascending order makes the kernel's sum deterministic)
     val sigIdx: Array[Array[Int]] = {
@@ -937,22 +932,13 @@ object Bm25Store {
       .option("catalog", postingsCatalogJson).option("path", pDir).load()
       .select(col("token"), col("doc_id"), col("tf"))
       .join(broadcast(vocab), Seq("token"), "left_semi")
-    val dl = s.read.format("graft-kv")
-      .option("catalog", dlCatalogJson).option("path", lDir).load()
-    val stats = dl.agg(count(lit(1)).as("n"), sum(col("dl")).as("sdl"),
-        count(when(col("dl") > 0, 1)).as("npos"))
-      .select(col("n"),
-        (col("sdl").cast("double") / col("npos").cast("double")).as("avgdl"))
+    val dl = dlRead(s, lDir)
     val df = pm.groupBy(col("token")).agg(count(lit(1)).as("df"))
     val termScores = pm
       .join(broadcast(df), "token")
       .join(dl, "doc_id")
-      .crossJoin(broadcast(stats))
-      .select(col("token"), col("doc_id"),
-        (log(lit(1.0) + (col("n") - col("df") + 0.5) / (col("df") + 0.5)) *
-          (col("tf") * 2.2) /
-          (col("tf") + lit(1.2) * (lit(0.25) + lit(0.75) * col("dl") / col("avgdl"))))
-          .as("term_score"))
+      .crossJoin(broadcast(corpusStats(dl)))
+      .select(col("token"), col("doc_id"), termScoreCol.as("term_score"))
     val scored = termScores.join(qt, "token")
       .groupBy(col("q_id"), col("doc_id"))
       .agg(sum(col("term_score")).as("score"))

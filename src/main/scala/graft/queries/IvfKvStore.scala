@@ -2,8 +2,11 @@ package graft.queries
 
 import java.io.File
 
+import com.fasterxml.jackson.databind.JsonNode
+import com.fasterxml.jackson.databind.node.ObjectNode
+
 import graft.{Q, Tables}
-import graft.kv.{BytesCodec, KvStore}
+import graft.kv.{BytesCodec, KvStore, KvTableMeta}
 import graft.queries.Similarity.IvfIndex
 import graft.sources.KeyRanges
 import graft.util.Dirs.cacheKey
@@ -12,10 +15,10 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
 /** [[IvfStore]] for corpora that live IN THE ENGINE — a versioned
-  * `graft-kv` table instead of a parquet directory. The index relations
-  * and probe path are identical; what changes is the staleness/delta
-  * machinery, which gets strictly better because the corpus carries its
-  * own manifest history:
+  * `graft-kv` table instead of a parquet directory. The index relations,
+  * probe path and ensure/load policy ([[IvfStore.lifecycle]]) are
+  * identical; what changes is the classifier, which gets strictly
+  * better because the corpus carries its own manifest history:
   *
   *  - FRESHNESS is one version compare: the meta records the corpus
   *    manifest version the index covers; `corpusVersion == live` is
@@ -23,7 +26,7 @@ import org.apache.spark.sql.types.LongType
   *  - APPEND vs REWRITE is decided from the manifest, not stat calls,
   *    by TWO independent checks. (1) The rewrite watermark: row-level
   *    DML and range replaces stamp [[graft.kv.KvTableMeta.lastRewriteVersion]],
-  *    so any rewrite inside (indexed, live] refuses outright — file
+  *    so any rewrite inside (indexed, live] is a rewrite outright — file
   *    survival CANNOT catch this case, because DML-replaced genuine
   *    adds land in `retiredAdds` (the change-feed planner needs them
   *    there to agree with the archived-chain replay) and thus still
@@ -33,21 +36,21 @@ import org.apache.spark.sql.types.LongType
   *    table replacement drop files; appends and retain-mode
   *    compactions keep them. Re-compacting an already-merged shard
   *    also drops it (merged outputs are not genuine adds), which this
-  *    check conservatively reads as a rewrite — refusal, never a
-  *    wrong incremental.
+  *    check conservatively reads as a rewrite — a patch or a refusal,
+  *    never a wrong incremental.
   *  - The DELTA is enumerated by the engine itself: a
   *    `sinceVersion`/`asOfVersion` incremental read plans exactly the
   *    shards the window added from the manifest-resident add lineage
   *    (sound under compaction), so the update reads delta rows and
   *    nothing else — the composition the add-lineage work exists for.
+  *  - A REWRITE window is patchable by its touched key region
+  *    ([[dmlRegion]]) while the indexed manifest is still retained.
   *
-  * Same crash contract as [[IvfStore]]: `_ivfmeta.json` is the commit
-  * point, reads pin recorded versions, a dangling KV commit triggers a
-  * rebuild instead of a double-append. The drift bound is row-exact
-  * here (`appendedRows / n` vs `graft.ivfMaxAppendFrac`) because the
-  * manifest records row counts — no byte proxy needed. The append-only
-  * rowkey contract carries over: re-appending an EXISTING vec_id is a
-  * logical update the file-level lineage cannot see.
+  * The drift bound is row-exact here (`appendedRows / n` vs
+  * `graft.ivfMaxAppendFrac`) because the manifest records row counts —
+  * no byte proxy needed. The append-only rowkey contract carries over:
+  * re-appending an EXISTING vec_id is a logical update the file-level
+  * lineage cannot see.
   */
 object IvfKvStore {
 
@@ -78,21 +81,58 @@ object IvfKvStore {
       .option("path", corpusDir)
       .mode("append").save()
 
-  private[queries] sealed trait KvCorpusDelta
-  private[queries] case object KvFresh extends KvCorpusDelta
-  /** (indexedVersion, liveVersion] is append/compaction-only. */
-  private[queries] final case class KvAppend(v0: Long, cur: Long) extends KvCorpusDelta
-  private[queries] final case class KvRewrite(v0: Long, cur: Long,
-                                              reason: String) extends KvCorpusDelta
-
-  private def classify(corpusDir: String,
-                       meta: com.fasterxml.jackson.databind.JsonNode): KvCorpusDelta = {
+  /** The KV corpus's classifier, from manifests alone: the indexed
+    * version (v0) against the live one. A rewrite window becomes an
+    * [[IvfStore.Rewritten]] patch when [[dmlRegion]] can derive its
+    * touched region. Under frozen centroids a row's assignment depends
+    * on nothing but the row and the centroids, so the correct post-DML
+    * state of the assigned table over that region is simply the
+    * frozen-centroid assignment of the region's LIVE rows — unchanged
+    * rows re-derive their identical cells, updated rows get their new
+    * cells, deleted rows are absent, added rows appear. */
+  private def classify(s: SparkSession, corpusDir: String,
+                       meta: JsonNode): IvfStore.Movement = {
     val v0 = meta.path("corpusVersion").asLong()
     val live = KvStore.readMeta(corpusDir)
-    if (live.version == v0) return KvFresh
+    if (live.version == v0) return IvfStore.Fresh
+    val window = s"the index covers corpus manifest v$v0, the live table is " +
+      s"v${live.version}, and the window"
+    val stamp = (node: ObjectNode) => node.put("corpusVersion", live.version): Unit
+    def rewritten(reason: String): IvfStore.Movement = {
+      val what = s"$window is NOT a pure append: $reason"
+      dmlRegion(corpusDir, v0, live).fold[IvfStore.Movement](IvfStore.Stale(what)) {
+        case (ranges, regionRows, total) =>
+          val pred = regionPredicate(ranges)
+          def region(asOf: Long) = readCorpus(s, corpusDir, asOf, since = None).filter(pred)
+          // the drift counts the region's live rows the frozen centroids
+          // never saw (changed or added), diffed against the region
+          // pinned at v0 — cost ∝ region. Vacuumed v0 history (manifest
+          // archive or shard files — both surface as the KV layer's
+          // "unavailable" IllegalArgumentException at planning) degrades
+          // to the conservative region row count; anything else (schema
+          // error, task failure) is a real bug and must propagate.
+          def unseen(): Long =
+            try region(live.version).join(region(v0), Seq("vec_id", "embedding"),
+              "left_anti").count()
+            catch {
+              case e: IllegalArgumentException if e.getMessage != null &&
+                  e.getMessage.contains("unavailable") =>
+                System.err.println(
+                  s"[graft] IvfKvStore: pinned v$v0 region read unavailable " +
+                    s"(${e.getMessage}); using the conservative drift bound " +
+                    s"of $regionRows region rows")
+                regionRows
+            }
+          // region bytes ≈ the region's row share of the live corpus bytes
+          IvfStore.Rewritten(what, ranges, regionRows, total,
+            kvShardBytes(corpusDir, live.shards) * regionRows / math.max(1L, total),
+            () => region(live.version), () => unseen(), stamp)
+      }
+    }
     if (live.version < v0)
-      return KvRewrite(v0, live.version,
-        "corpus manifest version moved BACKWARDS (table replaced?)")
+      return IvfStore.Stale(
+        s"$window is NOT a pure append: the corpus manifest version moved BACKWARDS " +
+          "(table replaced?)")
     // Rewrite watermark FIRST: file survival alone cannot catch a
     // row-level DML — the replaced genuine adds land in `retiredAdds`
     // (the change-feed planner needs them there), so the old shard set
@@ -101,24 +141,36 @@ object IvfKvStore {
     // signal: any rewrite committed inside (v0, live] means indexed
     // rows may have changed.
     if (live.lastRewriteVersion > v0)
-      return KvRewrite(v0, live.version,
-        s"a row-level rewrite (DML / range replace) committed at " +
-          s"version ${live.lastRewriteVersion} inside the window")
+      return rewritten(s"a row-level rewrite (DML / range replace) committed at " +
+        s"version ${live.lastRewriteVersion} inside the window")
     val old =
       try KvStore.readMetaAsOf(corpusDir, Some(v0))
       catch {
         case e: IllegalArgumentException =>
-          return KvRewrite(v0, live.version,
-            s"indexed manifest v$v0 is no longer retained (${e.getMessage})")
+          return IvfStore.Stale(s"$window is NOT a pure append: indexed manifest " +
+            s"v$v0 is no longer retained (${e.getMessage})")
       }
     val liveFiles = (live.shards ++ live.retiredAdds).map(_.file).toSet
     val gone = old.shards.filterNot(sh => liveFiles(sh.file))
     if (gone.nonEmpty)
-      KvRewrite(v0, live.version,
-        s"${gone.length} indexed shard(s) were replaced, not appended past " +
-          s"(e.g. ${gone.head.file}) — a DML rewrite, overwrite, truncate, or " +
-          "re-compaction of merged shards")
-    else KvAppend(v0, live.version)
+      return rewritten(s"${gone.length} indexed shard(s) were replaced, not appended " +
+        s"past (e.g. ${gone.head.file}) — a DML rewrite, overwrite, truncate, or " +
+        "re-compaction of merged shards")
+    // row-exact drift from the manifests: rows added since the centroids
+    // were fit, over the corpus after the append (no data scan — shard
+    // row counts come from the lineage-enumerated window)
+    val delta = KvStore.deltaShards(corpusDir, v0, Some(live.version))
+    val deltaRows = delta.map(_.rows).sum
+    IvfStore.Appended(s"$window is a PURE APPEND",
+      drift = (meta.path("appendedRows").asLong() + deltaRows).toDouble /
+        math.max(1L, meta.path("n").asLong() + deltaRows),
+      // delta bytes from the same lineage-planned shard set the read uses
+      bytes = kvShardBytes(corpusDir, delta),
+      // the engine enumerates the delta: an incremental read of exactly
+      // the window (v0, live], planned from the add lineage — sound under
+      // retain-mode compaction, loud (never partial) under vacuum
+      rows = () => readCorpus(s, corpusDir, asOf = live.version, since = Some(v0)),
+      stamp = stamp)
   }
 
   def build(s: SparkSession, corpusDir: String): IvfIndex =
@@ -139,76 +191,24 @@ object IvfKvStore {
     }
   }
 
-  private def staleError(root: String, delta: KvCorpusDelta): Nothing = delta match {
-    case KvRewrite(v0, cur, reason) => throw new IllegalStateException(
-      s"persisted IVF index at $root covers corpus manifest v$v0 but the live " +
-        s"table is v$cur and the window is NOT a pure append: $reason — " +
-        "assignments in the index may describe rows that changed; ensure() " +
-        "patches a bounded rewrite window incrementally when " +
-        "graft.ivfIncremental=true (the default), otherwise a full rebuild " +
-        "is required (IvfKvStore.build, or graft.ivfRebuildOnStale=true)")
-    case KvAppend(v0, cur) => throw new IllegalStateException(
-      s"persisted IVF index at $root covers corpus manifest v$v0; the live " +
-        s"table is v$cur and the window is a PURE APPEND — ensure() applies an " +
-        "append-incremental update when graft.ivfIncremental=true (the " +
-        "default); load() itself never mutates the index")
-    case KvFresh => throw new IllegalStateException("unreachable: fresh")
-  }
-
   /** Read-only pinned load; refuses any corpus movement, naming the
     * classification. */
-  def load(s: SparkSession, corpusDir: String): IvfIndex = {
-    val root = indexRoot(corpusDir)
-    val mf = IvfStore.metaFile(root)
-    if (!mf.exists()) throw new IllegalStateException(
-      s"no persisted IVF index for KV corpus $corpusDir (expected ${mf.getPath}); " +
-        "run IvfKvStore.build/ensure first")
-    val meta = IvfStore.readIvfMeta(root)
-    classify(corpusDir, meta) match {
-      case KvFresh => IvfStore.loadPinned(s, root, meta)
-      case delta => staleError(root, delta)
-    }
-  }
+  def load(s: SparkSession, corpusDir: String): IvfIndex =
+    open(s, corpusDir, maintain = false)
 
-  private def incrementLocked(s: SparkSession, corpusDir: String,
-                              app: KvAppend): IvfIndex = {
-    val root = indexRoot(corpusDir)
-    val meta = IvfStore.readIvfMeta(root)
-    if (IvfStore.dangling(root, meta)) return buildLocked(s, corpusDir)
-    val k = meta.path("k").asLong()
-    val frozen = IvfStore.loadPinned(s, root, meta)
-    // the engine enumerates the delta: an incremental read of exactly
-    // the window (v0, cur], planned from the add lineage — sound under
-    // retain-mode compaction, loud (never partial) under vacuum
-    val delta = readCorpus(s, corpusDir, asOf = app.cur, since = Some(app.v0))
-    val deltaRows = delta.count()
-    if (deltaRows == 0L) {
-      // compaction-only window: the logical corpus is unchanged — just
-      // re-pin the covered version, no assignment, no index commit
-      return IvfStore.advance(s, root, meta)(_.put("corpusVersion", app.cur): Unit)
-    }
-    val assignedDelta =
-      Similarity.assignRouted(delta, frozen.coarse, frozen.centRouted, k)
-    // delta bytes from the same lineage-planned shard set the read used
-    val deltaBytes = kvShardBytes(corpusDir,
-      KvStore.deltaShards(corpusDir, app.v0, Some(app.cur)))
-    assignedDelta
-      .select(col("vec_id"), col("embedding"), col("cell"))
-      .repartitionByRange(IvfStore.indexShards(s, deltaBytes, 4), col("vec_id"))
-      .write.format("graft-kv")
-      .option("catalog", IvfStore.assignedCatalog("ivf_assigned"))
-      .option("path", s"$root/assigned")
-      .mode("append").save()
-    System.err.println(
-      s"[graft] IvfKvStore: appended $deltaRows vectors (manifest window " +
-        s"(${app.v0}, ${app.cur}]) to the persisted index at $root against " +
-        s"frozen k=$k centroids")
-    IvfStore.advance(s, root, meta) { node =>
-      node.put("corpusVersion", app.cur)
-      node.put("n", meta.path("n").asLong() + deltaRows)
-      node.put("appendedRows", meta.path("appendedRows").asLong() + deltaRows)
-    }
-  }
+  /** [[IvfStore.lifecycle]] over the manifest classifier: load when
+    * fresh; build when absent; append-incrementally extend a pure-append
+    * window within `graft.ivfMaxAppendFrac` (by rows since the original
+    * build — exact here, the manifest counts rows); PATCH a rewrite
+    * window whose touched region stays within `graft.ivfMaxDmlFrac`
+    * (re-assigning only the region against the frozen centroids);
+    * otherwise refuse. */
+  def ensure(s: SparkSession, corpusDir: String): IvfIndex =
+    open(s, corpusDir, maintain = true)
+
+  private def open(s: SparkSession, corpusDir: String, maintain: Boolean): IvfIndex =
+    IvfStore.lifecycle(s, indexRoot(corpusDir), s"KV corpus $corpusDir", maintain)(
+      buildLocked(s, corpusDir))(classify(s, corpusDir, _))
 
   /** The TOUCHED KEY REGION of a rewrite window (v0, live]: the union
     * of key ranges of every shard the window removed or created. Any
@@ -219,11 +219,10 @@ object IvfKvStore {
     * manifests alone, no data scan. Returns the region with the LIVE
     * row counts (region rows to re-assign, total corpus rows); None
     * when v0's manifest is unavailable (history vacuumed / version
-    * moved backwards / nothing actually changed) — the caller must
-    * fall back to refuse-or-rebuild. */
-  private def dmlRegion(corpusDir: String, v0: Long)
+    * moved backwards / nothing actually changed) — only a rebuild
+    * covers the window then. */
+  private def dmlRegion(corpusDir: String, v0: Long, live: KvTableMeta)
       : Option[(Seq[KeyRanges.Range], Long, Long)] = {
-    val live = KvStore.readMeta(corpusDir)
     if (live.version <= v0) return None
     val old =
       try KvStore.readMetaAsOf(corpusDir, Some(v0))
@@ -251,167 +250,6 @@ object IvfKvStore {
           BytesCodec.decodeKey(LongType, hi).asInstanceOf[Long])
       case r => throw new IllegalStateException(s"unbounded region range $r")
     }.reduce(_ || _)
-
-  /** DML-incremental maintenance: patch the index through a rewrite
-    * window at cost ∝ the TOUCHED REGION, not the corpus.
-    *
-    * Under frozen centroids the assignment of a row depends on nothing
-    * but the row and the centroids, so the correct post-DML state of
-    * the assigned table over the touched region is simply
-    * `assignRouted(live rows of the region)` — unchanged rows
-    * re-derive their identical cells, updated rows get their new
-    * cells, deleted rows are absent, added rows appear. One
-    * range-pruned scan of the live region, one frozen-centroid
-    * assignment, and one `replaceKeyRanges` commit on the assigned
-    * table (fenced by `expectedVersion` against concurrent
-    * maintainers) — the same primitive the corpus DML itself used.
-    *
-    * Bounds: region rows / corpus ≤ `graft.ivfMaxDmlFrac` (default
-    * 0.5 — past that a full rebuild is the cheaper and better-quality
-    * answer), and the EXACT changed-row count (diffed against the
-    * pinned v0 region read, cost ∝ region) joins the cumulative
-    * centroid-drift budget checked against `graft.ivfMaxAppendFrac`.
-    * If v0's shard files are already vacuumed the drift diff falls
-    * back to the conservative region row count.
-    *
-    * Crash contract unchanged: `_ivfmeta.json` is the commit point; a
-    * crash after the assigned-table replace but before the meta write
-    * leaves a version mismatch that the next ensure() detects and
-    * answers with a full rebuild. */
-  private def dmlIncrementLocked(s: SparkSession, corpusDir: String,
-                                 rw: KvRewrite, rebuildOk: Boolean): IvfIndex = {
-    val root = indexRoot(corpusDir)
-    val meta = IvfStore.readIvfMeta(root)
-    if (IvfStore.dangling(root, meta)) return buildLocked(s, corpusDir)
-    dmlRegion(corpusDir, rw.v0) match {
-      case None =>
-        if (rebuildOk) buildLocked(s, corpusDir) else staleError(root, rw)
-      case Some((ranges, regionRows, liveTotal)) =>
-        val maxDml = s.conf.get("graft.ivfMaxDmlFrac", "0.5").toDouble
-        val regionFrac = regionRows.toDouble / math.max(1L, liveTotal)
-        if (regionFrac > maxDml) {
-          if (rebuildOk) return buildLocked(s, corpusDir)
-          throw new IllegalStateException(
-            f"persisted IVF index at $root: rewrite window (${rw.v0}, ${rw.cur}] " +
-              f"touches $regionRows of $liveTotal corpus rows " +
-              f"($regionFrac%.3f > graft.ivfMaxDmlFrac=$maxDml%.2f) — a full " +
-              "rebuild is cheaper than patching most of the index " +
-              "(set graft.ivfRebuildOnStale=true to rebuild automatically)")
-        }
-        val k = meta.path("k").asLong()
-        val frozen = IvfStore.loadPinned(s, root, meta)
-        val pred = regionPredicate(ranges)
-        val region = readCorpus(s, corpusDir, asOf = rw.cur, since = None)
-          .filter(pred)
-        // exact centroid-drift contribution: rows of the live region
-        // the frozen centroids never saw (changed or added), diffed
-        // against the pinned v0 region — cost ∝ region. Vacuumed v0
-        // history (manifest archive or shard files — both surface as
-        // the KV layer's "unavailable" IllegalArgumentException at
-        // planning) degrades to the conservative region row count;
-        // anything else (schema error, task failure) is a real bug and
-        // must propagate, not be silently converted into drift.
-        val changedOrAdded =
-          try {
-            val oldRegion = readCorpus(s, corpusDir, asOf = rw.v0, since = None)
-              .filter(pred)
-            region.join(oldRegion, Seq("vec_id", "embedding"), "left_anti").count()
-          } catch {
-            case e: IllegalArgumentException if e.getMessage != null &&
-                e.getMessage.contains("unavailable") =>
-              System.err.println(
-                s"[graft] IvfKvStore: pinned v${rw.v0} region read unavailable " +
-                  s"(${e.getMessage}); using the conservative drift bound " +
-                  s"of $regionRows region rows")
-              regionRows
-          }
-        val drift =
-          (meta.path("appendedRows").asLong() + changedOrAdded).toDouble /
-            math.max(1L, liveTotal)
-        val maxFrac = s.conf.get("graft.ivfMaxAppendFrac", "0.25").toDouble
-        if (drift > maxFrac) {
-          if (rebuildOk) return buildLocked(s, corpusDir)
-          throw new IllegalStateException(
-            f"persisted IVF index at $root: rewrite window (${rw.v0}, ${rw.cur}] " +
-              f"is patchable, but cumulative rows unseen by the frozen centroids " +
-              f"reach $drift%.3f of the corpus, past " +
-              f"graft.ivfMaxAppendFrac=$maxFrac%.2f — the drift budget is " +
-              "spent; full rebuild required (set graft.ivfRebuildOnStale=true)")
-        }
-        // region bytes ≈ the region's row share of the live corpus bytes
-        val liveM = KvStore.readMeta(corpusDir)
-        val regionBytes =
-          kvShardBytes(corpusDir, liveM.shards) * regionRows /
-            math.max(1L, liveTotal)
-        Similarity.assignRouted(region, frozen.coarse, frozen.centRouted, k)
-          .select(col("vec_id"), col("embedding"), col("cell"))
-          .repartitionByRange(IvfStore.indexShards(s, regionBytes, 4),
-            col("vec_id"))
-          .write.format("graft-kv")
-          .option("catalog", IvfStore.assignedCatalog("ivf_assigned"))
-          .option("path", s"$root/assigned")
-          .option("replaceKeyRanges", KeyRanges.serializeBounded(ranges))
-          .option("expectedVersion", meta.path("assignedVersion").asLong())
-          .mode("overwrite").save()
-        System.err.println(
-          s"[graft] IvfKvStore: patched the rewrite window (${rw.v0}, ${rw.cur}] " +
-            s"by re-assigning $regionRows region rows ($changedOrAdded changed/" +
-            s"added) against frozen k=$k centroids at $root")
-        IvfStore.advance(s, root, meta) { node =>
-          node.put("corpusVersion", rw.cur)
-          node.put("n", liveTotal)
-          node.put("appendedRows", meta.path("appendedRows").asLong() + changedOrAdded)
-        }
-    }
-  }
-
-  /** Load when fresh; build when absent; append-incrementally extend a
-    * pure-append manifest window within `graft.ivfMaxAppendFrac` (by
-    * rows since the original build — exact here, the manifest counts
-    * rows); DML-incrementally PATCH a rewrite window whose touched
-    * region stays within `graft.ivfMaxDmlFrac` (re-assigning only the
-    * region against the frozen centroids); otherwise refuse unless
-    * `graft.ivfRebuildOnStale=true`. */
-  def ensure(s: SparkSession, corpusDir: String): IvfIndex =
-    KvStore.withTableLock(indexRoot(corpusDir)) {
-      val root = indexRoot(corpusDir)
-      def rebuildOk = s.conf.get("graft.ivfRebuildOnStale", "false").toBoolean
-      if (!IvfStore.metaFile(root).exists()) buildLocked(s, corpusDir)
-      else {
-        val meta = IvfStore.readIvfMeta(root)
-        classify(corpusDir, meta) match {
-          case KvFresh => IvfStore.loadPinned(s, root, meta)
-          case app: KvAppend =>
-            val incremental = s.conf.get("graft.ivfIncremental", "true").toBoolean
-            val maxFrac = s.conf.get("graft.ivfMaxAppendFrac", "0.25").toDouble
-            // row-exact drift from the manifests: rows added since the
-            // centroids were fit, over the corpus now (no data scan —
-            // shard row counts come from the lineage-enumerated window)
-            val deltaRows = KvStore.deltaShards(corpusDir, app.v0, Some(app.cur))
-              .map(_.rows).sum
-            val total = meta.path("n").asLong() + deltaRows
-            val drift =
-              (meta.path("appendedRows").asLong() + deltaRows).toDouble /
-                math.max(1L, total)
-            if (!incremental) staleError(root, app)
-            else if (drift > maxFrac) {
-              if (rebuildOk) buildLocked(s, corpusDir)
-              else throw new IllegalStateException(
-                f"persisted IVF index at $root: manifest window (${app.v0}, " +
-                  f"${app.cur}] is a pure append but cumulative appended rows " +
-                  f"since the original build reach $drift%.3f of the corpus, " +
-                  f"past graft.ivfMaxAppendFrac=$maxFrac%.2f — the frozen " +
-                  "centroids' drift bound is spent; full rebuild required " +
-                  "(set graft.ivfRebuildOnStale=true to rebuild automatically)")
-            } else incrementLocked(s, corpusDir, app)
-          case rw: KvRewrite =>
-            val incremental = s.conf.get("graft.ivfIncremental", "true").toBoolean
-            if (incremental) dmlIncrementLocked(s, corpusDir, rw, rebuildOk)
-            else if (rebuildOk) buildLocked(s, corpusDir)
-            else staleError(root, rw)
-        }
-      }
-    }
 
   // ---- q117: the whole composition, oracle-checked ----
 

@@ -9,6 +9,7 @@ import graft.{Q, Tables}
 import graft.kv.KvStore
 import graft.util.Dirs.{cacheKey, rmrf, writeAtomic}
 import graft.queries.Similarity.IvfIndex
+import graft.sources.KeyRanges
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -47,23 +48,23 @@ import org.apache.spark.sql.functions._
   *
   *  - PURE APPEND — every file the index was built from is still
   *    present byte-identical (path, length, mtime) and new files
-  *    exist. [[ensure]] applies an APPEND-INCREMENTAL update (default
-  *    `graft.ivfIncremental=true`): only the new files' vectors are
-  *    read and assigned against the FROZEN centroids, and the result is
-  *    append-committed to the `assigned` KV table — update cost is
-  *    Θ(delta·(c + k/c)) cosine evaluations, proportional to the delta,
-  *    never to the corpus. k/c/centroids do not change, so an
-  *    incrementally-extended index drifts from a fresh rebuild only in
-  *    quantization QUALITY, bounded by the appended fraction the meta
-  *    records (`appendedRows`/`n`, and by bytes vs `baseBytes`); past
-  *    `graft.ivfMaxAppendFrac` (default 0.25 by bytes) ensure() demands
-  *    a full rebuild instead.
+  *    exist. [[ensure]] applies an APPEND-INCREMENTAL update: only the
+  *    new files' vectors are read and assigned against the FROZEN
+  *    centroids, and the result is append-committed to the `assigned`
+  *    KV table — update cost is Θ(delta·(c + k/c)) cosine evaluations,
+  *    proportional to the delta, never to the corpus. k/c/centroids do
+  *    not change, so an incrementally-extended index drifts from a
+  *    fresh rebuild only in quantization QUALITY, bounded by the
+  *    appended fraction the meta records (`appendedRows`/`n`, and by
+  *    bytes vs `baseBytes`); past `graft.ivfMaxAppendFrac` (default
+  *    0.25 by bytes) ensure() refuses and the caller runs [[build]].
   *  - REWRITE — a built-from file changed or disappeared: assignments
   *    already in the index may describe vectors that no longer exist,
-  *    so only a full rebuild is sound. Refused with a rebuild hint
-  *    (`graft.ivfRebuildOnStale=true` lets ensure() rebuild; the
-  *    default refuses — silently rebuilding a 100 TB index on what may
-  *    be a misconfigured path is worse than failing).
+  *    so only a full rebuild is sound. Refused with a rebuild hint.
+  *
+  * The policy over these classifications is [[lifecycle]], shared with
+  * [[IvfKvStore]]; this store supplies only the file-listing classifier
+  * and the byte drift.
   *
   * The incremental contract assumes appended files carry NEW rowkeys
   * (the definition of an append-only corpus); re-introducing an
@@ -84,7 +85,7 @@ object IvfStore {
 
   private val mapper = new ObjectMapper()
 
-  private[queries] def centCatalog(name: String) =
+  private def centCatalog(name: String) =
     s"""{"table":{"name":"$name"},"rowkey":"cid",
        | "columns":{"cid":{"cf":"rowkey","col":"cid","type":"int"},
        |            "gid":{"cf":"i","col":"g","type":"int"},
@@ -106,7 +107,7 @@ object IvfStore {
 
   private[graft] def metaFile(root: String) = new File(s"$root/_ivfmeta.json")
 
-  private[queries] def readIvfMeta(root: String): JsonNode =
+  private def readIvfMeta(root: String): JsonNode =
     mapper.readTree(metaFile(root))
 
   private def pretty(node: JsonNode): Array[Byte] =
@@ -171,58 +172,68 @@ object IvfStore {
       .map(f => (base.toPath.relativize(f.toPath).toString, f))
   }
 
-  private def listingEntries(sfDir: String): Seq[String] =
-    corpusDataFiles(sfDir).map { case (rel, f) =>
-      s"$rel:${f.length()}:${f.lastModified()}"
-    }
+  private def listingEntries(files: Seq[(String, File)]): Seq[String] =
+    files.map { case (rel, f) => s"$rel:${f.length()}:${f.lastModified()}" }
 
   /** Corpus freshness fingerprint: md5 over the sorted
     * (relative path, length, mtime) data-file listing — file-level
     * metadata only, no data read. Any rewrite, append, repartition or
     * regeneration of the corpus changes it. */
-  private[queries] def corpusFingerprint(sfDir: String): String = md5Of(listingEntries(sfDir))
+  private[queries] def corpusFingerprint(sfDir: String): String =
+    md5Of(listingEntries(corpusDataFiles(sfDir)))
 
   private def md5Of(entries: Seq[String]): String =
     java.security.MessageDigest.getInstance("MD5")
       .digest(entries.mkString("\n").getBytes("UTF-8"))
       .map("%02x".format(_)).mkString
 
-  /** How the corpus moved relative to the listing a meta recorded. */
-  private[queries] sealed trait CorpusDelta
-  private[queries] case object CorpusFresh extends CorpusDelta
-  /** Every built-from file intact; `newFiles` appeared. Byte counts are
-    * from the listing stats (no scan): `newBytes` = appended since the
-    * LAST meta write, `totalBytes` = whole corpus now. */
-  private[queries] final case class CorpusAppend(
-      newFiles: Seq[File], newBytes: Long, totalBytes: Long) extends CorpusDelta
-  private[queries] final case class CorpusRewrite(
-      changed: Seq[String], removed: Seq[String]) extends CorpusDelta
+  /** Record a data-file listing and its fingerprint in a meta node. */
+  private def stampListing(files: Seq[String])(node: ObjectNode): Unit = {
+    node.put("fingerprint", md5Of(files))
+    val farr = node.putArray("files")
+    files.foreach(farr.add)
+  }
 
-  private def classify(meta: com.fasterxml.jackson.databind.JsonNode,
-                       sfDir: String): CorpusDelta = {
+  /** The parquet corpus's classifier: the current data-file listing
+    * against the one the meta recorded. The drift is by bytes and
+    * cumulative since the centroids were FIT (`baseBytes`), not since
+    * the last update — repeated small appends must not sneak past the
+    * quality bound. */
+  private def classify(s: SparkSession, sfDir: String, meta: JsonNode): Movement = {
     val current = corpusDataFiles(sfDir)
-    val curEntries = current.map { case (rel, f) =>
-      s"$rel:${f.length()}:${f.lastModified()}"
-    }
-    if (md5Of(curEntries) == meta.path("fingerprint").asText()) return CorpusFresh
+    val curEntries = listingEntries(current)
+    if (md5Of(curEntries) == meta.path("fingerprint").asText()) return Fresh
+    def rewritten(changed: Seq[String], removed: Seq[String]) = Stale(
+      s"the corpus was REWRITTEN in place (${changed.size} changed, " +
+        s"${removed.size} removed data files" +
+        (changed ++ removed).take(3).mkString(": ", ", ", "") +
+        "), so assignments in the index may describe vectors that no longer exist")
     val storedNode = meta.path("files")
     if (!storedNode.isArray)
       // pre-listing meta (or hand-edited): cannot prove pure append —
       // the only sound reading of an unclassifiable mismatch is rewrite
-      return CorpusRewrite(Seq("<index predates file-listing metadata>"), Nil)
+      return rewritten(Seq("<index predates file-listing metadata>"), Nil)
     import scala.jdk.CollectionConverters._
     val stored = storedNode.elements().asScala.map(_.asText()).toSeq
     def relOf(e: String) = e.substring(0, e.lastIndexOf(':', e.lastIndexOf(':') - 1))
     val curByRel = curEntries.map(e => relOf(e) -> e).toMap
     val changed = stored.filter(e => curByRel.get(relOf(e)).exists(_ != e)).map(relOf)
     val removed = stored.filterNot(e => curByRel.contains(relOf(e))).map(relOf)
-    if (changed.nonEmpty || removed.nonEmpty) return CorpusRewrite(changed, removed)
-    val storedRels = stored.map(relOf).toSet
-    val newFiles = current.filterNot { case (rel, _) => storedRels(rel) }
+    if (changed.nonEmpty || removed.nonEmpty) return rewritten(changed, removed)
     // all stored files intact and fingerprint differs ⇒ new files exist
-    CorpusAppend(newFiles.map(_._2),
-      newBytes = newFiles.map(_._2.length()).sum,
-      totalBytes = current.map(_._2.length()).sum)
+    val storedRels = stored.map(relOf).toSet
+    val newFiles = current.collect { case (rel, f) if !storedRels(rel) => f }
+    val newBytes = newFiles.map(_.length()).sum
+    val totalBytes = current.map(_._2.length()).sum
+    Appended(
+      f"the corpus GREW BY PURE APPEND (${newFiles.size} new data files, " +
+        f"${100.0 * newBytes / math.max(1L, totalBytes)}%.1f%% of corpus bytes)",
+      drift = (totalBytes - meta.path("baseBytes").asLong()).toDouble /
+        math.max(1L, totalBytes),
+      bytes = newBytes,
+      rows = () => s.read.parquet(newFiles.map(_.getPath): _*)
+        .select(col("vec_id"), col("embedding").cast("array<float>").as("embedding")),
+      stamp = stampListing(curEntries))
   }
 
   /** Build the index from the corpus and commit it: both KV tables, then
@@ -235,15 +246,11 @@ object IvfStore {
     KvStore.withTableLock(indexRoot(sfDir)) { buildLocked(s, sfDir) }
 
   private def buildLocked(s: SparkSession, sfDir: String): IvfIndex = {
-    val files = listingEntries(sfDir)
+    val files = corpusDataFiles(sfDir)
+    val stamp = stampListing(listingEntries(files)) _ // stat before the build reads
     val idx = Similarity.ivfIndex(s, sfDir)
-    val corpusBytes = corpusDataFiles(sfDir).map(_._2.length()).sum
-    writeIndex(s, indexRoot(sfDir), sfDir, idx, corpusBytes,
-      recordBaseBytes = true) { node =>
-      node.put("fingerprint", md5Of(files))
-      val farr = node.putArray("files")
-      files.foreach(farr.add)
-    }
+    writeIndex(s, indexRoot(sfDir), sfDir, idx, files.map(_._2.length()).sum,
+      recordBaseBytes = true)(stamp)
   }
 
   // ---- the IVF commit path, shared with IvfKvStore ----
@@ -301,19 +308,52 @@ object IvfStore {
     writeAtomic(metaFile(root), pretty(node))
   }
 
-  /** Commit an incremental update whose KV write on `assigned` already
-    * landed: copy `meta`, let `fields` advance its counters, pin the
-    * table's new version and commit, self-compact
-    * ([[maybeCompactAssigned]]), and return the pinned reload. Every
-    * incremental IVF update — append, DML patch, compaction-only
-    * re-pin, orphan adoption, stream batch — ends here. */
-  private[queries] def advance(s: SparkSession, root: String, meta: JsonNode)
-                              (fields: ObjectNode => Unit): IvfIndex = {
+  /** Commit an incremental update whose KV write on `assigned` (if any)
+    * already landed: copy `meta`, set `n` vectors, add `unseen` rows the
+    * frozen centroids never saw to `appendedRows`, let `stamp` record
+    * the corpus state, pin the table's new version and commit,
+    * self-compact ([[maybeCompactAssigned]]), and return the pinned
+    * reload. Every incremental IVF update — append, DML patch, empty-
+    * delta re-pin, orphan adoption, stream batch — ends here. */
+  private def advance(s: SparkSession, root: String, meta: JsonNode, n: Long, unseen: Long)
+                     (stamp: ObjectNode => Unit): IvfIndex = {
     val node = meta.deepCopy[ObjectNode]()
-    fields(node)
+    stamp(node)
+    node.put("n", n)
+    node.put("appendedRows", meta.path("appendedRows").asLong() + unseen)
     commitMeta(root, node)
     maybeCompactAssigned(s, root)
     loadPinned(s, root, readIvfMeta(root))
+  }
+
+  /** The one frozen-centroid write to `assigned`: assign `rows` against
+    * the centroids pinned in `meta`, commit them in `shards` vec_id range
+    * shards with the write `opts` (an append; an overwrite when
+    * `replaceKeyRanges` names the key ranges it replaces), then
+    * [[advance]] the meta. The parquet and KV appends, the KV region
+    * patch and [[maintainBatch]] all write through here; the full build
+    * ([[writeIndex]]) stays separate. `crashAfterAppend` stops right
+    * after the KV commit — the state a crash between the two commits
+    * leaves — and returns the still-pinned index. */
+  private def assignFrozen(s: SparkSession, root: String, meta: JsonNode, rows: DataFrame,
+                           shards: Int, opts: Map[String, String], n: Long, unseen: Long,
+                           crashAfterAppend: Boolean = false)
+                          (stamp: ObjectNode => Unit): IvfIndex = {
+    val frozen = loadPinned(s, root, meta)
+    // register on the rows' session too: inside a streaming foreachBatch
+    // the batch frame belongs to the stream's CLONED session (registry
+    // copied at stream start), so registering on `s` alone can leave
+    // cosine_sim unresolvable in the session that analyzes this plan
+    graft.functions.CosineSimilarity.register(rows.sparkSession)
+    Similarity.assignRouted(rows, frozen.coarse, frozen.centRouted, frozen.nlist)
+      .select(col("vec_id"), col("embedding"), col("cell"))
+      .repartitionByRange(shards, col("vec_id"))
+      .write.format("graft-kv")
+      .option("catalog", assignedCatalog("ivf_assigned"))
+      .option("path", s"$root/assigned")
+      .options(opts)
+      .mode(if (opts.contains("replaceKeyRanges")) "overwrite" else "append").save()
+    if (crashAfterAppend) frozen else advance(s, root, meta, n, unseen)(stamp)
   }
 
   /** The dangling-commit guard of every incremental update: a KV table
@@ -322,7 +362,7 @@ object IvfStore {
     * would double-insert that delta. Reads still serve the last
     * consistent state (they pin the meta's versions); the sound
     * recovery is a full rebuild — the caller's answer to `true`. */
-  private[queries] def dangling(root: String, meta: JsonNode): Boolean = {
+  private def dangling(root: String, meta: JsonNode): Boolean = {
     val ahead =
       KvStore.readMeta(s"$root/assigned").version != meta.path("assignedVersion").asLong() ||
         KvStore.readMeta(s"$root/centroids").version != meta.path("centroidsVersion").asLong()
@@ -331,6 +371,114 @@ object IvfStore {
         "of _ivfmeta.json — a prior update crashed between its KV commit and its " +
         "meta commit); falling back to a full rebuild")
     ahead
+  }
+
+  // ---- the one ensure/load policy, shared with IvfKvStore ----
+
+  /** How a corpus moved since the state `_ivfmeta.json` covers, as each
+    * store's classifier reads it: the file listing of a parquet corpus
+    * here, the manifest of a graft-kv corpus in [[IvfKvStore]]. `what`
+    * names the move in refusals. */
+  private[queries] sealed trait Movement { def what: String }
+  private[queries] case object Fresh extends Movement { def what = "the corpus is unchanged" }
+  /** A move only a full rebuild covers. */
+  private[queries] final case class Stale(what: String) extends Movement
+  /** A pure append. `drift` is the fraction of the corpus the frozen
+    * centroids have not seen once the append is indexed (by bytes for a
+    * parquet corpus, by rows for a KV one); `rows` reads the appended
+    * vectors, `bytes` sizes their write, `stamp` records the corpus
+    * state they bring the index to. */
+  private[queries] final case class Appended(what: String, drift: Double, bytes: Long,
+      rows: () => DataFrame, stamp: ObjectNode => Unit) extends Movement
+  /** A KV rewrite window whose touched key `ranges` hold `regionRows` of
+    * the `total` live rows: `rows` reads the live region, `unseen`
+    * counts its rows the frozen centroids never saw (changed or added),
+    * `bytes` sizes the region's write. */
+  private[queries] final case class Rewritten(what: String, ranges: Seq[KeyRanges.Range],
+      regionRows: Long, total: Long, bytes: Long, rows: () => DataFrame,
+      unseen: () => Long, stamp: ObjectNode => Unit) extends Movement
+
+  /** The one refusal of both stores: names the corpus move and why
+    * maintenance cannot cover it, and points at `build`. */
+  private def refuse(root: String, what: String, why: String): Nothing =
+    throw new IllegalStateException(
+      s"persisted IVF index at $root was built against a different corpus state: " +
+        s"$what; $why — run build for a full rebuild")
+
+  /** The one ensure/load policy of both IVF stores; `classify` is the
+    * store's own classifier, `build` its locked full build:
+    *
+    *  - fresh → the pinned load;
+    *  - absent → `build`;
+    *  - [[Appended]] within `graft.ivfMaxAppendFrac` (default 0.25) → a
+    *    frozen-centroid increment; an empty delta only re-pins the meta;
+    *  - [[Rewritten]] whose region is within `graft.ivfMaxDmlFrac`
+    *    (default 0.5 — past it a rebuild is the cheaper and better-
+    *    quality answer) and whose drift is within
+    *    `graft.ivfMaxAppendFrac` → a region patch: one `replaceKeyRanges`
+    *    commit fenced by `expectedVersion` against concurrent maintainers;
+    *  - anything else → one refusal that names the move; the caller runs
+    *    `build`. ensure() never rebuilds on its own — silently
+    *    rebuilding a 100 TB index on what may be a misconfigured path is
+    *    worse than failing.
+    *
+    * The one rebuild ensure() runs itself is crash recovery: a
+    * [[dangling]] commit found before maintenance. `maintain = false` is
+    * the read-only load: an absent index or any move refuses. ensure()
+    * holds the index-root table lock throughout. */
+  private[queries] def lifecycle(s: SparkSession, root: String, corpus: String,
+                                 maintain: Boolean)(build: => IvfIndex)
+                                (classify: JsonNode => Movement): IvfIndex = {
+    def run(): IvfIndex = {
+      val mf = metaFile(root)
+      if (!mf.exists()) {
+        if (maintain) return build
+        throw new IllegalStateException(s"no persisted IVF index for $corpus " +
+          s"(expected ${mf.getPath}); run build or ensure first")
+      }
+      val meta = readIvfMeta(root)
+      val n = meta.path("n").asLong()
+      def withinDrift(what: String, drift: Double): Unit = {
+        val maxFrac = s.conf.get("graft.ivfMaxAppendFrac", "0.25").toDouble
+        if (drift > maxFrac) refuse(root, what, f"the cumulative fraction $drift%.3f " +
+          f"of the corpus unseen by the frozen centroids exceeds " +
+          f"graft.ivfMaxAppendFrac=$maxFrac%.2f, so their drift bound is spent")
+      }
+      def assign(note: String, rows: DataFrame, bytes: Long, opts: Map[String, String],
+                 nAfter: Long, unseen: Long, stamp: ObjectNode => Unit): IvfIndex = {
+        System.err.println(s"[graft] IvfStore: assigning $note against frozen " +
+          s"k=${meta.path("k").asLong()} centroids at $root")
+        assignFrozen(s, root, meta, rows, indexShards(s, bytes, 4), opts, nAfter, unseen)(stamp)
+      }
+      classify(meta) match {
+        case Fresh => loadPinned(s, root, meta)
+        case m if !maintain => refuse(root, m.what, "load() never mutates the index")
+        case Stale(what) => refuse(root, what, "only a full rebuild is sound")
+        case _ if dangling(root, meta) => build
+        case a: Appended =>
+          withinDrift(a.what, a.drift)
+          val rows = a.rows()
+          val added = rows.count()
+          if (added == 0L) advance(s, root, meta, n, 0L)(a.stamp)
+          else assign(s"$added appended vectors", rows, a.bytes, Map.empty,
+            n + added, added, a.stamp)
+        case r: Rewritten =>
+          val maxDml = s.conf.get("graft.ivfMaxDmlFrac", "0.5").toDouble
+          val regionFrac = r.regionRows.toDouble / math.max(1L, r.total)
+          if (regionFrac > maxDml) refuse(root, r.what,
+            f"the window touches ${r.regionRows} of ${r.total} live rows ($regionFrac%.3f " +
+              f"> graft.ivfMaxDmlFrac=$maxDml%.2f), so a rebuild is cheaper than a patch")
+          val unseen = r.unseen()
+          withinDrift(r.what, (meta.path("appendedRows").asLong() + unseen).toDouble /
+            math.max(1L, r.total))
+          assign(s"${r.regionRows} rows of a rewritten region ($unseen changed or added)",
+            r.rows(), r.bytes,
+            Map("replaceKeyRanges" -> KeyRanges.serializeBounded(r.ranges),
+              "expectedVersion" -> meta.path("assignedVersion").asLong().toString),
+            r.total, unseen, r.stamp)
+      }
+    }
+    if (maintain) KvStore.withTableLock(root)(run()) else run()
   }
 
   /** Stage a scenario ONCE per source corpus, under the staging root's
@@ -371,46 +519,14 @@ object IvfStore {
     df.select(col("vec_id")).orderBy(col("vec_id")).limit(m.toInt)
       .agg(max(col("vec_id"))).head().getLong(0)
 
-  private def staleError(root: String, sfDir: String, delta: CorpusDelta): Nothing =
-    delta match {
-      case CorpusRewrite(changed, removed) => throw new IllegalStateException(
-        s"persisted IVF index at $root was built against a different corpus state: " +
-          s"the corpus was REWRITTEN in place (${changed.size} changed, " +
-          s"${removed.size} removed data files" +
-          (changed ++ removed).take(3).mkString(": ", ", ", "") +
-          ") — assignments in the index may describe vectors that no longer " +
-          "exist, so a full rebuild is required: run IvfStore.build, or set " +
-          "graft.ivfRebuildOnStale=true to let ensure() rebuild automatically")
-      case CorpusAppend(newFiles, newBytes, totalBytes) => throw new IllegalStateException(
-        s"persisted IVF index at $root was built against a different corpus state: " +
-          f"the corpus GREW BY PURE APPEND (${newFiles.size} new data files, " +
-          f"${100.0 * newBytes / math.max(1L, totalBytes)}%.1f%% of corpus bytes) — " +
-          "ensure() applies an append-incremental update when " +
-          "graft.ivfIncremental=true (the default) and the appended fraction " +
-          "is within graft.ivfMaxAppendFrac; load() itself never mutates the index")
-      case CorpusFresh => throw new IllegalStateException("unreachable: fresh")
-    }
-
   /** Cold-load the persisted index: meta parse + fingerprint stat + two
     * KV table reads. NO corpus scan, NO assignment work — this is the
     * path a fresh session probes through. Refuses loudly when the
     * corpus has changed since the build (saying HOW it changed — pure
     * append vs rewrite) or no index exists; load never mutates. */
-  def load(s: SparkSession, sfDir: String): IvfIndex = {
-    val root = indexRoot(sfDir)
-    val mf = metaFile(root)
-    if (!mf.exists()) throw new IllegalStateException(
-      s"no persisted IVF index for $sfDir (expected ${mf.getPath}); " +
-        "run IvfStore.build/ensure first")
-    val meta = readIvfMeta(root)
-    classify(meta, sfDir) match {
-      case CorpusFresh => loadPinned(s, root, meta)
-      case delta => staleError(root, sfDir, delta)
-    }
-  }
+  def load(s: SparkSession, sfDir: String): IvfIndex = open(s, sfDir, maintain = false)
 
-  private[queries] def loadPinned(s: SparkSession, root: String,
-                         meta: com.fasterxml.jackson.databind.JsonNode): IvfIndex = {
+  private def loadPinned(s: SparkSession, root: String, meta: JsonNode): IvfIndex = {
     val k = meta.path("k").asLong()
     val c = meta.path("c").asLong()
     graft.functions.CosineSimilarity.register(s)
@@ -437,90 +553,15 @@ object IvfStore {
     IvfIndex(coarse, centRouted, assigned, k, meta.path("n").asLong())
   }
 
-  /** Append-incremental update (caller holds the table lock and has
-    * classified the corpus as [[CorpusAppend]]): read ONLY the appended
-    * files, assign them against the FROZEN centroids (pinned at the
-    * build's manifest version), append-commit to the `assigned` KV
-    * table, then advance the meta — fingerprint, listing, counts, and
-    * the new assigned version — atomically. Cost ∝ delta, not corpus:
-    * the only corpus-sized relations touched are the centroid tables
-    * (k rows) and the appended files themselves. */
-  private def incrementLocked(s: SparkSession, sfDir: String,
-                              app: CorpusAppend): IvfIndex = {
-    val root = indexRoot(sfDir)
-    val meta = readIvfMeta(root)
-    if (dangling(root, meta)) return buildLocked(s, sfDir)
-    val k = meta.path("k").asLong()
-    val frozen = loadPinned(s, root, meta)
-    graft.functions.CosineSimilarity.register(s)
-    val delta = s.read.parquet(app.newFiles.map(_.getPath): _*)
-      .select(col("vec_id"), col("embedding").cast("array<float>").as("embedding"))
-    val assignedDelta =
-      Similarity.assignRouted(delta, frozen.coarse, frozen.centRouted, k)
-    assignedDelta
-      .select(col("vec_id"), col("embedding"), col("cell"))
-      .repartitionByRange(indexShards(s, app.newBytes, 4), col("vec_id"))
-      .write.format("graft-kv")
-      .option("catalog", assignedCatalog("ivf_assigned"))
-      .option("path", s"$root/assigned")
-      .mode("append").save()
-    // bounded scalar: one count over the DELTA files only
-    val deltaRows = delta.count()
-    val files = listingEntries(sfDir)
-    System.err.println(
-      s"[graft] IvfStore: appended $deltaRows vectors (${app.newFiles.size} files) " +
-        s"to the persisted index at $root against frozen k=$k centroids")
-    advance(s, root, meta) { node =>
-      node.put("fingerprint", md5Of(files))
-      val farr = node.putArray("files")
-      files.foreach(farr.add)
-      node.put("n", meta.path("n").asLong() + deltaRows)
-      node.put("appendedRows", meta.path("appendedRows").asLong() + deltaRows)
-    }
-  }
-
-  /** The build-once contract: load when fresh; build when absent;
-    * append-incrementally extend on a PURE APPEND within
+  /** The build-once contract ([[lifecycle]]): load when fresh; build
+    * when absent; append-incrementally extend a PURE APPEND within
     * `graft.ivfMaxAppendFrac` (by bytes since the original build);
-    * otherwise — rewrite, or drift past the bound — refuse unless
-    * `graft.ivfRebuildOnStale=true`. */
-  def ensure(s: SparkSession, sfDir: String): IvfIndex =
-    KvStore.withTableLock(indexRoot(sfDir)) {
-      val root = indexRoot(sfDir)
-      val mf = metaFile(root)
-      def rebuildOk = s.conf.get("graft.ivfRebuildOnStale", "false").toBoolean
-      if (!mf.exists()) buildLocked(s, sfDir)
-      else {
-        val meta = readIvfMeta(root)
-        classify(meta, sfDir) match {
-          case CorpusFresh => loadPinned(s, root, meta)
-          case app: CorpusAppend =>
-            val incremental =
-              s.conf.get("graft.ivfIncremental", "true").toBoolean
-            val maxFrac =
-              s.conf.get("graft.ivfMaxAppendFrac", "0.25").toDouble
-            // cumulative drift since the centroids were FIT, not since
-            // the last update — repeated small appends must not sneak
-            // past the quality bound the threshold exists to enforce
-            val baseBytes = meta.path("baseBytes").asLong()
-            val drift =
-              (app.totalBytes - baseBytes).toDouble / math.max(1L, app.totalBytes)
-            if (!incremental) staleError(root, sfDir, app)
-            else if (drift > maxFrac) {
-              if (rebuildOk) buildLocked(s, sfDir)
-              else throw new IllegalStateException(
-                f"persisted IVF index at $root: corpus grew by pure append but the " +
-                  f"cumulative appended fraction $drift%.3f (by bytes since the " +
-                  f"original build) exceeds graft.ivfMaxAppendFrac=$maxFrac%.2f — " +
-                  "the frozen centroids' drift bound is spent; a full rebuild is " +
-                  "required (set graft.ivfRebuildOnStale=true to let ensure() " +
-                  "rebuild automatically)")
-            } else incrementLocked(s, sfDir, app)
-          case rw: CorpusRewrite =>
-            if (rebuildOk) buildLocked(s, sfDir) else staleError(root, sfDir, rw)
-        }
-      }
-    }
+    * otherwise — rewrite, or drift past the bound — refuse. */
+  def ensure(s: SparkSession, sfDir: String): IvfIndex = open(s, sfDir, maintain = true)
+
+  private def open(s: SparkSession, sfDir: String, maintain: Boolean): IvfIndex =
+    lifecycle(s, indexRoot(sfDir), sfDir, maintain)(buildLocked(s, sfDir))(
+      classify(s, sfDir, _))
 
   /** q115: the SAME adaptive IVF ANN as q53, probed through the
     * PERSISTED index — build-if-absent, then a cold load (meta +
@@ -732,10 +773,7 @@ object IvfStore {
       if (table.version == metaV + 1 && table.committedEpochs.contains(maintKey(metaV))) {
         val orphanRows =
           KvStore.deltaShards(assignedDir, metaV, Some(table.version)).map(_.rows).sum
-        advance(s, root, meta) { node =>
-          node.put("n", meta.path("n").asLong() + orphanRows)
-          node.put("appendedRows", meta.path("appendedRows").asLong() + orphanRows)
-        }
+        advance(s, root, meta, meta.path("n").asLong() + orphanRows, orphanRows)(_ => ())
         meta = readIvfMeta(root)
         System.err.println(
           s"[graft] IvfStore: adopted a dangling maintainBatch commit at $root " +
@@ -757,35 +795,10 @@ object IvfStore {
       val fresh = batch.filter(col("vec_id") > frontier)
         .select(col("vec_id"), col("embedding").cast("array<float>").as("embedding"))
       val nFresh = fresh.count()
-      if (nFresh > 0) {
-        val frozen = loadPinned(s, root, meta)
-        // register on the BATCH's session, not (only) the outer one:
-        // inside a streaming foreachBatch the batch frame belongs to the
-        // stream's CLONED session (cloned at stream start, registry
-        // copied then), so registering on `s` alone leaves cosine_sim
-        // unresolvable in the session that analyzes this plan. The bug
-        // was latent — every cold run registered it via the seed build
-        // BEFORE the stream cloned — and surfaced the first time q133
-        // ran against an already-cached stage (r21, found while
-        // profiling; reproduced on the r20 HEAD).
-        graft.functions.CosineSimilarity.register(s)
-        graft.functions.CosineSimilarity.register(batch.sparkSession)
-        Similarity.assignRouted(fresh, frozen.coarse, frozen.centRouted,
-            meta.path("k").asLong())
-          .select(col("vec_id"), col("embedding"), col("cell"))
-          .repartitionByRange(2, col("vec_id"))
-          .write.format("graft-kv")
-          .option("catalog", assignedCatalog("ivf_assigned"))
-          .option("path", assignedDir)
-          .option("epoch", maintKey(meta.path("assignedVersion").asLong()))
-          .mode("append").save()
-        // crashAfterAppend: spec-injected crash — KV committed, meta not
-        if (!crashAfterAppend)
-          advance(s, root, meta) { node =>
-            node.put("n", meta.path("n").asLong() + nFresh)
-            node.put("appendedRows", meta.path("appendedRows").asLong() + nFresh)
-          }
-      }
+      if (nFresh > 0)
+        assignFrozen(s, root, meta, fresh, shards = 2,
+          Map("epoch" -> maintKey(meta.path("assignedVersion").asLong())),
+          meta.path("n").asLong() + nFresh, nFresh, crashAfterAppend)(_ => ())
       nFresh
     }
 

@@ -421,6 +421,15 @@ object Similarity {
       .orderBy(col("q_id"), col("rk"))
   }
 
+  /** [[ivfProbeAll]]'s salted-regime fan-out S: 16 cut the 100x
+    * audit's partition max/median ratio from 3.18 to 1.43. */
+  private[graft] val ProbeSaltFactor = 16
+
+  /** [[ivfProbeAll]]'s bytes-per-query-row estimate for a relation with
+    * no row-count statistic — the calibration behind the 500k-row
+    * (≈ 150 MB) broadcast default. */
+  private val ProbeQueryRowBytes = 300L
+
   /** [[ivfProbe]] for a LARGE query relation — the batched-retrieval
     * shape a production pipeline runs (millions of queries, one plan),
     * same math, same output. [[ivfProbe]] broadcasts the query side
@@ -459,8 +468,8 @@ object Similarity {
     *    committed workload (10k queries × nProbe 4 = 40k rows).
     *  - larger probe relations: SALT the join key — `assigned` gains
     *    `pmod(hash(vec_id), S)` (uniform within each cell by
-    *    construction), probes explode ×S (`graft.ivfProbeSaltFactor`,
-    *    default 16), and the join keys on (cell, salt): the hottest
+    *    construction), probes explode ×S ([[ProbeSaltFactor]]), and
+    *    the join keys on (cell, salt): the hottest
     *    cell's candidates spread across S tasks, cutting the
     *    straggler ratio by ~S at the cost of an S×-replicated (but
     *    |Q|-sized, corpus-free) probe shuffle.
@@ -476,9 +485,9 @@ object Similarity {
     * decision only needs an ESTIMATE: the caller's `nQueriesHint` when
     * it knows its batch size (every production call site does), else
     * Catalyst's row-count statistic, else rows estimated from the
-    * optimized plan's `sizeInBytes` at `graft.ivfProbeQueryRowBytes`
-    * per row (default 300 B — exactly the calibration behind the
-    * 500k-row default ≈ 150 MB), so one row threshold governs every
+    * optimized plan's `sizeInBytes` at [[ProbeQueryRowBytes]] per row
+    * (300 B — exactly the calibration behind the 500k-row default
+    * ≈ 150 MB), so one row threshold governs every
     * path and the conf-forced regimes (`...BroadcastMaxRows = 0`)
     * keep working. A misestimate can only pick the salted regime for
     * a small batch (slower, never wrong); no code path runs an extra
@@ -492,24 +501,17 @@ object Similarity {
       s.conf.get("graft.ivfProbeBroadcastMaxRows", "500000").toLong
     val nQueriesEst: Long = nQueriesHint
       .orElse(queries.queryExecution.optimizedPlan.stats.rowCount.map(_.toLong))
-      .getOrElse {
-        val rowBytes =
-          s.conf.get("graft.ivfProbeQueryRowBytes", "300").toLong.max(1L)
-        (queries.queryExecution.optimizedPlan.stats.sizeInBytes / rowBytes).toLong
-      }
+      .getOrElse(
+        (queries.queryExecution.optimizedPlan.stats.sizeInBytes / ProbeQueryRowBytes).toLong)
     val useBroadcast = nQueriesEst * nProbe <= bcastMax
     val joined =
       if (useBroadcast)
         idx.assigned.join(broadcast(probes), Seq("cell"))
       else {
-        val saltF = s.conf.get("graft.ivfProbeSaltFactor", "16").toInt
-        require(saltF >= 1, s"graft.ivfProbeSaltFactor must be >= 1, got $saltF " +
-          "(pmod(_, 0) is null under non-ANSI semantics — the salted join " +
-          "would silently match nothing)")
         idx.assigned
-          .withColumn("salt", pmod(hash(col("vec_id")), lit(saltF)))
+          .withColumn("salt", pmod(hash(col("vec_id")), lit(ProbeSaltFactor)))
           .join(probes.withColumn("salt",
-            explode(sequence(lit(0), lit(saltF - 1)))), Seq("cell", "salt"))
+            explode(sequence(lit(0), lit(ProbeSaltFactor - 1)))), Seq("cell", "salt"))
       }
     val cands = joined.filter(col("vec_id") =!= col("q_id"))
     val scored = cands.select(col("q_id"), col("vec_id").as("n_id"),

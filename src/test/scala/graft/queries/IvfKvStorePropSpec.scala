@@ -24,9 +24,9 @@ import org.scalacheck.{Gen, Prop, Test => PropTest}
   *    re-pins, a real one increments, and neither touches centroids;
   *  - vacuum inside a pending window reclaims the archived v0 manifest,
   *    so the next classify must hit the loud `readMetaAsOf` refusal
-  *    (KvRewrite "no longer retained"), ensure must refuse with the
+  *    ("no longer retained"), ensure must refuse with the
   *    staleness error (the DML region derivation degrades to None —
-  *    never a partial patch), and `graft.ivfRebuildOnStale=true` must
+  *    never a partial patch), and an explicit `build` must
   *    recover with a full rebuild;
   *  - a DML rewrite with the v0 manifest still retained must PATCH
   *    exactly, whatever compactions surround it.
@@ -206,10 +206,7 @@ class IvfKvStorePropSpec extends SparkSpec {
               // region derivation returns None, never a partial patch)
               val e = intercept[IllegalStateException](IvfKvStore.ensure(spark, corpus))
               assert(e.getMessage.contains("NOT a pure append"), e.getMessage)
-              spark.conf.set("graft.ivfRebuildOnStale", "true")
-              val idx =
-                try IvfKvStore.ensure(spark, corpus)
-                finally spark.conf.unset("graft.ivfRebuildOnStale")
+              val idx = IvfKvStore.build(spark, corpus)
               assert(idx.nVectors == liveIds.size)
               val newCentV = KvStore.readMeta(s"$root/centroids").version
               assert(newCentV != centVersion, "recovery must be a full rebuild")

@@ -111,12 +111,9 @@ class IvfKvStoreSpec extends SparkSpec {
     assert(e.getMessage.contains("NOT a pure append"), e.getMessage)
     val e2 = intercept[IllegalStateException](IvfKvStore.load(spark, dir))
     assert(e2.getMessage.contains("NOT a pure append"), e2.getMessage)
-    spark.conf.set("graft.ivfRebuildOnStale", "true")
-    try {
-      val idx = IvfKvStore.ensure(spark, dir)
-      assert(idx.nVectors == n - 1)
-      assert(meta(dir).path("appendedRows").asLong() == 0)
-    } finally spark.conf.unset("graft.ivfRebuildOnStale")
+    val idx = IvfKvStore.build(spark, dir)
+    assert(idx.nVectors == n - 1)
+    assert(meta(dir).path("appendedRows").asLong() == 0)
   }
 
   private def corpusDf(dir: String) = spark.read.format("graft-kv")
@@ -155,16 +152,11 @@ class IvfKvStoreSpec extends SparkSpec {
       // load() is read-only: it refuses any rewrite window
       val e2 = intercept[IllegalStateException](IvfKvStore.load(spark, dir))
       assert(e2.getMessage.contains("NOT a pure append"), e2.getMessage)
-      // with incremental maintenance off, ensure() refuses too
-      spark.conf.set("graft.ivfIncremental", "false")
-      try {
-        val e = intercept[IllegalStateException](IvfKvStore.ensure(spark, dir))
-        assert(e.getMessage.contains("row-level rewrite"), e.getMessage)
-      } finally spark.conf.unset("graft.ivfIncremental")
       // a SCATTERED delete touches every shard: the region is the whole
       // corpus, which the default cost bound refuses...
       val e3 = intercept[IllegalStateException](IvfKvStore.ensure(spark, dir))
       assert(e3.getMessage.contains("graft.ivfMaxDmlFrac"), e3.getMessage)
+      assert(e3.getMessage.contains("row-level rewrite"), e3.getMessage)
       // ...but an explicit budget patches it: deleted ids vanish,
       // centroids stay frozen, and every assignment equals a direct
       // frozen-centroid assignment of the live corpus

@@ -135,9 +135,7 @@ class IvfStorePropSpec extends SparkSpec {
                   if (dirty == "rewrite") {
                     val e = intercept[IllegalStateException](IvfStore.ensure(spark, corpus))
                     assert(e.getMessage.contains("REWRITTEN"), e.getMessage)
-                    spark.conf.set("graft.ivfRebuildOnStale", "true")
-                    try IvfStore.ensure(spark, corpus)
-                    finally spark.conf.unset("graft.ivfRebuildOnStale")
+                    IvfStore.build(spark, corpus)
                   } else IvfStore.ensure(spark, corpus)
                 idxIds = Some(liveIds); idxBasis = liveIds; dirty = "fresh"
                 val newCentV = graft.kv.KvStore.readMeta(

@@ -64,19 +64,16 @@ class IvfStoreSpec extends SparkSpec {
     assert(e.getMessage.contains("different corpus state"))
     val e2 = intercept[IllegalStateException](IvfStore.ensure(spark, corpus))
     assert(e2.getMessage.contains("different corpus state"))
-    // opted in: ensure() rebuilds against the new corpus and the index
+    // an explicit build rebuilds against the new corpus and the index
     // reflects it (the dropped vector is gone)
-    spark.conf.set("graft.ivfRebuildOnStale", "true")
-    try {
-      val idx2 = IvfStore.ensure(spark, corpus)
-      assert(idx2.assigned.count() == n1 - 1)
-      assert(idx2.assigned.filter(col("vec_id") === dropped).count() == 0)
-      // the pre-rebuild index was version-pinned: after the truncate-
-      // overwrite it fails LOUDLY (version unavailable) instead of
-      // silently reading the other build's rows
-      val e3 = intercept[Exception](idx1.assigned.count())
-      assert(e3.getMessage.contains("unavailable"), e3.getMessage)
-    } finally spark.conf.unset("graft.ivfRebuildOnStale")
+    val idx2 = IvfStore.build(spark, corpus)
+    assert(idx2.assigned.count() == n1 - 1)
+    assert(idx2.assigned.filter(col("vec_id") === dropped).count() == 0)
+    // the pre-rebuild index was version-pinned: after the truncate-
+    // overwrite it fails LOUDLY (version unavailable) instead of
+    // silently reading the other build's rows
+    val e3 = intercept[Exception](idx1.assigned.count())
+    assert(e3.getMessage.contains("unavailable"), e3.getMessage)
   }
 
   /** A directory-shaped corpus copy (Spark layout) that file-level
@@ -148,22 +145,31 @@ class IvfStoreSpec extends SparkSpec {
     try {
       val e = intercept[IllegalStateException](IvfStore.ensure(spark, corpus))
       assert(e.getMessage.contains("exceeds graft.ivfMaxAppendFrac"), e.getMessage)
-      // with incremental disabled the refusal is the plain append error
-      spark.conf.set("graft.ivfIncremental", "false")
-      val e2 = intercept[IllegalStateException](IvfStore.ensure(spark, corpus))
-      assert(e2.getMessage.contains("GREW BY PURE APPEND"), e2.getMessage)
-      spark.conf.unset("graft.ivfIncremental")
-      // opted in: full rebuild re-bases the drift accounting
-      spark.conf.set("graft.ivfRebuildOnStale", "true")
-      val idx = IvfStore.ensure(spark, corpus)
+      // an explicit build re-bases the drift accounting
+      val idx = IvfStore.build(spark, corpus)
       val m = meta(corpus)
       assert(m.path("appendedRows").asLong() == 0)
       assert(m.path("baseN").asLong() == idx.nVectors)
-    } finally {
-      spark.conf.unset("graft.ivfMaxAppendFrac")
-      spark.conf.unset("graft.ivfRebuildOnStale")
-      spark.conf.unset("graft.ivfIncremental")
-    }
+    } finally spark.conf.unset("graft.ivfMaxAppendFrac")
+  }
+
+  test("a zero-row appended file re-pins the meta without an assigned commit") {
+    val corpus = copyCorpusDir()
+    IvfStore.ensure(spark, corpus)
+    val m1 = meta(corpus)
+    def dataFiles() = new File(s"$corpus/embeddings.parquet").listFiles()
+      .count(f => !f.getName.startsWith("_") && !f.getName.startsWith("."))
+    val before = dataFiles()
+    appendRows(corpus, idOffset = 400000, nRows = 0)
+    assert(dataFiles() > before, "the empty append must add a data file to the listing")
+    IvfStore.ensure(spark, corpus)
+    val m2 = meta(corpus)
+    assert(m2.path("assignedVersion").asLong() == m1.path("assignedVersion").asLong(),
+      "an empty delta must not commit to the assigned table")
+    assert(m2.path("n").asLong() == m1.path("n").asLong())
+    assert(m2.path("fingerprint").asText() != m1.path("fingerprint").asText(),
+      "the meta must re-pin the grown listing")
+    assert(IvfStore.load(spark, corpus).nVectors == m1.path("n").asLong())
   }
 
   test("dangling KV commit (crashed update) falls back to a full rebuild") {
