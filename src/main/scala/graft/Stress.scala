@@ -1801,7 +1801,15 @@ object Stress {
     // (a) the full sidecar build — the OLD probe-after-append tax
     val buildSec = sec { Bm25Store.ensureChampions(spark, pA, lA): Unit }
     sampleHeap()
-    val qs = docs.orderBy(col("doc_id")).limit(1000)
+    // a 1000-query batch and a 1024-doc delta, or the whole corpus when
+    // it is smaller (sf0.01 has 500 docs)
+    val (maxId, nDocs) = {
+      val r = docs.agg(max(col("doc_id")), count(lit(1))).head()
+      (r.getLong(0), r.getLong(1))
+    }
+    val nQueries = math.min(1000L, nDocs)
+    val deltaDocs = math.min(1024L, nDocs)
+    val qs = docs.orderBy(col("doc_id")).limit(nQueries.toInt)
       .select(col("doc_id").as("q_id"),
         slice(graft.functions.Text.tokens(col("text")), 1, 3).as("terms"))
       .persist()
@@ -1813,14 +1821,13 @@ object Stress {
     probeOnce(): Unit
     val steady = probeOnce()
     // (b) append with the sidecar present: table writes + incremental merge
-    val maxId = docs.agg(max(col("doc_id"))).head().getLong(0)
-    val delta = docs.orderBy(col("doc_id")).limit(1024)
+    val delta = docs.orderBy(col("doc_id")).limit(deltaDocs.toInt)
       .select((col("doc_id") + lit(maxId + 1L)).as("doc_id"), col("text"))
     var nApp = 0L
     val appendMergeSec = sec {
       nApp = Bm25Store.maintainBatch(spark, delta, pA, lA)
     }
-    require(nApp == 1024, s"append delta indexed $nApp docs, expected 1024")
+    require(nApp == deltaDocs, s"append delta indexed $nApp docs, expected $deltaDocs")
     require(Bm25Store.readChampMeta(Bm25Store.ensureChampions(spark, pA, lA))
         .exists(_.built == "merged"),
       "the sidecar must be MERGED at append time, not rebuilt by the probe")
@@ -1847,7 +1854,7 @@ object Stress {
     }
     qs.unpersist(): Unit
     sampleHeap()
-    val row = f""""bm25_probe_after_append":{"regime":"lifecycle_direct","delta_docs":1024,"n_queries":1000,"sidecar_full_build_sec":$buildSec%.2f,"append_merge_sec":$appendMergeSec%.2f,"append_plain_sec":$appendPlainSec%.2f,"merge_overhead_sec":${appendMergeSec - appendPlainSec}%.2f,"probe_steady_sec":$steady%.2f,"probe_after_append_first_sec":$afterFirst%.2f,"probe_after_append_steady_sec":$afterSteady%.2f,"merged":true,"rank_safe":$rankSafe}"""
+    val row = f""""bm25_probe_after_append":{"regime":"lifecycle_direct","delta_docs":$deltaDocs,"n_queries":$nQueries,"sidecar_full_build_sec":$buildSec%.2f,"append_merge_sec":$appendMergeSec%.2f,"append_plain_sec":$appendPlainSec%.2f,"merge_overhead_sec":${appendMergeSec - appendPlainSec}%.2f,"probe_steady_sec":$steady%.2f,"probe_after_append_first_sec":$afterFirst%.2f,"probe_after_append_steady_sec":$afterSteady%.2f,"merged":true,"rank_safe":$rankSafe}"""
     System.err.println(s"[stress] $row")
     row
   }

@@ -118,6 +118,21 @@ class KvTable(val catalog: KvCatalog, val dir: String,
     filters.forall(FilterEval.pushable(_, dts))
   }
 
+  // Spark's default v2 → v1 bridge (`PredicateUtils.toV1`) drops an
+  // untranslatable OR operand instead of failing the translation:
+  // `k < 300 OR v % 2 = 0` reaches deleteWhere as `k < 300` and deletes
+  // too few rows. The scan's own translation fails the whole predicate,
+  // so such a DELETE takes the row-level rewrite instead.
+  override def canDeleteWhere(
+      predicates: Array[org.apache.spark.sql.connector.expressions.filter.Predicate]): Boolean = {
+    val v1 = predicates.map(V2Filters.toV1)
+    v1.forall(_.isDefined) && canDeleteWhere(v1.flatten)
+  }
+  override def deleteWhere(
+      predicates: Array[org.apache.spark.sql.connector.expressions.filter.Predicate]): Unit =
+    deleteWhere(predicates.map(p => V2Filters.toV1(p).getOrElse(
+      throw new IllegalArgumentException(s"DELETE predicate not translatable: $p"))))
+
   /** Row-level delete as a per-shard rewrite with an OPTIMISTIC swap —
     * the compactor's discipline, because the rewrite can take minutes
     * on region-sized shards and must not hold the table lock that

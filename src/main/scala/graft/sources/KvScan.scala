@@ -118,9 +118,13 @@ class KvScanBuilder(catalog: KvCatalog, dir: String, columnar: Boolean = true,
     case Some((groupCols, specs)) =>
       new KvAggScan(dir, catalog.rowkey, declared, pushed, groupCols, specs, asOf,
         since, catalog.buckets, bucketPrune)
-    case None => new KvScan(dir, catalog.rowkey, prunedSchema, declared, pushed, limit,
-      reverse, columnar, asOf, catalog.buckets, since, maxVersionsPerTrigger,
-      bucketPrune, eventTime, maxBytesPerTrigger)
+    case None =>
+      val scan = new KvScan(dir, catalog.rowkey, prunedSchema, declared, pushed, limit,
+        reverse, columnar, asOf, catalog.buckets, since, maxVersionsPerTrigger,
+        bucketPrune, eventTime, maxBytesPerTrigger)
+      // an incremental window stays distributed: its shard set comes
+      // from the manifest chain, and a stream tails it per micro-batch
+      if (since.isEmpty) KvLocalScan.forPointLookup(scan).getOrElse(scan) else scan
   }
 }
 
@@ -440,6 +444,81 @@ class KvScan(dir: String, rowkeyName: String, prunedSchema: StructType,
     KvPartitionReaderFactory(dir, prunedSchema.json, declared.json,
       rowkeyName, allFilters, limit, reverse, columnar,
       KvEventTime.encode(eventTime))
+}
+
+/** Job-free point lookup: a rowkey `=`/`IN` read answered on the driver
+  * at planning time, the way an HBase `Get` never launches a batch job.
+  * Spark plans a [[LocalScan]] as a root `LocalTableScanExec`, so
+  * `collect()` returns with zero jobs — no closure cleaning, no task
+  * scheduling, which cost ~35 ms of every distributed get while reading
+  * the handful of matching records costs a few.
+  *
+  * It wraps (does not extend) the [[KvScan]] the builder planned: the
+  * same key-range, bucket and zone-map pruning picks the shards, and the
+  * same reader factory reads them (bloom gate, `_shard`,
+  * `_event_time`, pushed value filters, `asOfVersion`, the DESC ring
+  * buffer). It deliberately does not offer runtime filtering: its rows
+  * exist before any join's build side does. Pruning and read counters
+  * stay readable through [[reportDriverMetrics]] on the scan object;
+  * a `LocalTableScanExec` has no SQL metrics to carry them. */
+final class KvLocalScan private (val scan: KvScan, parts: Array[InputPartition])
+    extends LocalScan with SupportsReportStatistics {
+
+  private var recordsRead = 0L
+  private var bytesRead = 0L
+  private var skippedBloom = 0L
+
+  private lazy val read: Array[InternalRow] = {
+    val factory = scan.createReaderFactory()
+    val out = scala.collection.mutable.ArrayBuffer.empty[InternalRow]
+    parts.foreach { p =>
+      val reader = factory.createReader(p)
+      try {
+        // the row reader allocates a fresh row per record: no copy
+        while (reader.next()) out += reader.get()
+        reader.currentMetricsValues().foreach { m =>
+          m.name() match {
+            case "kvRecordsRead"        => recordsRead += m.value()
+            case "kvBytesRead"          => bytesRead += m.value()
+            case "kvShardsSkippedBloom" => skippedBloom += m.value()
+            case _                      => ()
+          }
+        }
+      } finally reader.close()
+    }
+    out.toArray
+  }
+
+  override def rows(): Array[InternalRow] = read
+  override def readSchema(): StructType = scan.readSchema()
+  override def description(): String = scan.description()
+  override def estimateStatistics(): Statistics = scan.estimateStatistics()
+
+  override def supportedCustomMetrics(): Array[CustomMetric] = KvScanMetrics.supported
+  override def reportDriverMetrics(): Array[CustomTaskMetric] =
+    scan.reportDriverMetrics() ++ Array(
+      KvScanMetrics.taskMetric("kvRecordsRead", recordsRead),
+      KvScanMetrics.taskMetric("kvBytesRead", bytesRead),
+      KvScanMetrics.taskMetric("kvShardsSkippedBloom", skippedBloom))
+}
+
+object KvLocalScan {
+  /** Driver read budget: manifest rows in the surviving shards. The
+    * driver prefix-reads ~7 M surviving-shard rows/s, so 2^18 rows cost
+    * about the ~35 ms fixed cost of one distributed job; past it, a
+    * large IN-list keeps its parallel read. */
+  val MaxShardRows: Long = 1L << 18
+
+  /** The local form of `scan` when every planned rowkey range is one key
+    * (so the result is at most one row per key per shard, bounded by the
+    * query text) and the surviving shards fit [[MaxShardRows]]. */
+  def forPointLookup(scan: KvScan): Option[KvLocalScan] =
+    if (KeyRanges.pointKeys(scan.rowkeyRanges()).isEmpty) None
+    else {
+      val parts = scan.planInputPartitions()
+      val rows = parts.iterator.map(KvInputPartition.unwrap(_).shard.rows).sum
+      if (rows <= MaxShardRows) Some(new KvLocalScan(scan, parts)) else None
+    }
 }
 
 /** Driver-side scan metrics: manifest shard count and how many shards

@@ -171,6 +171,13 @@ class KvBatchWrite(catalog: KvCatalog, dir: String, schema: StructType,
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val newShards = messages.flatMap { case KvCommit(s) => s }.toSeq
+    // an append that wrote no rows changes nothing: committing it would
+    // only mint a version and archive an identical manifest. A fresh
+    // table still commits (its first write creates version 1), as do an
+    // epoch key (it must be recorded), a truncate and a range replace
+    // (both delete rows)
+    if (newShards.isEmpty && epoch.isEmpty && !truncateFirst && replaceRanges.isEmpty &&
+        new java.io.File(KvStore.metaPath(dir)).exists()) return
     KvStore.commit(dir) { prev =>
       // optimistic truncate/replace (`expectedVersion` option): a
       // rewrite job that read the table at version V must not clobber

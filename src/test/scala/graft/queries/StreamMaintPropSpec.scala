@@ -172,31 +172,6 @@ class StreamMaintPropSpec extends SparkSpec {
     assert(res.passed, s"property falsified: ${res.status}")
   }
 
-  /** Spark jobs submitted by `body` on this thread, counted by job
-    * group with the listener bus drained on both sides of the body. */
-  private def jobsOf(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val group = s"job-budget-${java.util.UUID.randomUUID()}"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (Option(e.properties)
-            .exists(_.getProperty("spark.jobGroup.id") == group))
-          jobs.incrementAndGet(): Unit
-    }
-    org.apache.spark.ListenerBusAccess.drain(sc)
-    sc.addSparkListener(listener)
-    sc.setJobGroup(group, "maintainBatch job budget")
-    try body
-    finally {
-      sc.clearJobGroup()
-      org.apache.spark.ListenerBusAccess.drain(sc)
-      sc.removeSparkListener(listener)
-    }
-    jobs.get
-  }
-
   /** The steady-state job budget of one micro-batch on a warm store
     * (both frontiers memoized by the previous batch, so reading them
     * costs no job). Pinned exactly, so an extra per-batch job fails

@@ -32,19 +32,6 @@ class KvBloomSpec extends SparkSpec {
   private def kv(dir: String): DataFrame =
     spark.read.format("graft-kv").option("catalog", catJson).option("path", dir).load()
 
-  private def findBatchScan(p: org.apache.spark.sql.execution.SparkPlan)
-      : org.apache.spark.sql.execution.datasources.v2.BatchScanExec = {
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
-    def rec(q: org.apache.spark.sql.execution.SparkPlan): Option[BatchScanExec] = q match {
-      case b: BatchScanExec => Some(b)
-      case a: AdaptiveSparkPlanExec => rec(a.executedPlan)
-      case s: QueryStageExec => rec(s.plan)
-      case other => other.children.view.flatMap(rec).headOption
-    }
-    rec(p).get
-  }
-
   test("write emits sidecars; EqualTo on an absent uid skips every shard") {
     val dir = Files.createTempDirectory("graft-kv-bloom").toString
     writeTable(dir)
@@ -58,12 +45,12 @@ class KvBloomSpec extends SparkSpec {
     val absentUid = s"uid-${(2000L * 2654435761L) % 1000000007L}zz"
     val miss = kv(dir).filter(col("uid") === absentUid)
     assert(miss.collect().isEmpty)
-    val scan = findBatchScan(miss.queryExecution.executedPlan)
-    assert(scan.metrics("kvShardsPrunedZoneMap").value == 0L,
+    val scan = PlannedKvScan(miss)
+    assert(scan.metric("kvShardsPrunedZoneMap") == 0L,
       "probe must defeat zone maps so the bloom is the pruner under test")
-    assert(scan.metrics("kvShardsSkippedBloom").value == 8L,
-      s"all shards must bloom-skip, got ${scan.metrics("kvShardsSkippedBloom").value}")
-    assert(scan.metrics("kvBytesRead").value == 0L,
+    assert(scan.metric("kvShardsSkippedBloom") == 8L,
+      s"all shards must bloom-skip, got ${scan.metric("kvShardsSkippedBloom")}")
+    assert(scan.metric("kvBytesRead") == 0L,
       "a definite miss must not open a single shard file")
 
     // present value: found, and its home shard was NOT skipped
@@ -111,8 +98,7 @@ class KvBloomSpec extends SparkSpec {
     val joined = kv(dir).join(broadcast(build), col("uid") === col("buid"))
       .select(col("k"), col("uid"), col("v"))
     assert(joined.collect().map(_.getAs[Long]("k")).sorted.toSeq == Seq(10L, 1007L))
-    val scan = findBatchScan(joined.queryExecution.executedPlan)
-    val skipped = scan.metrics("kvShardsSkippedBloom").value
+    val skipped = PlannedKvScan(joined).metric("kvShardsSkippedBloom")
     // k=10 and k=1007 live in two different shards; the other six hold
     // neither build uid and must bloom-skip (>=5 tolerates one false
     // positive). Zero means the runtime filter never reached the scan.
@@ -148,8 +134,7 @@ class KvBloomSpec extends SparkSpec {
     val absent2 = s"uid-${(500L * 2654435761L) % 1000000007L}zz"
     val miss = kv(dir).filter(col("uid") === absent2)
     assert(miss.collect().isEmpty)
-    val scan = findBatchScan(miss.queryExecution.executedPlan)
-    assert(scan.metrics("kvShardsSkippedBloom").value == 1L)
+    assert(PlannedKvScan(miss).metric("kvShardsSkippedBloom") == 1L)
     (1L to 1000L by 97L).foreach { k =>
       val uid = s"uid-${(k * 2654435761L) % 1000000007L}"
       assert(kv(dir).filter(col("uid") === uid).count() == 1L,

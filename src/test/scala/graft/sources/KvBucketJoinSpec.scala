@@ -83,10 +83,9 @@ class KvBucketJoinSpec extends SparkSpec {
 
     val one = sql("SELECT id, qty FROM bkt.default.fact_a WHERE id = 123")
     assert(one.collect().map(_.getLong(0)).toSeq == Seq(123L))
-    val m1 = one.queryExecution.executedPlan.collectLeaves().head.metrics
-    assert(m1("kvShardsPrunedBucket").value == exp1,
-      s"a point lookup must plan only the key's bucket " +
-        s"(pruned ${m1("kvShardsPrunedBucket").value}, expected $exp1)")
+    val m1 = PlannedKvScan(one).metric("kvShardsPrunedBucket")
+    assert(m1 == exp1,
+      s"a point lookup must plan only the key's bucket (pruned $m1, expected $exp1)")
 
     // IN plans the union of the keys' buckets — and stays correct
     val keys = Seq(123L, 456L, 789L)
@@ -94,10 +93,9 @@ class KvBucketJoinSpec extends SparkSpec {
     assert(in.collect().map(_.getLong(0)).sorted.toSeq == keys)
     val wanted = keys.map(KvBuckets.ofValue(LongType, _, 8)).toSet
     val exp2 = shards.count(s => keys.exists(covers(s, _)) && !wanted.contains(s.bucket))
-    val m2 = in.queryExecution.executedPlan.collectLeaves().head.metrics
-    assert(m2("kvShardsPrunedBucket").value == exp2,
-      s"IN must plan only the union of the keys' buckets " +
-        s"(pruned ${m2("kvShardsPrunedBucket").value}, expected $exp2)")
+    val m2 = PlannedKvScan(in).metric("kvShardsPrunedBucket")
+    assert(m2 == exp2,
+      s"IN must plan only the union of the keys' buckets (pruned $m2, expected $exp2)")
 
     // pushed aggregates ride the same base-scan shard selection, so a
     // point-lookup count prunes identically
@@ -115,8 +113,7 @@ class KvBucketJoinSpec extends SparkSpec {
     // must stand down entirely (soundness, not a missed optimization)
     val rng = sql("SELECT id FROM bkt.default.fact_a WHERE id >= 990 AND id < 1000")
     assert(rng.collect().length == 10)
-    val m3 = rng.queryExecution.executedPlan.collectLeaves().head.metrics
-    assert(m3("kvShardsPrunedBucket").value == 0L,
+    assert(PlannedKvScan(rng).metric("kvShardsPrunedBucket") == 0L,
       "a key span must never be bucket-pruned")
   }
 
@@ -180,8 +177,7 @@ class KvBucketJoinSpec extends SparkSpec {
     // shards — compaction preserves the tag the pruning keys on
     val pt = sql("SELECT id FROM bkt.default.fact_a WHERE id IN (1005, 1025)")
     assert(pt.collect().map(_.getLong(0)).sorted.toSeq == Seq(1005L, 1025L))
-    val m = pt.queryExecution.executedPlan.collectLeaves().head.metrics
-    assert(m("kvShardsPrunedBucket").value > 0,
+    assert(PlannedKvScan(pt).metric("kvShardsPrunedBucket") > 0,
       "bucket pruning must still engage on compacted shards")
   }
 
@@ -220,15 +216,13 @@ class KvBucketJoinSpec extends SparkSpec {
     val drifted = read(16).where(s"id = $key")
     assert(drifted.collect().map(_.getLong(0)).toSeq == Seq(key),
       s"point lookup of $key must survive a catalog bucket edit 8->16")
-    val m = drifted.queryExecution.executedPlan.collectLeaves().head.metrics
-    assert(m("kvShardsPrunedBucket").value == 0L,
+    assert(PlannedKvScan(drifted).metric("kvShardsPrunedBucket") == 0L,
       "a modulus mismatch must disable bucket pruning, not misapply it")
 
     // matching modulus on the same path-API catalog still prunes
     val matched = read(8).where(s"id = $key")
     assert(matched.collect().map(_.getLong(0)).toSeq == Seq(key))
-    val m8 = matched.queryExecution.executedPlan.collectLeaves().head.metrics
-    assert(m8("kvShardsPrunedBucket").value > 0L,
+    assert(PlannedKvScan(matched).metric("kvShardsPrunedBucket") > 0L,
       "vacuity guard: the matching-modulus read must still bucket-prune")
 
     // the streaming per-shard prune honors the same gate
@@ -274,9 +268,6 @@ class KvBucketJoinSpec extends SparkSpec {
   test("a runtime IN-set (DPP) bucket-prunes shards, not just ranges") {
     pairReady
     import graft.kv.BytesCodec
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
     val dir = s"$wh/default/fact_a"
     val shards = KvStore.readMeta(dir).shards
     val keys = Seq(123L, 456L)
@@ -293,29 +284,25 @@ class KvBucketJoinSpec extends SparkSpec {
       "vacuity guard: need range-surviving shards in other buckets")
 
     // build side known only at runtime — Spark injects a dynamic
-    // pruning IN-set through SupportsRuntimeFiltering
+    // pruning IN-set through SupportsRuntimeFiltering. The build filters
+    // a NON-key column (bid = 3·n): a filter on `bid` itself would reach
+    // the fact side at plan time as a static point lookup
+    // (InferFiltersFromConstraints), leaving no runtime filter to test.
     import org.apache.spark.sql.functions.{broadcast, col}
-    val build = spark.range(0, 1000).toDF("bid")
-      .filter(col("bid").isin(keys: _*))
+    val build = spark.range(0, 1000).select((col("id") * 3L).as("bid"), col("id").as("n"))
+      .filter(col("n").isin(keys.map(_ / 3): _*)) // both keys are multiples of 3
     val fact = spark.read.format("graft-kv")
       .option("catalog", pathCatalog(8)).option("path", dir).load()
     val joined = fact.join(broadcast(build), col("id") === col("bid"))
       .select(col("id"), col("qty"))
     assert(joined.collect().map(_.getLong(0)).sorted.toSeq == keys)
 
-    def findScan(p: SparkPlan): Option[BatchScanExec] = p match {
-      case b: BatchScanExec => Some(b)
-      case a: AdaptiveSparkPlanExec => findScan(a.executedPlan)
-      case s: QueryStageExec => findScan(s.plan)
-      case other => other.children.view.flatMap(findScan(_)).headOption
-    }
-    val scanExec = findScan(joined.queryExecution.executedPlan).get
-    assert(scanExec.runtimeFilters.nonEmpty,
+    val planned = PlannedKvScan(joined)
+    assert(planned.exec.exists(_.runtimeFilters.nonEmpty),
       s"expected a runtime filter on the KV scan:\n${joined.queryExecution.executedPlan}")
-    val scan = scanExec.scan.asInstanceOf[KvScan]
-    assert(scan.planInputPartitions().length == expectedSurvivors,
+    assert(planned.kv.planInputPartitions().length == expectedSurvivors,
       "the runtime IN-set must prune by bucket tag, not only by key range")
-    assert(scanExec.metrics("kvShardsPrunedBucket").value > 0L,
+    assert(planned.metric("kvShardsPrunedBucket") > 0L,
       "bucket pruning under a runtime filter must surface in the scan metrics")
   }
 

@@ -160,4 +160,45 @@ class KvCommitSpec extends SparkSpec {
       assert(KvCompactor.compact(dir, 64L << 20) == 1)
     }
   }
+
+  test("zero-row append commits nothing; a fresh table's first write still creates v1") {
+    val dir = freshTable("kc_empty")
+    val before = KvStore.readMeta(dir)
+    val files = new File(dir).list().toSet
+    write("kc_empty", dir, rows(1L, 0L)).mode("append").save()
+    assert(KvStore.readMeta(dir).version == before.version,
+      "an append of no rows leaves the version unchanged")
+    assert(new File(dir).list().toSet == files,
+      "an append of no rows archives no manifest and writes no file")
+    assert(spark.table("kc_empty").count() == 800L)
+    spark.sql("DROP TABLE IF EXISTS kc_empty")
+    val fresh = Files.createTempDirectory("graft-kv-kc_empty_fresh").toString
+    write("kc_empty_fresh", fresh, rows(1L, 0L)).mode("append").save()
+    val first = KvStore.readMeta(fresh)
+    assert(first.version == 1L && first.shards.isEmpty,
+      "the first write to a fresh table creates version 1, rows or not")
+  }
+
+  test("zero-row append with an epoch key still records the key") {
+    val dir = freshTable("kc_empty_epoch")
+    val before = KvStore.readMeta(dir)
+    write("kc_empty_epoch", dir, rows(1L, 0L)).option("epoch", "job-0")
+      .mode("append").save()
+    val after = KvStore.readMeta(dir)
+    assert(after.version == before.version + 1 && after.committedEpochs.contains("job-0"),
+      "the epoch key must be committed even when the append wrote no rows")
+    assert(after.shards.map(_.file) == before.shards.map(_.file))
+    spark.sql("DROP TABLE IF EXISTS kc_empty_epoch")
+  }
+
+  test("zero-row overwrite still truncates") {
+    val dir = freshTable("kc_empty_trunc")
+    val before = KvStore.readMeta(dir)
+    write("kc_empty_trunc", dir, rows(1L, 0L)).mode("overwrite").save()
+    val after = KvStore.readMeta(dir)
+    assert(after.version == before.version + 1 && after.shards.isEmpty,
+      "an overwrite of no rows empties the table")
+    assert(spark.table("kc_empty_trunc").count() == 0L)
+    spark.sql("DROP TABLE IF EXISTS kc_empty_trunc")
+  }
 }

@@ -108,8 +108,8 @@ class KvConnectorSpec extends SparkSpec {
   // ---- per-filter pushdown matrix (FIXTURES.md §3) ----
   private def assertPushedAndCorrect(df: DataFrame, expectIds: Seq[Long],
                                      mustContain: String): Unit = {
-    val plan = physicalPlan(df)
-    assert(plan.contains(mustContain), s"expected '$mustContain' in plan:\n$plan")
+    val scan = PlannedKvScan(df).scan.description()
+    assert(scan.contains(mustContain), s"expected '$mustContain' in scan: $scan")
     assert(df.collect().map(_.getAs[Long]("id")).sorted.toSeq == expectIds.sorted)
   }
 
@@ -395,33 +395,24 @@ class KvConnectorSpec extends SparkSpec {
   }
 
   test("DPP end-to-end: a broadcast join's build side re-prunes shards at runtime") {
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
-    // build side only known at runtime: a selectively-filtered range
-    val build = spark.range(0, 1000).toDF("bid")
-      .filter(col("bid").isin(10L, 20L, 30L))
+    // build side only known at runtime: a range filtered on a NON-key
+    // column (bid = 10·n). A filter on `bid` itself would reach the KV
+    // side at plan time (InferFiltersFromConstraints turns it into a
+    // static point lookup), leaving nothing for a runtime filter to do.
+    val build = spark.range(0, 1000).select((col("id") * 10L).as("bid"), col("id").as("n"))
+      .filter(col("n").isin(1L, 2L, 3L))
     val joined = kv.join(broadcast(build), col("id") === col("bid"))
       .select(col("id"), col("name"))
     val rows = joined.collect()
     assert(rows.map(_.getLong(0)).sorted.toSeq == Seq(10L, 20L, 30L))
-    // Spark must have planned a dynamic-pruning subquery on the KV scan.
-    // AQE wraps every fragment (including the result) in QueryStageExecs
-    // whose subtree hangs off `plan`, not `children` — recurse through.
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.QueryStageExec
-    def findScan(p: SparkPlan): Option[BatchScanExec] = p match {
-      case b: BatchScanExec => Some(b)
-      case a: AdaptiveSparkPlanExec => findScan(a.executedPlan)
-      case s: QueryStageExec => findScan(s.plan)
-      case other => other.children.view.flatMap(findScan(_)).headOption
-    }
-    val scanExec = findScan(joined.queryExecution.executedPlan).get
+    // Spark must have planned a dynamic-pruning subquery on the KV scan
+    val planned = PlannedKvScan(joined)
+    val scanExec = planned.exec.get
     assert(scanExec.runtimeFilters.nonEmpty,
       s"expected a runtime (dynamic pruning) filter on the KV scan:\n${joined.queryExecution.executedPlan}")
     // ...and executing it must have re-pruned 8 shards down to 1 (ids
     // 10/20/30 all fall in the first range shard)
-    val scan = scanExec.scan.asInstanceOf[KvScan]
-    assert(scan.planInputPartitions().length == 1,
+    assert(planned.kv.planInputPartitions().length == 1,
       "runtime IN-set must prune the 8 shards to the single covering one")
   }
 
@@ -443,8 +434,8 @@ class KvConnectorSpec extends SparkSpec {
     val df = kv.filter(col("id").isin(5L, 500L, 995L))
       .select(col("id"), col("name"))
     assert(df.collect().map(_.getLong(0)).sorted.toSeq == Seq(5L, 500L, 995L))
-    val scan = findBatchScan(df.queryExecution.executedPlan).get
-    val parts = scan.scan.asInstanceOf[KvScan].planInputPartitions()
+    val scan = PlannedKvScan(df)
+    val parts = scan.kv.planInputPartitions()
     assert(parts.length == 3,
       s"IN(5,500,995) must plan 3 shards, not the envelope's 8; got ${parts.length}")
     // each surviving shard carries exactly the one point range that hit it
@@ -454,7 +445,7 @@ class KvConnectorSpec extends SparkSpec {
     }
     // in-shard gap skip: the reader yields only in-range records, so the
     // per-record decode count is the match count, not the shard sizes
-    assert(scan.metrics("kvRecordsRead").value == 3L,
+    assert(scan.metric("kvRecordsRead") == 3L,
       "gap records between planned ranges must skip the consumer entirely")
   }
 
@@ -464,10 +455,10 @@ class KvConnectorSpec extends SparkSpec {
       "SELECT id, age FROM people_mr WHERE id IN (3, 998) OR (id >= 400 AND id <= 420)")
     val got = df.collect().map(_.getLong(0)).sorted
     assert(got.toSeq == (Seq(3L, 998L) ++ (400L to 420L)).sorted)
-    val scan = findBatchScan(df.queryExecution.executedPlan).get
-    val parts = scan.scan.asInstanceOf[KvScan].planInputPartitions()
+    val scan = PlannedKvScan(df)
+    val parts = scan.kv.planInputPartitions()
     assert(parts.length == 3, s"3 disjoint ranges hit 3 shards, got ${parts.length}")
-    assert(scan.metrics("kvRecordsRead").value == 23L)
+    assert(scan.metric("kvRecordsRead") == 23L)
   }
 
   test("multi-range ≡ single-span results (fuzz) and empty-set plans zero partitions") {
@@ -487,8 +478,7 @@ class KvConnectorSpec extends SparkSpec {
     // a provably-empty rowkey predicate plans no partitions at all
     val none = kv.filter(col("id") > 500L && col("id") < 400L)
     assert(none.collect().isEmpty)
-    val scan = findBatchScan(none.queryExecution.executedPlan).get
-    assert(scan.scan.asInstanceOf[KvScan].planInputPartitions().isEmpty,
+    assert(PlannedKvScan(none).kv.planInputPartitions().isEmpty,
       "disjoint conjuncts must plan the empty range set")
   }
 
@@ -578,8 +568,8 @@ class KvConnectorSpec extends SparkSpec {
     assert(r.getAs[Long]("n") == 0L && r.isNullAt(1) && r.isNullAt(2),
       "zero planned partitions must still yield COUNT 0 / MIN NULL / SUM NULL")
     // multi-range EXPLAIN surface: the plan names its planned range count
-    assert(physicalPlan(kv.filter(col("id").isin(5L, 500L, 995L)))
-      .contains("Ranges: 3"))
+    assert(PlannedKvScan(kv.filter(col("id").isin(5L, 500L, 995L)))
+      .scan.description().contains("Ranges: 3"))
   }
 
   test("avg rides aggregate pushdown as sum+count partials (Spark's own rewrite)") {
@@ -610,17 +600,16 @@ class KvConnectorSpec extends SparkSpec {
     assert(r.getAs[Int]("min_age") == 0)
     assert(r.getAs[String]("max_name") == "people999")
     assert(r.getAs[Double]("max_h") == 10.9)
-    val scan = findBatchScan(df.queryExecution.executedPlan).get
-    assert(scan.metrics("kvBytesRead").value == 0L,
+    val scan = PlannedKvScan(df)
+    assert(scan.metric("kvBytesRead") == 0L,
       "rowkey bounds + zone maps already hold these answers; no shard file may be opened")
-    assert(scan.metrics("kvRecordsRead").value == 0L)
+    assert(scan.metric("kvRecordsRead") == 0L)
     // timestamps are excluded (key encoding floors micros to millis):
     // the same shape over a timestamp column must SCAN and stay exact
     val ts = kv.agg(max(col("birthDateTime")).as("m"))
     val expect = peopleDf.agg(max(col("birthDateTime"))).head().getTimestamp(0)
     assert(ts.collect().head.getAs[java.sql.Timestamp]("m") == expect)
-    val tsScan = findBatchScan(ts.queryExecution.executedPlan).get
-    assert(tsScan.metrics("kvRecordsRead").value == 1000L,
+    assert(PlannedKvScan(ts).metric("kvRecordsRead") == 1000L,
       "a lossy-encoded column must fall back to the real scan")
   }
 
@@ -629,19 +618,6 @@ class KvConnectorSpec extends SparkSpec {
     val r = df.collect().head
     assert(r.getAs[Long]("n") == peopleDf.filter(col("age") < 10).count())
     assert(r.getAs[Int]("m") == 9)
-  }
-
-  // AQE wraps fragments in QueryStageExecs; recurse to the V2 scan node
-  private def findBatchScan(p: org.apache.spark.sql.execution.SparkPlan)
-      : Option[org.apache.spark.sql.execution.datasources.v2.BatchScanExec] = {
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
-    p match {
-      case b: BatchScanExec => Some(b)
-      case a: AdaptiveSparkPlanExec => findBatchScan(a.executedPlan)
-      case s: QueryStageExec => findBatchScan(s.plan)
-      case other => other.children.view.flatMap(findBatchScan(_)).headOption
-    }
   }
 
   test("grouped aggregate pushdown: GROUP BY a value column emits per-shard partials") {
@@ -662,8 +638,7 @@ class KvConnectorSpec extends SparkSpec {
     assert(plan.contains("PushedAggregates"), s"grouped aggregates must push:\n$plan")
     assert(plan.contains("PushedGroupBy: [alive]"), s"group columns must push:\n$plan")
     // the scan must emit PARTIALS (≤ groups × shards rows), not raw rows
-    val scanExec = findBatchScan(df.queryExecution.executedPlan).get
-    val emitted = scanExec.metrics("numOutputRows").value
+    val emitted = PlannedKvScan(df).metric("numOutputRows")
     assert(emitted <= 16, s"scan emitted $emitted rows; grouped pushdown must " +
       "produce at most 2 groups x 8 shards partial rows, not 1000 raw rows")
   }

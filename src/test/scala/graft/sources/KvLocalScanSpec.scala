@@ -1,0 +1,185 @@
+package graft.sources
+
+import java.nio.file.Files
+
+import graft.SparkSpec
+import graft.kv.KvStore
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
+
+/** Job-free point lookups ([[KvLocalScan]]): a rowkey `=`/`IN` read over
+  * shards within the driver budget is answered at planning time, so
+  * `collect()` launches no Spark job, and it returns exactly what the
+  * distributed read returns. */
+class KvLocalScanSpec extends SparkSpec {
+
+  private def catJson(name: String, buckets: Int = 0) =
+    s"""{"table":{"name":"$name"},"rowkey":"k",""" +
+      (if (buckets > 0) s""""buckets":$buckets,""" else "") +
+      """"columns":{"k":{"cf":"rowkey","col":"k","type":"long"},""" +
+      """"uid":{"cf":"f","col":"u","type":"string"},""" +
+      """"v":{"cf":"f","col":"v","type":"long"}}}"""
+
+  private type Rec = (Long, String, Long)
+
+  private def append(dir: String, cat: String, recs: Seq[Rec], shards: Int): Unit = {
+    import spark.implicits._
+    recs.toDF("k", "uid", "v").repartitionByRange(shards, col("k"))
+      .write.format("graft-kv").option("catalog", cat).option("path", dir)
+      .option("bloomColumns", "uid").mode("append").save()
+  }
+
+  private def read(dir: String, cat: String, opts: (String, String)*): DataFrame =
+    spark.read.format("graft-kv").option("catalog", cat).option("path", dir)
+      .options(opts.toMap).load()
+
+  private def recs(df: DataFrame): Seq[Rec] =
+    df.collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSeq.sorted
+
+  private def isIn(keys: Seq[Long]) = col("k").isin(keys: _*)
+
+  test("point lookups collect with zero Spark jobs and keep the pruning counters") {
+    val dir = Files.createTempDirectory("graft-kv-local0").toString
+    val cat = catJson("local0")
+    append(dir, cat, (1L to 4000L).map(k => (k, s"u$k", k * 3)), shards = 8)
+    // (shape, filter, matching keys, planned key ranges)
+    val cases = Seq[(String, DataFrame => DataFrame, Seq[Long], Long)](
+      ("=", _.filter(col("k") === 77L), Seq(77L), 1L),
+      ("IN", _.filter(isIn(Seq(5L, 1500L, 3999L, 4200L))), Seq(5L, 1500L, 3999L), 4L),
+      ("OR of =", _.filter(col("k") === 5L || col("k") === 2000L), Seq(5L, 2000L), 2L),
+      ("provably empty", _.filter(col("k") > 500L && col("k") < 400L), Nil, 0L))
+    cases.foreach { case (what, shape, want, ranges) =>
+      val df = shape(read(dir, cat))
+      var got: Seq[Rec] = Nil
+      assert(jobsOf { got = recs(df) } == 0, s"$what: collect() must launch no job")
+      assert(got == want.map(k => (k, s"u$k", k * 3)), s"$what: rows")
+      val planned = PlannedKvScan(df)
+      assert(planned.isLocal, s"$what: planned ${planned.scan}")
+      assert(planned.metric("kvShardsTotal") == 8L)
+      assert(planned.metric("kvShardsPrunedKeyRange") == 8L - planned.kv.planInputPartitions().length)
+      assert(planned.metric("kvKeyRangesPlanned") == ranges)
+    }
+    // the read counters land on the scan object: IN(5,1500,3999) decodes
+    // exactly its three in-range records
+    val in = read(dir, cat).filter(isIn(Seq(5L, 1500L, 3999L)))
+    in.collect()
+    assert(PlannedKvScan(in).metric("kvRecordsRead") == 3L)
+    assert(PlannedKvScan(in).metric("kvBytesRead") > 0L)
+    // an absent uid beside the key: the bloom gate skips the shard
+    // without opening it, on the driver as on an executor
+    val bloomMiss = read(dir, cat).filter(col("k") === 77L && col("uid") === "u77-absent")
+    assert(bloomMiss.collect().isEmpty)
+    assert(PlannedKvScan(bloomMiss).metric("kvShardsSkippedBloom") == 1L)
+    assert(PlannedKvScan(bloomMiss).metric("kvBytesRead") == 0L)
+  }
+
+  test("a range read and an over-budget IN still run a job") {
+    val dir = Files.createTempDirectory("graft-kv-local1").toString
+    val cat = catJson("local1")
+    val n = KvLocalScan.MaxShardRows + 20000L
+    spark.range(0L, n).select(col("id").as("k"), concat(lit("u"), col("id")).as("uid"),
+        (col("id") * 3L).as("v"))
+      .repartitionByRange(4, col("k"))
+      .write.format("graft-kv").option("catalog", cat).option("path", dir)
+      .mode("append").save()
+    def minKey(s: graft.kv.KvShardMeta): Long = graft.kv.BytesCodec
+      .decodeKey(org.apache.spark.sql.types.LongType, s.minKey).asInstanceOf[Long]
+    val shards = KvStore.readMeta(dir).shards.sortBy(minKey)
+    assert(shards.length == 4)
+    assert(shards.map(_.rows).sum > KvLocalScan.MaxShardRows &&
+      shards.take(3).map(_.rows).sum <= KvLocalScan.MaxShardRows, "vacuity guard")
+    def collected(df: DataFrame): (Int, Int) = {
+      var n = 0
+      val jobs = jobsOf { n = df.collect().length }
+      (n, jobs)
+    }
+    // one key per shard: every shard survives, past the row budget
+    val over = read(dir, cat).filter(isIn(shards.map(minKey)))
+    val (nOver, jobsOver) = collected(over)
+    assert(nOver == 4 && jobsOver > 0, "an IN past the row budget stays distributed")
+    assert(!PlannedKvScan(over).isLocal)
+    // three of the four shards fit the budget: the same shape goes local
+    val under = read(dir, cat).filter(isIn(shards.take(3).map(minKey)))
+    assert(collected(under) == ((3, 0)))
+    assert(PlannedKvScan(under).isLocal)
+    // a key span's output depends on the data, not the query text
+    val range = read(dir, cat).filter(col("k") >= 10L && col("k") <= 20L)
+    val (nRange, jobsRange) = collected(range)
+    assert(nRange == 11 && jobsRange > 0)
+    assert(!PlannedKvScan(range).isLocal)
+  }
+
+  test("property: point lookups match a client model across read shapes and table states") {
+    val rnd = new scala.util.Random(20261019L)
+    val dir = Files.createTempDirectory("graft-kv-local2").toString
+    val bdir = Files.createTempDirectory("graft-kv-local2b").toString
+    val cat = catJson("local2")
+    val bcat = catJson("local2b", buckets = 4)
+    // version 1: keys 0..1999; version 2 appends a second row for every
+    // 7th key (same key, two shards) plus fresh keys 2000..2199
+    val v1 = (0L until 2000L).map(k => (k, s"u$k", k * 3))
+    val v2 = ((0L until 2000L by 7L) ++ (2000L until 2200L)).map(k => (k, s"w$k", k * 3 + 1))
+    append(dir, cat, v1, shards = 4)
+    append(dir, cat, v2, shards = 4)
+    append(bdir, bcat, v1, shards = 4)
+    append(bdir, bcat, v2, shards = 4)
+    assert(KvStore.readMeta(dir).version == 2L)
+    var model: Seq[Rec] = v1 ++ v2
+    def keys(): Seq[Long] = Seq.fill(1 + rnd.nextInt(20))(rnd.between(-20L, 2250L)).distinct
+
+    def checkLive(tableDir: String, tableCat: String, label: String): Unit = {
+      val ks = keys()
+      val df = read(tableDir, tableCat).filter(isIn(ks))
+      assert(recs(df) == model.filter(r => ks.contains(r._1)).sorted, s"$label keys=$ks")
+      assert(PlannedKvScan(df).isLocal, s"$label must plan locally")
+    }
+    // _shard: a local read names the same shard per row as the
+    // distributed full scan
+    def shardsOf(df: DataFrame): Map[Long, Seq[String]] =
+      df.select("k", "_shard").collect()
+        .groupBy(_.getLong(0)).view.mapValues(_.map(_.getString(1)).toSeq.sorted).toMap
+    def checkShards(label: String): Unit = {
+      val byShard = shardsOf(read(dir, cat))
+      (1 to 6).foreach { _ =>
+        val ks = keys()
+        assert(shardsOf(read(dir, cat).filter(isIn(ks))) ==
+          byShard.filter { case (k, _) => ks.contains(k) }, s"$label _shard keys=$ks")
+      }
+    }
+
+    (1 to 12).foreach { i =>
+      checkLive(dir, cat, s"case $i")
+      checkLive(bdir, bcat, s"bucketed case $i")
+      // asOfVersion: the first append only
+      val ks = keys()
+      assert(recs(read(dir, cat, "asOfVersion" -> "1").filter(isIn(ks))) ==
+        v1.filter(r => ks.contains(r._1)).sorted, s"asOf 1 keys=$ks")
+      // pushed value filter
+      val cut = rnd.between(0L, 6600L)
+      val vf = read(dir, cat).filter(isIn(ks) && col("v") > cut)
+      assert(recs(vf) == model.filter(r => ks.contains(r._1) && r._3 > cut).sorted,
+        s"v > $cut keys=$ks")
+      assert(PlannedKvScan(vf).scan.description().contains(s"GreaterThan(v,$cut)"))
+      // DESC top-N over the point set: the top keys, ties included
+      val topN = 1 + rnd.nextInt(5)
+      val desc = read(dir, cat).filter(isIn(ks)).orderBy(col("k").desc).limit(topN)
+        .select("k")
+      assert(desc.collect().map(_.getLong(0)).toSeq ==
+        model.map(_._1).filter(ks.contains).sorted.reverse.take(topN), s"top $topN keys=$ks")
+      assert(PlannedKvScan(desc).isLocal)
+    }
+    checkShards("live")
+
+    // after a DELETE the lookups read the rewritten manifest
+    spark.sql("DROP TABLE IF EXISTS graft_local2")
+    spark.sql(s"CREATE TABLE graft_local2 USING `graft-kv` OPTIONS (catalog '$cat', path '$dir')")
+    try {
+      // an OR with an untranslatable operand must delete both disjuncts
+      spark.sql("DELETE FROM graft_local2 WHERE k < 300 OR v % 2 = 0")
+      model = model.filterNot(r => r._1 < 300L || r._3 % 2 == 0)
+      assert(read(dir, cat).count() == model.length.toLong)
+      (1 to 12).foreach(i => checkLive(dir, cat, s"after DELETE case $i"))
+      checkShards("after DELETE")
+    } finally spark.sql("DROP TABLE IF EXISTS graft_local2")
+  }
+}
