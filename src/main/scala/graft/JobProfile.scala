@@ -42,8 +42,10 @@ object JobProfile {
         val desc = Option(e.properties)
           .flatMap(p => Option(p.getProperty("spark.job.description")))
           .getOrElse("").replaceAll("\\s+", " ")
-        val site = Option(e.properties)
-          .flatMap(p => Option(p.getProperty("callSite.short"))).getOrElse("")
+        // the result stage (highest id: parents are created first) is
+        // named after the action's call site — set for every job, where
+        // the `callSite.short` property only exists on stream jobs
+        val site = e.stageInfos.maxByOption(_.stageId).map(_.name).getOrElse("")
         jobs.put(e.jobId, Job(e.jobId, desc, site, e.time)): Unit
       }
       override def onJobEnd(e: SparkListenerJobEnd): Unit = {

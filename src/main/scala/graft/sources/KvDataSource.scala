@@ -138,11 +138,12 @@ class KvTable(val catalog: KvCatalog, val dir: String,
     * on region-sized shards and must not hold the table lock that
     * every writer commit (batch, streaming epoch) serializes on.
     *
-    * Shards that cannot contain a match — by rowkey range or zone
-    * maps — are untouched (their manifest entries, files and stats stay
-    * byte-identical). Each surviving shard streams through the same
-    * reader/writer pair compaction uses: records where the predicate is
-    * TRUE are dropped (FALSE and UNKNOWN are kept — SQL DELETE
+    * Shards that cannot contain a match — by the read path's selection
+    * ([[KvScan.select]]: rowkey range, point-lookup bucket, zone maps)
+    * or a bloom sidecar — are untouched (their manifest entries, files
+    * and stats stay byte-identical). Each surviving shard streams
+    * through [[KvDataWriter.rewriteShard]]: records where the predicate
+    * is TRUE are dropped (FALSE and UNKNOWN are kept — SQL DELETE
     * semantics), everything else is appended to a replacement shard
     * with a fresh CRC. A rewrite that removed nothing discards its
     * output and keeps the original file.
@@ -171,75 +172,37 @@ class KvTable(val catalog: KvCatalog, val dir: String,
     val declared = catalog.schema
     if (!new java.io.File(KvStore.metaPath(dir)).exists()) return true
     val meta = KvStore.readMeta(dir)
-    // reuse the scan's exact pruning (rowkey range + zone maps) — but
-    // applied to THIS manifest snapshot, the one the rewrite iterates.
-    // (planInputPartitions would re-read the manifest: a compaction
-    // committing between the two reads would rename every shard, the
-    // pruned set and the iterated set would share no file names, and
-    // the delete would silently skip the matching rows.)
-    val ranges = new KvScan(dir, catalog.rowkey, declared, declared, filters, -1)
-      .rowkeyRanges()
-    val inKeyRange = meta.shards.filter(s =>
-      KeyRanges.intersectsShard(ranges, s.minKey, s.maxKey))
-    val touchable: Set[String] =
-      KvZoneMaps.prune(inKeyRange, filters, declared)
-        .filter(s => KvBloomPrune.canMatch(dir, s, filters, declared))
-        .map(_.file).toSet
+    // the read path's shard selection (rowkey ranges, point-lookup
+    // buckets, zone maps) plus bloom sidecars — applied to THIS manifest
+    // snapshot, the one the rewrite iterates. (Re-reading the manifest
+    // would race a compaction: it renames every shard, the pruned set
+    // and the iterated set would share no file names, and the delete
+    // would silently skip the matching rows.)
+    val touchable = KvScan.select(meta.shards, filters, declared, catalog.rowkey,
+      catalog.buckets).parts.map(_.shard)
+      .filter(s => KvBloomPrune.canMatch(dir, s, filters, declared))
     val decoder = new KvRecordDecoder(declared,
       filters.flatMap(_.references).toSet)
     val pred = FilterEval.compile(filters, decoder.idxByName, decoder.dtByName,
       decoder.scratch)
     val token = java.lang.Long.toUnsignedString(
       java.util.concurrent.ThreadLocalRandom.current().nextLong(), 36)
-    var seq = 0
     val replacements = scala.collection.mutable.LinkedHashMap[String, Seq[KvShardMeta]]()
-    meta.shards.foreach { shard =>
-      if (touchable(shard.file)) {
-        val outName = s"shard-delete-$token-d$seq.kv"
-        seq += 1
-        // full records (no cell filter): unprojected cells must survive
-        // the rewrite byte-for-byte; the read also CRC-verifies the
-        // input so a bit-rotted shard aborts before the swap
-        val reader = new KvStore.ShardReader(dir, shard, verifyCrc = true)
-        val w = new KvStore.ShardWriter(dir, outName)
-        // zone-map stats must be RECOMPUTED from the survivors: the
-        // aggregate-pushdown manifest fast path serves them as exact
-        // min/max, so carrying the pre-delete bounds would let an
-        // unfiltered MIN/MAX return deleted values
-        val tracker = new KvZoneMaps.StatsTracker(declared)
-        var removed = 0L
-        var done = false
-        try {
-          while (reader.hasNext) {
-            val rec = reader.next()
-            decoder.decodeInto(rec)
-            if (pred()) removed += 1
-            else { tracker.observe(rec); w.append(rec) }
-          }
-          done = true
-        } finally {
-          reader.close()
-          if (!done) {
-            try w.close() catch { case _: Exception => () }
-            new java.io.File(s"$dir/$outName").delete()
-            // discard any outputs from earlier shards of this failed pass
-            replacements.values.flatten.foreach(KvStore.deleteShard(dir, _))
-          }
-        }
-        val out = w.close()
-        if (removed == 0L)
-          // nothing matched after all (bounds were loose): keep the
-          // original file — no churn, no new vacuum debt
-          out.foreach(KvStore.deleteShard(dir, _))
-        else
-          // fresh survivor stats (exact, see tracker note above); hosts
-          // and the bucket tag carry over (same storage locality, same
-          // key subset — a rewrite never moves a key between buckets)
-          replacements(shard.file) =
-            out.map(_.copy(stats = tracker.result(), hosts = shard.hosts,
-              bucket = shard.bucket, bucketMod = shard.bucketMod,
-              firstVersion = shard.firstVersion)).toSeq
+    try touchable.zipWithIndex.foreach { case (shard, seq) =>
+      val (removed, out) = KvDataWriter.rewriteShard(dir, shard,
+        s"shard-delete-$token-d$seq.kv", declared) { rec =>
+        decoder.decodeInto(rec)
+        !pred()
       }
+      // nothing matched after all (bounds were loose): keep the original
+      // file — no churn, no new vacuum debt
+      if (removed == 0L) out.foreach(KvStore.deleteShard(dir, _))
+      else replacements(shard.file) = out.toSeq
+    } catch {
+      case e: Throwable =>
+        // discard the outputs of earlier shards of this failed pass
+        replacements.values.flatten.foreach(KvStore.deleteShard(dir, _))
+        throw e
     }
     if (replacements.isEmpty) return true
     // replacements take their input's manifest position; entries added

@@ -29,8 +29,8 @@ import org.apache.spark.sql.types.StructType
   * instead of silently skipping.
   *
   * Pushed filters and column pruning apply per micro-batch exactly as
-  * in batch scans (same reader factory, same range/zone-map/bloom
-  * pruning).
+  * in batch scans (same [[KvScan.select]] shard selection, same reader
+  * factory and bloom gate).
   */
 case class KvOffset(version: Long) extends Offset {
   override def json(): String = s"""{"version":$version}"""
@@ -216,35 +216,8 @@ class KvMicroBatchStream(dir: String, rowkeyName: String,
       // contract error, not a FileNotFoundException mid-task
       KvStore.requireShardFiles(dir, shards, s"streaming micro-batch ($s, $e] of $dir",
         remedy = "the checkpoint predates the table's retention; restart with a fresh checkpoint")
-      val dt = declared.find(_.name == rowkeyName).map(_.dataType)
-      val ranges = dt.map(KeyRanges.fromFilters(filters, rowkeyName, _))
-        .getOrElse(KeyRanges.Full)
-      // static pushed filters drop shards that cannot hold a matching
-      // row — rows in them could never survive the per-record filter,
-      // so skipping the file read is observationally identical
-      val inRange = shards.filter(sh =>
-        KeyRanges.intersectsShard(ranges, sh.minKey, sh.maxKey))
-      // bucket pruning, per micro-batch: a stream tailing specific keys
-      // (`=`/`IN` — every planned range is a point) skips validly-tagged
-      // shards in other buckets, same as the batch scan. The per-shard
-      // rule (drop only a shard whose OWN tag is valid, hashed under the
-      // CATALOG'S modulus, and non-matching) is sound regardless of
-      // other shards' tagging state — a shard tagged under a different
-      // bucket count (sh.bucketMod != buckets) is always kept.
-      val bucketPruned =
-        if (buckets > 0) KeyRanges.pointKeys(ranges) match {
-          case Some(pts) =>
-            val wanted = pts.map(graft.kv.KvBuckets.ofKey(_, buckets)).toSet
-            inRange.filter(sh => sh.bucket < 0 || sh.bucket >= buckets ||
-              sh.bucketMod != buckets || wanted.contains(sh.bucket))
-          case None => inRange
-        } else inRange
-      KvZoneMaps.prune(bucketPruned, filters, declared)
-        .map { sh =>
-          val local = KeyRanges.clipToShard(ranges, sh.minKey, sh.maxKey)
-            .map { case (lo, hi) => (lo.map(KvStore.toHex), hi.map(KvStore.toHex)) }
-          KvInputPartition(sh, local): InputPartition
-        }.toArray
+      KvScan.select(shards, filters, declared, rowkeyName, buckets)
+        .parts.toArray[InputPartition]
     }
   }
 

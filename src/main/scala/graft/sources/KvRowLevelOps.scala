@@ -26,11 +26,13 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * shape a 100 TB UPDATE needs.
   *
   * Scale/correctness notes:
-  *  - The scan prunes shards by rowkey ranges + zone maps but returns
-  *    surviving shards IN FULL — a row-level clip would drop the
-  *    non-matching rows of an affected shard from the table when the
-  *    replacement commits. Filters are therefore recorded for pruning
-  *    and reported back to Spark as residual, never as pushed.
+  *  - The scan prunes shards by the read path's rule ([[KvScan.select]]:
+  *    rowkey ranges, point-lookup buckets, zone maps) plus bloom
+  *    sidecars, but returns surviving shards IN FULL — a row-level clip
+  *    would drop the non-matching rows of an affected shard from the
+  *    table when the replacement commits. Filters are therefore
+  *    recorded for pruning and reported back to Spark as residual,
+  *    never as pushed.
   *  - The manifest is PINNED at scan creation: plan and commit reason
   *    about the same snapshot (the same race the DELETE rewrite closes).
   *  - Commit is optimistic, like compaction and DELETE: if a concurrent
@@ -160,16 +162,12 @@ class KvGroupScan(catalog: KvCatalog, dir: String, prunedSchema: StructType,
     s"graft-kv-group-rewrite $dir GroupPruneFilters: [${pruning.mkString(", ")}]"
 
   override def planInputPartitions(): Array[InputPartition] = {
-    val dt = declared.find(_.name == catalog.rowkey).map(_.dataType)
-    val ranges = dt.map(KeyRanges.fromFilters(pruning, catalog.rowkey, _))
-      .getOrElse(KeyRanges.Full)
-    val inRange = meta.shards.filter(s =>
-      KeyRanges.intersectsShard(ranges, s.minKey, s.maxKey))
     // bloom sidecars prune here too (driver-side: one KiB read per
     // candidate shard is the right trade for DML — every shard kept is
     // a full rewrite): a point UPDATE/DELETE on a bloom-tracked column
     // rewrites only the shards that might hold the key
-    val surviving = KvZoneMaps.prune(inRange, pruning, declared)
+    val surviving = KvScan.select(meta.shards, pruning, declared, catalog.rowkey,
+      catalog.buckets).parts.map(_.shard)
       .filter(s => KvBloomPrune.canMatch(dir, s, pruning, declared))
     op.scannedFiles = surviving.map(_.file)
     op.scanPlanned = true

@@ -281,7 +281,10 @@ class KvScan(dir: String, rowkeyName: String, prunedSchema: StructType,
       eventTime = eventTime)
   }
 
-  override def description(): String = {
+  override def description(): String =
+    description(KvScan.columnarRead(columnar, reverse, limit, prunedSchema))
+
+  private[sources] def description(columnarRead: Boolean): String = {
     val f = allFilters.mkString(", ")
     val lim = if (limit >= 0) limit.toString else "none"
     val topn = if (reverse) " (DESC tail)" else ""
@@ -289,30 +292,16 @@ class KvScan(dir: String, rowkeyName: String, prunedSchema: StructType,
       since.map(v => s", Since: $v").getOrElse("")
     // Columnar ahead of the filter list: plan renderers truncate the
     // description (spark.sql.maxMetadataStringLength) and the filter
-    // list is the unbounded part
-    val col = columnar && (!reverse || limit > 0) &&
-      KvColumnarReader.eligible(prunedSchema) &&
-      !prunedSchema.fieldNames.contains(KvMetadataColumns.ShardCol) &&
-      !prunedSchema.fieldNames.contains(KvEventTime.EventTimeCol)
-    // Ranges counts the DISJOINT planned rowkey ranges (static filters
-    // only; runtime filters may tighten later) — 0 = provably empty
+    // list is the unbounded part. Ranges counts the DISJOINT planned
+    // rowkey ranges (static filters only; runtime filters may tighten
+    // later) — 0 = provably empty
     val nr = rowkeyRanges().length
-    s"graft-kv $dir Columnar: $col$pin, Ranges: $nr, Limit: $lim$topn, PushedFilters: [$f]"
+    s"graft-kv $dir Columnar: $columnarRead$pin, Ranges: $nr, Limit: $lim$topn, PushedFilters: [$f]"
   }
 
-  /** Compile rowkey predicates into a normalized union of disjoint
-    * inclusive key ranges ([[KeyRanges]]): `IN`/`Or` shapes plan one
-    * range per disjunct instead of a single [min,max] envelope, so a
-    * sparse point lookup over a wide keyspace prunes every shard
-    * between the points. Empty = provably matches nothing. */
-  private[sources] def rowkeyRanges(): Seq[KeyRanges.Range] = {
-    val dt = declared.find(_.name == rowkeyName).map(_.dataType)
-      .getOrElse(return KeyRanges.Full)
-    // the order-preserving key encoding (BytesCodec.encodeKey) makes
-    // unsigned byte order == value order for the FULL signed domain, so
-    // range pruning is sound everywhere — no literal-sign special cases
-    KeyRanges.fromFilters(allFilters, rowkeyName, dt)
-  }
+  /** The planned rowkey ranges of the static and runtime filters. */
+  private[sources] def rowkeyRanges(): Seq[KeyRanges.Range] =
+    KvScan.rowkeyRanges(allFilters, declared, rowkeyName)
 
   // pruning observability, filled by planInputPartitions and surfaced
   // as driver-side custom metrics on the scan node (Spark SQL UI +
@@ -320,10 +309,7 @@ class KvScan(dir: String, rowkeyName: String, prunedSchema: StructType,
   // manifest let us skip" is the first question a slow-scan
   // investigation asks
   private var shardsTotal = 0L
-  private var prunedByKeyRange = 0L
-  private var prunedByBucket = 0L
-  private var prunedByZoneMap = 0L
-  private var rangesPlanned = 1L
+  private var selection = KvScan.Unplanned
 
   /** Storage-partitioned-join reporting for bucketed tables. A table
     * whose EVERY shard carries a valid bucket tag is, by the writer's
@@ -345,14 +331,8 @@ class KvScan(dir: String, rowkeyName: String, prunedSchema: StructType,
     import org.apache.spark.sql.connector.expressions.Expressions
     lazy val shards = try KvStore.readMetaAsOf(dir, asOf).shards
       catch { case _: Exception => Nil }
-    // `bucketMod == buckets` on every shard: a tag hashed under a
-    // DIFFERENT modulus (catalog bucket count later edited) would make
-    // the reported bucket(buckets, rowkey) partitioning a lie — keys
-    // would sit in the wrong reported bucket and a zero-exchange join
-    // would silently mismatch rows. Mismatch ⇒ UnknownPartitioning.
     if (buckets > 0 && prunedSchema.fieldNames.contains(rowkeyName) &&
-        shards.nonEmpty &&
-        shards.forall(s => s.bucket >= 0 && s.bucket < buckets && s.bucketMod == buckets)) {
+        KvScan.allTagged(shards, buckets)) {
       val distinct = shards.map(_.bucket).distinct.length
       new org.apache.spark.sql.connector.read.partitioning.KeyGroupedPartitioning(
         Array(Expressions.bucket(buckets, rowkeyName)), distinct)
@@ -381,52 +361,16 @@ class KvScan(dir: String, rowkeyName: String, prunedSchema: StructType,
       KvStore.requireShardFiles(dir, meta.shards,
         asOf.map(v => s"table version $v")
           .getOrElse(s"the incremental window since version ${since.get}"))
-    val ranges = rowkeyRanges()
-    val inKeyRange = meta.shards.filter(s =>
-      KeyRanges.intersectsShard(ranges, s.minKey, s.maxKey))
-    // keyed wrappers only when EVERY manifest shard is bucket-tagged —
-    // the exact condition outputPartitioning() reported KeyGrouped for
-    // (judged on the FULL shard set, matching that report; Spark
-    // requires every partition to expose a key or none)
-    val keyed = buckets > 0 &&
-      full.shards.forall(s => s.bucket >= 0 && s.bucket < buckets && s.bucketMod == buckets)
-    // bucket pruning: a hash-bucketed layout scatters keys, so every
-    // shard's [minKey, maxKey] spans most of the keyspace and range
-    // pruning keeps nearly all of them — but a POINT lookup (`=`/`IN`;
-    // every planned range is a single key) can only live in the buckets
-    // those keys hash to, and the writer's invariant (one shard ⊆ one
-    // bucket) makes the shard tag exact. A 1024-bucket fact table point
-    // lookup plans 1/1024 of the shards instead of all of them. Sound
-    // only when all ranges are points — a span hashes anywhere. The
-    // rule is PER SHARD (drop a shard only when its OWN tag is valid,
-    // hashed under the CATALOG'S modulus, and non-matching), so it
-    // needs no all-tagged gate and is sound on mixed manifests — a
-    // shard whose recorded bucketMod differs from catalog.buckets is
-    // always kept (its tag says nothing about where today's hash of
-    // the key lands).
-    val bucketPruned =
-      if (buckets > 0 && bucketPrune) KeyRanges.pointKeys(ranges) match {
-        case Some(pts) =>
-          val wanted = pts.map(KvBuckets.ofKey(_, buckets)).toSet
-          inKeyRange.filter(s => s.bucket < 0 || s.bucket >= buckets ||
-            s.bucketMod != buckets || wanted.contains(s.bucket))
-        case None => inKeyRange
-      } else inKeyRange
-    // zone maps: value-column predicates prune shards whose recorded
-    // min/max exclude the literal — the non-rowkey pruning axis
-    val surviving = KvZoneMaps.prune(bucketPruned, allFilters, declared)
     shardsTotal = meta.shards.length
-    prunedByKeyRange = (meta.shards.length - inKeyRange.length).toLong
-    prunedByBucket = (inKeyRange.length - bucketPruned.length).toLong
-    prunedByZoneMap = (bucketPruned.length - surviving.length).toLong
-    rangesPlanned = ranges.length.toLong
-    surviving.map { s =>
-      // each shard carries only the ranges that touch it — the reader's
-      // cursor walks a short local list, not the global set
-      val local = KeyRanges.clipToShard(ranges, s.minKey, s.maxKey)
-        .map { case (lo, hi) => (lo.map(KvStore.toHex), hi.map(KvStore.toHex)) }
-      val p = KvInputPartition(s, local, runtimeFilters.toSeq)
-      (if (keyed) KvKeyedInputPartition(p, s.bucket) else p): InputPartition
+    selection = KvScan.select(meta.shards, allFilters, declared, rowkeyName,
+      if (bucketPrune) buckets else 0)
+    // keyed wrappers exactly when outputPartitioning() reported
+    // KeyGrouped (judged on the FULL shard set, matching that report;
+    // Spark requires every partition to expose a key or none)
+    val keyed = KvScan.allTagged(full.shards, buckets)
+    selection.parts.map { p =>
+      val rp = p.copy(runtime = runtimeFilters.toSeq)
+      (if (keyed) KvKeyedInputPartition(rp, p.shard.bucket) else rp): InputPartition
     }.toArray
   }
 
@@ -435,15 +379,109 @@ class KvScan(dir: String, rowkeyName: String, prunedSchema: StructType,
 
   override def reportDriverMetrics(): Array[CustomTaskMetric] = Array(
     KvScanMetrics.taskMetric("kvShardsTotal", shardsTotal),
-    KvScanMetrics.taskMetric("kvShardsPrunedKeyRange", prunedByKeyRange),
-    KvScanMetrics.taskMetric("kvShardsPrunedBucket", prunedByBucket),
-    KvScanMetrics.taskMetric("kvShardsPrunedZoneMap", prunedByZoneMap),
-    KvScanMetrics.taskMetric("kvKeyRangesPlanned", rangesPlanned))
+    KvScanMetrics.taskMetric("kvShardsPrunedKeyRange", selection.prunedByKeyRange),
+    KvScanMetrics.taskMetric("kvShardsPrunedBucket", selection.prunedByBucket),
+    KvScanMetrics.taskMetric("kvShardsPrunedZoneMap", selection.prunedByZoneMap),
+    KvScanMetrics.taskMetric("kvKeyRangesPlanned", selection.ranges.length.toLong))
 
   override def createReaderFactory(): PartitionReaderFactory =
     KvPartitionReaderFactory(dir, prunedSchema.json, declared.json,
       rowkeyName, allFilters, limit, reverse, columnar,
       KvEventTime.encode(eventTime))
+}
+
+/** Shard selection, the one rule every graft-kv read and rewrite plans
+  * with: the batch scan (and through it the pushed-aggregate and
+  * driver-local scans), the stream micro-batch, the row-level group
+  * scan and the pushable DELETE. */
+object KvScan {
+
+  /** What [[select]] planned: the disjoint rowkey ranges, one partition
+    * per surviving shard carrying only the ranges that touch it (hex
+    * bounds), and how many shards each pruning axis removed. */
+  final case class Selection(ranges: Seq[KeyRanges.Range], parts: Seq[KvInputPartition],
+                             prunedByKeyRange: Long, prunedByBucket: Long,
+                             prunedByZoneMap: Long)
+
+  /** Before planning: the unconstrained range set, nothing pruned. */
+  val Unplanned: Selection = Selection(KeyRanges.Full, Nil, 0L, 0L, 0L)
+
+  /** Compile rowkey predicates into a normalized union of disjoint
+    * inclusive key ranges ([[KeyRanges]]): `IN`/`Or` shapes plan one
+    * range per disjunct instead of a single [min,max] envelope, so a
+    * sparse point lookup over a wide keyspace prunes every shard
+    * between the points. Empty = provably matches nothing. The
+    * order-preserving key encoding (BytesCodec.encodeKey) makes unsigned
+    * byte order == value order for the FULL signed domain, so range
+    * pruning is sound everywhere — no literal-sign special cases. */
+  def rowkeyRanges(filters: Array[Filter], declared: StructType,
+                   rowkey: String): Seq[KeyRanges.Range] =
+    declared.find(_.name == rowkey)
+      .map(f => KeyRanges.fromFilters(filters, rowkey, f.dataType))
+      .getOrElse(KeyRanges.Full)
+
+  /** The shard's bucket tag is exact under `buckets`: in range and
+    * hashed under that modulus. A tag hashed under a DIFFERENT modulus
+    * (the catalog's bucket count edited later) says nothing about where
+    * today's hash of a key lands. */
+  private def taggedUnder(s: KvShardMeta, buckets: Int): Boolean =
+    s.bucket >= 0 && s.bucket < buckets && s.bucketMod == buckets
+
+  /** Every shard tagged under the catalog modulus: the one condition
+    * under which a scan reports `KeyGroupedPartitioning` and keys its
+    * partitions by bucket — any other tag would put keys in the wrong
+    * reported bucket and a zero-exchange join would mismatch rows. */
+  def allTagged(shards: Seq[KvShardMeta], buckets: Int): Boolean =
+    shards.nonEmpty && shards.forall(taggedUnder(_, buckets))
+
+  /** Whether a read decodes through [[KvColumnarReader]]. A reverse scan
+    * qualifies only in its pushed-TopN form (limit > 0 bounds the ring
+    * buffer); reverse-without-limit never reaches a reader (pushTopN is
+    * the only reverse producer) but the guard keeps the row path as the
+    * sound fallback if one ever did. */
+  def columnarRead(columnar: Boolean, reverse: Boolean, limit: Int,
+                   pruned: StructType): Boolean =
+    columnar && (!reverse || limit > 0) && KvColumnarReader.eligible(pruned) &&
+      !pruned.fieldNames.contains(KvMetadataColumns.ShardCol) &&
+      !pruned.fieldNames.contains(KvEventTime.EventTimeCol)
+
+  /** The shards that can hold a row matching `filters`, in three steps:
+    *  1. key ranges: a shard whose [minKey, maxKey] misses every planned
+    *     range goes;
+    *  2. buckets (`buckets` > 0; 0 turns the step off): a hash-bucketed
+    *     layout scatters keys, so range pruning keeps nearly every
+    *     shard — but a POINT lookup (every planned range a single key)
+    *     can only live in the buckets its keys hash to, and the writer's
+    *     invariant (one shard ⊆ one bucket) makes the tag exact. The rule
+    *     is per shard: drop a shard only when its OWN tag is valid under
+    *     `buckets` and names another bucket, so it is sound on mixed
+    *     manifests. A span hashes anywhere and never bucket-prunes;
+    *  3. zone maps: value-column predicates drop shards whose recorded
+    *     min/max exclude the literal.
+    * Rows in a dropped shard could never pass the per-record filter, so
+    * skipping it is observationally identical. */
+  def select(shards: Seq[KvShardMeta], filters: Array[Filter], declared: StructType,
+             rowkey: String, buckets: Int): Selection = {
+    val ranges = rowkeyRanges(filters, declared, rowkey)
+    val inKeyRange = shards.filter(s =>
+      KeyRanges.intersectsShard(ranges, s.minKey, s.maxKey))
+    val points = if (buckets > 0) KeyRanges.pointKeys(ranges) else None
+    val inBucket = points.fold(inKeyRange) { pts =>
+      val wanted = pts.map(KvBuckets.ofKey(_, buckets)).toSet
+      inKeyRange.filter(s => !taggedUnder(s, buckets) || wanted(s.bucket))
+    }
+    val surviving = KvZoneMaps.prune(inBucket, filters, declared)
+    val parts = surviving.map { s =>
+      // each shard carries only the ranges that touch it — the reader's
+      // cursor walks a short local list, not the global set
+      KvInputPartition(s, KeyRanges.clipToShard(ranges, s.minKey, s.maxKey)
+        .map { case (lo, hi) => (lo.map(KvStore.toHex), hi.map(KvStore.toHex)) })
+    }
+    Selection(ranges, parts,
+      prunedByKeyRange = (shards.length - inKeyRange.length).toLong,
+      prunedByBucket = (inKeyRange.length - inBucket.length).toLong,
+      prunedByZoneMap = (inBucket.length - surviving.length).toLong)
+  }
 }
 
 /** Job-free point lookup: a rowkey `=`/`IN` read answered on the driver
@@ -491,7 +529,8 @@ final class KvLocalScan private (val scan: KvScan, parts: Array[InputPartition])
 
   override def rows(): Array[InternalRow] = read
   override def readSchema(): StructType = scan.readSchema()
-  override def description(): String = scan.description()
+  // rows come from the row reader (`createReader`), never the columnar one
+  override def description(): String = scan.description(columnarRead = false)
   override def estimateStatistics(): Statistics = scan.estimateStatistics()
 
   override def supportedCustomMetrics(): Array[CustomMetric] = KvScanMetrics.supported
@@ -597,14 +636,8 @@ case class KvPartitionReaderFactory(dir: String, prunedJson: String,
     DataType.fromJson(declaredJson).asInstanceOf[StructType]
   @transient private lazy val eventTime = KvEventTime.decode(eventTimeEnc)
 
-  // A reverse scan is columnar-eligible only in its pushed-TopN form
-  // (limit > 0 bounds the ring buffer); reverse-without-limit never
-  // reaches a reader (pushTopN is the only reverse producer) but the
-  // guard keeps the row path as the sound fallback if one ever did.
   override def supportColumnarReads(p: InputPartition): Boolean =
-    columnar && (!reverse || limit > 0) && KvColumnarReader.eligible(pruned) &&
-      !pruned.fieldNames.contains(KvMetadataColumns.ShardCol) &&
-      !pruned.fieldNames.contains(KvEventTime.EventTimeCol)
+    KvScan.columnarRead(columnar, reverse, limit, pruned)
 
   override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
     val part = KvInputPartition.unwrap(p)

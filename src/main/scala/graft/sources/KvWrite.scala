@@ -256,29 +256,19 @@ class KvBatchWrite(catalog: KvCatalog, dir: String, schema: StructType,
   }
 
   /** Stream one boundary shard, keeping every record OUTSIDE the
-    * ranges, into a carry shard. Inherited metadata stays SOUND, not
-    * tight: zone-map stats are the source's (bounds of a superset),
-    * the bloom sidecar is dropped (pruning loss only), `firstVersion`
-    * is the source's exact value — and the carry file is new, so
-    * writeMeta stamps `addedVersion = commitV ≠ firstVersion`,
-    * keeping carried rows out of every change-feed window, exactly
-    * like a compaction output. None = no survivors. */
+    * ranges, into a carry shard ([[KvDataWriter.rewriteShard]]: exact
+    * zone maps, CRC-verified input). The bloom sidecar is dropped
+    * (pruning loss only); `firstVersion` is the source's exact value —
+    * and the carry file is new, so writeMeta stamps
+    * `addedVersion = commitV ≠ firstVersion`, keeping carried rows out
+    * of every change-feed window, exactly like a compaction output.
+    * None = no survivors. */
   private def carveSurvivors(s: KvShardMeta, ranges: Seq[KeyRanges.Range],
                              fileName: String): Option[KvShardMeta] = {
     require(!new File(s"$dir/$fileName").exists(),
       s"range-replace carry $fileName already exists")
-    // CRC rides the same pass: a bit-rotted boundary shard throws at
-    // its EOF, before the manifest swap can commit a partial carve
-    val rd = new KvStore.ShardReader(dir, s, verifyCrc = true)
-    val w = new KvStore.ShardWriter(dir, fileName)
-    try {
-      while (rd.hasNext) {
-        val rec = rd.next()
-        if (!KeyRanges.containsKey(ranges, rec.key)) w.append(rec)
-      }
-    } finally rd.close()
-    w.close().map(m => m.copy(stats = s.stats, firstVersion = s.firstVersion,
-      bucket = s.bucket, bucketMod = s.bucketMod))
+    KvDataWriter.rewriteShard(dir, s, fileName, catalog.schema)(
+      rec => !KeyRanges.containsKey(ranges, rec.key))._2
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit =
@@ -355,6 +345,42 @@ object KvDataWriter {
   /** Default sorted-run size: region-scale shards without holding more
     * than one run of encoded cells per task in memory. */
   val DefaultChunkBytes: Long = 256L << 20
+
+  /** One maintenance rewrite of shard `src` into the fresh file
+    * `outName`, keeping the records `keep` accepts — the pushable
+    * DELETE's and the range replace's shared loop. Full records are
+    * read (no cell filter), so unprojected cells survive byte-for-byte,
+    * and the read CRC-verifies the input: a bit-rotted shard throws
+    * before any manifest swap. Zone-map stats are RECOMPUTED from the
+    * kept records ([[KvZoneMaps.StatsTracker]]): the aggregate-pushdown
+    * manifest fast path serves them as exact min/max, so the source's
+    * bounds would resurrect removed extremes. Hosts, the bucket tag and
+    * `firstVersion` carry over — same storage locality, same key subset
+    * (a rewrite never moves a key between buckets), same lineage. A
+    * failure deletes the partial output before rethrowing. Returns the
+    * number of records dropped and the replacement (None = nothing
+    * kept). */
+  def rewriteShard(dir: String, src: KvShardMeta, outName: String, declared: StructType)
+                  (keep: KvRecord => Boolean): (Long, Option[KvShardMeta]) = {
+    val reader = new KvStore.ShardReader(dir, src, verifyCrc = true)
+    val w = new KvStore.ShardWriter(dir, outName)
+    val tracker = new KvZoneMaps.StatsTracker(declared)
+    var removed = 0L
+    try {
+      while (reader.hasNext) {
+        val rec = reader.next()
+        if (keep(rec)) { tracker.observe(rec); w.append(rec) }
+        else removed += 1
+      }
+    } catch {
+      case e: Throwable =>
+        try w.close() catch { case _: Exception => () }
+        new File(s"$dir/$outName").delete()
+        throw e
+    } finally reader.close()
+    (removed, w.close().map(_.copy(stats = tracker.result(), hosts = src.hosts,
+      bucket = src.bucket, bucketMod = src.bucketMod, firstVersion = src.firstVersion)))
+  }
 }
 
 /** `schema` = incoming row layout; `declared` = catalog schema carrying

@@ -3,7 +3,7 @@ package graft.sources
 import java.nio.file.Files
 
 import graft.SparkSpec
-import graft.kv.{KvBuckets, KvCompactor, KvStore}
+import graft.kv.{BytesCodec, KvBuckets, KvCompactor, KvShardMeta, KvStore}
 import org.apache.spark.sql.types.LongType
 
 /** Bucketed tables → storage-partitioned joins: shard bucket tagging on
@@ -33,6 +33,12 @@ class KvBucketJoinSpec extends SparkSpec {
       "FROM range(0, 1000, 2)") // every second key: joins hit half
   }
   private lazy val pairReady: Unit = makePair()
+
+  /** Does the shard's [minKey, maxKey] span the key? */
+  private def covers(s: KvShardMeta, id: Long): Boolean = {
+    val k = BytesCodec.encodeKey(LongType, id)
+    BytesCodec.compareKeys(s.minKey, k) <= 0 && BytesCodec.compareKeys(k, s.maxKey) <= 0
+  }
 
   test("writes tag every shard with its rowkey bucket") {
     pairReady
@@ -68,15 +74,10 @@ class KvBucketJoinSpec extends SparkSpec {
 
   test("point lookups prune to the key's bucket; spans never bucket-prune") {
     pairReady
-    import graft.kv.BytesCodec
     val dir = s"$wh/default/fact_a"
     val shards = KvStore.readMeta(dir).shards
     // bucket pruning runs AFTER key-range pruning, so it counts only the
     // range-surviving shards whose tag differs from the key's bucket
-    def covers(s: graft.kv.KvShardMeta, id: Long): Boolean = {
-      val k = BytesCodec.encodeKey(LongType, id)
-      BytesCodec.compareKeys(s.minKey, k) <= 0 && BytesCodec.compareKeys(k, s.maxKey) <= 0
-    }
     val target = KvBuckets.ofValue(LongType, 123L, 8)
     val exp1 = shards.count(s => covers(s, 123L) && s.bucket != target)
     assert(exp1 > 0, "vacuity guard: need range-surviving shards in other buckets")
@@ -194,6 +195,42 @@ class KvBucketJoinSpec extends SparkSpec {
     assert(df.count() == 450)
   }
 
+  test("point UPDATE/DELETE rewrite only the key's bucket, matching an unbucketed twin") {
+    sql("""CREATE TABLE bkt.default.dml_b (id BIGINT, qty DOUBLE)
+          |TBLPROPERTIES ('rowkey'='id', 'buckets'='8')""".stripMargin)
+    sql("CREATE TABLE bkt.default.dml_p (id BIGINT, qty DOUBLE) TBLPROPERTIES ('rowkey'='id')")
+    Seq("dml_b", "dml_p").foreach(t =>
+      sql(s"INSERT INTO bkt.default.$t SELECT id, CAST(id % 7 AS DOUBLE) FROM range(0, 1000)"))
+    val dir = s"$wh/default/dml_b"
+    val target = KvBuckets.ofValue(LongType, 123L, 8)
+    def otherBuckets(shards: Seq[KvShardMeta]): Set[String] =
+      shards.filter(_.bucket != target).map(_.file).toSet
+    val before = KvStore.readMeta(dir).shards
+    assert(before.exists(s => s.bucket != target && covers(s, 123L)),
+      "vacuity guard: need range-surviving shards in other buckets")
+
+    Seq("dml_b", "dml_p").foreach(t =>
+      sql(s"UPDATE bkt.default.$t SET qty = -1.0 WHERE id = 123"))
+    val after = KvStore.readMeta(dir).shards
+    val replaced = before.filterNot(s => after.exists(_.file == s.file))
+    assert(replaced.nonEmpty && replaced.forall(_.bucket == target),
+      s"a point UPDATE may replace only bucket $target's shards, replaced " +
+        replaced.map(s => s"${s.file}@${s.bucket}").mkString(", "))
+    assert(otherBuckets(after) == otherBuckets(before),
+      "other buckets' shard files must be untouched")
+
+    // the pushable DELETE path selects shards by the same rule
+    Seq("dml_b", "dml_p").foreach(t =>
+      sql(s"DELETE FROM bkt.default.$t WHERE id IN (5, 123, 777)"))
+    def rows(t: String): Seq[(Long, Double)] =
+      sql(s"SELECT id, qty FROM bkt.default.$t").collect()
+        .map(r => (r.getLong(0), r.getDouble(1))).toSeq.sorted
+    val got = rows("dml_b")
+    assert(got.length == 997 && !got.exists(_._1 == 123L))
+    assert(got == rows("dml_p"), "bucketed DML must leave the unbucketed twin's rows")
+    assert(KvStore.readMeta(dir).shards.forall(s => s.bucket >= 0 && s.bucket < 8))
+  }
+
   // path-API catalog over fact_a's dir with a chosen bucket count — the
   // drift scenario is a catalog edit the table files never saw
   private def pathCatalog(buckets: Int): String =
@@ -267,14 +304,9 @@ class KvBucketJoinSpec extends SparkSpec {
 
   test("a runtime IN-set (DPP) bucket-prunes shards, not just ranges") {
     pairReady
-    import graft.kv.BytesCodec
     val dir = s"$wh/default/fact_a"
     val shards = KvStore.readMeta(dir).shards
     val keys = Seq(123L, 456L)
-    def covers(s: graft.kv.KvShardMeta, id: Long): Boolean = {
-      val k = BytesCodec.encodeKey(LongType, id)
-      BytesCodec.compareKeys(s.minKey, k) <= 0 && BytesCodec.compareKeys(k, s.maxKey) <= 0
-    }
     val wanted = keys.map(KvBuckets.ofValue(LongType, _, 8)).toSet
     // hash-bucketed shards span most of the keyspace, so range pruning
     // alone must leave wrong-bucket shards for bucket pruning to drop

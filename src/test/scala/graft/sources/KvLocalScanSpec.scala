@@ -58,6 +58,10 @@ class KvLocalScanSpec extends SparkSpec {
       assert(planned.metric("kvShardsTotal") == 8L)
       assert(planned.metric("kvShardsPrunedKeyRange") == 8L - planned.kv.planInputPartitions().length)
       assert(planned.metric("kvKeyRangesPlanned") == ranges)
+      // EXPLAIN names the reader that serves the rows: the driver read
+      // uses the row reader even for a columnar-eligible schema
+      assert(planned.scan.description().contains("Columnar: false"),
+        s"$what: ${planned.scan.description()}")
     }
     // the read counters land on the scan object: IN(5,1500,3999) decodes
     // exactly its three in-range records
@@ -107,6 +111,7 @@ class KvLocalScanSpec extends SparkSpec {
     val (nRange, jobsRange) = collected(range)
     assert(nRange == 11 && jobsRange > 0)
     assert(!PlannedKvScan(range).isLocal)
+    assert(PlannedKvScan(range).scan.description().contains("Columnar: true"))
   }
 
   test("property: point lookups match a client model across read shapes and table states") {
