@@ -692,18 +692,20 @@ object KvStore {
     private var maxKey: Array[Byte] = _
     private var lastKey: Array[Byte] = _
 
-    // cell names repeat every record — cache their UTF-8 bytes by
-    // reference so append() does not re-encode two strings per cell
-    private var nameKeys = new Array[String](8)
-    private var nameBytes = new Array[Array[Byte]](8)
-    private var nameN = 0
+    // cell names repeat every record — cache their UTF-8 bytes BY VALUE
+    // so append() does not re-encode two strings per cell. Callers hand
+    // in many equal instances (the Spark write path one per column's
+    // metadata, a compaction merge one per input reader), so an
+    // identity cache misses; a String caches its hash, so a lookup is a
+    // field read plus, on the usual same-instance hit, a pointer compare
+    private val nameBytes = new java.util.HashMap[String, Array[Byte]]()
     private def utf8(s: String): Array[Byte] = {
-      var i = 0
-      while (i < nameN) { if (nameKeys(i) eq s) return nameBytes(i); i += 1 }
-      val b = s.getBytes(StandardCharsets.UTF_8)
-      if (nameN < nameKeys.length) {
-        nameKeys(nameN) = s; nameBytes(nameN) = b; nameN += 1
-      } // else: identity-cache full (unusual churn) — still correct, just uncached
+      var b = nameBytes.get(s)
+      if (b == null) {
+        b = s.getBytes(StandardCharsets.UTF_8)
+        // bounded: names are a table's column names, not data
+        if (nameBytes.size < 4096) nameBytes.put(s, b)
+      }
       b
     }
 

@@ -64,6 +64,25 @@ object FilterEval {
     }
   }
 
+  /** Does `f` read only column `col` and match one interval of its
+    * values? Comparisons, equality, prefix match, `IS NOT NULL` and
+    * conjunctions of them qualify; `IN`, `OR` and `NOT`, which can leave
+    * holes, do not. Under such a filter, two matching values imply that
+    * every value between them matches too. */
+  def oneInterval(f: Filter, col: String): Boolean = f match {
+    case EqualTo(a, _)                  => a == col
+    case EqualNullSafe(a, v)            => a == col && v != null
+    case LessThan(a, _)                 => a == col
+    case LessThanOrEqual(a, _)          => a == col
+    case GreaterThan(a, _)              => a == col
+    case GreaterThanOrEqual(a, _)       => a == col
+    case IsNotNull(a)                   => a == col
+    case StringStartsWith(a, _)         => a == col
+    case And(l, r)                      => oneInterval(l, col) && oneInterval(r, col)
+    case AlwaysTrue()                   => true
+    case _                              => false
+  }
+
   /** Canonicalize an external literal to the internal-comparable domain
     * of `dt` (micros for timestamps, days for dates, UTF8String for
     * strings — Spark orders strings by UTF-8 BINARY bytes, and UTF-16

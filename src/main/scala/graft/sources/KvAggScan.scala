@@ -9,31 +9,41 @@ import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types._
 
 /** Aggregate pushdown (SURVEY.md §2.4 stretch — `SupportsPushDownAggregates`,
-  * absent in the reference): COUNT(*) / COUNT(col) / MIN / MAX run inside
-  * the scan, globally or GROUPED BY declared columns. Each partition
-  * emits one partial row per group (one total when ungrouped); Spark's
-  * final aggregate merges partials across shards. Global COUNT(*) with
-  * no residual predicates is answered from the shard manifest without
-  * opening a single shard file.
+  * absent in the reference): COUNT(*) / COUNT(col) / MIN / MAX / SUM run
+  * inside the scan, globally or GROUPED BY declared columns, in one of
+  * two modes ([[KvScanBuilder.supportCompletePushDown]] picks):
+  *  - one-task (complete pushdown): a rowkey-bounded aggregate over
+  *    shards within [[KvScan.MaxShardRows]] plans ONE partition carrying
+  *    every surviving shard. Its reader folds them all into one
+  *    accumulator and emits the final rows, so Spark plans only its
+  *    aliasing `Project` over the scan: one job, no exchange;
+  *  - partial: every other aggregate plans one partition per shard,
+  *    each emitting one partial row per group (one total when
+  *    ungrouped), and Spark's final aggregate merges the partials
+  *    across shards after a shuffle.
+  * Per shard, in both modes: a bloom-excluded shard contributes nothing,
+  * and a global COUNT(*)/MIN/MAX over a shard every record of which
+  * matches is answered from its manifest entry without opening the file.
   *
-  * Grouped memory shape: GROUP BY the rowkey streams — shards are
-  * key-sorted, so equal keys are adjacent and each group closes as the
-  * scan passes it (O(1) state, rows emitted as produced). Any other
-  * grouping holds a per-shard hash map, bounded by the shard's record
-  * count — itself bounded by the writer's `chunkBytes` — which is the
-  * same order of memory Spark's own partial hash aggregate would spend
-  * on the shard's rows, minus the row materialization and exchange.
+  * Grouped memory shape: in partial mode GROUP BY the rowkey streams —
+  * shards are key-sorted, so equal keys are adjacent and each group
+  * closes as the scan passes it (O(1) state). Any other grouping, and
+  * every grouping in one-task mode (overlapping shards repeat a rowkey,
+  * and the groups must merge), holds a hash map bounded by the rows it
+  * reads: one shard's (bounded by the writer's `chunkBytes`) in partial
+  * mode, [[KvScan.MaxShardRows]] in one-task mode.
   */
 sealed trait KvAggSpec extends Serializable
 case object KvCountStar extends KvAggSpec
 final case class KvCountCol(name: String) extends KvAggSpec
 final case class KvMinCol(name: String) extends KvAggSpec
 final case class KvMaxCol(name: String) extends KvAggSpec
-/** `checked` = ANSI mode was on at translation: the integral partial
+/** `checked` = ANSI mode was on at translation: the integral sum
   * accumulates with overflow-CHECKED addition (Math.addExact) so the
   * pushed sum raises on overflow exactly where Spark's own Sum would,
   * instead of silently wrapping under a session that promises
-  * ARITHMETIC_OVERFLOW. Non-ANSI partials keep wrap-around addition —
+  * ARITHMETIC_OVERFLOW — in one-task mode also when only the total
+  * across shards overflows. Non-ANSI sums keep wrap-around addition —
   * associative, so shard partials merged by Spark wrap to the same
   * answer Spark itself computes. */
 final case class KvSumCol(name: String, checked: Boolean = false) extends KvAggSpec
@@ -123,7 +133,8 @@ object KvAggSpec {
 class KvAggScan(dir: String, rowkeyName: String, declared: StructType,
                 filters: Array[Filter], groupCols: Seq[String], specs: Seq[KvAggSpec],
                 asOf: Option[Long] = None, since: Option[Long] = None,
-                buckets: Int = 0, bucketPrune: Boolean = true)
+                buckets: Int = 0, bucketPrune: Boolean = true,
+                oneTask: Boolean = false)
     extends Scan with Batch {
 
   // the base scan owns shard selection (ranges, zone maps, asOf, since,
@@ -138,12 +149,19 @@ class KvAggScan(dir: String, rowkeyName: String, declared: StructType,
 
   override def readSchema(): StructType = KvAggSpec.outputSchema(groupCols, specs, declared)
   override def toBatch: Batch = this
+  // the mode leads: plan renderers truncate long descriptions
   override def description(): String =
-    s"graft-kv-agg $dir PushedAggregates: [${specs.mkString(", ")}], " +
+    s"graft-kv-agg $dir Mode: ${if (oneTask) "one-task final" else "partial per shard"}, " +
+      s"PushedAggregates: [${specs.mkString(", ")}], " +
       s"PushedGroupBy: [${groupCols.mkString(", ")}], " +
       s"PushedFilters: [${filters.mkString(", ")}]"
 
-  override def planInputPartitions(): Array[InputPartition] = base.planInputPartitions()
+  override def planInputPartitions(): Array[InputPartition] = {
+    val parts = base.planInputPartitions()
+    // one-task: a single partition even over zero shards, so a global
+    // aggregate still answers its one row (COUNT 0, MIN/SUM NULL)
+    if (oneTask) Array(KvAggShards(parts.map(KvInputPartition.unwrap).toSeq)) else parts
+  }
 
   // pruning metrics ride the base scan's partition planning
   override def supportedCustomMetrics() = base.supportedCustomMetrics()
@@ -153,33 +171,41 @@ class KvAggScan(dir: String, rowkeyName: String, declared: StructType,
     KvAggReaderFactory(dir, declared.json, rowkeyName, filters, groupCols, specs)
 }
 
+/** The one-task aggregate's only partition: every surviving shard with
+  * its clipped ranges. */
+case class KvAggShards(parts: Seq[KvInputPartition]) extends InputPartition
+
 case class KvAggReaderFactory(dir: String, declaredJson: String, rowkeyName: String,
                               filters: Array[Filter], groupCols: Seq[String],
                               specs: Seq[KvAggSpec])
     extends PartitionReaderFactory {
   override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
-    val part = KvInputPartition.unwrap(p) // base scan keys bucketed shards
     val declared = DataType.fromJson(declaredJson).asInstanceOf[StructType]
-    // a bloom-skipped shard contributes no rows, hence no partials
-    if (!KvBloomPrune.canMatch(dir, part.shard, filters, declared))
-      new KvBloomSkippedReader[InternalRow]
-    else new KvAggPartitionReader(dir, part, declared, rowkeyName, filters,
-      groupCols, specs)
+    val (parts, oneTask) = p match {
+      case all: KvAggShards => (all.parts, true)
+      case one => (Seq(KvInputPartition.unwrap(one)), false) // base scan keys bucketed shards
+    }
+    new KvAggPartitionReader(dir, parts, declared, rowkeyName, filters, groupCols, specs,
+      oneTask)
   }
 }
 
-/** Partial-aggregate rows per shard: one per group (one total when the
-  * aggregation is global). */
-class KvAggPartitionReader(dir: String, part: KvInputPartition, declared: StructType,
+/** Aggregate rows over `parts`: in partial mode (one shard) one partial
+  * row per group, in one-task mode the final rows of every shard folded
+  * into one accumulator. An ungrouped one-task read emits exactly one
+  * row, even when no shard survives. */
+class KvAggPartitionReader(dir: String, parts: Seq[KvInputPartition], declared: StructType,
                            rowkeyName: String, filters: Array[Filter],
-                           groupCols: Seq[String], specs: Seq[KvAggSpec])
+                           groupCols: Seq[String], specs: Seq[KvAggSpec],
+                           oneTask: Boolean)
     extends PartitionReader[InternalRow] {
 
   private val dtByName = declared.fields.map(f => f.name -> f.dataType).toMap
   // read-volume task metrics (same names as the row/columnar readers);
-  // the manifest-only COUNT(*) fast path legitimately reads nothing
+  // the manifest-only fast path legitimately reads nothing
   private var recordsRead = 0L
   private var bytesRead = 0L
+  private var skippedBloom = 0L
 
   private def ordering(dt: DataType): Ordering[Any] = dt match {
     case StringType => Ordering.by((v: Any) => v.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
@@ -202,8 +228,8 @@ class KvAggPartitionReader(dir: String, part: KvInputPartition, declared: Struct
     case other => throw new IllegalStateException(s"min/max unsupported for $other")
   }
 
-  /** Mutable per-group partial state (counts + min/max + sums per
-    * column). Integral sums accumulate in Long (wrap-around addition is
+  /** Mutable per-group state (counts + min/max + sums per column).
+    * Integral sums accumulate in Long (wrap-around addition is
     * associative — partials merged by Spark wrap to the same non-ANSI
     * answer); floating sums in Double. `sumSeen` keeps an all-null
     * group's sum NULL, as SQL requires. */
@@ -259,9 +285,19 @@ class KvAggPartitionReader(dir: String, part: KvInputPartition, declared: Struct
         else if (sumIntegral(p)) st.sumsL(p) else st.sumsD(p)
     })
 
-  private def accumulate(st: GroupState, decoder: KvRecordDecoder,
-                         countIdx: Array[Int], mmIdx: Array[Int],
-                         sumIdx: Array[Int]): Unit = {
+  // one decoder and one compiled predicate serve every shard the
+  // reader scans; the layout below indexes its scratch array
+  private val decoder = new KvRecordDecoder(declared, neededCols)
+  private val pred = FilterEval.compile(filters, decoder.idxByName, decoder.dtByName,
+    decoder.scratch)
+  private val countIdx: Array[Int] = countNames.map(decoder.idxByName).toArray
+  private val mmIdx: Array[Int] = minMaxNames.map(decoder.idxByName).toArray
+  private val sumIdx: Array[Int] = sumNames.map(decoder.idxByName).toArray
+  private val groupIdx: Array[Int] = groupCols.map(decoder.idxByName).toArray
+  private def newState() = new GroupState(countNames.length, minMaxNames.length, sumNames.length)
+
+  /** Fold the decoded record into `st`. */
+  private def accumulate(st: GroupState): Unit = {
     st.countStar += 1
     var i = 0
     while (i < countIdx.length) {
@@ -311,77 +347,117 @@ class KvAggPartitionReader(dir: String, part: KvInputPartition, declared: Struct
     * true max); a missing zone-map entry (all-null column, oversized
     * bound, legacy manifest) returns None and the shard falls back to a
     * real scan. */
-  private def manifestValue(spec: KvAggSpec): Option[Any] = spec match {
-    case KvCountStar => Some(part.shard.rows)
-    case KvMinCol(n) => manifestBound(n, isMax = false)
-    case KvMaxCol(n) => manifestBound(n, isMax = true)
+  private def manifestValue(shard: KvShardMeta, spec: KvAggSpec): Option[Any] = spec match {
+    case KvCountStar => Some(shard.rows)
+    case KvMinCol(n) => manifestBound(shard, n, isMax = false)
+    case KvMaxCol(n) => manifestBound(shard, n, isMax = true)
     case _ => None // COUNT(col) needs a null count; SUM needs the values
   }
 
-  private def manifestBound(n: String, isMax: Boolean): Option[Any] = {
+  private def manifestBound(shard: KvShardMeta, n: String, isMax: Boolean): Option[Any] = {
     val fld = declared.fields.find(_.name == n).getOrElse(return None)
     val dt = fld.dataType
-    if (dt == TimestampType || part.shard.rows == 0L) return None
+    if (dt == TimestampType || shard.rows == 0L) return None
     val cf = fld.metadata.getString("columnFamily")
     if (cf == KvCatalog.RowkeyCf)
       Some(BytesCodec.decodeKey(dt,
-        KvStore.fromHex(if (isMax) part.shard.maxKeyHex else part.shard.minKeyHex)))
+        KvStore.fromHex(if (isMax) shard.maxKeyHex else shard.minKeyHex)))
     else
-      part.shard.stats.get(s"$cf:${fld.metadata.getString("column")}").map {
+      shard.stats.get(s"$cf:${fld.metadata.getString("column")}").map {
         case (mnHex, mxHex) =>
           BytesCodec.decodeKey(dt, KvStore.fromHex(if (isMax) mxHex else mnHex))
       }
   }
 
-  /** The whole computation as an iterator of output rows. Ungrouped →
-    * exactly one row. GROUP BY the rowkey → true streaming (groups are
-    * contiguous in key-sorted shards; each closes as the key changes).
-    * Other groupings → per-shard hash map, emitted after the scan. */
-  private def compute(): Iterator[InternalRow] = {
-    // fast path: global COUNT(*)/MIN/MAX over the whole shard can be
-    // answered from the manifest entry without opening the file — the
-    // decision is PER SHARD, so one legacy shard missing a bound only
-    // costs that shard a scan
-    if (groupCols.isEmpty && filters.isEmpty && part.isFullRange) {
-      val vals = specs.map(manifestValue)
-      if (vals.forall(_.isDefined))
-        return Iterator.single(InternalRow.fromSeq(vals.map(_.get)))
+  // the pushed filters constrain only the rowkey, each to one key
+  // interval — then a shard whose first and last keys both match holds
+  // only matching records (its keys all lie between the two)
+  private val rowkeyInterval: Boolean =
+    filters.forall(FilterEval.oneInterval(_, rowkeyName))
+
+  private def keyMatches(key: Array[Byte]): Boolean = {
+    val v = BytesCodec.decodeKey(dtByName(rowkeyName), key)
+    filters.forall(FilterEval.eval(_, _ => v, dtByName))
+  }
+
+  /** Every record of the shard matches the pushed filters, so the
+    * manifest's whole-shard COUNT/MIN/MAX is the shard's answer. */
+  private def wholeShard(shard: KvShardMeta): Boolean =
+    filters.isEmpty ||
+      (rowkeyInterval && keyMatches(shard.minKey) && keyMatches(shard.maxKey))
+
+  /** The manifest's answer for a global aggregate over `shard`, when it
+    * holds one for every spec; None = scan the shard. The decision is
+    * PER SHARD, so one legacy shard missing a bound only costs that
+    * shard a scan. */
+  private def manifestAnswer(shard: KvShardMeta): Option[Seq[Any]] =
+    if (groupCols.nonEmpty || !wholeShard(shard)) None
+    else {
+      val vals = specs.map(manifestValue(shard, _))
+      if (vals.forall(_.isDefined)) Some(vals.map(_.get)) else None
     }
 
-    val decoder = new KvRecordDecoder(declared, neededCols)
-    val countIdx: Array[Int] = countNames.map(decoder.idxByName).toArray
-    val mmIdx: Array[Int] = minMaxNames.map(decoder.idxByName).toArray
-    val sumIdx: Array[Int] = sumNames.map(decoder.idxByName).toArray
-    val groupIdx: Array[Int] = groupCols.map(decoder.idxByName).toArray
-    def newState() = new GroupState(countNames.length, minMaxNames.length, sumNames.length)
+  /** Fold one shard's manifest answer into the global state. */
+  private def foldManifest(st: GroupState, vals: Seq[Any]): Unit =
+    specs.zip(vals).foreach {
+      case (KvCountStar, v) => st.countStar += v.asInstanceOf[Long]
+      case (KvMinCol(n), v) =>
+        val i = mmPos(n)
+        if (st.mins(i) == null || mmOrd(i).lt(v, st.mins(i))) st.mins(i) = v
+      case (KvMaxCol(n), v) =>
+        val i = mmPos(n)
+        if (st.maxs(i) == null || mmOrd(i).gt(v, st.maxs(i))) st.maxs(i) = v
+      case (other, _) => throw new IllegalStateException(s"no manifest answer for $other")
+    }
 
-    val reader = new KvStore.ShardReader(dir, part.shard,
+  /** Decode every record of `part` in its clipped ranges, calling
+    * `onMatch` for each that passes the pushed filters. */
+  private def scan(part: KvInputPartition)(onMatch: => Unit): Unit = {
+    openReader = new KvStore.ShardReader(dir, part.shard,
       wanted = decoder.wantedCell, ranges = part.decodedRanges)
-    openReader = reader
-    val pred = FilterEval.compile(filters, decoder.idxByName, decoder.dtByName,
-      decoder.scratch)
+    try {
+      while (openReader.hasNext) {
+        decoder.decodeInto(openReader.next())
+        recordsRead += 1
+        if (pred()) onMatch
+      }
+    } finally closeReader()
+  }
 
-    def groupKey(): Array[Any] = {
-      val k = new Array[Any](groupIdx.length)
-      var i = 0
-      while (i < groupIdx.length) { k(i) = decoder.scratch(groupIdx(i)); i += 1 }
-      k
-    }
+  private def groupKey(): Array[Any] = {
+    val k = new Array[Any](groupIdx.length)
+    var i = 0
+    while (i < groupIdx.length) { k(i) = decoder.scratch(groupIdx(i)); i += 1 }
+    k
+  }
+
+  /** The whole computation as an iterator of output rows. Ungrouped →
+    * exactly one row. Partial mode, GROUP BY the rowkey → true streaming
+    * (groups are contiguous in a key-sorted shard; each closes as the
+    * key changes). Other groupings → one hash map over every shard the
+    * reader holds, emitted after the scan. */
+  private def compute(): Iterator[InternalRow] = {
+    // a bloom-excluded shard contributes no rows, hence no partials
+    val live = parts.filter(p => KvBloomPrune.canMatch(dir, p.shard, filters, declared))
+    skippedBloom = (parts.length - live.length).toLong
+    if (live.isEmpty && !oneTask) return Iterator.empty
 
     if (groupCols.isEmpty) {
       val st = newState()
-      try {
-        while (reader.hasNext) {
-          decoder.decodeInto(reader.next())
-          recordsRead += 1
-          if (pred()) accumulate(st, decoder, countIdx, mmIdx, sumIdx)
+      live.foreach { p =>
+        manifestAnswer(p.shard) match {
+          case Some(vals) => foldManifest(st, vals)
+          case None       => scan(p)(accumulate(st))
         }
-      } finally closeReader()
+      }
       Iterator.single(resultRow(Array.empty, st))
-    } else if (groupCols == Seq(rowkeyName)) {
+    } else if (!oneTask && groupCols == Seq(rowkeyName)) {
       // key-sorted shard + rowkey grouping: equal keys are adjacent, so
       // each group closes (and its row is served) the moment the key
       // changes — O(1) state regardless of group count
+      val reader = new KvStore.ShardReader(dir, live.head.shard,
+        wanted = decoder.wantedCell, ranges = live.head.decodedRanges)
+      openReader = reader
       new Iterator[InternalRow] {
         private var openKey: Array[Any] = _
         private var st: GroupState = _
@@ -406,7 +482,7 @@ class KvAggPartitionReader(dir: String, part: KvInputPartition, declared: Struct
                   openKey = Array[Any](k)
                   st = newState()
                 }
-                accumulate(st, decoder, countIdx, mmIdx, sumIdx)
+                accumulate(st)
               }
             }
           }
@@ -418,26 +494,22 @@ class KvAggPartitionReader(dir: String, part: KvInputPartition, declared: Struct
         }
       }
     } else {
-      // general grouping: per-shard hash partials. Key values come out
-      // of the decoder freshly allocated, so storing references is safe;
+      // hash grouping across every held shard. Key values come out of
+      // the decoder freshly allocated, so storing references is safe;
       // ArraySeq gives element-wise equality incl. nulls (SQL group-by
       // null semantics: nulls form one group).
       val groups = new java.util.LinkedHashMap[Seq[Any], GroupState]()
-      try {
-        while (reader.hasNext) {
-          decoder.decodeInto(reader.next())
-          recordsRead += 1
-          if (pred()) {
-            val key: Seq[Any] = scala.collection.immutable.ArraySeq.unsafeWrapArray(groupKey())
-            var st = groups.get(key)
-            if (st == null) {
-              st = newState()
-              groups.put(key, st)
-            }
-            accumulate(st, decoder, countIdx, mmIdx, sumIdx)
+      live.foreach { p =>
+        scan(p) {
+          val key: Seq[Any] = scala.collection.immutable.ArraySeq.unsafeWrapArray(groupKey())
+          var st = groups.get(key)
+          if (st == null) {
+            st = newState()
+            groups.put(key, st)
           }
+          accumulate(st)
         }
-      } finally closeReader()
+      }
       val it = groups.entrySet().iterator()
       new Iterator[InternalRow] {
         override def hasNext: Boolean = it.hasNext
@@ -451,7 +523,7 @@ class KvAggPartitionReader(dir: String, part: KvInputPartition, declared: Struct
 
   private var openReader: KvStore.ShardReader = _
   private def closeReader(): Unit = if (openReader != null) {
-    bytesRead = openReader.bytesRead
+    bytesRead += openReader.bytesRead
     openReader.close()
     openReader = null
   }
@@ -468,5 +540,6 @@ class KvAggPartitionReader(dir: String, part: KvInputPartition, declared: Struct
   override def currentMetricsValues()
       : Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] = Array(
     KvScanMetrics.taskMetric("kvRecordsRead", recordsRead),
-    KvScanMetrics.taskMetric("kvBytesRead", bytesRead))
+    KvScanMetrics.taskMetric("kvBytesRead", bytesRead),
+    KvScanMetrics.taskMetric("kvShardsSkippedBloom", skippedBloom))
 }

@@ -220,33 +220,7 @@ class KvColumnarReader(dir: String, part: KvInputPartition,
       val dt = pruned.fields(k).dataType
       (key: Array[Byte], slot: Int) => w(vectors(k), slot, graft.kv.BytesCodec.decodeKey(dt, key))
     }
-    // (cf, qualifier) → pruned index, memoized by reference (names are
-    // interned per shard) — same trick as KvRecordDecoder.fieldIdx
-    private var memoCf = new Array[String](8)
-    private var memoQ = new Array[String](8)
-    private var memoIdx = new Array[Int](8)
-    private var memoN = 0
-    private def colIdx(cf: String, q: String): Int = {
-      var i = 0
-      while (i < memoN) {
-        if ((memoCf(i) eq cf) && (memoQ(i) eq q)) return memoIdx(i)
-        i += 1
-      }
-      var idx = -1
-      var j = 0
-      while (j < cfs.length && idx < 0) {
-        if (!isRowkey(j) && cfs(j) == cf && quals(j) == q) idx = j
-        j += 1
-      }
-      if (memoN == memoCf.length) {
-        memoCf = java.util.Arrays.copyOf(memoCf, memoN * 2)
-        memoQ = java.util.Arrays.copyOf(memoQ, memoN * 2)
-        memoIdx = java.util.Arrays.copyOf(memoIdx, memoN * 2)
-      }
-      memoCf(memoN) = cf; memoQ(memoN) = q; memoIdx(memoN) = idx
-      memoN += 1
-      idx
-    }
+    private val colIdx = new KvCellSlots(cfs, quals)
 
     var slot = 0
     private val lastSet = new Array[Int](pruned.length)

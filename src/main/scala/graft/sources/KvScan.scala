@@ -73,10 +73,33 @@ class KvScanBuilder(catalog: KvCatalog, dir: String, columnar: Boolean = true,
   }
   override def isPartiallyPushed: Boolean = true
 
-  /** Partial pushdown: each shard returns one partial row per group
-    * (one total when ungrouped); Spark merges. */
+  /** Complete pushdown ([[KvAggScan]]'s one-task mode) when the
+    * aggregation translates and [[oneTaskAgg]] holds; otherwise partial:
+    * each shard returns one partial row per group and Spark merges.
+    * Spark asks twice (before and after rewriting AVG to SUM/COUNT), so
+    * the answer depends only on the aggregation, the pushed filters and
+    * the builder's one manifest snapshot. */
   override def supportCompletePushDown(
-      agg: org.apache.spark.sql.connector.expressions.aggregate.Aggregation): Boolean = false
+      agg: org.apache.spark.sql.connector.expressions.aggregate.Aggregation): Boolean =
+    KvAggSpec.translate(agg, declared).isDefined && oneTaskAgg
+
+  // read once per builder: every completeness answer and build() see the
+  // same shard set, so a commit landing mid-negotiation cannot make the
+  // scan's mode disagree with the plan Spark built around it
+  private lazy val snapshot: Seq[KvShardMeta] = KvStore.readMetaAsOf(dir, asOf).shards
+
+  /** A pushed aggregate finishes in one task when the read is a
+    * snapshot (an incremental window stays distributed, as for every
+    * other read), the pushed filters bound the rowkey (the provably
+    * empty set included), and the shards they select fit
+    * [[KvScan.MaxShardRows]]. An unbounded aggregate keeps one task per
+    * shard: one task decoding a whole table is slower than the job it
+    * saves. */
+  private def oneTaskAgg: Boolean =
+    since.isEmpty &&
+      KvScan.rowkeyRanges(pushed, declared, catalog.rowkey) != KeyRanges.Full &&
+      KvScan.withinOneTask(KvScan.select(snapshot, pushed, declared, catalog.rowkey,
+        if (bucketPrune) catalog.buckets else 0).parts)
 
   override def pushAggregation(
       agg: org.apache.spark.sql.connector.expressions.aggregate.Aggregation): Boolean =
@@ -117,7 +140,7 @@ class KvScanBuilder(catalog: KvCatalog, dir: String, columnar: Boolean = true,
   override def build(): Scan = aggSpecs match {
     case Some((groupCols, specs)) =>
       new KvAggScan(dir, catalog.rowkey, declared, pushed, groupCols, specs, asOf,
-        since, catalog.buckets, bucketPrune)
+        since, catalog.buckets, bucketPrune, oneTask = oneTaskAgg)
     case None =>
       val scan = new KvScan(dir, catalog.rowkey, prunedSchema, declared, pushed, limit,
         reverse, columnar, asOf, catalog.buckets, since, maxVersionsPerTrigger,
@@ -434,6 +457,19 @@ object KvScan {
   def allTagged(shards: Seq[KvShardMeta], buckets: Int): Boolean =
     shards.nonEmpty && shards.forall(taggedUnder(_, buckets))
 
+  /** One-reader budget: manifest rows in the surviving shards, for the
+    * two reads that give up Spark's per-shard parallelism — a
+    * driver-side point lookup ([[KvLocalScan]]) and a one-task pushed
+    * aggregate ([[KvAggScan]]). One reader decodes ~7 M surviving-shard
+    * rows/s, so 2^18 rows cost about the ~35 ms fixed cost of one
+    * distributed job; past it, the read keeps one task per shard. The
+    * same bound caps the one-task aggregate's group map. */
+  val MaxShardRows: Long = 1L << 18
+
+  /** Do these planned partitions' shards fit [[MaxShardRows]]? */
+  def withinOneTask(parts: Iterable[KvInputPartition]): Boolean =
+    parts.iterator.map(_.shard.rows).sum <= MaxShardRows
+
   /** Whether a read decodes through [[KvColumnarReader]]. A reverse scan
     * qualifies only in its pushed-TopN form (limit > 0 bounds the ring
     * buffer); reverse-without-limit never reaches a reader (pushTopN is
@@ -542,21 +578,16 @@ final class KvLocalScan private (val scan: KvScan, parts: Array[InputPartition])
 }
 
 object KvLocalScan {
-  /** Driver read budget: manifest rows in the surviving shards. The
-    * driver prefix-reads ~7 M surviving-shard rows/s, so 2^18 rows cost
-    * about the ~35 ms fixed cost of one distributed job; past it, a
-    * large IN-list keeps its parallel read. */
-  val MaxShardRows: Long = 1L << 18
-
   /** The local form of `scan` when every planned rowkey range is one key
     * (so the result is at most one row per key per shard, bounded by the
-    * query text) and the surviving shards fit [[MaxShardRows]]. */
+    * query text) and the surviving shards fit [[KvScan.MaxShardRows]]. */
   def forPointLookup(scan: KvScan): Option[KvLocalScan] =
     if (KeyRanges.pointKeys(scan.rowkeyRanges()).isEmpty) None
     else {
       val parts = scan.planInputPartitions()
-      val rows = parts.iterator.map(KvInputPartition.unwrap(_).shard.rows).sum
-      if (rows <= MaxShardRows) Some(new KvLocalScan(scan, parts)) else None
+      if (KvScan.withinOneTask(parts.map(KvInputPartition.unwrap)))
+        Some(new KvLocalScan(scan, parts))
+      else None
     }
 }
 
@@ -671,6 +702,48 @@ class KvBloomSkippedReader[T] extends PartitionReader[T] {
     Array(KvScanMetrics.taskMetric("kvShardsSkippedBloom", 1L))
 }
 
+/** (cf, qualifier) → slot resolver for the per-cell loops: record
+  * decoding ([[KvRecordDecoder]]), the columnar fast path and zone-map
+  * recomputation. Slot j binds `cfs(j)`/`quals(j)`; a rowkey slot never
+  * matches (no stored cell carries the rowkey pseudo-family). Lookups
+  * are memoized by REFERENCE: a shard reader interns its names, so after
+  * the first record a lookup is two pointer compares. A miss resolves by
+  * string equality (-1 = no slot) and appends the identity pair. */
+final class KvCellSlots(cfs: Array[String], quals: Array[String]) {
+  private val isRowkey: Array[Boolean] = cfs.map(_ == KvCatalog.RowkeyCf)
+  private var memoCf = new Array[String](8)
+  private var memoQ = new Array[String](8)
+  private var memoIdx = new Array[Int](8)
+  private var memoN = 0
+
+  def apply(cf: String, q: String): Int = {
+    var i = 0
+    while (i < memoN) {
+      if ((memoCf(i) eq cf) && (memoQ(i) eq q)) return memoIdx(i)
+      i += 1
+    }
+    var idx = -1
+    var j = 0
+    while (j < cfs.length && idx < 0) {
+      if (!isRowkey(j) && cfs(j) == cf && quals(j) == q) idx = j
+      j += 1
+    }
+    // One reader's names are few, but a resolver shared across shard
+    // readers (a one-task aggregate's decoder) meets each shard's own
+    // interned instances, so the memo would grow linearly — reset
+    // instead of letting every cell lookup walk a long table.
+    if (memoN == 256) memoN = 0
+    if (memoN == memoCf.length) {
+      memoCf = java.util.Arrays.copyOf(memoCf, memoN * 2)
+      memoQ = java.util.Arrays.copyOf(memoQ, memoN * 2)
+      memoIdx = java.util.Arrays.copyOf(memoIdx, memoN * 2)
+    }
+    memoCf(memoN) = cf; memoQ(memoN) = q; memoIdx(memoN) = idx
+    memoN += 1
+    idx
+  }
+}
+
 /** Precomputed record→scratch-array resolver shared by the row and
   * aggregate partition readers — the scan's innermost loop. All lookup
   * structures are resolved ONCE at construction; `decodeInto` fills a
@@ -701,40 +774,7 @@ final class KvRecordDecoder(declared: StructType, neededNames: Set[String]) {
     hit
   }
 
-  // (cf, qualifier) → needed index, memoized by REFERENCE: the shard
-  // reader interns names, so after the first record every lookup is two
-  // pointer compares. A miss falls back to string equality and appends
-  // the new identity pair (bounded by distinct names in one shard).
-  private var memoCf = new Array[String](8)
-  private var memoQ = new Array[String](8)
-  private var memoIdx = new Array[Int](8)
-  private var memoN = 0
-  private def fieldIdx(cf: String, q: String): Int = {
-    var i = 0
-    while (i < memoN) {
-      if ((memoCf(i) eq cf) && (memoQ(i) eq q)) return memoIdx(i)
-      i += 1
-    }
-    var idx = -1
-    var j = 0
-    while (j < needed.length && idx < 0) {
-      if (!neededIsRowkey(j) && neededCf(j) == cf && neededQual(j) == q) idx = j
-      j += 1
-    }
-    // A decoder normally serves ONE shard reader (≤ distinct names per
-    // shard). If it is ever shared across many readers, each shard's
-    // interned instances differ and the memo would grow linearly —
-    // reset instead of letting every cell lookup walk a long table.
-    if (memoN == 256) memoN = 0
-    if (memoN == memoCf.length) {
-      memoCf = java.util.Arrays.copyOf(memoCf, memoN * 2)
-      memoQ = java.util.Arrays.copyOf(memoQ, memoN * 2)
-      memoIdx = java.util.Arrays.copyOf(memoIdx, memoN * 2)
-    }
-    memoCf(memoN) = cf; memoQ(memoN) = q; memoIdx(memoN) = idx
-    memoN += 1
-    idx
-  }
+  private val slots = new KvCellSlots(neededCf, neededQual)
 
   /** One pass over the record's cells (not needed × cells): each cell
     * resolves its field index through the identity memo and decodes
@@ -753,7 +793,7 @@ final class KvRecordDecoder(declared: StructType, neededNames: Set[String]) {
     var j = 0
     while (j < cells.length) {
       val c = cells(j)
-      val k = fieldIdx(c.cf, c.qualifier)
+      val k = slots(c.cf, c.qualifier)
       if (k >= 0 && scratch(k) == null)
         scratch(k) = BytesCodec.decode(needed(k).dataType, c.value)
       j += 1

@@ -137,18 +137,23 @@ object KvZoneMaps {
       var max: Array[Byte] = null
       var poisoned = false
     }
-    private val cols: Map[String, Col] =
-      declared.fields.iterator.filter { f =>
-        supported(f.dataType) &&
-        f.metadata.getString("columnFamily") != KvCatalog.RowkeyCf
-      }.map { f =>
-        s"${f.metadata.getString("columnFamily")}:${f.metadata.getString("column")}" ->
-          new Col(f.dataType)
-      }.toMap
+    private val tracked = declared.fields.filter { f =>
+      supported(f.dataType) &&
+      f.metadata.getString("columnFamily") != KvCatalog.RowkeyCf
+    }
+    private val trackedCf = tracked.map(_.metadata.getString("columnFamily"))
+    private val trackedQual = tracked.map(_.metadata.getString("column"))
+    private val cols: Array[Col] = tracked.map(f => new Col(f.dataType))
 
-    def observe(rec: graft.kv.KvRecord): Unit = rec.cells.foreach { c =>
-      cols.get(s"${c.cf}:${c.qualifier}") match {
-        case Some(col) if !col.poisoned =>
+    // cells resolve to their tracked column by reference, not by
+    // building a "cf:qualifier" key per cell
+    private val slot = new KvCellSlots(trackedCf, trackedQual)
+
+    def observe(rec: graft.kv.KvRecord): Unit =
+      rec.cells.foreach { c =>
+        val k = slot(c.cf, c.qualifier)
+        if (k >= 0 && !cols(k).poisoned) {
+          val col = cols(k)
           val enc = graft.kv.BytesCodec.encodeKey(col.dt,
             graft.kv.BytesCodec.decode(col.dt, c.value))
           if (enc.length > MaxBoundBytes) {
@@ -159,13 +164,13 @@ object KvZoneMaps {
             if (col.max == null || graft.kv.BytesCodec.compareKeys(enc, col.max) > 0)
               col.max = enc
           }
-        case _ => ()
+        }
       }
-    }
 
-    def result(): Map[String, (String, String)] = cols.iterator.collect {
-      case (k, col) if !col.poisoned && col.min != null =>
-        k -> (KvStore.toHex(col.min), KvStore.toHex(col.max))
+    def result(): Map[String, (String, String)] = cols.indices.iterator.collect {
+      case k if !cols(k).poisoned && cols(k).min != null =>
+        s"${trackedCf(k)}:${trackedQual(k)}" ->
+          (KvStore.toHex(cols(k).min), KvStore.toHex(cols(k).max))
     }.toMap
   }
 }

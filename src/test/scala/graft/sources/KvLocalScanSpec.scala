@@ -80,7 +80,7 @@ class KvLocalScanSpec extends SparkSpec {
   test("a range read and an over-budget IN still run a job") {
     val dir = Files.createTempDirectory("graft-kv-local1").toString
     val cat = catJson("local1")
-    val n = KvLocalScan.MaxShardRows + 20000L
+    val n = KvScan.MaxShardRows + 20000L
     spark.range(0L, n).select(col("id").as("k"), concat(lit("u"), col("id")).as("uid"),
         (col("id") * 3L).as("v"))
       .repartitionByRange(4, col("k"))
@@ -90,8 +90,8 @@ class KvLocalScanSpec extends SparkSpec {
       .decodeKey(org.apache.spark.sql.types.LongType, s.minKey).asInstanceOf[Long]
     val shards = KvStore.readMeta(dir).shards.sortBy(minKey)
     assert(shards.length == 4)
-    assert(shards.map(_.rows).sum > KvLocalScan.MaxShardRows &&
-      shards.take(3).map(_.rows).sum <= KvLocalScan.MaxShardRows, "vacuity guard")
+    assert(shards.map(_.rows).sum > KvScan.MaxShardRows &&
+      shards.take(3).map(_.rows).sum <= KvScan.MaxShardRows, "vacuity guard")
     def collected(df: DataFrame): (Int, Int) = {
       var n = 0
       val jobs = jobsOf { n = df.collect().length }
@@ -112,6 +112,21 @@ class KvLocalScanSpec extends SparkSpec {
     assert(nRange == 11 && jobsRange > 0)
     assert(!PlannedKvScan(range).isLocal)
     assert(PlannedKvScan(range).scan.description().contains("Columnar: true"))
+    // pushed aggregates share the budget: a bounded aggregate over the
+    // first three shards finishes in one task (one job), while over all
+    // four it keeps per-shard partials and Spark's final aggregate
+    def aggOf(hi: Long): DataFrame = read(dir, cat)
+      .filter(col("k") >= 0L && col("k") <= hi).agg(count(lit(1)), sum(col("v")))
+    def aggJobs(df: DataFrame): (Long, Long, Int) = {
+      var r: org.apache.spark.sql.Row = null
+      val jobs = jobsOf { r = df.collect().head }
+      (r.getLong(0), r.getLong(1), jobs)
+    }
+    val under3 = minKey(shards(3)) - 1L
+    assert(aggJobs(aggOf(under3)) == ((under3 + 1L, 3L * under3 * (under3 + 1L) / 2L, 1)))
+    assert(PlannedKvScan(aggOf(under3)).scan.description().contains("Mode: one-task"))
+    assert(aggJobs(aggOf(n)) == ((n, 3L * (n - 1L) * n / 2L, 2)))
+    assert(PlannedKvScan(aggOf(n)).scan.description().contains("Mode: partial"))
   }
 
   test("property: point lookups match a client model across read shapes and table states") {
