@@ -1,22 +1,28 @@
 package graft
 
-import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.{SparkSessionExtensions, SparkSessionExtensionsProvider}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
-/** Session-extensions entry point: makes every graft native expression
-  * available by CONFIG alone —
+/** Session-extensions entry point: installs the graft native
+  * expressions (`cosine_sim`, `int8_dot`, `lsh_buckets`) and the
+  * driver-read planner strategy ([[graft.sources.KvDriverReadStrategy]])
+  * with no driver-side call and no conf key. It is registered as a
+  * `META-INF/services` `SparkSessionExtensionsProvider`, which Spark's
+  * session builder service-loads for every session it creates, so
+  * SQL-only users (JDBC gateways, notebooks, `spark.sql(...)` scripts)
+  * get it with the jar on the classpath. Naming it in config as well is
+  * harmless —
   *
   * {{{
   *   spark-submit --conf spark.sql.extensions=graft.GraftExtensions ...
   * }}}
   *
-  * — so SQL-only users (JDBC gateways, notebooks, `spark.sql(...)`
-  * scripts) get `cosine_sim`, `int8_dot`, and `lsh_buckets` without any
-  * driver-side `register(spark)` call. The per-session `register`
-  * methods on each function object remain for programmatic use; both
-  * routes install the identical codegen'd expressions. */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
+  * — the second copy of each function replaces the first, and the first
+  * copy of the strategy plans before the second is asked. The per-session
+  * `register` methods on each function object remain for programmatic
+  * use; both routes install the identical codegen'd expressions. */
+class GraftExtensions extends SparkSessionExtensionsProvider {
 
   private def fn(name: String, usage: String,
                  builder: Seq[Expression] => Expression) =
@@ -38,5 +44,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectFunction(fn("lsh_buckets",
       "lsh_buckets(vec) - multi-table hyperplane LSH bucket ids (4 tables x 4 planes)",
       functions.LshBuckets.builder()))
+    ext.injectPlannerStrategy(_ => sources.KvDriverReadStrategy)
   }
 }

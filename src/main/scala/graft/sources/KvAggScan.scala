@@ -12,11 +12,10 @@ import org.apache.spark.sql.types._
   * absent in the reference): COUNT(*) / COUNT(col) / MIN / MAX / SUM run
   * inside the scan, globally or GROUPED BY declared columns, in one of
   * two modes ([[KvScanBuilder.supportCompletePushDown]] picks):
-  *  - one-task (complete pushdown): a rowkey-bounded aggregate over
-  *    shards within [[KvScan.MaxShardRows]] plans ONE partition carrying
-  *    every surviving shard. Its reader folds them all into one
-  *    accumulator and emits the final rows, so Spark plans only its
-  *    aliasing `Project` over the scan: one job, no exchange;
+  *  - driver (complete pushdown): a read the driver-read rule sends to
+  *    the driver ([[KvDriverScan]]) folds every surviving shard into one
+  *    accumulator in one reader ([[KvAggShards]]) and emits the final
+  *    rows, so Spark plans only its aliasing `Project` over them;
   *  - partial: every other aggregate plans one partition per shard,
   *    each emitting one partial row per group (one total when
   *    ungrouped), and Spark's final aggregate merges the partials
@@ -28,10 +27,10 @@ import org.apache.spark.sql.types._
   * Grouped memory shape: in partial mode GROUP BY the rowkey streams —
   * shards are key-sorted, so equal keys are adjacent and each group
   * closes as the scan passes it (O(1) state). Any other grouping, and
-  * every grouping in one-task mode (overlapping shards repeat a rowkey,
+  * every grouping in driver mode (overlapping shards repeat a rowkey,
   * and the groups must merge), holds a hash map bounded by the rows it
   * reads: one shard's (bounded by the writer's `chunkBytes`) in partial
-  * mode, [[KvScan.MaxShardRows]] in one-task mode.
+  * mode, [[KvScan.MaxShardRows]] in driver mode.
   */
 sealed trait KvAggSpec extends Serializable
 case object KvCountStar extends KvAggSpec
@@ -42,7 +41,7 @@ final case class KvMaxCol(name: String) extends KvAggSpec
   * accumulates with overflow-CHECKED addition (Math.addExact) so the
   * pushed sum raises on overflow exactly where Spark's own Sum would,
   * instead of silently wrapping under a session that promises
-  * ARITHMETIC_OVERFLOW — in one-task mode also when only the total
+  * ARITHMETIC_OVERFLOW — in driver mode also when only the total
   * across shards overflows. Non-ANSI sums keep wrap-around addition —
   * associative, so shard partials merged by Spark wrap to the same
   * answer Spark itself computes. */
@@ -133,8 +132,7 @@ object KvAggSpec {
 class KvAggScan(dir: String, rowkeyName: String, declared: StructType,
                 filters: Array[Filter], groupCols: Seq[String], specs: Seq[KvAggSpec],
                 asOf: Option[Long] = None, since: Option[Long] = None,
-                buckets: Int = 0, bucketPrune: Boolean = true,
-                oneTask: Boolean = false)
+                buckets: Int = 0, bucketPrune: Boolean = true, snapshot: => KvTableMeta)
     extends Scan with Batch {
 
   // the base scan owns shard selection (ranges, zone maps, asOf, since,
@@ -143,25 +141,31 @@ class KvAggScan(dir: String, rowkeyName: String, declared: StructType,
   // scan shapes), so pushed aggregates — including the manifest stats
   // fast path, which reads per-PARTITION shard meta — see exactly the
   // incremental subset
-  private val base =
+  private[sources] val base =
     new KvScan(dir, rowkeyName, declared, declared, filters, -1, asOf = asOf,
-      buckets = buckets, since = since, bucketPrune = bucketPrune)
+      buckets = buckets, since = since, bucketPrune = bucketPrune, snapshot = snapshot)
 
   override def readSchema(): StructType = KvAggSpec.outputSchema(groupCols, specs, declared)
   override def toBatch: Batch = this
+  override def description(): String = description(driver = false)
+
   // the mode leads: plan renderers truncate long descriptions
-  override def description(): String =
-    s"graft-kv-agg $dir Mode: ${if (oneTask) "one-task final" else "partial per shard"}, " +
+  private def description(driver: Boolean): String =
+    s"graft-kv-agg $dir ${KvScan.readMode(driver)}, " +
       s"PushedAggregates: [${specs.mkString(", ")}], " +
       s"PushedGroupBy: [${groupCols.mkString(", ")}], " +
       s"PushedFilters: [${filters.mkString(", ")}]"
 
-  override def planInputPartitions(): Array[InputPartition] = {
-    val parts = base.planInputPartitions()
-    // one-task: a single partition even over zero shards, so a global
-    // aggregate still answers its one row (COUNT 0, MIN/SUM NULL)
-    if (oneTask) Array(KvAggShards(parts.map(KvInputPartition.unwrap).toSeq)) else parts
-  }
+  override def planInputPartitions(): Array[InputPartition] = base.planInputPartitions()
+
+  /** This aggregate answered on the driver: one reader folds every
+    * surviving shard into final rows — one partition even over zero
+    * shards, so a global aggregate still answers its one row (COUNT 0,
+    * MIN/SUM NULL). */
+  private[sources] def onDriver: KvDriverScan =
+    new KvDriverScan(this,
+      Array(KvAggShards(planInputPartitions().map(KvInputPartition.unwrap).toSeq)),
+      description(driver = true))
 
   // pruning metrics ride the base scan's partition planning
   override def supportedCustomMetrics() = base.supportedCustomMetrics()
@@ -171,8 +175,8 @@ class KvAggScan(dir: String, rowkeyName: String, declared: StructType,
     KvAggReaderFactory(dir, declared.json, rowkeyName, filters, groupCols, specs)
 }
 
-/** The one-task aggregate's only partition: every surviving shard with
-  * its clipped ranges. */
+/** A driver aggregate's only partition: every surviving shard with its
+  * clipped ranges. */
 case class KvAggShards(parts: Seq[KvInputPartition]) extends InputPartition
 
 case class KvAggReaderFactory(dir: String, declaredJson: String, rowkeyName: String,
@@ -181,23 +185,23 @@ case class KvAggReaderFactory(dir: String, declaredJson: String, rowkeyName: Str
     extends PartitionReaderFactory {
   override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
     val declared = DataType.fromJson(declaredJson).asInstanceOf[StructType]
-    val (parts, oneTask) = p match {
+    val (parts, folded) = p match {
       case all: KvAggShards => (all.parts, true)
       case one => (Seq(KvInputPartition.unwrap(one)), false) // base scan keys bucketed shards
     }
     new KvAggPartitionReader(dir, parts, declared, rowkeyName, filters, groupCols, specs,
-      oneTask)
+      folded)
   }
 }
 
 /** Aggregate rows over `parts`: in partial mode (one shard) one partial
-  * row per group, in one-task mode the final rows of every shard folded
-  * into one accumulator. An ungrouped one-task read emits exactly one
+  * row per group, `folded` (a driver read) the final rows of every shard
+  * folded into one accumulator. An ungrouped folded read emits exactly one
   * row, even when no shard survives. */
 class KvAggPartitionReader(dir: String, parts: Seq[KvInputPartition], declared: StructType,
                            rowkeyName: String, filters: Array[Filter],
                            groupCols: Seq[String], specs: Seq[KvAggSpec],
-                           oneTask: Boolean)
+                           folded: Boolean)
     extends PartitionReader[InternalRow] {
 
   private val dtByName = declared.fields.map(f => f.name -> f.dataType).toMap
@@ -440,7 +444,7 @@ class KvAggPartitionReader(dir: String, parts: Seq[KvInputPartition], declared: 
     // a bloom-excluded shard contributes no rows, hence no partials
     val live = parts.filter(p => KvBloomPrune.canMatch(dir, p.shard, filters, declared))
     skippedBloom = (parts.length - live.length).toLong
-    if (live.isEmpty && !oneTask) return Iterator.empty
+    if (live.isEmpty && !folded) return Iterator.empty
 
     if (groupCols.isEmpty) {
       val st = newState()
@@ -451,7 +455,7 @@ class KvAggPartitionReader(dir: String, parts: Seq[KvInputPartition], declared: 
         }
       }
       Iterator.single(resultRow(Array.empty, st))
-    } else if (!oneTask && groupCols == Seq(rowkeyName)) {
+    } else if (!folded && groupCols == Seq(rowkeyName)) {
       // key-sorted shard + rowkey grouping: equal keys are adjacent, so
       // each group closes (and its row is served) the moment the key
       // changes — O(1) state regardless of group count

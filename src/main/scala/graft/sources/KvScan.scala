@@ -73,33 +73,37 @@ class KvScanBuilder(catalog: KvCatalog, dir: String, columnar: Boolean = true,
   }
   override def isPartiallyPushed: Boolean = true
 
-  /** Complete pushdown ([[KvAggScan]]'s one-task mode) when the
-    * aggregation translates and [[oneTaskAgg]] holds; otherwise partial:
-    * each shard returns one partial row per group and Spark merges.
-    * Spark asks twice (before and after rewriting AVG to SUM/COUNT), so
-    * the answer depends only on the aggregation, the pushed filters and
-    * the builder's one manifest snapshot. */
+  /** Complete pushdown exactly when the aggregation translates and the
+    * read goes to the driver ([[driverRead]]): the driver folds every
+    * surviving shard into final rows. Otherwise partial: each shard
+    * returns one partial row per group and Spark merges. Spark asks
+    * twice (before and after rewriting AVG to SUM/COUNT), so the answer
+    * depends only on the aggregation, the pushed filters and the
+    * builder's one manifest snapshot. */
   override def supportCompletePushDown(
       agg: org.apache.spark.sql.connector.expressions.aggregate.Aggregation): Boolean =
-    KvAggSpec.translate(agg, declared).isDefined && oneTaskAgg
+    KvAggSpec.translate(agg, declared).isDefined && driverRead
 
-  // read once per builder: every completeness answer and build() see the
-  // same shard set, so a commit landing mid-negotiation cannot make the
-  // scan's mode disagree with the plan Spark built around it
-  private lazy val snapshot: Seq[KvShardMeta] = KvStore.readMetaAsOf(dir, asOf).shards
+  // read once per builder: the driver-read rule, every completeness
+  // answer and the scan build() returns (its read, statistics and
+  // partitioning) see the same manifest, so a commit landing
+  // mid-negotiation cannot make the scan disagree with the plan Spark
+  // built around it
+  private lazy val snapshot: KvTableMeta = KvStore.readMetaAsOf(dir, asOf)
 
-  /** A pushed aggregate finishes in one task when the read is a
-    * snapshot (an incremental window stays distributed, as for every
-    * other read), the pushed filters bound the rowkey (the provably
-    * empty set included), and the shards they select fit
-    * [[KvScan.MaxShardRows]]. An unbounded aggregate keeps one task per
-    * shard: one task decoding a whole table is slower than the job it
-    * saves. */
-  private def oneTaskAgg: Boolean =
+  /** The one driver-read rule: a batch read runs on the driver
+    * ([[KvDriverScan]]) when it is a snapshot (an incremental window
+    * stays distributed: its shard set comes from the manifest chain, and
+    * a stream tails it per micro-batch), the pushed filters bound the
+    * rowkey (the provably empty set included), and the shards they
+    * select fit the one-reader budget ([[KvScan.withinOneTask]]). An
+    * unbounded read keeps one task per shard: one reader decoding a
+    * whole table is slower than the job it saves. */
+  private def driverRead: Boolean =
     since.isEmpty &&
       KvScan.rowkeyRanges(pushed, declared, catalog.rowkey) != KeyRanges.Full &&
-      KvScan.withinOneTask(KvScan.select(snapshot, pushed, declared, catalog.rowkey,
-        if (bucketPrune) catalog.buckets else 0).parts)
+      KvScan.withinOneTask(dir, KvScan.select(snapshot.shards, pushed, declared,
+        catalog.rowkey, if (bucketPrune) catalog.buckets else 0).parts)
 
   override def pushAggregation(
       agg: org.apache.spark.sql.connector.expressions.aggregate.Aggregation): Boolean =
@@ -139,15 +143,14 @@ class KvScanBuilder(catalog: KvCatalog, dir: String, columnar: Boolean = true,
 
   override def build(): Scan = aggSpecs match {
     case Some((groupCols, specs)) =>
-      new KvAggScan(dir, catalog.rowkey, declared, pushed, groupCols, specs, asOf,
-        since, catalog.buckets, bucketPrune, oneTask = oneTaskAgg)
+      val scan = new KvAggScan(dir, catalog.rowkey, declared, pushed, groupCols, specs, asOf,
+        since, catalog.buckets, bucketPrune, snapshot)
+      if (driverRead) scan.onDriver else scan
     case None =>
       val scan = new KvScan(dir, catalog.rowkey, prunedSchema, declared, pushed, limit,
         reverse, columnar, asOf, catalog.buckets, since, maxVersionsPerTrigger,
-        bucketPrune, eventTime, maxBytesPerTrigger)
-      // an incremental window stays distributed: its shard set comes
-      // from the manifest chain, and a stream tails it per micro-batch
-      if (since.isEmpty) KvLocalScan.forPointLookup(scan).getOrElse(scan) else scan
+        bucketPrune, eventTime, maxBytesPerTrigger, snapshot)
+      if (driverRead) scan.onDriver else scan
   }
 }
 
@@ -216,10 +219,16 @@ class KvScan(dir: String, rowkeyName: String, prunedSchema: StructType,
              since: Option[Long] = None, maxVersionsPerTrigger: Long = 0L,
              bucketPrune: Boolean = true,
              eventTime: Option[KvEventTime] = None,
-             maxBytesPerTrigger: Long = 0L)
+             maxBytesPerTrigger: Long = 0L,
+             snapshot: => KvTableMeta)
     extends Scan with Batch
     with SupportsReportStatistics with SupportsRuntimeFiltering
     with SupportsReportOrdering with SupportsReportPartitioning {
+
+  /** The builder's manifest snapshot: statistics, partitioning and
+    * partition planning read this one parse. A stream never forces it
+    * (each micro-batch plans from the live manifest). */
+  private lazy val tableMeta: KvTableMeta = snapshot
 
   /** Every partition emits rowkey order: a shard file is sorted by key,
     * multi-range clips are visited in sorted range order, and the DESC
@@ -271,7 +280,7 @@ class KvScan(dir: String, rowkeyName: String, prunedSchema: StructType,
       try {
         val shards = since match {
           case Some(v) => KvStore.deltaShards(dir, v, asOf)
-          case None    => KvStore.readMetaAsOf(dir, asOf).shards
+          case None    => tableMeta.shards
         }
         shards.map(_.rows).sum
       } catch { case _: Exception => -1L }
@@ -304,10 +313,13 @@ class KvScan(dir: String, rowkeyName: String, prunedSchema: StructType,
       eventTime = eventTime)
   }
 
-  override def description(): String =
-    description(KvScan.columnarRead(columnar, reverse, limit, prunedSchema))
+  override def description(): String = description(driver = false)
 
-  private[sources] def description(columnarRead: Boolean): String = {
+  /** EXPLAIN's text: the read mode first (`Read: driver` or `Read: per
+    * shard`), then whether the columnar reader serves the rows — a
+    * driver read always uses the row reader. */
+  private[sources] def description(driver: Boolean): String = {
+    val columnarRead = !driver && KvScan.columnarRead(columnar, reverse, limit, prunedSchema)
     val f = allFilters.mkString(", ")
     val lim = if (limit >= 0) limit.toString else "none"
     val topn = if (reverse) " (DESC tail)" else ""
@@ -319,7 +331,8 @@ class KvScan(dir: String, rowkeyName: String, prunedSchema: StructType,
     // rowkey ranges (static filters only; runtime filters may tighten
     // later) — 0 = provably empty
     val nr = rowkeyRanges().length
-    s"graft-kv $dir Columnar: $columnarRead$pin, Ranges: $nr, Limit: $lim$topn, PushedFilters: [$f]"
+    s"graft-kv $dir ${KvScan.readMode(driver)}, Columnar: $columnarRead$pin, Ranges: $nr, " +
+      s"Limit: $lim$topn, PushedFilters: [$f]"
   }
 
   /** The planned rowkey ranges of the static and runtime filters. */
@@ -352,8 +365,7 @@ class KvScan(dir: String, rowkeyName: String, prunedSchema: StructType,
     * `UnknownPartitioning` — correctness never rests on the tag. */
   override def outputPartitioning(): org.apache.spark.sql.connector.read.partitioning.Partitioning = {
     import org.apache.spark.sql.connector.expressions.Expressions
-    lazy val shards = try KvStore.readMetaAsOf(dir, asOf).shards
-      catch { case _: Exception => Nil }
+    lazy val shards = try tableMeta.shards catch { case _: Exception => Nil }
     if (buckets > 0 && prunedSchema.fieldNames.contains(rowkeyName) &&
         KvScan.allTagged(shards, buckets)) {
       val distinct = shards.map(_.bucket).distinct.length
@@ -364,7 +376,7 @@ class KvScan(dir: String, rowkeyName: String, prunedSchema: StructType,
   }
 
   override def planInputPartitions(): Array[InputPartition] = {
-    val full = KvStore.readMetaAsOf(dir, asOf)
+    val full = tableMeta
     // incremental (append-CDC) read: plan only the shards each commit
     // in the (since, asOf] window ADDED — a manifest-chain replay
     // ([[KvStore.deltaShards]]), zero data reads for untouched history.
@@ -411,6 +423,12 @@ class KvScan(dir: String, rowkeyName: String, prunedSchema: StructType,
     KvPartitionReaderFactory(dir, prunedSchema.json, declared.json,
       rowkeyName, allFilters, limit, reverse, columnar,
       KvEventTime.encode(eventTime))
+
+  /** This read answered on the driver: every surviving shard through
+    * the row reader (`_shard`, `_event_time` and the DESC ring buffer
+    * need it). */
+  private[sources] def onDriver: KvDriverScan =
+    new KvDriverScan(this, planInputPartitions(), description(driver = true))
 }
 
 /** Shard selection, the one rule every graft-kv read and rewrite plans
@@ -457,18 +475,35 @@ object KvScan {
   def allTagged(shards: Seq[KvShardMeta], buckets: Int): Boolean =
     shards.nonEmpty && shards.forall(taggedUnder(_, buckets))
 
-  /** One-reader budget: manifest rows in the surviving shards, for the
-    * two reads that give up Spark's per-shard parallelism — a
-    * driver-side point lookup ([[KvLocalScan]]) and a one-task pushed
-    * aggregate ([[KvAggScan]]). One reader decodes ~7 M surviving-shard
+  /** One-reader budget, rows: manifest rows in the surviving shards of
+    * a driver read ([[KvDriverScan]]), the read that gives up Spark's
+    * per-shard parallelism. One reader decodes ~7 M surviving-shard
     * rows/s, so 2^18 rows cost about the ~35 ms fixed cost of one
     * distributed job; past it, the read keeps one task per shard. The
-    * same bound caps the one-task aggregate's group map. */
+    * same bound caps a driver aggregate's group map and a driver row
+    * read's output. */
   val MaxShardRows: Long = 1L << 18
 
-  /** Do these planned partitions' shards fit [[MaxShardRows]]? */
-  def withinOneTask(parts: Iterable[KvInputPartition]): Boolean =
-    parts.iterator.map(_.shard.rows).sum <= MaxShardRows
+  /** One-reader budget, bytes: the surviving shards' file sizes, since
+    * wide records make a row count a poor cost proxy. Measured the same
+    * way as [[MaxShardRows]], as the surviving-shard bytes a clipped
+    * range read at a random key position gets through per second: one
+    * reader does ~2.1 GB/s (148-byte lineitem-shaped and 124-byte
+    * orders-shaped records, 4-vCPU VM), so 2^26 bytes cost about the
+    * same ~35 ms. A read that must stream every surviving shard to its
+    * end runs at about half that rate. */
+  val MaxShardBytes: Long = 1L << 26
+
+  /** Do these planned partitions' shards fit both one-reader budgets?
+    * The byte count stats the shard files of `dir` (a missing file
+    * counts 0 bytes; reading it fails with its own clear error). */
+  def withinOneTask(dir: String, parts: Iterable[KvInputPartition]): Boolean =
+    parts.iterator.map(_.shard.rows).sum <= MaxShardRows &&
+      parts.iterator.map(p => new java.io.File(dir, p.shard.file).length()).sum <= MaxShardBytes
+
+  /** EXPLAIN's read-mode marker. */
+  def readMode(driver: Boolean): String =
+    if (driver) "Read: driver" else "Read: per shard"
 
   /** Whether a read decodes through [[KvColumnarReader]]. A reverse scan
     * qualifies only in its pushed-TopN form (limit > 0 bounds the ring
@@ -518,77 +553,6 @@ object KvScan {
       prunedByBucket = (inKeyRange.length - inBucket.length).toLong,
       prunedByZoneMap = (inBucket.length - surviving.length).toLong)
   }
-}
-
-/** Job-free point lookup: a rowkey `=`/`IN` read answered on the driver
-  * at planning time, the way an HBase `Get` never launches a batch job.
-  * Spark plans a [[LocalScan]] as a root `LocalTableScanExec`, so
-  * `collect()` returns with zero jobs — no closure cleaning, no task
-  * scheduling, which cost ~35 ms of every distributed get while reading
-  * the handful of matching records costs a few.
-  *
-  * It wraps (does not extend) the [[KvScan]] the builder planned: the
-  * same key-range, bucket and zone-map pruning picks the shards, and the
-  * same reader factory reads them (bloom gate, `_shard`,
-  * `_event_time`, pushed value filters, `asOfVersion`, the DESC ring
-  * buffer). It deliberately does not offer runtime filtering: its rows
-  * exist before any join's build side does. Pruning and read counters
-  * stay readable through [[reportDriverMetrics]] on the scan object;
-  * a `LocalTableScanExec` has no SQL metrics to carry them. */
-final class KvLocalScan private (val scan: KvScan, parts: Array[InputPartition])
-    extends LocalScan with SupportsReportStatistics {
-
-  private var recordsRead = 0L
-  private var bytesRead = 0L
-  private var skippedBloom = 0L
-
-  private lazy val read: Array[InternalRow] = {
-    val factory = scan.createReaderFactory()
-    val out = scala.collection.mutable.ArrayBuffer.empty[InternalRow]
-    parts.foreach { p =>
-      val reader = factory.createReader(p)
-      try {
-        // the row reader allocates a fresh row per record: no copy
-        while (reader.next()) out += reader.get()
-        reader.currentMetricsValues().foreach { m =>
-          m.name() match {
-            case "kvRecordsRead"        => recordsRead += m.value()
-            case "kvBytesRead"          => bytesRead += m.value()
-            case "kvShardsSkippedBloom" => skippedBloom += m.value()
-            case _                      => ()
-          }
-        }
-      } finally reader.close()
-    }
-    out.toArray
-  }
-
-  override def rows(): Array[InternalRow] = read
-  override def readSchema(): StructType = scan.readSchema()
-  // rows come from the row reader (`createReader`), never the columnar one
-  override def description(): String = scan.description(columnarRead = false)
-  override def estimateStatistics(): Statistics = scan.estimateStatistics()
-
-  override def supportedCustomMetrics(): Array[CustomMetric] = KvScanMetrics.supported
-  override def reportDriverMetrics(): Array[CustomTaskMetric] =
-    scan.reportDriverMetrics() ++ Array(
-      KvScanMetrics.taskMetric("kvRecordsRead", recordsRead),
-      KvScanMetrics.taskMetric("kvBytesRead", bytesRead),
-      KvScanMetrics.taskMetric("kvShardsSkippedBloom", skippedBloom))
-}
-
-object KvLocalScan {
-  /** The local form of `scan` when every planned rowkey range is one key
-    * (so the result is at most one row per key per shard, bounded by the
-    * query text) and the surviving shards fit [[KvScan.MaxShardRows]]. */
-  def forPointLookup(scan: KvScan): Option[KvLocalScan] =
-    if (KeyRanges.pointKeys(scan.rowkeyRanges()).isEmpty) None
-    else {
-      val parts = scan.planInputPartitions()
-      if (KvScan.withinOneTask(parts.map(KvInputPartition.unwrap)))
-        Some(new KvLocalScan(scan, parts))
-      else None
-    }
 }
 
 /** Driver-side scan metrics: manifest shard count and how many shards
@@ -729,7 +693,7 @@ final class KvCellSlots(cfs: Array[String], quals: Array[String]) {
       j += 1
     }
     // One reader's names are few, but a resolver shared across shard
-    // readers (a one-task aggregate's decoder) meets each shard's own
+    // readers (a driver aggregate's decoder) meets each shard's own
     // interned instances, so the memo would grow linearly — reset
     // instead of letting every cell lookup walk a long table.
     if (memoN == 256) memoN = 0

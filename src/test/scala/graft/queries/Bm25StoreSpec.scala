@@ -86,15 +86,12 @@ class Bm25StoreSpec extends SparkSpec {
     val (pDir, _) = Bm25Store.buildIfAbsent(spark, d, "full",
       Tables.documents(spark, d))
     // the exact postings-side read the probe issues (same pushed
-    // filter), scan-only so the leaf metric is reachable outside AQE
+    // filter); a driver read or a distributed one, the scan reports it
     val one = Bm25Store.postingsRead(spark, pDir, Seq("vector"))
     val n = one.count()
     assert(n > 0, "term 'vector' must have postings")
     one.collect()
-    val leaf = one.queryExecution.executedPlan.collectLeaves()
-      .find(_.metrics.contains("kvShardsPrunedKeyRange"))
-    assert(leaf.nonEmpty, "expected the KV postings scan leaf")
-    val pruned = leaf.get.metrics("kvShardsPrunedKeyRange").value
+    val pruned = graft.sources.PlannedKvScan(one).metric("kvShardsPrunedKeyRange")
     assert(pruned > 0,
       s"a single-term fetch must prune postings shards by key range (pruned=$pruned)")
   }

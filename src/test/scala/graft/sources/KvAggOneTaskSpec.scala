@@ -8,12 +8,12 @@ import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-/** One-task pushed aggregates ([[KvAggScan]] in complete-pushdown mode):
-  * a rowkey-bounded aggregate over shards within [[KvScan.MaxShardRows]]
-  * folds every surviving shard in one task and returns final rows, so
-  * `collect()` runs one Spark job. Every answer is checked against
-  * Spark's own aggregate over the same rows held in a local relation,
-  * where nothing is pushed. */
+/** Driver aggregates ([[KvAggScan]] in complete-pushdown mode under a
+  * [[KvDriverScan]]): a rowkey-bounded aggregate over shards within the
+  * one-reader budget folds every surviving shard on the driver and
+  * returns final rows, so `collect()` runs no Spark job. Every answer is
+  * checked against Spark's own aggregate over the same rows held in a
+  * local relation, where nothing is pushed. */
 class KvAggOneTaskSpec extends SparkSpec {
 
   private def catJson(name: String, buckets: Int = 0) =
@@ -117,8 +117,10 @@ class KvAggOneTaskSpec extends SparkSpec {
       val df = shape(read(tableDir, tableCat, opts: _*).filter(pred))
       val want = shape(reference(byVersion(version)).filter(pred))
       val what = s"case $i $shapeName v$version ${if (tableDir == bdir) "bucketed " else ""}$pred"
-      assert(sorted(df) == sorted(want), what)
-      assert(mode(df).contains("Mode: one-task"), s"$what: ${mode(df)}")
+      var got: Seq[String] = Nil
+      assert(jobsOf { got = sorted(df) } == 0, s"$what: jobs")
+      assert(got == sorted(want), what)
+      assert(mode(df).contains("Read: driver"), s"$what: ${mode(df)}")
       val planned = PlannedKvScan(df)
       bloomSkipped += planned.metric("kvShardsSkippedBloom")
       // fewer records decoded than matched: the rest came from the manifest
@@ -146,14 +148,54 @@ class KvAggOneTaskSpec extends SparkSpec {
         assert(sorted(df) == sorted(shapes(1)._2(reference(v1).filter(holes))), s"$holes")
       }
     // the same shapes unbounded keep per-shard partials (GROUP BY k
-    // streams each shard) and agree with the one-task answers' reference
+    // streams each shard) and agree with the driver answers' reference
     shapes.foreach { case (shapeName, shape) =>
       val df = shape(read(dir, cat))
       assert(sorted(df) == sorted(shape(reference(v1 ++ v2))), s"unbounded $shapeName")
-      assert(mode(df).contains("Mode: partial per shard"), s"$shapeName: ${mode(df)}")
+      assert(mode(df).contains("Read: per shard"), s"$shapeName: ${mode(df)}")
     }
     assert(bloomSkipped > 0L, "vacuity: no case skipped a shard by its bloom sidecar")
     assert(manifestMixed > 0, "vacuity: no random case mixed manifest and scanned shards")
+
+    // ANSI: a checked SUM of large positive values (so no addition order
+    // can overflow early) over a random key range raises
+    // ARITHMETIC_OVERFLOW exactly when the model's exact total leaves
+    // the long range, whichever shards, overlapping ones included, hold
+    // the rows
+    val odir = Files.createTempDirectory("graft-kv-agg1o").toString
+    val ocat = catJson("agg1o")
+    val big = Long.MaxValue / 8L
+    val o1 = (0L until 64L).map(k => Row(k, "g", s"u$k", big + k, 1.0))
+    val o2 = (0L until 64L by 9L).map(k => Row(k, "g", s"w$k", big, 1.0))
+    append(odir, ocat, o1, shards = 4)
+    append(odir, ocat, o2, shards = 2)
+    val before = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "true")
+    var outcomes = Set.empty[Boolean]
+    try (1 to 16).foreach { i =>
+      val lo = rnd.between(-4L, 64L)
+      val hi = lo + rnd.between(0L, 12L)
+      val exact = (o1 ++ o2).filter(r => r.getLong(0) >= lo && r.getLong(0) <= hi)
+        .map(r => BigInt(r.getLong(3))).sum
+      val df = read(odir, ocat).filter(col("k").between(lo, hi)).agg(sum(col("v")))
+      assert(mode(df).contains("Read: driver") && mode(df).contains("KvSumCol(v,true)"),
+        mode(df))
+      val overflows = exact > BigInt(Long.MaxValue)
+      outcomes += overflows
+      if (overflows) {
+        val e = intercept[Exception](df.collect())
+        def chain(t: Throwable): Seq[Throwable] = if (t == null) Nil else t +: chain(t.getCause)
+        assert(chain(e).exists {
+          case s: org.apache.spark.SparkThrowable => s.getCondition == "ARITHMETIC_OVERFLOW"
+          case _ => false
+        }, s"ansi case $i [$lo, $hi]: expected ARITHMETIC_OVERFLOW, got: $e")
+      } else {
+        val r = df.collect().head
+        assert((if (r.isNullAt(0)) BigInt(0) else BigInt(r.getLong(0))) == exact,
+          s"ansi case $i [$lo, $hi]")
+      }
+    } finally spark.conf.set("spark.sql.ansi.enabled", before)
+    assert(outcomes == Set(true, false), "vacuity: both ANSI outcomes must occur")
   }
 
   test("a provably-empty range answers one row: COUNT 0, MIN and SUM NULL") {
@@ -163,9 +205,9 @@ class KvAggOneTaskSpec extends SparkSpec {
     val df = read(dir, cat).filter(col("k") > 50L && col("k") < 40L)
       .agg(count(lit(1)).as("n"), min(col("v")).as("m"), sum(col("v")).as("s"))
     var got: Array[Row] = Array.empty
-    assert(jobsOf { got = df.collect() } == 1)
+    assert(jobsOf { got = df.collect() } == 0)
     assert(got.toSeq == Seq(Row(0L, null, null)))
-    assert(mode(df).contains("Mode: one-task"), mode(df))
+    assert(mode(df).contains("Read: driver"), mode(df))
     // grouped over nothing: no group, no row
     assert(read(dir, cat).filter(col("k") > 50L && col("k") < 40L)
       .groupBy(col("g")).agg(count(lit(1))).collect().isEmpty)
@@ -181,7 +223,7 @@ class KvAggOneTaskSpec extends SparkSpec {
     spark.conf.set("spark.sql.ansi.enabled", "true")
     try {
       val df = read(dir, cat).filter(col("k").between(1L, 2L)).agg(sum(col("v")))
-      assert(mode(df).contains("Mode: one-task") && mode(df).contains("KvSumCol(v,true)"),
+      assert(mode(df).contains("Read: driver") && mode(df).contains("KvSumCol(v,true)"),
         mode(df))
       val e = intercept[Exception](df.collect())
       def chain(t: Throwable): Seq[Throwable] = if (t == null) Nil else t +: chain(t.getCause)
@@ -194,7 +236,7 @@ class KvAggOneTaskSpec extends SparkSpec {
     } finally spark.conf.set("spark.sql.ansi.enabled", before)
   }
 
-  test("a bounded aggregate runs one Spark job; an unbounded one keeps two") {
+  test("a bounded aggregate runs no Spark job; an unbounded one keeps two") {
     val dir = Files.createTempDirectory("graft-kv-agg4").toString
     val cat = catJson("agg4")
     append(dir, cat, (0L until 4000L).map(k => Row(k, s"g${k % 3}", s"u$k", k, 0.5)), shards = 4)
@@ -205,25 +247,35 @@ class KvAggOneTaskSpec extends SparkSpec {
     }
     val agg = (df: DataFrame) => df.agg(count(lit(1)), sum(col("v")), sum(col("d")))
     val bounded = agg(read(dir, cat).filter(col("k").between(100L, 3100L)))
-    assert(collected(bounded) == ((Seq("[3001,4801600,1500.5]"), 1)))
-    assert(mode(bounded).contains("Mode: one-task"), mode(bounded))
-    // EXPLAIN: the one-task plan has no exchange and no final aggregate
-    val plan = bounded.queryExecution.executedPlan.toString
-    assert(!plan.contains("Exchange") && !plan.contains("HashAggregate"), plan)
+    assert(collected(bounded) == ((Seq("[3001,4801600,1500.5]"), 0)))
+    assert(mode(bounded).contains("Read: driver"), mode(bounded))
+    // EXPLAIN: the final rows and Spark's aliasing Project over them
+    // plan as one LocalTableScan, which names the driver read
+    val plan = bounded.queryExecution.executedPlan
+    assert(plan.isInstanceOf[org.apache.spark.sql.execution.LocalTableScanExec] &&
+      plan.toString.contains("Read: driver"), plan.toString)
 
     val unbounded = agg(read(dir, cat))
     val (all, jobs) = collected(unbounded)
     assert(all == Seq("[4000,7998000,2000.0]") && jobs == 2)
-    assert(mode(unbounded).contains("Mode: partial per shard"), mode(unbounded))
+    assert(mode(unbounded).contains("Read: per shard"), mode(unbounded))
+    assert(unbounded.queryExecution.executedPlan.toString.contains("Read: per shard"))
     // a value-column bound does not bound the rowkey
-    assert(mode(agg(read(dir, cat).filter(col("v") < 10L))).contains("Mode: partial"))
+    val valueBound = agg(read(dir, cat).filter(col("v") < 10L))
+    assert(mode(valueBound).contains("Read: per shard"))
+    assert(collected(valueBound) == ((Seq("[10,45,5.0]"), 2)))
     // an incremental read stays distributed
-    assert(mode(agg(read(dir, cat, "sinceVersion" -> "0").filter(col("k") < 10L)))
-      .contains("Mode: partial"))
+    val since = agg(read(dir, cat, "sinceVersion" -> "0").filter(col("k") < 10L))
+    assert(mode(since).contains("Read: per shard"))
+    assert(collected(since) == ((Seq("[10,45,5.0]"), 2)))
     // AVG is asked about before Spark rewrites it, then its SUM/COUNT
-    // form goes one-task
+    // form reads on the driver
     val avgDf = read(dir, cat).filter(col("k") < 10L).agg(avg(col("v")))
-    assert(collected(avgDf) == ((Seq("[4.5]"), 1)))
-    assert(mode(avgDf).contains("Mode: one-task"), mode(avgDf))
+    assert(collected(avgDf) == ((Seq("[4.5]"), 0)))
+    assert(mode(avgDf).contains("Read: driver"), mode(avgDf))
+    // zero surviving shards: the global aggregate's one row, no job
+    val none = read(dir, cat).filter(col("k") > 9000L).agg(count(lit(1)), avg(col("v")))
+    assert(collected(none) == ((Seq("[0,null]"), 0)))
+    assert(PlannedKvScan(none).kv.planInputPartitions().isEmpty, "vacuity: no shard survives")
   }
 }

@@ -99,10 +99,14 @@ class KvConnectorSpec extends SparkSpec {
     val full = kv
     val narrowed = kv.filter(col("id") <= 10)
     assert(full.rdd.getNumPartitions == 8)
-    assert(narrowed.rdd.getNumPartitions == 1,
+    // a bounded read this small runs on the driver over exactly the
+    // shards it planned
+    assert(PlannedKvScan(narrowed).isDriver)
+    assert(PlannedKvScan(narrowed).kv.planInputPartitions().length == 1,
       "id<=10 must hit only the first range shard")
     val eq = kv.filter(col("id") === 500)
-    assert(eq.rdd.getNumPartitions == 1)
+    assert(PlannedKvScan(eq).isDriver)
+    assert(PlannedKvScan(eq).kv.planInputPartitions().length == 1)
   }
 
   // ---- per-filter pushdown matrix (FIXTURES.md §3) ----
@@ -163,8 +167,8 @@ class KvConnectorSpec extends SparkSpec {
     // is UNKNOWN everywhere — correct SQL answer is zero rows, and the
     // Not(EqualTo(c,…)) must still show as PUSHED, not residual
     val nested = kv.filter(!(col("id") <= 998L || col("c") === "x")).select("id")
-    assert(physicalPlan(nested).contains("Not(EqualTo(c,x))"),
-      s"Not must push:\n${physicalPlan(nested)}")
+    val nestedScan = PlannedKvScan(nested).scan.description()
+    assert(nestedScan.contains("Not(EqualTo(c,x))"), s"Not must push:\n$nestedScan")
     assert(nested.collect().isEmpty, "NOT over (false OR UNKNOWN) stays UNKNOWN")
     // same shape with a definite right side keeps the definite rows
     assertPushedAndCorrect(
@@ -223,11 +227,11 @@ class KvConnectorSpec extends SparkSpec {
 
     val one = read().filter(col("rk").startsWith("globex#"))
     assert(one.count() == 200)
-    assert(one.rdd.getNumPartitions < 8,
+    val planned = PlannedKvScan(one)
+    assert(planned.kv.planInputPartitions().length < 8,
       "a single-tenant prefix must plan only the covering shards")
     one.collect()
-    val m = one.queryExecution.executedPlan.collectLeaves().head.metrics
-    assert(m("kvShardsPrunedKeyRange").value > 0,
+    assert(planned.metric("kvShardsPrunedKeyRange") > 0,
       "prefix pruning must surface in the rowkey-range metric")
     // prefix + range compose (clip tightens inside the prefix window)
     val narrow = read().filter(col("rk").startsWith("globex#") && col("rk") >= "globex#0150")
@@ -274,9 +278,9 @@ class KvConnectorSpec extends SparkSpec {
   test("top-N by rowkey ASC pushes into the sorted scan") {
     val df = kv.orderBy(col("id")).limit(7).select("id")
     assert(df.collect().map(_.getLong(0)).toSeq == (1L to 7L))
-    val scan = df.queryExecution.executedPlan.collectFirst {
-      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b.scan
-    }.get
+    val planned = PlannedKvScan(df)
+    assert(!planned.isDriver, "an unbounded top-N keeps one task per shard")
+    val scan = planned.scan
     assert(scan.description().contains("Limit: 7"),
       s"top-N must reach the scan as a limit: ${scan.description()}")
   }
@@ -295,9 +299,7 @@ class KvConnectorSpec extends SparkSpec {
     assert(physicalPlan(kv.sortWithinPartitions("age")).contains("Sort ["))
     // the DESC tail reader serves newest-first → reports key-descending
     val desc = kv.orderBy(col("id").desc).limit(3)
-    val scanOrd = desc.queryExecution.executedPlan.collectFirst {
-      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b
-    }.get.outputOrdering
+    val scanOrd = PlannedKvScan(desc).exec.get.outputOrdering
     assert(scanOrd.nonEmpty && scanOrd.head.toString.contains("DESC"),
       s"DESC tail scan must report key-descending order: $scanOrd")
   }
@@ -305,9 +307,7 @@ class KvConnectorSpec extends SparkSpec {
   test("top-N by rowkey DESC pushes a tail scan (<= n rows per shard)") {
     val df = kv.orderBy(col("id").desc).limit(3).select("id")
     assert(df.collect().map(_.getLong(0)).toSeq == Seq(1000L, 999L, 998L))
-    val scanExec = df.queryExecution.executedPlan.collectFirst {
-      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b
-    }.get
+    val scanExec = PlannedKvScan(df).exec.get
     assert(scanExec.scan.description().contains("Limit: 3 (DESC tail)"),
       s"DESC top-N must reach the scan: ${scanExec.scan.description()}")
     // the scan itself (before Spark's merge-sort + global limit) must
@@ -369,25 +369,49 @@ class KvConnectorSpec extends SparkSpec {
   }
 
   test("scan reports manifest statistics (rows + size) for AQE/CBO") {
-    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+    // bounded and within the one-reader budget: a driver read, which
+    // reports the manifest statistics of the scan it wraps
     val df = kv.filter(col("id") > 0)
-    val scan = df.queryExecution.executedPlan.collectFirst {
-      case b: BatchScanExec => b.scan
-    }.orElse(df.queryExecution.sparkPlan.collectLeaves().collectFirst {
-      case b: BatchScanExec => b.scan
-    })
-    val stats = scan.get.asInstanceOf[org.apache.spark.sql.connector.read.SupportsReportStatistics]
+    val planned = PlannedKvScan(df)
+    assert(planned.isDriver)
+    val stats = planned.scan.asInstanceOf[org.apache.spark.sql.connector.read.SupportsReportStatistics]
       .estimateStatistics()
     assert(stats.numRows().getAsLong == 1000L)
     assert(stats.sizeInBytes().getAsLong > 0L)
+    assert(df.queryExecution.optimizedPlan.stats.rowCount.contains(BigInt(1000)),
+      "the optimizer sees the same estimate")
+  }
+
+  test("one query plans and reads one manifest snapshot") {
+    val snapDir = Files.createTempDirectory("graft-kv-snap").toString
+    val snapCat =
+      """{"table":{"name":"snap"},"rowkey":"k",
+        | "columns":{"k":{"cf":"rowkey","col":"k","type":"long"},
+        |            "v":{"cf":"f","col":"v","type":"long"}}}""".stripMargin
+    def append(lo: Long, hi: Long): Unit =
+      spark.range(lo, hi).select(col("id").as("k"), col("id").as("v"))
+        .repartitionByRange(2, col("k"))
+        .write.format("graft-kv").option("catalog", snapCat).option("path", snapDir)
+        .mode("append").save()
+    def read() = spark.read.format("graft-kv").option("catalog", snapCat)
+      .option("path", snapDir).load().filter(col("v") >= 0L)
+    append(0L, 100L)
+    // optimizing builds the scan over the builder's manifest snapshot
+    // and sizes it; a commit landing before execution changes neither
+    // the statistics nor the shards the same query then plans and reads
+    val df = read()
+    assert(df.queryExecution.optimizedPlan.stats.rowCount.contains(BigInt(100)))
+    append(100L, 150L)
+    assert(df.collect().length == 100)
+    assert(!PlannedKvScan(df).isDriver && PlannedKvScan(df).kv.planInputPartitions().length == 2)
+    // the next query reads the next snapshot
+    assert(read().collect().length == 150)
   }
 
   test("runtime rowkey filters re-prune partitions (SupportsRuntimeFiltering)") {
     import org.apache.spark.sql.sources.{EqualTo => SEqualTo}
     val df = kv
-    val scan = df.queryExecution.executedPlan.collectFirst {
-      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b.scan
-    }.get.asInstanceOf[KvScan]
+    val scan = PlannedKvScan(df).exec.get.scan.asInstanceOf[KvScan]
     assert(scan.planInputPartitions().length == 8)
     scan.filter(Array[org.apache.spark.sql.sources.Filter](SEqualTo("id", 500L)))
     assert(scan.planInputPartitions().length == 1,
@@ -649,8 +673,20 @@ class KvConnectorSpec extends SparkSpec {
     val rows = df.collect().map(r => (r.getAs[Long]("id"), r.getAs[Long]("n"), r.getAs[Int]("a")))
     assert(rows.sortBy(_._1).toSeq == (1L to 5L).map(i => (i, 1L, i.toInt)),
       s"rowkey-grouped partials wrong: ${rows.toSeq}")
+    // bounded and small: the driver folds the one shard
+    val driver = PlannedKvScan(df).scan.description()
+    assert(driver.contains("Read: driver") && driver.contains("PushedGroupBy: [id]"),
+      s"rowkey grouping must push:\n$driver")
+    // unbounded: per-shard partials, each shard streaming its sorted groups
+    val all = kv.groupBy(col("id")).agg(count(lit(1)).as("n"), max(col("age")).as("a"))
+    val allRows = all.collect().map(r => (r.getAs[Long]("id"), r.getAs[Long]("n"), r.getAs[Int]("a")))
+    assert(allRows.sortBy(_._1).toSeq == (1L to 1000L).map(i => (i, 1L, (i % 60).toInt)),
+      "rowkey-grouped partials over every shard")
     val plan = df.queryExecution.executedPlan.toString()
-    assert(plan.contains("PushedGroupBy: [id]"), s"rowkey grouping must push:\n$plan")
+    val allPlan = all.queryExecution.executedPlan.toString()
+    assert(allPlan.contains("Read: per shard") && allPlan.contains("PushedGroupBy: [id]"),
+      s"rowkey grouping must push:\n$allPlan")
+    assert(!plan.contains("BatchScan"), s"the bounded form reads on the driver:\n$plan")
   }
 
   test("grouped aggregate pushdown: a NULL group key forms one group (SQL semantics)") {
@@ -1251,9 +1287,11 @@ class KvConnectorSpec extends SparkSpec {
       .option("catalog", catalogJson).option("path", dir)
       .option("columnar", columnar.toString).load()
     // projection spanning every flat type incl. the always-null cell `c`,
-    // plus a pushed filter, so both paths decode + filter + project
+    // plus pushed filters, so both paths decode + filter + project. The
+    // value-column filters leave the rowkey unbounded, so the read stays
+    // distributed and its reader is the one the columnar option picks
     def q(df: DataFrame): DataFrame = df
-      .filter(col("age") >= 30 && col("id") > 100)
+      .filter(col("age") >= 30 && col("height") > 2.0)
       .select(col("id"), col("name"), col("alive"), col("age"),
               col("birthDateTime"), col("birthDate"), col("height"),
               col("b"), col("c"))
@@ -1267,6 +1305,13 @@ class KvConnectorSpec extends SparkSpec {
     val b = row.collect().map(_.toString).sorted
     assert(a.length == row.count() && a.sameElements(b),
       "vectorized and row readers must produce identical results")
+    // a rowkey bound within the one-reader budget reads on the driver
+    // through the row reader whatever the option, with the same rows
+    val bounded = (df: DataFrame) => q(df).filter(col("id") > 100)
+    val driver = PlannedKvScan(bounded(read(columnar = true))).scan.description()
+    assert(driver.contains("Read: driver, Columnar: false"), driver)
+    assert(bounded(read(columnar = true)).collect().map(_.toString).sorted.toSeq ==
+      a.filter(_.split(",")(0).stripPrefix("[").toLong > 100L).toSeq)
   }
 
   test("nested projections and DESC top-N batch through the columnar reader") {
@@ -1316,17 +1361,21 @@ class KvConnectorSpec extends SparkSpec {
     assert(nShards == 8, "fixture writes 8 range-partitioned shards")
     // id <= 100 → exactly the first of 8 range-tight shards (rows 1-125)
     // survives; the reader still decodes all 125 records of that shard
+    // (a read this small and bounded runs on the driver, so its scan
+    // object carries the counters; the unbounded reads below keep them
+    // on the distributed scan node)
     val df = kv.filter(col("id") <= 100)
     assert(df.count() == 100)
     df.collect()
-    val scanNode = df.queryExecution.executedPlan.collectLeaves().head
-    val m = scanNode.metrics
-    assert(m.contains("kvShardsTotal") && m.contains("kvShardsPrunedKeyRange"),
-      s"scan node must expose the custom pruning metrics, has: ${m.keySet}")
-    assert(m("kvShardsTotal").value == nShards)
-    assert(m("kvShardsPrunedKeyRange").value == nShards - 1,
-      s"id<=100 must prune all but one shard, pruned ${m("kvShardsPrunedKeyRange").value}")
-    assert(m("kvRecordsRead").value == 100,
+    val planned = PlannedKvScan(df)
+    assert(planned.isDriver)
+    val names = planned.scan.supportedCustomMetrics().map(_.name()).toSet
+    assert(names("kvShardsTotal") && names("kvShardsPrunedKeyRange"),
+      s"scan must expose the custom pruning metrics, has: $names")
+    assert(planned.metric("kvShardsTotal") == nShards)
+    assert(planned.metric("kvShardsPrunedKeyRange") == nShards - 1,
+      s"id<=100 must prune all but one shard, pruned ${planned.metric("kvShardsPrunedKeyRange")}")
+    assert(planned.metric("kvRecordsRead") == 100,
       "in-shard range clipping bounds decode cost: only the clipped prefix is read")
     // a non-rowkey predicate can't clip: every record is decoded even
     // though few survive — kvRecordsRead is PRE-filter, the true cost
